@@ -130,14 +130,11 @@ def _prewarm_lazy_corpora() -> None:
     lazy-corpus queries (rgb/ja/quarantine/audio/tables) otherwise build
     their parquet inside the per-query timer on a cold cache and inflate
     first-run timings (ADVICE r4).  Corpus builders are pure functions of
-    their defaults, so this is a no-op when the cache is warm."""
+    their arguments, so this is a no-op when the cache is warm."""
     from ms_ocr_spark import queries as Q
 
-    for name in dir(Q):
-        if "_corpus_paths" in name:
-            fn = getattr(Q, name)
-            if callable(fn):
-                fn()
+    for build in Q.FIXTURE_BUILDERS:
+        build()
 
 
 def _cc_ratio_paired(spark, qs) -> dict:

@@ -327,7 +327,6 @@ def jaccard_verify(
     text_col: str = "text",
     shingle_n: int = 3,
     threshold: float = 0.0,
-    shingles_df: DataFrame | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard for candidate pairs via per-pair set
     intersection (round 8, guide §2.3/§4.2).
@@ -346,8 +345,7 @@ def jaccard_verify(
     ratio (identical IEEE double in any engine — filtering on the
     rounded value would pass pairs within 5e-7 below the threshold), and
     the published `jaccard` column is 6-dp rounded in the JVM.
-    `shingles_df` is accepted for backward compatibility and ignored —
-    shingle sets are rebuilt per pair from the token arrays (equality of
+    Shingle sets are rebuilt per pair from the token arrays (equality of
     space-joined shingles == equality of token tuples).
     """
 

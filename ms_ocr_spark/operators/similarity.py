@@ -239,14 +239,6 @@ def lsh_bucket(vec: Column, n_planes: int = 8, dim: int = 64, table: int = 0) ->
     return bucket
 
 
-def lsh_buckets_all(
-    vec: Column, n_planes: int = 8, dim: int = 64, tables: tuple[int, ...] = (0,)
-) -> Column:
-    """Array of per-table bucket ids (see `lsh_bucket` for why these are
-    independent scalar folds rather than one shared array traversal)."""
-    return F.array(*[lsh_bucket(vec, n_planes, dim, t) for t in tables])
-
-
 def lsh_buckets_pandas(
     n_planes: int = 8, dim: int = 64, tables: tuple[int, ...] = (0,)
 ):

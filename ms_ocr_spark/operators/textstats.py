@@ -11,7 +11,7 @@ Unicode normalization has no Spark builtin.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -28,22 +28,10 @@ LANG_STOPWORDS: dict[str, list[str]] = {
 LANG_ORDER = ["en", "es", "fr", "de"]  # deterministic tie-break order
 
 
-def lang_scores(text_col: str = "text") -> list[Column]:
-    """Stopword-hit count per language (token exact-match)."""
-    toks = tokens_col(text_col)
-    cols = []
-    for lang in LANG_ORDER:
-        sw = LANG_STOPWORDS[lang]
-        cols.append(
-            F.size(F.filter(toks, lambda t: t.isin(sw))).alias(f"score_{lang}")
-        )
-    return cols
-
-
 def _lang_scores_udf():
     """Per-doc stopword-hit counts for all languages in ONE Arrow pass
-    (round 8, guide §4.2): the column-expression form re-walks the token
-    array through an interpreted higher-order filter once per language.
+    (round 8, guide §4.2): a column-expression form would re-walk the
+    token array through an interpreted higher-order filter per language.
     Exact-match token counting is engine-trivial, so the counts are
     bit-identical; a NULL token array yields a NULL struct (propagating
     exactly like size(filter(NULL)))."""

@@ -11,26 +11,15 @@ after every timed query).
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame
 
 _TRACKED: list[DataFrame] = []
-_EVICTORS: list[Callable[[], None]] = []
 
 
 def track(df: DataFrame) -> DataFrame:
     """persist() a relation and register it for later release_all()."""
     _TRACKED.append(df.persist())
     return df
-
-
-def on_release(fn: Callable[[], None]) -> None:
-    """Register a callback run by release_all() — operators holding
-    memoized materializations (e.g. component_labels' checkpointed
-    labels, round 7) hook their eviction here so the session-level
-    release contract stays a single call."""
-    _EVICTORS.append(fn)
 
 
 def release_all() -> int:
@@ -43,11 +32,6 @@ def release_all() -> int:
         try:
             df.unpersist()
             n += 1
-        except Exception:
-            pass
-    for fn in _EVICTORS:
-        try:
-            fn()
         except Exception:
             pass
     return n

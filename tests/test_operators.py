@@ -250,7 +250,7 @@ def test_minhash_lsh_finds_planted_near_duplicates(spark):
     pairs = dedup.lsh_candidate_pairs(
         dedup.minhash_signature_arrays(sh, num_hashes=32), num_hashes=32
     )
-    verified = dedup.jaccard_verify(pairs, docs, threshold=0.5, shingles_df=sh)
+    verified = dedup.jaccard_verify(pairs, docs, threshold=0.5)
     got = {(r["id_a"], r["id_b"]) for r in verified.collect()}
     missed = planted - got
     spurious = got - planted

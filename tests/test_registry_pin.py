@@ -1,4 +1,4 @@
-"""Driver-contract pin: query names, registry order and oracle SQL text.
+"""Registry pin: query names, registry order and oracle SQL text.
 
 The digest covers `name<TAB>oracle_sql<NL>` for every registry entry in
 registry order, so renaming, reordering or re-wording any query's oracle
