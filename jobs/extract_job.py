@@ -39,12 +39,9 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--buckets", type=int, default=64, help="checkpoint commit ranges")
     p.add_argument("--salt-partitions", type=int, default=None)
     p.add_argument("--no-broadcast-media", action="store_true")
-    p.add_argument("--two-level-regroup", action="store_true")
-    p.add_argument("--no-validate-payloads", action="store_true",
-                   help="skip the magic-byte/size admission control (on by default; invalid media -> null text + quarantine sink + lineage n_media_missing)")
     args = p.parse_args(argv)
-    args.validate_payloads = not args.no_validate_payloads
 
+    from ms_ocr_spark.extraction.pipeline import quarantine_invalid_media
     from ms_ocr_spark.plans.checkpoint import extraction_metrics, run_with_checkpoints
     from ms_ocr_spark.session import get_spark
 
@@ -60,15 +57,11 @@ def main(argv: list[str] | None = None) -> int:
         n_buckets=args.buckets,
         broadcast_media=not args.no_broadcast_media,
         salt_partitions=args.salt_partitions,
-        two_level_regroup=args.two_level_regroup,
-        validate_payloads=args.validate_payloads,
     )
-    if args.validate_payloads:
-        from ms_ocr_spark.extraction.pipeline import quarantine_invalid_media
-
-        quarantine_invalid_media(docs, media).write.mode("overwrite").parquet(
-            f"{args.output.rstrip('/')}/_quarantine"
-        )
+    # admission-rejected / out-of-scope media (null text in the output)
+    quarantine_invalid_media(docs, media).write.mode("overwrite").parquet(
+        f"{args.output.rstrip('/')}/_quarantine"
+    )
     metrics = extraction_metrics(spark, args.output).collect()
     print(
         json.dumps(

@@ -5,8 +5,11 @@ Plan shape (SURVEY.md §7 step 3, north_rule):
     documents ──posexplode(spans)──┬── kind='text'  ── arc90 pandas UDF ──┐
                                    │                                      ├─ unionByName
                                    └── kind='media' ─ join media_store ───┘
-                                         (broadcast when small)  ocr UDF
+                                       (forced broadcast by default) ocr UDF
     ── groupBy(doc_id) ── array_sort(collect_list(struct(offset,…))) ── spans
+
+A doc whose `spans` is empty or NULL keeps one placeholder row through the
+(outer) explode, which the re-stitch skips, so it comes out with `[]`.
 
 Order preservation (the reference's detection-order invariant — ordered
 span lists at `/root/reference/src/library/engine_paddle/main.py:274-283`)
@@ -19,11 +22,9 @@ Scale notes (100 TB / 10^12 docs):
     repartition on (doc_id, offset) before the expensive UDFs (the
     "salted repartitioning" of the north rule); AQE skew-join handles the
     media join side.
-  * the media join is an equi-join on media_ref: broadcast when the store
-    fits (`broadcast_media=True`), else sort-merge under AQE.
-  * `two_level_regroup=True` pre-aggregates span chunks per (doc_id,
-    offset bucket) before the final groupBy so no single reducer ever
-    materializes 10^5 raw span rows at once.
+  * the media join is an equi-join on media_ref: a forced broadcast
+    (`broadcast_media=True`, the default, whatever the store's size), else
+    Catalyst/AQE picks (sort-merge when the store is large).
   * UDFs are Arrow-batched pandas UDFs (input_hint: no per-row Python).
 """
 
@@ -99,15 +100,20 @@ def explode_spans(docs: DataFrame) -> DataFrame:
     """documents(doc_id, spans[, language]) -> one row per span (flat
     columns).  An optional doc-level `language` column rides along
     (rlike-validated: unknown codes degrade to NULL = auto-detect, the
-    reference's `-` default)."""
+    reference's `-` default).
+
+    The explode is outer: a doc with an empty or NULL `spans` array keeps
+    one row whose `pos` (the span's index in the array) is NULL and whose
+    span fields are NULL."""
     has_lang = "language" in docs.columns
     flat = docs.select(
         "doc_id",
         *(["language"] if has_lang else []),
-        F.explode("spans").alias("span"),
+        F.posexplode_outer("spans").alias("pos", "span"),
     )
     cols = [
         "doc_id",
+        "pos",
         F.col("span.kind").alias("kind"),
         F.col("span.text").alias("text"),
         F.col("span.media_ref").alias("media_ref"),
@@ -122,8 +128,10 @@ def explode_spans(docs: DataFrame) -> DataFrame:
     return flat.select(*cols)
 
 
-def _restitch(flat: DataFrame, two_level_regroup: bool, bucket_size: int = 1024) -> DataFrame:
-    """(doc_id, kind, out_text, media_ref, offset) -> (doc_id, spans) ordered by offset."""
+def _restitch(flat: DataFrame) -> DataFrame:
+    """(doc_id, pos, kind, out_text, media_ref, offset) -> (doc_id, spans)
+    ordered by offset; a span-less doc's placeholder row (NULL `pos`) is
+    skipped, so that doc gets `[]`."""
     # array_sort over struct(offset, ...) sorts by offset (first field);
     # fields are then re-ordered to the public span layout.
     sortable = F.struct(
@@ -132,28 +140,11 @@ def _restitch(flat: DataFrame, two_level_regroup: bool, bucket_size: int = 1024)
         F.col("out_text").alias("text"),
         F.col("media_ref").alias("media_ref"),
     )
-    if not two_level_regroup:
-        grouped = flat.groupBy("doc_id").agg(
-            F.array_sort(F.collect_list(sortable)).alias("sorted_spans")
-        )
-    else:
-        # two-level: bound reducer memory for mega-docs (FIXTURES.md skew tier)
-        grouped = (
-            flat.withColumn("obucket", (F.col("offset") / F.lit(bucket_size)).cast("int"))
-            .groupBy("doc_id", "obucket")
-            .agg(F.array_sort(F.collect_list(sortable)).alias("chunk"))
-            .groupBy("doc_id")
-            .agg(
-                F.flatten(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(F.struct(F.col("obucket"), F.col("chunk")))
-                        ),
-                        lambda s: s["chunk"],
-                    )
-                ).alias("sorted_spans")
-            )
-        )
+    grouped = flat.groupBy("doc_id").agg(
+        F.array_sort(
+            F.collect_list(F.when(F.col("pos").isNotNull(), sortable))
+        ).alias("sorted_spans")
+    )
     return grouped.select(
         "doc_id",
         F.transform(F.col("sorted_spans"), _reorder_span_fields).alias("spans"),
@@ -174,9 +165,6 @@ def extract_documents(
     media: DataFrame,
     broadcast_media: bool = True,
     salt_partitions: int | None = None,
-    two_level_regroup: bool = False,
-    keep_empty_docs: bool = False,
-    validate_payloads: bool = True,
 ) -> DataFrame:
     """Run the full extraction; returns (doc_id, spans) matching golden_spans.
 
@@ -184,17 +172,18 @@ def extract_documents(
     UDFs — defuses large-document skew by spreading a mega-doc's spans over
     the cluster instead of one input partition.
 
-    `keep_empty_docs`: docs whose `spans` array is empty produce no rows
-    after the explode and would vanish; True re-joins the doc_id spine so
-    they appear with an empty output array (costs one extra join — leave
-    off when the corpus guarantees non-empty docs).
+    `broadcast_media`: force a broadcast of `media_store` (payloads
+    included); False leaves the join strategy to Catalyst/AQE.
 
-    `validate_payloads`: admission-control the media payloads JVM-side
-    (magic-byte MIME + 30 MB cap, reference S2-S4) BEFORE the OCR UDF —
-    invalid payloads never enter Python, their spans come out with null
-    text, and they are counted by lineage as n_media_missing; list them
-    with `quarantine_invalid_media` for the side sink.
+    Every doc comes out, one with no spans as `[]`.  Media payloads are
+    admission-controlled JVM-side (magic-byte MIME + 30 MB cap, reference
+    S2-S4) BEFORE the OCR UDF — invalid payloads never enter Python, their
+    spans come out with null text, and they are counted by lineage as
+    n_media_missing; list them with `quarantine_invalid_media` for the
+    side sink.
     """
+    from ms_ocr_spark.operators.multimodal import valid_payload_col
+
     flat = explode_spans(docs)
     if salt_partitions:
         flat = flat.repartition(salt_partitions, "doc_id", "offset")
@@ -205,18 +194,14 @@ def extract_documents(
     # write cost; instead both UDFs are projected once — each is ~free on
     # the other kind's rows (null input -> null output) — and a CASE picks
     # the survivor.  The media join stays a left join on media_ref
-    # (broadcast when the store fits, AQE sort-merge otherwise).
+    # (forced broadcast, or AQE's choice with broadcast_media=False).
     media_side = media.select("media_ref", "payload")
     if broadcast_media:
         media_side = F.broadcast(media_side)
     joined = flat.join(media_side, "media_ref", "left")
-    payload = F.col("payload")
-    if validate_payloads:
-        from ms_ocr_spark.operators.multimodal import valid_payload_col
-
-        # invalid payloads become NULL before the UDF: they never cross
-        # the Arrow boundary and decode to null text (quarantine signal)
-        payload = F.when(valid_payload_col("payload"), payload)
+    # invalid payloads become NULL before the UDF: they never cross the
+    # Arrow boundary and decode to null text (quarantine signal)
+    payload = F.when(valid_payload_col("payload"), F.col("payload"))
     lang = (
         F.col("language")
         if "language" in flat.columns
@@ -229,48 +214,31 @@ def extract_documents(
         ).otherwise(ocr_media_spans(payload, lang)),
     )
 
-    cols = ["doc_id", "kind", "out_text", "media_ref", "offset"]
-    result = _restitch(with_text.select(*cols), two_level_regroup)
-    if keep_empty_docs:
-        spine = docs.select("doc_id")
-        result = spine.join(result, "doc_id", "left").select(
-            "doc_id",
-            F.coalesce(
-                F.col("spans"), F.lit([]).cast(T.ArrayType(SPAN_STRUCT))
-            ).alias("spans"),
-        )
-    return result
+    cols = ["doc_id", "pos", "kind", "out_text", "media_ref", "offset"]
+    return _restitch(with_text.select(*cols))
 
 
 @F.pandas_udf(T.StringType())
-def _jpeg_scope_reason_udf(payload: pd.Series) -> pd.Series:
-    """Arrow-batched JPEG decode-scope probe: null = in scope (baseline
-    OR progressive both decode since round 5), else the reason string
-    (`truncated_jpeg` / `unsupported_jpeg_layout`).  Header-only marker
-    walk — never touches entropy data."""
+def _scope_reason_udf(mime: pd.Series, payload: pd.Series) -> pd.Series:
+    """Arrow-batched decode-scope probe over admitted payloads, keyed by
+    the JVM-side `mime_col` value: a JPEG's `jpeg_scope_reason`
+    (`truncated_jpeg` / `unsupported_jpeg_layout`),
+    `unsupported_tiff_layout` for an out-of-scope TIFF, else null (in
+    scope).  Header-only (marker walk / IFD tags) — never touches entropy
+    data or pixels."""
     from ms_ocr_spark.extraction.ocr.jpeg import jpeg_scope_reason
-
-    return pd.Series(
-        [
-            jpeg_scope_reason(bytes(b)) if b is not None else None
-            for b in payload
-        ],
-        dtype=object,
-    )
-
-
-@F.pandas_udf(T.BooleanType())
-def _tiff_out_of_scope_flag(payload: pd.Series) -> pd.Series:
-    """Arrow-batched TIFF header-scope probe (IFD tags only, no pixels)."""
     from ms_ocr_spark.extraction.ocr.tiff import tiff_scope_reason
 
-    return pd.Series(
-        [
-            (tiff_scope_reason(bytes(b)) is not None) if b is not None else None
-            for b in payload
-        ],
-        dtype=object,
-    )
+    def _one(fmt, buf) -> str | None:
+        if buf is None:
+            return None
+        if fmt == "jpeg":
+            return jpeg_scope_reason(bytes(buf))
+        if fmt == "tiff" and tiff_scope_reason(bytes(buf)) is not None:
+            return "unsupported_tiff_layout"
+        return None
+
+    return pd.Series([_one(m, b) for m, b in zip(mime, payload)], dtype=object)
 
 
 def quarantine_invalid_media(docs: DataFrame, media: DataFrame) -> DataFrame:
@@ -299,20 +267,14 @@ def quarantine_invalid_media(docs: DataFrame, media: DataFrame) -> DataFrame:
 
     flat = explode_spans(docs).filter(F.col("kind") == "media")
     joined = flat.join(media.select("media_ref", "payload"), "media_ref", "left")
-    jpeg_reason = F.when(
-        F.col("mime") == "jpeg", _jpeg_scope_reason_udf(F.col("payload"))
-    )
-    is_bad_tiff = (F.col("mime") == "tiff") & F.coalesce(
-        _tiff_out_of_scope_flag(F.col("payload")), F.lit(False)
-    )
+    scope_reason = _scope_reason_udf(F.col("mime"), F.col("payload"))
     return (
         joined.withColumn("mime", mime_col("payload"))
         .withColumn(
             "reason",
             F.when(F.col("payload").isNull(), "missing")
             .when(~valid_payload_col("payload"), "invalid")
-            .when(jpeg_reason.isNotNull(), jpeg_reason)
-            .when(is_bad_tiff, "unsupported_tiff_layout")
+            .when(scope_reason.isNotNull(), scope_reason)
             .otherwise("ok"),
         )
         .filter(F.col("reason") != "ok")

@@ -86,10 +86,14 @@ def test_streaming_incremental(spark, corpus_dir, tmp_path):
 
 
 def test_extract_job_cli(spark, corpus_dir, tmp_path):
-    """spark-submit entrypoint smoke: run via main(), resume is a no-op."""
+    """spark-submit entrypoint smoke: run via main(), resume is a no-op,
+    and the quarantine side sink is written."""
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo/jobs")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    jobs_dir = os.path.join(repo, "jobs")
+    sys.path.insert(0, jobs_dir)
     try:
         import extract_job
     finally:
@@ -105,6 +109,10 @@ def test_extract_job_cli(spark, corpus_dir, tmp_path):
     from ms_ocr_spark.plans.checkpoint import read_output
 
     assert read_output(spark, out).count() == golden.count()
+    quarantine = spark.read.parquet(f"{out}/_quarantine")
+    assert quarantine.columns == [
+        "doc_id", "offset", "media_ref", "mime", "n_bytes", "reason",
+    ]
     assert extract_job.main(args) == 0  # resume: no duplicates
     assert read_output(spark, out).count() == golden.count()
 

@@ -37,9 +37,8 @@ def _assert_spans_equal(result, golden):
         {},
         {"broadcast_media": False},
         {"salt_partitions": 16},
-        {"two_level_regroup": True, "salt_partitions": 8},
     ],
-    ids=["default", "sortmerge", "salted", "two_level"],
+    ids=["default", "sortmerge", "salted"],
 )
 def test_golden_span_equality(spark, corpus_dir, kwargs):
     docs, media, golden = _load(spark, corpus_dir)
@@ -79,14 +78,21 @@ def test_explode_spans_row_count(spark, corpus_dir):
     assert explode_spans(docs).count() == n_spans
 
 
-def test_keep_empty_docs(spark, corpus_dir):
+def test_empty_and_null_span_docs_are_kept(spark, corpus_dir):
+    """A doc whose `spans` is `[]` or NULL comes out with `[]` — never
+    silently dropped — from the default call, with no extra join."""
     docs, media, _ = _load(spark, corpus_dir)
-    empty = spark.createDataFrame([("doc-empty", [])], docs.schema)
+    empty = spark.createDataFrame(
+        [("doc-empty", []), ("doc-null", None)], docs.schema
+    )
     both = empty.unionByName(docs.limit(2))
-    assert extract_documents(both, media).filter(F.col("doc_id") == "doc-empty").count() == 0
-    kept = extract_documents(both, media, keep_empty_docs=True)
-    row = kept.filter(F.col("doc_id") == "doc-empty").collect()
-    assert len(row) == 1 and row[0]["spans"] == []
+    out = extract_documents(both, media)
+    plan = out._jdf.queryExecution().executedPlan().toString()  # pre-AQE
+    assert plan.count("Join ") == 1, plan
+    rows = {r["doc_id"]: r["spans"] for r in out.collect()}
+    assert len(rows) == 4
+    assert rows["doc-empty"] == [] and rows["doc-null"] == []
+    assert all(len(v) > 0 for k, v in rows.items() if k not in ("doc-empty", "doc-null"))
 
 
 def test_vertical_tier_golden(spark, tmp_path):
@@ -138,7 +144,7 @@ def test_validate_payloads_quarantines_corrupt_media(spark, corpus_dir):
     )
     patched = media.filter(F.col("media_ref") != one_ref).unionByName(corrupt)
 
-    out = extract_documents(docs, patched, validate_payloads=True)
+    out = extract_documents(docs, patched)
     bad = (
         out.select(F.explode("spans").alias("s"))
         .filter((F.col("s.media_ref") == one_ref))

@@ -86,7 +86,7 @@ def test_brute_force_topk_ships_corpus_once(spark):
 
 
 def test_extraction_with_skewed_megadocs(spark, tmp_path):
-    """Salted explode + two-level regroup stay correct on a corpus where
+    """The salted explode stays correct on a corpus where
     some docs have 30x the span count (FIXTURES.md bench tier)."""
     from ms_ocr_spark.sources.datagen import write_corpus
 
@@ -97,9 +97,7 @@ def test_extraction_with_skewed_megadocs(spark, tmp_path):
     golden = spark.read.parquet(paths["golden_spans"])
     sizes = docs.select(F.size("spans").alias("n")).collect()
     assert max(r["n"] for r in sizes) >= 30 * min(r["n"] for r in sizes)
-    result = extract_documents(
-        docs, media, salt_partitions=16, two_level_regroup=True
-    )
+    result = extract_documents(docs, media, salt_partitions=16)
     r = result.select("doc_id", F.to_json("spans").alias("js"))
     g = golden.select("doc_id", F.to_json("spans").alias("js"))
     assert g.join(r, ["doc_id", "js"]).count() == golden.count()
