@@ -46,6 +46,23 @@ def test_checkpoint_resume_exactly_once(spark, corpus_dir, tmp_path):
     assert met["n_media_missing"] == 0
 
 
+def test_completed_buckets_matches_exact_marker_names(spark, tmp_path):
+    """Only `<job>_bucket_<b>.parquet` markers with b < n_buckets count: a
+    leftover `.tmp`, another job's marker and an out-of-range bucket do not."""
+    lineage = tmp_path / "out" / "_lineage"
+    lineage.mkdir(parents=True)
+    for name in (
+        "job_bucket_00000.parquet",
+        "job_bucket_00003.parquet",
+        "job_bucket_00005.parquet.tmp",
+        "job_2_bucket_00001.parquet",
+        "job_bucket_00008.parquet",
+    ):
+        (lineage / name).write_bytes(b"")
+    assert cp.completed_buckets(spark, str(tmp_path / "out"), "job", 8) == {0, 3}
+    assert cp.completed_buckets(spark, str(tmp_path / "missing"), "job", 8) == set()
+
+
 def test_checkpoint_single_input_scan(spark, corpus_dir):
     """The pending-bucket extraction must read the documents table ONCE —
     a per-bucket loop would rescan 100 TB once per bucket."""

@@ -952,3 +952,33 @@ def test_color_tier_rotates_411_and_440():
         assert kdecode(decode_media(buf)) == row["truth_text"]
     assert 0x41 in subs, subs  # 4x1 (4:1:1)
     assert 0x12 in subs, subs  # 1x2 (4:4:0)
+
+
+def _cut_last_scan(b: bytes) -> bytes:
+    """Headers kept, payload cut at the midpoint of the last scan's entropy
+    data (0xFFDA cannot occur inside entropy data: every 0xFF there is
+    stuffed or starts an RSTn marker)."""
+    sos = b.rfind(b"\xff\xda")
+    start = sos + 2 + int.from_bytes(b[sos + 2 : sos + 4], "big")
+    return b[: (start + len(b) - 2) // 2]
+
+
+def test_truncated_entropy_data_raises():
+    """A stream cut inside its last scan must raise, with or without a
+    closing EOI: the decoder may not fill the missing tail with zero bits."""
+    from ms_ocr_spark.extraction.ocr.glyphs import render_text
+
+    gray = render_text("TRUNCATED ENTROPY\nDATA 0123")
+    rgb = np.stack([gray, 255 - (255 - gray) // 2, gray], axis=2)
+    streams = {
+        "baseline gray": encode_gray_jpeg(gray),
+        "baseline color 420": encode_color_jpeg(rgb, "420"),
+        "progressive color": encode_color_jpeg_progressive(rgb, "420"),
+        "baseline gray dri": encode_gray_jpeg(gray, restart_interval=4),
+    }
+    for name, b in streams.items():
+        assert decode_media(b).shape == gray.shape, name
+        cut = _cut_last_scan(b)
+        for tail in (b"", b"\xff\xd9"):
+            with pytest.raises(Exception):
+                decode_media(cut + tail)
