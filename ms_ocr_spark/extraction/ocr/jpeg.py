@@ -25,6 +25,7 @@ lossy round trip by construction.
 
 from __future__ import annotations
 
+import functools
 import struct
 
 import numpy as np
@@ -73,6 +74,7 @@ for _u in range(8):
         _C[_u, _x] = _a * np.cos((2 * _x + 1) * _u * np.pi / 16.0)
 
 
+
 def _build_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
     """Canonical Huffman: value -> (code, length)."""
     out: dict[int, tuple[int, int]] = {}
@@ -87,10 +89,40 @@ def _build_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]
     return out
 
 
-def _build_decode(bits: list[int], vals: list[int]) -> dict[tuple[int, int], int]:
-    """Canonical Huffman: (length, code) -> value."""
-    enc = _build_codes(bits, vals)
-    return {(ln, code): v for v, (code, ln) in enc.items()}
+@functools.lru_cache(maxsize=16)
+def _huff_table(spec: bytes, ac: bool) -> tuple[list, int, int]:
+    """Canonical Huffman decode table for one DHT entry (`spec` = the 16
+    code counts, then the symbols) -> (lookahead list, its width in
+    bits, width mask).
+
+    The list is indexed by the next `width` bits of the stream, so every
+    code resolves in one probe.  DC tables are as wide as their longest
+    code and hold (size, code length).  AC tables are 16 bits wide and
+    hold (run, value, bits, size): where the magnitude bits fit in the
+    window too, `value` is the decoded nonzero coefficient, `bits` the
+    code plus magnitude length and `size` 0; otherwise `value` is 0,
+    `bits` the code length and `size` the magnitude bits still to read
+    (0 for EOB, EOB runs and ZRL).  A prefix no code matches holds
+    all-zero fields.  Codes an over-subscribed table pushes past their
+    length, and the earlier code of a repeated symbol, never match."""
+    codes = _build_codes([0, *spec[:16]], list(spec[16:]))
+    width = 16 if ac else max((ln for _, ln in codes.values()), default=1)
+    look = [(0, 0, 0, 0) if ac else (0, 0)] * (1 << width)
+    for sym, (code, ln) in codes.items():
+        if code >> ln:
+            continue
+        shift = width - ln
+        r, size = sym >> 4, sym & 15
+        if ac and 0 < size <= shift:
+            rest = shift - size
+            for bits in range(1 << size):
+                v = bits if bits >> (size - 1) else bits - (1 << size) + 1
+                lo = (code << size | bits) << rest
+                look[lo : lo + (1 << rest)] = [(r, v, ln + size, 0)] * (1 << rest)
+        else:
+            entry = (r, 0, ln, size) if ac else (sym, ln)
+            look[code << shift : (code + 1) << shift] = [entry] * (1 << shift)
+    return look, width, (1 << width) - 1
 
 
 _DC_ENC = _build_codes(_DC_BITS, _DC_VALS)
@@ -185,7 +217,7 @@ def _blocks_to_pixels(zz: np.ndarray, q: np.ndarray, h: int, w: int) -> np.ndarr
     natural = np.zeros_like(dq)
     natural[:, _ZZ] = dq  # zigzag -> natural order
     blocks = natural.reshape(-1, 8, 8).astype(np.float64)
-    pixels = np.einsum("xu,buv,yv->bxy", _C.T, blocks, _C.T) + 128.0
+    pixels = np.matmul(np.matmul(_C.T, blocks), _C) + 128.0
     out = (
         pixels.reshape(ph // 8, pw // 8, 8, 8)
         .transpose(0, 2, 1, 3)
@@ -297,87 +329,75 @@ def encode_gray_jpeg(
     )
 
 
-class _BitReader:
-    """MSB-first bit reader over entropy-coded data with 0xFF00 unstuffing."""
-
-    def __init__(self, data: bytes) -> None:
-        out = bytearray()
-        i = 0
-        n = len(data)
-        while i < n:
-            b = data[i]
-            out.append(b)
-            if b == 0xFF:
-                if i + 1 < n and data[i + 1] == 0x00:
-                    i += 1  # stuffed zero
-                else:
-                    out.pop()  # marker reached: stop
-                    break
-            i += 1
-        self.bits = np.unpackbits(np.frombuffer(bytes(out), dtype=np.uint8))
-        self.pos = 0
-
-    def read_bit(self) -> int:
-        b = int(self.bits[self.pos])
-        self.pos += 1
-        return b
-
-    def read_bits(self, n: int) -> int:
-        if n == 0:
-            return 0
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | int(self.bits[self.pos])
-            self.pos += 1
-        return v
+# ---------------------------------------------------------------- reader
+# Every scan decoder inlines the same bit reader, because a function call
+# per symbol costs more than the decoding itself.  Its state is three
+# locals: `acc`, a Python int whose low `nb` bits are the next unread
+# bits of the stream, and `i`, the index of the next byte of `d` (the
+# unstuffed segment, zero-padded by `_unstuff`).  Before each Huffman
+# symbol the reader refills byte by byte to at least 25 bits, enough for
+# a 9-bit lookahead code plus a 16-bit magnitude:
+#
+#     while nb < 32:
+#         acc = (acc << 8 | d[i]) & 0xFFFFFFFFFF
+#         i += 1
+#         nb += 8
+#
+# `8 * i - nb` is the number of bits consumed; a segment whose decode
+# consumed more than `total` bits read its zero padding and raises.
 
 
-def _extend(code: int, size: int) -> int:
-    """Inverse magnitude coding."""
-    if size == 0:
-        return 0
-    if code < (1 << (size - 1)):
-        return code - (1 << size) + 1
-    return code
+def _unstuff(seg: bytes) -> tuple[bytes, int]:
+    """Entropy-coded bytes up to the first marker, 0xFF00 stuffing
+    removed -> (the bytes plus 8 zero bytes of lookahead padding, the bit
+    count before the padding)."""
+    i = seg.find(b"\xff")
+    while i != -1 and seg[i + 1 : i + 2] == b"\x00":
+        i = seg.find(b"\xff", i + 2)
+    d = (seg if i == -1 else seg[:i]).replace(b"\xff\x00", b"\xff")
+    return d + bytes(8), 8 * len(d)
 
 
-def _read_huff(br: _BitReader, table: dict[tuple[int, int], int]) -> int:
-    code = 0
-    for length in range(1, 17):
-        code = (code << 1) | br.read_bit()
-        v = table.get((length, code))
-        if v is not None:
-            return v
-    raise ValueError("bad huffman code")
+def _check_exhausted(i: int, nb: int, total: int) -> None:
+    if 8 * i - nb > total:
+        raise ValueError("entropy data exhausted")
+
+
+def _scatter(z: np.ndarray, pos: list[int], val) -> None:
+    """Store decoded coefficients into a (blocks, 64) array; `pos` holds
+    `block << 8 | zigzag index`.  An index past 63 raises, as the direct
+    store `z[block, k]` would."""
+    if not pos:
+        return
+    p = np.array(pos, dtype=np.int64)
+    k = p & 255
+    if (k > 63).any():
+        raise IndexError("coefficient index out of range")
+    z.reshape(-1)[(p >> 8) * 64 + k] = val
 
 
 def _split_restart_segments(data: bytes) -> list[bytes]:
     """Split entropy-coded data at RSTn markers (T.81 B.2.1.2): returns
     the byte runs between restart markers, stopping at the first
     non-restart marker (EOI/next segment).  Stuffed 0xFF00 pairs stay in
-    the segments (the bit reader unstuffs); fill bytes before markers are
+    the segments (`_unstuff` removes them); fill bytes before markers are
     consumed."""
     segs: list[bytes] = []
     cur = 0
-    i = 0
     n = len(data)
-    while i + 1 < n:
-        if data[i] != 0xFF:
-            i += 1
-            continue
+    i = data.find(b"\xff")
+    while i != -1 and i + 1 < n:
         if data[i + 1] == 0x00:  # stuffed data byte
-            i += 2
+            i = data.find(b"\xff", i + 2)
             continue
         j = i  # fill bytes: 0xFF runs before the marker byte
         while j + 1 < n and data[j + 1] == 0xFF:
             j += 1
-        if j + 1 < n and 0xD0 <= data[j + 1] <= 0xD7:
-            segs.append(data[cur:i])
-            i = j + 2
-            cur = i
-            continue
-        segs.append(data[cur:i])  # real marker: end of scan
-        return segs
+        segs.append(data[cur:i])
+        if not (j + 1 < n and 0xD0 <= data[j + 1] <= 0xD7):
+            return segs  # real marker: end of scan
+        cur = j + 2
+        i = data.find(b"\xff", cur)
     segs.append(data[cur:n])
     return segs
 
@@ -477,10 +497,8 @@ def decode_gray_jpeg(data: bytes) -> np.ndarray:
             p = 0
             while p < len(payload):
                 tc, th = payload[p] >> 4, payload[p] & 0xF
-                bits = [0] + list(payload[p + 1 : p + 17])
-                n_vals = sum(bits)
-                vals = list(payload[p + 17 : p + 17 + n_vals])
-                huff[(tc, th)] = _build_decode(bits, vals)
+                n_vals = sum(payload[p + 1 : p + 17])
+                huff[(tc, th)] = _huff_table(bytes(payload[p + 1 : p + 17 + n_vals]), tc == 1)
                 p += 17 + n_vals
         elif marker == 0xDA:  # SOS
             dc_id, ac_id = payload[2] >> 4, payload[2] & 0xF
@@ -489,46 +507,15 @@ def decode_gray_jpeg(data: bytes) -> np.ndarray:
     if h is None or scan_start is None:
         raise ValueError("missing SOF/SOS")
 
-    # restart intervals (T.81 B.2.1.2): entropy data splits at RSTn
-    # markers into independent segments — DC predictor resets, bit
-    # stream re-byte-aligns.  Without DRI there is exactly one segment
-    # (identical to the pre-round-5 path).
-    segments = _split_restart_segments(data[scan_start:])
-    seg_i = 0
-    br = _BitReader(segments[0])
-    dc_tab, ac_tab = huff[(0, dc_id)], huff[(1, ac_id)]
     q = quant[comp_q]
     ph, pw = (h + 7) // 8 * 8, (w + 7) // 8 * 8
-    n_blocks = (ph // 8) * (pw // 8)
-    zz = np.zeros((n_blocks, 64), dtype=np.int64)
-    prev_dc = 0
-    blocks_in_seg = 0
-    for b in range(n_blocks):
-        if restart_interval and blocks_in_seg == restart_interval:
-            seg_i += 1
-            if seg_i >= len(segments):
-                raise ValueError("missing restart segment")
-            br = _BitReader(segments[seg_i])
-            prev_dc = 0
-            blocks_in_seg = 0
-        blocks_in_seg += 1
-        size = _read_huff(br, dc_tab)
-        diff = _extend(br.read_bits(size), size)
-        prev_dc += diff
-        zz[b, 0] = prev_dc
-        k = 1
-        while k < 64:
-            rs = _read_huff(br, ac_tab)
-            run, size = rs >> 4, rs & 0xF
-            if rs == 0x00:  # EOB
-                break
-            if rs == 0xF0:  # ZRL
-                k += 16
-                continue
-            k += run
-            zz[b, k] = _extend(br.read_bits(size), size)
-            k += 1
-
+    zz = np.zeros(((ph // 8) * (pw // 8), 64), dtype=np.int64)
+    # a one-component scan walks its blocks in raster order, whatever
+    # sampling factors the frame header declares
+    _dec_baseline_scan(
+        [zz], data[scan_start:], huff, [(0, dc_id, ac_id)], [(1, 1)],
+        pw // 8, ph // 8, h, w, restart_interval,
+    )
     return _blocks_to_pixels(zz, q, h, w)
 
 
@@ -848,206 +835,197 @@ def encode_gray_jpeg_progressive(
     )
 
 
-def _dec_ac_first(
-    zz: np.ndarray, br: _BitReader, ac_tab: dict, ss: int, se: int, al: int
+def _restart_chunks(entropy: bytes, units: list, step: int) -> list[tuple[bytes, list]]:
+    """A progressive scan's (entropy segment, units) pairs: one pair
+    without DRI, else one per `step` units with as many RSTn segments."""
+    if not step:
+        return [(entropy, units)]
+    segs = _split_restart_segments(entropy)
+    chunks = [units[lo : lo + step] for lo in range(0, len(units), step)]
+    if len(segs) != len(chunks):
+        raise ValueError("restart segment count mismatch")
+    return list(zip(segs, chunks))
+
+
+def _dec_dc_first(
+    seg: bytes, tabs: list, units: list[tuple[int, int]], al: int,
+    pos: list[list[int]], val: list[list[int]],
 ) -> None:
+    """Progressive DC first scan (T.81 G.1.2.1) over (scan component,
+    block) units: baseline DC difference coding, values point-shifted by
+    `al`."""
+    d, total = _unstuff(seg)
+    acc = nb = i = 0
+    prev = [0] * len(tabs)
+    for oc, bi in units:
+        look, lb, lm = tabs[oc]
+        while nb < 32:
+            acc = (acc << 8 | d[i]) & 0xFFFFFFFFFF
+            i += 1
+            nb += 8
+        s, ln = look[acc >> (nb - lb) & lm]
+        if not ln:
+            raise ValueError("bad huffman code")
+        nb -= ln
+        if s:
+            while nb < s:  # DC sizes above 16 only in malformed tables
+                acc = acc << 8 | d[i]
+                i += 1
+                nb += 8
+            nb -= s
+            m = (1 << s) - 1
+            v = acc >> nb & m
+            prev[oc] += v - m if v <= m >> 1 else v
+        pos[oc].append(bi << 8)
+        val[oc].append(prev[oc] << al)
+    _check_exhausted(i, nb, total)
+
+
+def _dec_ac_first(
+    seg: bytes, tab: tuple, blocks: list[int], ss: int, se: int,
+    pos: list[int], val: list[int],
+) -> None:
+    """Progressive AC first scan over band [ss, se] (T.81 G.1.2.2):
+    run/size symbols with EOB runs across blocks.  Values are appended
+    before the point shift."""
+    d, total = _unstuff(seg)
+    look, lb, lm = tab
+    pa, va = pos.append, val.append
+    acc = nb = i = 0
     eobrun = 0
-    for b in range(zz.shape[0]):
-        if eobrun > 0:
+    for b in blocks:
+        if eobrun:
             eobrun -= 1
             continue
+        base = b << 8
         k = ss
         while k <= se:
-            rs = _read_huff(br, ac_tab)
-            r, s = rs >> 4, rs & 0xF
-            if s == 0:
-                if r != 15:
-                    eobrun = (1 << r) - 1  # current block consumes one
-                    if r:
-                        eobrun += br.read_bits(r)
-                    break
-                k += 16  # ZRL
-                continue
-            k += r
-            if k > se:
-                raise ValueError("AC band overrun")
-            # negative << al is exact sign-magnitude scaling for the
-            # freshly-decoded value (one nonzero power-of-two factor)
-            zz[b, k] = _extend(br.read_bits(s), s) << al
-            k += 1
+            while nb < 32:
+                acc = (acc << 8 | d[i]) & 0xFFFFFFFFFF
+                i += 1
+                nb += 8
+            r, v, t, s = look[acc >> (nb - lb) & lm]
+            nb -= t
+            if v or s:
+                k += r
+                if k > se:
+                    raise ValueError("AC band overrun")
+                if s:  # magnitude bits past the lookahead window
+                    nb -= s
+                    m = (1 << s) - 1
+                    v = acc >> nb & m
+                    if v <= m >> 1:
+                        v -= m
+                pa(base + k)
+                va(v)
+                k += 1
+            elif r == 15:  # ZRL
+                k += 16
+            elif t:  # EOB run: this block plus (1 << r) - 1 + r more bits
+                eobrun = (1 << r) - 1
+                if r:
+                    nb -= r
+                    eobrun += acc >> nb & ((1 << r) - 1)
+                break
+            else:
+                raise ValueError("bad huffman code")
+    _check_exhausted(i, nb, total)
 
 
 def _dec_ac_refine(
-    zz: np.ndarray, br: _BitReader, ac_tab: dict, ss: int, se: int, al: int
+    seg: bytes, tab: tuple, blocks: list[int], rows: list[list[int]],
+    ss: int, se: int, al: int, pos: list[int], val: list[int],
 ) -> None:
+    """Progressive AC refinement scan (T.81 G.1.2.3 / figure G.7).
+    `rows` are the blocks' coefficients before the scan; a scan visits
+    each coefficient of a block at most once, so they decide every
+    nonzero-history test.  Newly nonzero and corrected coefficients are
+    appended to pos/val."""
+    d, total = _unstuff(seg)
+    look, lb, lm = tab
+    pa, va = pos.append, val.append
     p1, m1 = 1 << al, -(1 << al)
-
-    def correct(b: int, k: int) -> None:
-        cur = int(zz[b, k])
-        if br.read_bit():
-            # skip if this bit was already set by an earlier correction
-            # (magnitudes here are multiples of 2^(al+1), so the two's-
-            # complement test reads bit `al` of |coef| exactly)
-            if (cur & p1) == 0:
-                zz[b, k] = cur + (p1 if cur >= 0 else m1)
-
+    acc = nb = i = 0
     eobrun = 0
-    for b in range(zz.shape[0]):
+    for b, row in zip(blocks, rows):
+        base = b << 8
         k = ss
-        if eobrun == 0:
+        if not eobrun:
             while k <= se:
-                rs = _read_huff(br, ac_tab)
-                r, s = rs >> 4, rs & 0xF
+                while nb < 32:
+                    acc = (acc << 8 | d[i]) & 0xFFFFFFFFFF
+                    i += 1
+                    nb += 8
+                r, v, t, s = look[acc >> (nb - lb) & lm]
+                nb -= t
                 newval = 0
-                if s == 0:
-                    if r != 15:
-                        eobrun = 1 << r
-                        if r:
-                            eobrun += br.read_bits(r)
-                        break  # EOB-run tail handled below
-                    # r == 15: ZRL — skip 16 zero-history coefficients
-                else:
-                    if s != 1:
+                if v or s:
+                    if s:  # sign bit past the lookahead window
+                        nb -= 1
+                        v = acc >> nb & 1 or -1
+                    if s > 1 or v not in (1, -1):
                         raise ValueError("refinement magnitude must be 1")
-                    newval = p1 if br.read_bit() else m1
-                # advance over r zero-history positions, correcting
-                # already-nonzero coefficients along the way
+                    newval = p1 if v > 0 else m1
+                elif r != 15:
+                    if not t:
+                        raise ValueError("bad huffman code")
+                    eobrun = 1 << r
+                    if r:
+                        nb -= r
+                        eobrun += acc >> nb & ((1 << r) - 1)
+                    break  # EOB-run tail handled below
+                # advance over r zero-history positions (ZRL: 16),
+                # reading a correction bit for every nonzero one passed
                 while k <= se:
-                    if int(zz[b, k]) != 0:
-                        correct(b, k)
-                    else:
-                        if r == 0:
-                            break
+                    cur = row[k]
+                    if cur:
+                        while nb < 32:
+                            acc = (acc << 8 | d[i]) & 0xFFFFFFFFFF
+                            i += 1
+                            nb += 8
+                        nb -= 1
+                        # magnitudes here are multiples of 2^(al+1), so
+                        # the two's-complement test reads bit `al` of |cur|
+                        if acc >> nb & 1 and not cur & p1:
+                            pa(base + k)
+                            va(cur + (p1 if cur >= 0 else m1))
+                    elif r:
                         r -= 1
+                    else:
+                        break
                     k += 1
-                if s:
+                if newval:
                     if k > se:
                         raise ValueError("AC band overrun")
-                    zz[b, k] = newval
+                    pa(base + k)
+                    va(newval)
                 k += 1
-        if eobrun > 0:
+        if eobrun:
             while k <= se:  # correction bits for the rest of this block
-                if int(zz[b, k]) != 0:
-                    correct(b, k)
+                cur = row[k]
+                if cur:
+                    while nb < 32:
+                        acc = (acc << 8 | d[i]) & 0xFFFFFFFFFF
+                        i += 1
+                        nb += 8
+                    nb -= 1
+                    if acc >> nb & 1 and not cur & p1:
+                        pa(base + k)
+                        va(cur + (p1 if cur >= 0 else m1))
                 k += 1
             eobrun -= 1
+    _check_exhausted(i, nb, total)
 
 
 def decode_gray_jpeg_progressive(data: bytes) -> np.ndarray:
     """Progressive (SOF2) grayscale JFIF bytes -> uint8 HxW array.
 
     Round 6: dispatches to the component-generic T.81 §G core
-    (`_decode_jpeg_planes`, proven bit-identical to the round-5
-    single-component decoder), which also carries restart-interval
+    (`_decode_jpeg_planes`), which also carries restart-interval
     (DRI/RSTn) support — every scan segment re-byte-aligns with DC
-    predictors and EOB runs reset.  The historical single-component
-    loop below remains as the reference implementation exercised by
-    `test_progressive_legacy_decoder_matches_core`."""
+    predictors and EOB runs reset.  `tests/test_decode_pin.py` pins its
+    output on the progressive gray corpora."""
     return _decode_jpeg_planes(data, expect_comps=1)[0]
-
-
-def _decode_gray_jpeg_progressive_legacy(data: bytes) -> np.ndarray:
-    """Round-5 single-component progressive decoder (no DRI)."""
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
-    quant: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict] = {}
-    h = w = None
-    comp_q = 0
-    zz = None
-    n = len(data)
-    while pos + 2 <= n:
-        if data[pos] != 0xFF:
-            raise ValueError("bad marker alignment")
-        while pos + 2 <= n and data[pos + 1] == 0xFF:
-            pos += 1  # T.81 B.1.1.2 fill bytes
-        if pos + 2 > n:
-            break
-        marker = data[pos + 1]
-        pos += 2
-        if marker == 0xD9:  # EOI
-            break
-        if 0xD0 <= marker <= 0xD7 or marker == 0x01:  # standalone
-            continue
-        if pos + 2 > n:
-            raise ValueError("truncated segment")
-        (seg_len,) = struct.unpack(">H", data[pos : pos + 2])
-        payload = data[pos + 2 : pos + seg_len]
-        pos += seg_len
-        if marker == 0xDB:  # DQT
-            p = 0
-            while p < len(payload):
-                pq, tq = payload[p] >> 4, payload[p] & 0xF
-                if pq != 0:
-                    raise ValueError("16-bit quant tables unsupported")
-                quant[tq] = np.frombuffer(
-                    payload[p + 1 : p + 65], dtype=np.uint8
-                ).astype(np.int64)
-                p += 65
-        elif marker == 0xC4:  # DHT
-            p = 0
-            while p < len(payload):
-                tc, th = payload[p] >> 4, payload[p] & 0xF
-                bits = [0] + list(payload[p + 1 : p + 17])
-                n_vals = sum(bits)
-                vals = list(payload[p + 17 : p + 17 + n_vals])
-                huff[(tc, th)] = _build_decode(bits, vals)
-                p += 17 + n_vals
-        elif marker == 0xC2:  # SOF2
-            prec, h, w, n_comp = struct.unpack(">BHHB", payload[:6])
-            if n_comp != 1:
-                raise ValueError("only single-component progressive JPEG supported")
-            if prec != 8:
-                raise ValueError("only 8-bit precision supported")
-            comp_q = payload[8]
-            zz = np.zeros((((h + 7) // 8) * ((w + 7) // 8), 64), dtype=np.int64)
-        elif marker in (0xC0, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7,
-                        0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError("unsupported JPEG frame type")
-        elif marker == 0xDD:
-            raise ValueError("restart intervals unsupported")
-        elif marker == 0xDA:  # SOS: scan header + entropy data to next marker
-            if zz is None:
-                raise ValueError("SOS before SOF2")
-            if payload[0] != 1:
-                raise ValueError("only single-component scans supported")
-            td, ta = payload[2] >> 4, payload[2] & 0xF
-            ss, se, ahal = payload[3], payload[4], payload[5]
-            ah, al = ahal >> 4, ahal & 0xF
-            end = pos
-            while end + 1 < n:
-                if (
-                    data[end] == 0xFF
-                    and data[end + 1] != 0x00
-                    and not (0xD0 <= data[end + 1] <= 0xD7)
-                ):
-                    break
-                end += 1
-            br = _BitReader(data[pos:end])
-            if ss == 0:
-                if se != 0:
-                    raise ValueError("DC scan must have Se=0")
-                if ah == 0:
-                    prev = 0
-                    dc_tab = huff[(0, td)]
-                    for b in range(zz.shape[0]):
-                        size = _read_huff(br, dc_tab)
-                        prev += _extend(br.read_bits(size), size)
-                        zz[b, 0] = prev << al
-                else:
-                    p1 = 1 << al
-                    for b in range(zz.shape[0]):
-                        if br.read_bit():
-                            zz[b, 0] |= p1
-            elif ah == 0:
-                _dec_ac_first(zz, br, huff[(1, ta)], ss, se, al)
-            else:
-                _dec_ac_refine(zz, br, huff[(1, ta)], ss, se, al)
-            pos = end
-    if zz is None or h is None:
-        raise ValueError("missing SOF2")
-    return _blocks_to_pixels(zz, quant[comp_q], h, w)
 
 
 def jpeg_scope_reason(data: bytes) -> str | None:
@@ -1557,16 +1535,13 @@ def _scan_entropy_end(data: bytes, pos: int) -> int:
     """Index just past the entropy-coded data starting at `pos`: the
     first 0xFF followed by a non-stuffing, non-RSTn byte."""
     n = len(data)
-    end = pos
-    while end + 1 < n:
-        if (
-            data[end] == 0xFF
-            and data[end + 1] != 0x00
-            and not (0xD0 <= data[end + 1] <= 0xD7)
-        ):
-            break
-        end += 1
-    return end
+    end = data.find(b"\xff", pos)
+    while end != -1 and end + 1 < n:
+        nxt = data[end + 1]
+        if nxt != 0x00 and not 0xD0 <= nxt <= 0xD7:
+            return end
+        end = data.find(b"\xff", end + 1)
+    return max(pos, n - 1)
 
 
 def decode_jpeg_rgb(data: bytes) -> np.ndarray:
@@ -1629,10 +1604,8 @@ def _decode_jpeg_planes(data: bytes, expect_comps: int) -> list[np.ndarray]:
             p = 0
             while p < len(payload):
                 tc, th = payload[p] >> 4, payload[p] & 0xF
-                bits = [0] + list(payload[p + 1 : p + 17])
-                n_vals = sum(bits)
-                vals = list(payload[p + 17 : p + 17 + n_vals])
-                huff[(tc, th)] = _build_decode(bits, vals)
+                n_vals = sum(payload[p + 1 : p + 17])
+                huff[(tc, th)] = _huff_table(bytes(payload[p + 1 : p + 17 + n_vals]), tc == 1)
                 p += 17 + n_vals
         elif marker == 0xDD:
             (restart_interval,) = struct.unpack(">H", payload[:2])
@@ -1689,76 +1662,54 @@ def _decode_jpeg_planes(data: bytes, expect_comps: int) -> list[np.ndarray]:
                     mcux, mcuy, h, w, restart_interval,
                 )
             elif ss == 0:  # progressive DC scan (interleaved or not)
-                order = (
-                    _mcu_block_order(
+                if ns > 1:
+                    units = _mcu_block_order(
                         [factors[ci] for ci, _, _ in scan_comps], mcux, mcuy
                     )
-                    if ns > 1
-                    else [
-                        (0, int(i))
-                        for i in _inrange_idx(
-                            scan_comps[0][0], factors, mcux, mcuy, h, w
-                        )
-                    ]
-                )
+                    bpm = sum(factors[ci][0] * factors[ci][1] for ci, _, _ in scan_comps)
+                else:
+                    idx = _inrange_idx(scan_comps[0][0], factors, mcux, mcuy, h, w)
+                    units = [(0, bi) for bi in idx.tolist()]
+                    bpm = 1
                 # restart intervals (round 6): Ri MCUs per segment; each
                 # RSTn re-byte-aligns and resets every DC predictor
-                if restart_interval:
-                    bpm = (
-                        sum(factors[ci][0] * factors[ci][1] for ci, _, _ in scan_comps)
-                        if ns > 1
-                        else 1
-                    )
-                    step = restart_interval * bpm
-                    segs = _split_restart_segments(entropy)
-                    chunks = [
-                        order[lo : lo + step] for lo in range(0, len(order), step)
-                    ]
-                    if len(segs) != len(chunks):
-                        raise ValueError("restart segment count mismatch")
-                else:
-                    segs, chunks = [entropy], [order]
-                for seg, chunk in zip(segs, chunks):
-                    br = _BitReader(seg)
-                    if ah == 0:
-                        prev = [0] * ns
-                        for oc, bi in chunk:
-                            ci, td, _ = scan_comps[oc]
-                            size = _read_huff(br, huff[(0, td)])
-                            prev[oc] += _extend(br.read_bits(size), size)
-                            zz[ci][bi, 0] = prev[oc] << al
-                    else:
-                        p1 = 1 << al
-                        for oc, bi in chunk:
-                            ci = scan_comps[oc][0]
-                            if br.read_bit():
-                                zz[ci][bi, 0] |= p1
+                chunks = _restart_chunks(entropy, units, restart_interval * bpm)
+                if ah == 0:
+                    tabs = [huff.get((0, td)) for _, td, _ in scan_comps]
+                    cpos = [[] for _ in scan_comps]
+                    cval = [[] for _ in scan_comps]
+                    for seg, chunk in chunks:
+                        _dec_dc_first(seg, tabs, chunk, al, cpos, cval)
+                    for (ci, _, _), cp, cv in zip(scan_comps, cpos, cval):
+                        _scatter(zz[ci], cp, cv)
+                else:  # DC refinement: one raw bit per unit, no coding
+                    for seg, chunk in chunks:
+                        d, total = _unstuff(seg)
+                        if len(chunk) > total:
+                            raise ValueError("entropy data exhausted")
+                        bit = np.unpackbits(np.frombuffer(d, np.uint8))[: len(chunk)]
+                        u = np.array(chunk, dtype=np.int64).reshape(-1, 2)
+                        for oc, (ci, _, _) in enumerate(scan_comps):
+                            sel = (u[:, 0] == oc) & (bit == 1)
+                            zz[ci][u[sel, 1], 0] |= 1 << al
             else:  # progressive AC scan: non-interleaved by spec
                 if ns != 1:
                     raise ValueError("interleaved AC scan is not valid T.81")
                 ci, _, ta = scan_comps[0]
-                idx = _inrange_idx(ci, factors, mcux, mcuy, h, w)
+                tab = huff[(1, ta)]
+                z = zz[ci]
                 # restart intervals (round 6): a non-interleaved scan's
                 # MCU is one block, so segments cover Ri blocks; EOB runs
                 # cannot span a restart (fresh decoder state per segment)
-                if restart_interval:
-                    segs = _split_restart_segments(entropy)
-                    chunks = [
-                        idx[lo : lo + restart_interval]
-                        for lo in range(0, len(idx), restart_interval)
-                    ]
-                    if len(segs) != len(chunks):
-                        raise ValueError("restart segment count mismatch")
-                else:
-                    segs, chunks = [entropy], [idx]
-                for seg, sub_idx in zip(segs, chunks):
-                    sub = zz[ci][sub_idx]
-                    br = _BitReader(seg)
+                idx = _inrange_idx(ci, factors, mcux, mcuy, h, w).tolist()
+                cpos, cval = [], []
+                for seg, blocks in _restart_chunks(entropy, idx, restart_interval):
                     if ah == 0:
-                        _dec_ac_first(sub, br, huff[(1, ta)], ss, se, al)
+                        _dec_ac_first(seg, tab, blocks, ss, se, cpos, cval)
                     else:
-                        _dec_ac_refine(sub, br, huff[(1, ta)], ss, se, al)
-                    zz[ci][sub_idx] = sub
+                        rows = z[blocks].tolist()
+                        _dec_ac_refine(seg, tab, blocks, rows, ss, se, al, cpos, cval)
+                _scatter(z, cpos, np.array(cval, dtype=np.int64) << al if ah == 0 else cval)
     if not comps or h is None:
         raise ValueError("missing SOF/SOS")
     hmax = max(f[0] for f in factors)
@@ -1794,51 +1745,89 @@ def _dec_baseline_scan(
     single-component scan over its in-range block grid) with RSTn
     restart segments — every component's DC predictor resets."""
     if len(scan_comps) > 1:
-        order = [
-            (oc, bi)
-            for oc, bi in _mcu_block_order(
-                [factors[ci] for ci, _, _ in scan_comps], mcux, mcuy
-            )
-        ]
+        order = _mcu_block_order(
+            [factors[ci] for ci, _, _ in scan_comps], mcux, mcuy
+        )
         blocks_per_unit = sum(
             factors[ci][0] * factors[ci][1] for ci, _, _ in scan_comps
         )
     else:
-        order = [
-            (0, int(i))
-            for i in _inrange_idx(scan_comps[0][0], factors, mcux, mcuy, h, w)
-        ]
+        idx = _inrange_idx(scan_comps[0][0], factors, mcux, mcuy, h, w)
+        order = [(0, bi) for bi in idx.tolist()]
         blocks_per_unit = 1
     segments = _split_restart_segments(entropy)
-    seg_i = 0
-    br = _BitReader(segments[0])
-    prev = [0] * len(scan_comps)
-    step = restart_interval * blocks_per_unit if restart_interval else 0
-    for k, (oc, bi) in enumerate(order):
-        if step and k and k % step == 0:
-            seg_i += 1
-            if seg_i >= len(segments):
-                raise ValueError("missing restart segment")
-            br = _BitReader(segments[seg_i])
-            prev = [0] * len(scan_comps)
-        ci, td, ta = scan_comps[oc]
-        dc_tab, ac_tab = huff[(0, td)], huff[(1, ta)]
-        size = _read_huff(br, dc_tab)
-        prev[oc] += _extend(br.read_bits(size), size)
-        z = zz[ci]
-        z[bi, 0] = prev[oc]
-        kk = 1
-        while kk < 64:
-            rs = _read_huff(br, ac_tab)
-            run, size = rs >> 4, rs & 0xF
-            if rs == 0x00:
-                break
-            if rs == 0xF0:
-                kk += 16
-                continue
-            kk += run
-            z[bi, kk] = _extend(br.read_bits(size), size)
-            kk += 1
+    step = restart_interval * blocks_per_unit or len(order) or 1
+    pos: list[list[int]] = [[] for _ in scan_comps]
+    val: list[list[int]] = [[] for _ in scan_comps]
+    # per scan component: (DC table, AC table, pos.append, val.append),
+    # flattened; a missing table fails at its first block
+    comps = []
+    for (_, td, ta), p, v in zip(scan_comps, pos, val):
+        dc, ac = huff.get((0, td)), huff.get((1, ta))
+        comps.append((*(dc or (None,) * 3), *(ac or (None,) * 3), p.append, v.append))
+    for seg_i, lo in enumerate(range(0, len(order), step)):
+        if seg_i >= len(segments):
+            raise ValueError("missing restart segment")
+        d, total = _unstuff(segments[seg_i])
+        acc = nb = i = 0
+        prev = [0] * len(scan_comps)
+        for oc, bi in order[lo : lo + step]:
+            dlook, dlb, dlm, alook, alb, alm, pa, va = comps[oc]
+            while nb < 32:
+                acc = (acc << 8 | d[i]) & 0xFFFFFFFFFF
+                i += 1
+                nb += 8
+            s, ln = dlook[acc >> (nb - dlb) & dlm]
+            if not ln:
+                raise ValueError("bad huffman code")
+            nb -= ln
+            if s:
+                while nb < s:  # DC sizes above 16 only in malformed tables
+                    acc = acc << 8 | d[i]
+                    i += 1
+                    nb += 8
+                nb -= s
+                m = (1 << s) - 1
+                v = acc >> nb & m
+                prev[oc] += v - m if v <= m >> 1 else v
+            base = bi << 8
+            pa(base)
+            va(prev[oc])
+            k = 1
+            while k < 64:
+                while nb < 32:
+                    acc = (acc << 8 | d[i]) & 0xFFFFFFFFFF
+                    i += 1
+                    nb += 8
+                r, v, t, s = alook[acc >> (nb - alb) & alm]
+                nb -= t
+                if v:
+                    k += r
+                    pa(base + k)
+                    va(v)
+                    k += 1
+                elif s:  # magnitude bits past the lookahead window
+                    k += r
+                    nb -= s
+                    m = (1 << s) - 1
+                    v = acc >> nb & m
+                    pa(base + k)
+                    va(v - m if v <= m >> 1 else v)
+                    k += 1
+                elif r == 15:  # ZRL
+                    k += 16
+                elif r:  # not a baseline symbol: stores a zero
+                    k += r
+                    pa(base + k)
+                    va(0)
+                    k += 1
+                elif t:  # EOB
+                    break
+                else:
+                    raise ValueError("bad huffman code")
+        _check_exhausted(i, nb, total)
+    for (ci, _, _), p, v in zip(scan_comps, pos, val):
+        _scatter(zz[ci], p, v)
 
 
 def encode_lossless_stub(h: int = 32, w: int = 64) -> bytes:

@@ -304,21 +304,6 @@ def test_dri_in_scope_for_baseline_and_progressive():
         decode_gray_jpeg(with_dri)
 
 
-def test_progressive_legacy_decoder_matches_core():
-    """The retained round-5 single-component progressive decoder and the
-    generic multi-component core agree bit-for-bit (the core is the
-    dispatch target since round 6)."""
-    from ms_ocr_spark.extraction.ocr.jpeg import (
-        _decode_gray_jpeg_progressive_legacy,
-    )
-
-    for img in _image_zoo():
-        pb = encode_gray_jpeg_progressive(img)
-        assert np.array_equal(
-            _decode_gray_jpeg_progressive_legacy(pb), decode_gray_jpeg(pb)
-        )
-
-
 def test_color_progressive_restart_intervals():
     """Interleaved-DC and per-component-AC restart chunking: DRI color
     progressive decodes bit-identically to the no-DRI encoding."""
