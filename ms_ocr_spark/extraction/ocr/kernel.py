@@ -215,45 +215,62 @@ def estimate_skew(mask: np.ndarray, grid: np.ndarray = SKEW_GRID) -> float:
     O(#ink * #angles), no image resampling.  Returns the angle to pass to
     ``rotate_nn`` directly (i.e. the correction, not the applied skew).
     """
-    ys, xs = np.nonzero(mask)
-    if len(ys) == 0:
+    # flat indices split by the row length: np.nonzero's row-major
+    # coordinates at a fraction of its cost on 2-D masks
+    flat = np.flatnonzero(mask)
+    if len(flat) == 0:
         return 0.0
-    if len(ys) > 6000:  # deterministic stride sample bounds the O(#ink * #angles) cost
-        step = len(ys) // 6000 + 1
-        ys, xs = ys[::step], xs[::step]
-    cy, cx = ys.mean(), xs.mean()
-    best_deg, best_score = 0.0, -1.0
+    if len(flat) > 6000:  # deterministic stride sample bounds the O(#ink * #angles) cost
+        flat = flat[:: len(flat) // 6000 + 1]
+    ys = flat // mask.shape[1]
+    xs = flat - ys * mask.shape[1]
+    # exact integer sums: the same float64 means as ys.mean(), xs.mean()
+    cy, cx = ys.sum() / len(ys), xs.sum() / len(xs)
     xs32 = (xs - cx).astype(np.float32)
     ys32 = (ys - cy).astype(np.float32)
-    # one fixed offset bounds every rotated coordinate (|yr| <= |x|+|y|),
-    # so the per-angle rows.min()/cols.min() reduction passes disappear;
-    # bincount's extra leading/trailing zero bins add 0 to the squared
-    # profile energy — scores, and therefore the argmax, are unchanged
-    # (round 8)
+    # every candidate at once: rotated rows (-s*x + c*y) and columns
+    # (c*x + s*y) of all angles as one (2 * angles, ink) float32 array --
+    # the same elementwise float32 products as one angle at a time -- and
+    # one bincount with a bin range per (angle, axis).  One fixed offset
+    # bounds every rotated coordinate (|yr| <= |x|+|y|); extra zero bins
+    # add nothing to the squared profile energy.  Scores are sums of
+    # integer squares, so they are exact and argmax keeps the first
+    # maximum in grid order.  Rows dominate (line alignment); columns
+    # break ties on short single-line text where the row profile is weakly
+    # discriminative.
     off = int(np.ceil(np.abs(xs32).max() + np.abs(ys32).max())) + 1
-    for deg in grid:
-        th = np.deg2rad(-deg)  # candidate correction
-        c, s = np.float32(np.cos(th)), np.float32(np.sin(th))
-        yr = -s * xs32 + c * ys32
-        xr = c * xs32 + s * ys32
-        rows = np.rint(yr).astype(np.int64)
-        cols = np.rint(xr).astype(np.int64)
-        rcounts = np.bincount(rows + off).astype(np.float64)
-        ccounts = np.bincount(cols + off).astype(np.float64)
-        # rows dominate (line alignment), columns break ties on short
-        # single-line text where the row profile is weakly discriminative
-        score = float((rcounts**2).sum()) + float((ccounts**2).sum())
-        if score > best_score:
-            best_score, best_deg = score, float(deg)
-    return best_deg
+    coef_x, coef_y = _SKEW_COEFS if grid is SKEW_GRID else _skew_coefs(grid)
+    rot = coef_x * xs32
+    rot += coef_y * ys32
+    np.rint(rot, out=rot)
+    span = 2 * off + 1
+    idx = rot.astype(np.intp)
+    idx += (np.arange(len(rot)) * span + off)[:, None]
+    counts = np.bincount(idx.ravel(), minlength=len(rot) * span).reshape(len(rot), span)
+    energy = (counts * counts).sum(axis=1)
+    return float(grid[int(np.argmax(energy[: len(grid)] + energy[len(grid) :]))])
+
+
+def _skew_coefs(grid: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """float32 (x, y) coefficients of the rotated rows then columns for
+    each candidate correction, as (2 * angles, 1) columns."""
+    th = np.deg2rad(-np.asarray(grid, dtype=np.float64))
+    c = np.cos(th).astype(np.float32)
+    s = np.sin(th).astype(np.float32)
+    return np.concatenate((-s, c))[:, None], np.concatenate((c, s))[:, None]
+
+
+_SKEW_COEFS = _skew_coefs(SKEW_GRID)
 
 
 def connected_components(mask: np.ndarray) -> list[tuple[int, int, int, int]]:
-    """Run-based union-find CC labeling (8-connectivity via run overlap+1).
+    """Run-based CC labeling (8-connectivity via run overlap+1), all in
+    numpy.
 
-    Returns component bounding boxes as (x1, y1, x2, y2) exclusive-end.
-    Equivalent role to cv2.connectedComponents in the reference
-    (`image_processor/main.py:292-305`), vectorized per row.
+    Returns component bounding boxes as (x1, y1, x2, y2) exclusive-end,
+    in order of each component's first run (row-major).  Equivalent role
+    to cv2.connectedComponents in the reference
+    (`image_processor/main.py:292-305`).
     """
     h, w = mask.shape
     # vectorized run extraction: one diff over the whole zero-padded mask
@@ -261,73 +278,50 @@ def connected_components(mask: np.ndarray) -> list[tuple[int, int, int, int]]:
     padded[:, 1:-1] = mask
     d = np.diff(padded, axis=1)
     srow, scol = np.nonzero(d == 1)  # run starts, row-major order
-    erow, ecol = np.nonzero(d == -1)  # run ends (exclusive), same count/rows
+    _, ecol = np.nonzero(d == -1)  # run ends (exclusive), same count/rows
     n = len(srow)
     if n == 0:
         return []
-    parent = list(range(n))
-
-    def find(a: int) -> int:
-        while parent[a] != a:
-            parent[a] = parent[parent[a]]
-            a = parent[a]
-        return a
-
-    # round 8: the run-overlap edges are generated VECTORIZED per row
-    # pair (two binary searches per current run — runs within a row are
-    # disjoint and sorted, so the 8-connected prev-row matches form one
-    # contiguous index range), replacing the per-run Python two-pointer
-    # scan; only the (small) edge list is walked in Python for the
-    # union.  Same edges, same components.
-    rows_u, row_first = np.unique(srow, return_index=True)
-    bounds = np.append(row_first, n)
-    for k in range(1, len(rows_u)):
-        if rows_u[k] != rows_u[k - 1] + 1:
-            continue
-        p0, p1 = row_first[k - 1], row_first[k]
-        c0, c1 = row_first[k], bounds[k + 1]
-        ps, pe = scol[p0:p1], ecol[p0:p1]
-        cs, ce = scol[c0:c1], ecol[c0:c1]
-        # 8-connectivity: prev run overlaps [s-1, e+1): first prev with
-        # ecol >= s .. first prev with scol >= e+1
-        lo = np.searchsorted(pe, cs, "left")
-        hi = np.searchsorted(ps, ce + 1, "left")
-        cnt = np.maximum(hi - lo, 0)
-        tot = int(cnt.sum())
-        if tot == 0:
-            continue
-        csum = np.cumsum(cnt)
-        ids = np.arange(tot)
-        which = np.searchsorted(csum, ids, "right")
-        prev_j = (p0 + lo[which] + ids - (csum - cnt)[which]).tolist()
-        cur_i = (c0 + which).tolist()
-        for a, b in zip(prev_j, cur_i):
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[rb] = ra
-    # per-root bounding boxes via reduceat over root-sorted runs; output
-    # order = first occurrence of each root by run index, exactly the
-    # former dict-insertion order.  Root resolution is numpy pointer
-    # jumping (O(log n) full-array gathers) instead of a Python find()
-    # per run — same fixpoint as path-compressed find.
-    roots = np.asarray(parent, dtype=np.int64)
-    while True:
-        jumped = roots[roots]
-        if np.array_equal(jumped, roots):
+    # run-overlap edges for all row pairs at once.  Keys row * (w + 2) +
+    # col are sorted in run order, so two binary searches give, for each
+    # run, the contiguous range of previous-row runs it touches: prev
+    # ecol >= s .. prev scol >= e + 1 (8-connectivity).
+    stride = w + 2
+    skey = srow * stride + scol
+    ekey = srow * stride + ecol
+    prev_row = skey - scol - stride  # row - 1, scaled
+    lo = np.searchsorted(ekey, prev_row + scol, "left")
+    hi = np.searchsorted(skey, prev_row + ecol + 1, "left")
+    cnt = np.maximum(hi - lo, 0)
+    cur = np.repeat(np.arange(n), cnt)
+    prev = lo[cur] + np.arange(len(cur)) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+    # labels: every run ends with the smallest run index of its component.
+    # Each round hooks the larger label of every edge onto the smaller one,
+    # then pointer jumping flattens the label forest (labels only ever
+    # point to smaller indices).
+    label = np.arange(n)
+    while len(cur):
+        lp, lc = label[prev], label[cur]
+        if np.array_equal(lp, lc):
             break
-        roots = jumped
-    order = np.argsort(roots, kind="stable")
-    sr = roots[order]
-    starts = np.concatenate(([0], np.nonzero(np.diff(sr))[0] + 1))
+        low = np.minimum(lp, lc)
+        np.minimum.at(label, lp, low)
+        np.minimum.at(label, lc, low)
+        while True:
+            jumped = label[label]
+            if np.array_equal(jumped, label):
+                break
+            label = jumped
+    # per-component bounding boxes via reduceat over label-sorted runs; a
+    # label is the component's first run, so label order is emit order
+    order = np.argsort(label, kind="stable")
+    sl = label[order]
+    starts = np.concatenate(([0], np.nonzero(np.diff(sl))[0] + 1))
     x1 = np.minimum.reduceat(scol[order], starts)
     x2 = np.maximum.reduceat(ecol[order], starts)
     y1 = np.minimum.reduceat(srow[order], starts)
     y2 = np.maximum.reduceat(srow[order], starts) + 1
-    _, first_idx = np.unique(roots, return_index=True)
-    emit = np.argsort(first_idx, kind="stable")
-    return [
-        (int(x1[k]), int(y1[k]), int(x2[k]), int(y2[k])) for k in emit
-    ]
+    return list(zip(x1.tolist(), y1.tolist(), x2.tolist(), y2.tolist()))
 
 
 def _bands_1d(ink: np.ndarray, min_blank: int = 4) -> list[tuple[int, int]]:
