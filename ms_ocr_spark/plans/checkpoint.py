@@ -74,15 +74,17 @@ def _lineage_path(out_dir: str, job_id: str, bucket: int) -> str:
 def completed_buckets(
     spark: SparkSession, out_dir: str, job_id: str, n_buckets: int
 ) -> set[int]:
+    """Buckets of `job_id` whose lineage marker is committed: one listing
+    of `_lineage`, matched against the exact marker names."""
     fs, root = _fs(spark, f"{out_dir.rstrip('/')}/_lineage")
     if not fs.exists(root):
         return set()
-    done = set()
-    for b in range(n_buckets):
-        _, p = _fs(spark, _lineage_path(out_dir, job_id, b))
-        if fs.exists(p):
-            done.add(b)
-    return done
+    names = {st.getPath().getName() for st in fs.listStatus(root)}
+    return {
+        b
+        for b in range(n_buckets)
+        if _lineage_path(out_dir, job_id, b).rsplit("/", 1)[1] in names
+    }
 
 
 def _commit_lineage(spark: SparkSession, out_dir: str, job_id: str, row: dict) -> None:
