@@ -1,4 +1,4 @@
-"""Minimal deterministic JPEG codec (8-bit grayscale), stdlib+numpy.
+"""Minimal deterministic JPEG codec (8-bit gray, color and CMYK), stdlib+numpy.
 
 The reference accepts jpg FIRST in its upload allow-list
 (`/root/reference/env/local.env:25`) and decodes with PIL
@@ -7,14 +7,22 @@ PIL/OpenCV, so JPEG media in the synthetic corpus are real JFIF bytes
 produced/consumed by this codec: standard JPEG (ITU T.81) markers,
 Annex-K luminance Huffman tables, 8x8 DCT blocks.
 
-Scope (documented, honest): single-component (grayscale) 8-bit, baseline
-sequential AND progressive (SOF2 — full T.81 §G: spectral selection +
-successive approximation + EOB runs, round 5).  Out of scope: chroma
-(multi-component), restart intervals, arithmetic coding, lossless/
-hierarchical frames — `jpeg_scope_reason` classifies these for the
-quarantine telemetry.  Any conforming grayscale stream from another
-encoder decodes too (the decoder reads DQT/DHT tables from the stream,
-not from constants).
+Scope: 8-bit frames of 1, 3 (YCbCr) or 4 (Adobe CMYK/YCCK) components,
+baseline sequential AND progressive (SOF2: spectral selection,
+successive approximation, EOB runs), restart intervals in both.  Out of
+scope: arithmetic coding, lossless/hierarchical frames and the other
+layouts `jpeg_scope_reason` classifies for the quarantine telemetry.
+The decoder reads DQT/DHT tables from the stream, so conforming streams
+from other encoders decode too.
+
+Decoding: every scan loop (baseline, progressive DC first, AC first, AC
+refinement) inlines one table-driven bit reader (see "reader" below):
+the unstuffed entropy bytes feed a Python-int accumulator one byte at a
+time, and each Huffman symbol resolves in one probe of a lookahead list
+that, for AC tables, also carries the decoded coefficient when its
+magnitude bits fit in the 16-bit window.  Coefficients are collected in
+lists and stored once per scan.  The inverse DCT is two matrix products
+per block stack, `C.T @ blocks @ C`.
 
 Encoding defaults to a FLAT quantization table of all ones ("archival
 quality"): the only loss is integer rounding of DCT coefficients, which
@@ -335,16 +343,19 @@ def encode_gray_jpeg(
 # locals: `acc`, a Python int whose low `nb` bits are the next unread
 # bits of the stream, and `i`, the index of the next byte of `d` (the
 # unstuffed segment, zero-padded by `_unstuff`).  Before each Huffman
-# symbol the reader refills byte by byte to at least 25 bits, enough for
-# a 9-bit lookahead code plus a 16-bit magnitude:
+# symbol the reader refills byte by byte to at least 32 bits, enough for
+# a 16-bit code plus a 16-bit magnitude, and the 40-bit mask keeps the
+# int small (bits above `nb` are stale and never read):
 #
 #     while nb < 32:
 #         acc = (acc << 8 | d[i]) & 0xFFFFFFFFFF
 #         i += 1
 #         nb += 8
 #
-# `8 * i - nb` is the number of bits consumed; a segment whose decode
-# consumed more than `total` bits read its zero padding and raises.
+# Only a malformed DC table codes magnitudes above 16 bits; those refill
+# unmasked to the size they need.  `8 * i - nb` is the number of bits
+# consumed: a segment whose decode consumed more than `total` bits read
+# its zero padding and raises.
 
 
 def _unstuff(seg: bytes) -> tuple[bytes, int]:
