@@ -82,7 +82,6 @@ for _u in range(8):
         _C[_u, _x] = _a * np.cos((2 * _x + 1) * _u * np.pi / 16.0)
 
 
-
 def _build_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
     """Canonical Huffman: value -> (code, length)."""
     out: dict[int, tuple[int, int]] = {}
@@ -131,6 +130,28 @@ def _huff_table(spec: bytes, ac: bool) -> tuple[list, int, int]:
             entry = (r, 0, ln, size) if ac else (sym, ln)
             look[code << shift : (code + 1) << shift] = [entry] * (1 << shift)
     return look, width, (1 << width) - 1
+
+
+def _read_dqt(payload: bytes, quant: dict[int, np.ndarray]) -> None:
+    """One DQT segment (possibly several 8-bit tables) into `quant`."""
+    p = 0
+    while p < len(payload):
+        pq, tq = payload[p] >> 4, payload[p] & 0xF
+        if pq != 0:
+            raise ValueError("16-bit quant tables unsupported")
+        quant[tq] = np.frombuffer(payload[p + 1 : p + 65], dtype=np.uint8).astype(np.int64)
+        p += 65
+
+
+def _read_dht(payload: bytes, huff: dict[tuple[int, int], tuple]) -> None:
+    """One DHT segment (possibly several tables) into `huff`, keyed by
+    (class, id)."""
+    p = 0
+    while p < len(payload):
+        tc, th = payload[p] >> 4, payload[p] & 0xF
+        n_vals = sum(payload[p + 1 : p + 17])
+        huff[(tc, th)] = _huff_table(bytes(payload[p + 1 : p + 17 + n_vals]), tc == 1)
+        p += 17 + n_vals
 
 
 _DC_ENC = _build_codes(_DC_BITS, _DC_VALS)
@@ -470,7 +491,7 @@ def decode_gray_jpeg(data: bytes) -> np.ndarray:
         return decode_gray_jpeg_progressive(data)
     pos = 2
     quant: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict] = {}
+    huff: dict[tuple[int, int], tuple] = {}
     h = w = None
     comp_q = 0
     dc_id = ac_id = 0
@@ -486,15 +507,7 @@ def decode_gray_jpeg(data: bytes) -> np.ndarray:
         payload = data[pos + 4 : pos + 2 + seg_len]
         pos += 2 + seg_len
         if marker == 0xDB:  # DQT (possibly several tables per segment)
-            p = 0
-            while p < len(payload):
-                pq, tq = payload[p] >> 4, payload[p] & 0xF
-                if pq != 0:
-                    raise ValueError("16-bit quant tables unsupported")
-                quant[tq] = np.frombuffer(
-                    payload[p + 1 : p + 65], dtype=np.uint8
-                ).astype(np.int64)
-                p += 65
+            _read_dqt(payload, quant)
         elif marker == 0xC0:  # SOF0 baseline
             _prec, h, w, n_comp = struct.unpack(">BHHB", payload[:6])
             if n_comp != 1:
@@ -505,12 +518,7 @@ def decode_gray_jpeg(data: bytes) -> np.ndarray:
         elif marker == 0xDD:  # DRI (restart interval in MCUs)
             (restart_interval,) = struct.unpack(">H", payload[:2])
         elif marker == 0xC4:  # DHT (possibly several tables)
-            p = 0
-            while p < len(payload):
-                tc, th = payload[p] >> 4, payload[p] & 0xF
-                n_vals = sum(payload[p + 1 : p + 17])
-                huff[(tc, th)] = _huff_table(bytes(payload[p + 1 : p + 17 + n_vals]), tc == 1)
-                p += 17 + n_vals
+            _read_dht(payload, huff)
         elif marker == 0xDA:  # SOS
             dc_id, ac_id = payload[2] >> 4, payload[2] & 0xF
             scan_start = pos
@@ -856,40 +864,6 @@ def _restart_chunks(entropy: bytes, units: list, step: int) -> list[tuple[bytes,
     if len(segs) != len(chunks):
         raise ValueError("restart segment count mismatch")
     return list(zip(segs, chunks))
-
-
-def _dec_dc_first(
-    seg: bytes, tabs: list, units: list[tuple[int, int]], al: int,
-    pos: list[list[int]], val: list[list[int]],
-) -> None:
-    """Progressive DC first scan (T.81 G.1.2.1) over (scan component,
-    block) units: baseline DC difference coding, values point-shifted by
-    `al`."""
-    d, total = _unstuff(seg)
-    acc = nb = i = 0
-    prev = [0] * len(tabs)
-    for oc, bi in units:
-        look, lb, lm = tabs[oc]
-        while nb < 32:
-            acc = (acc << 8 | d[i]) & 0xFFFFFFFFFF
-            i += 1
-            nb += 8
-        s, ln = look[acc >> (nb - lb) & lm]
-        if not ln:
-            raise ValueError("bad huffman code")
-        nb -= ln
-        if s:
-            while nb < s:  # DC sizes above 16 only in malformed tables
-                acc = acc << 8 | d[i]
-                i += 1
-                nb += 8
-            nb -= s
-            m = (1 << s) - 1
-            v = acc >> nb & m
-            prev[oc] += v - m if v <= m >> 1 else v
-        pos[oc].append(bi << 8)
-        val[oc].append(prev[oc] << al)
-    _check_exhausted(i, nb, total)
 
 
 def _dec_ac_first(
@@ -1413,7 +1387,7 @@ def encode_color_jpeg(
 
 def _inrange_idx(
     ci: int, factors: list[tuple[int, int]], mcux: int, mcuy: int, h: int, w: int
-) -> np.ndarray:
+) -> list[int]:
     """Raster indices of component ci's IN-RANGE blocks (the ceil(dim/8)
     grid a non-interleaved scan covers) inside its MCU-padded array."""
     fh, fv = factors[ci]
@@ -1423,9 +1397,7 @@ def _inrange_idx(
     ch = (h * fv + vmax - 1) // vmax
     nbw, nbh = (cw + 7) // 8, (ch + 7) // 8
     bw = mcux * fh
-    return np.array(
-        [by * bw + bx for by in range(nbh) for bx in range(nbw)], dtype=np.int64
-    )
+    return [by * bw + bx for by in range(nbh) for bx in range(nbw)]
 
 
 def encode_color_jpeg_progressive(
@@ -1575,7 +1547,7 @@ def _decode_jpeg_planes(data: bytes, expect_comps: int) -> list[np.ndarray]:
     pos = 2
     n = len(data)
     quant: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict] = {}
+    huff: dict[tuple[int, int], tuple] = {}
     h = w = None
     progressive = False
     comps: list[tuple[int, int, int, int]] = []  # (cid, fh, fv, tq)
@@ -1602,22 +1574,9 @@ def _decode_jpeg_planes(data: bytes, expect_comps: int) -> list[np.ndarray]:
         payload = data[pos + 2 : pos + seg_len]
         pos += seg_len
         if marker == 0xDB:
-            p = 0
-            while p < len(payload):
-                pq, tq = payload[p] >> 4, payload[p] & 0xF
-                if pq != 0:
-                    raise ValueError("16-bit quant tables unsupported")
-                quant[tq] = np.frombuffer(
-                    payload[p + 1 : p + 65], dtype=np.uint8
-                ).astype(np.int64)
-                p += 65
+            _read_dqt(payload, quant)
         elif marker == 0xC4:
-            p = 0
-            while p < len(payload):
-                tc, th = payload[p] >> 4, payload[p] & 0xF
-                n_vals = sum(payload[p + 1 : p + 17])
-                huff[(tc, th)] = _huff_table(bytes(payload[p + 1 : p + 17 + n_vals]), tc == 1)
-                p += 17 + n_vals
+            _read_dht(payload, huff)
         elif marker == 0xDD:
             (restart_interval,) = struct.unpack(">H", payload[:2])
         elif marker in (0xC0, 0xC2):
@@ -1673,24 +1632,16 @@ def _decode_jpeg_planes(data: bytes, expect_comps: int) -> list[np.ndarray]:
                     mcux, mcuy, h, w, restart_interval,
                 )
             elif ss == 0:  # progressive DC scan (interleaved or not)
-                if ns > 1:
-                    units = _mcu_block_order(
-                        [factors[ci] for ci, _, _ in scan_comps], mcux, mcuy
-                    )
-                    bpm = sum(factors[ci][0] * factors[ci][1] for ci, _, _ in scan_comps)
-                else:
-                    idx = _inrange_idx(scan_comps[0][0], factors, mcux, mcuy, h, w)
-                    units = [(0, bi) for bi in idx.tolist()]
-                    bpm = 1
+                units, per_mcu = _scan_units(scan_comps, factors, mcux, mcuy, h, w)
                 # restart intervals (round 6): Ri MCUs per segment; each
                 # RSTn re-byte-aligns and resets every DC predictor
-                chunks = _restart_chunks(entropy, units, restart_interval * bpm)
+                chunks = _restart_chunks(entropy, units, restart_interval * per_mcu)
                 if ah == 0:
-                    tabs = [huff.get((0, td)) for _, td, _ in scan_comps]
                     cpos = [[] for _ in scan_comps]
                     cval = [[] for _ in scan_comps]
+                    tabs = _scan_tables(huff, scan_comps, cpos, cval)
                     for seg, chunk in chunks:
-                        _dec_dc_first(seg, tabs, chunk, al, cpos, cval)
+                        _dec_sequential(seg, tabs, chunk, al, False)
                     for (ci, _, _), cp, cv in zip(scan_comps, cpos, cval):
                         _scatter(zz[ci], cp, cv)
                 else:  # DC refinement: one raw bit per unit, no coding
@@ -1712,7 +1663,7 @@ def _decode_jpeg_planes(data: bytes, expect_comps: int) -> list[np.ndarray]:
                 # restart intervals (round 6): a non-interleaved scan's
                 # MCU is one block, so segments cover Ri blocks; EOB runs
                 # cannot span a restart (fresh decoder state per segment)
-                idx = _inrange_idx(ci, factors, mcux, mcuy, h, w).tolist()
+                idx = _inrange_idx(ci, factors, mcux, mcuy, h, w)
                 cpos, cval = [], []
                 for seg, blocks in _restart_chunks(entropy, idx, restart_interval):
                     if ah == 0:
@@ -1740,6 +1691,107 @@ def _decode_jpeg_planes(data: bytes, expect_comps: int) -> list[np.ndarray]:
     return out
 
 
+def _scan_units(
+    scan_comps: list[tuple[int, int, int]],
+    factors: list[tuple[int, int]],
+    mcux: int,
+    mcuy: int,
+    h: int,
+    w: int,
+) -> tuple[list[tuple[int, int]], int]:
+    """(scan component, block) units of a baseline or DC scan in coding
+    order, and units per MCU: an interleaved scan (Ns>1) walks MCUs
+    (T.81 A.2.3), a one-component scan its in-range block grid."""
+    if len(scan_comps) > 1:
+        sub = [factors[ci] for ci, _, _ in scan_comps]
+        return _mcu_block_order(sub, mcux, mcuy), sum(fh * fv for fh, fv in sub)
+    idx = _inrange_idx(scan_comps[0][0], factors, mcux, mcuy, h, w)
+    return [(0, bi) for bi in idx], 1
+
+
+def _scan_tables(
+    huff: dict, scan_comps: list[tuple[int, int, int]], pos: list, val: list
+) -> list[tuple]:
+    """Per scan component: its DC and AC tables, `pos.append` and
+    `val.append` as one flat tuple.  A missing table fails at the first
+    block that needs it."""
+    return [
+        (*(huff.get((0, td)) or (None,) * 3), *(huff.get((1, ta)) or (None,) * 3),
+         p.append, v.append)
+        for (_, td, ta), p, v in zip(scan_comps, pos, val)
+    ]
+
+
+def _dec_sequential(
+    seg: bytes, comps: list[tuple], units: list[tuple[int, int]], al: int, with_ac: bool
+) -> None:
+    """DC difference coding per (scan component, block) unit, values
+    point-shifted by `al` (baseline, progressive DC first), then for a
+    baseline scan (`with_ac`) the block's run/size AC coefficients.
+    Appends `block << 8 | zigzag index` and each value to the unit's
+    component lists."""
+    d, total = _unstuff(seg)
+    acc = nb = i = 0
+    prev = [0] * len(comps)
+    for oc, bi in units:
+        dlook, dlb, dlm, alook, alb, alm, pa, va = comps[oc]
+        while nb < 32:
+            acc = (acc << 8 | d[i]) & 0xFFFFFFFFFF
+            i += 1
+            nb += 8
+        s, ln = dlook[acc >> (nb - dlb) & dlm]
+        if not ln:
+            raise ValueError("bad huffman code")
+        nb -= ln
+        if s:
+            while nb < s:  # DC sizes above 16 only in malformed tables
+                acc = acc << 8 | d[i]
+                i += 1
+                nb += 8
+            nb -= s
+            m = (1 << s) - 1
+            v = acc >> nb & m
+            prev[oc] += v - m if v <= m >> 1 else v
+        base = bi << 8
+        pa(base)
+        va(prev[oc] << al)
+        if not with_ac:
+            continue
+        k = 1
+        while k < 64:
+            while nb < 32:
+                acc = (acc << 8 | d[i]) & 0xFFFFFFFFFF
+                i += 1
+                nb += 8
+            r, v, t, s = alook[acc >> (nb - alb) & alm]
+            nb -= t
+            if v:
+                k += r
+                pa(base + k)
+                va(v)
+                k += 1
+            elif s:  # magnitude bits past the lookahead window
+                k += r
+                nb -= s
+                m = (1 << s) - 1
+                v = acc >> nb & m
+                pa(base + k)
+                va(v - m if v <= m >> 1 else v)
+                k += 1
+            elif r == 15:  # ZRL
+                k += 16
+            elif r:  # not a baseline symbol: stores a zero
+                k += r
+                pa(base + k)
+                va(0)
+                k += 1
+            elif t:  # EOB
+                break
+            else:
+                raise ValueError("bad huffman code")
+    _check_exhausted(i, nb, total)
+
+
 def _dec_baseline_scan(
     zz: list[np.ndarray],
     entropy: bytes,
@@ -1755,88 +1807,16 @@ def _dec_baseline_scan(
     """Baseline sequential scan (interleaved Ns>1 in MCU order, or a
     single-component scan over its in-range block grid) with RSTn
     restart segments — every component's DC predictor resets."""
-    if len(scan_comps) > 1:
-        order = _mcu_block_order(
-            [factors[ci] for ci, _, _ in scan_comps], mcux, mcuy
-        )
-        blocks_per_unit = sum(
-            factors[ci][0] * factors[ci][1] for ci, _, _ in scan_comps
-        )
-    else:
-        idx = _inrange_idx(scan_comps[0][0], factors, mcux, mcuy, h, w)
-        order = [(0, bi) for bi in idx.tolist()]
-        blocks_per_unit = 1
+    units, per_mcu = _scan_units(scan_comps, factors, mcux, mcuy, h, w)
     segments = _split_restart_segments(entropy)
-    step = restart_interval * blocks_per_unit or len(order) or 1
+    step = restart_interval * per_mcu or len(units) or 1
     pos: list[list[int]] = [[] for _ in scan_comps]
     val: list[list[int]] = [[] for _ in scan_comps]
-    # per scan component: (DC table, AC table, pos.append, val.append),
-    # flattened; a missing table fails at its first block
-    comps = []
-    for (_, td, ta), p, v in zip(scan_comps, pos, val):
-        dc, ac = huff.get((0, td)), huff.get((1, ta))
-        comps.append((*(dc or (None,) * 3), *(ac or (None,) * 3), p.append, v.append))
-    for seg_i, lo in enumerate(range(0, len(order), step)):
+    comps = _scan_tables(huff, scan_comps, pos, val)
+    for seg_i, lo in enumerate(range(0, len(units), step)):
         if seg_i >= len(segments):
             raise ValueError("missing restart segment")
-        d, total = _unstuff(segments[seg_i])
-        acc = nb = i = 0
-        prev = [0] * len(scan_comps)
-        for oc, bi in order[lo : lo + step]:
-            dlook, dlb, dlm, alook, alb, alm, pa, va = comps[oc]
-            while nb < 32:
-                acc = (acc << 8 | d[i]) & 0xFFFFFFFFFF
-                i += 1
-                nb += 8
-            s, ln = dlook[acc >> (nb - dlb) & dlm]
-            if not ln:
-                raise ValueError("bad huffman code")
-            nb -= ln
-            if s:
-                while nb < s:  # DC sizes above 16 only in malformed tables
-                    acc = acc << 8 | d[i]
-                    i += 1
-                    nb += 8
-                nb -= s
-                m = (1 << s) - 1
-                v = acc >> nb & m
-                prev[oc] += v - m if v <= m >> 1 else v
-            base = bi << 8
-            pa(base)
-            va(prev[oc])
-            k = 1
-            while k < 64:
-                while nb < 32:
-                    acc = (acc << 8 | d[i]) & 0xFFFFFFFFFF
-                    i += 1
-                    nb += 8
-                r, v, t, s = alook[acc >> (nb - alb) & alm]
-                nb -= t
-                if v:
-                    k += r
-                    pa(base + k)
-                    va(v)
-                    k += 1
-                elif s:  # magnitude bits past the lookahead window
-                    k += r
-                    nb -= s
-                    m = (1 << s) - 1
-                    v = acc >> nb & m
-                    pa(base + k)
-                    va(v - m if v <= m >> 1 else v)
-                    k += 1
-                elif r == 15:  # ZRL
-                    k += 16
-                elif r:  # not a baseline symbol: stores a zero
-                    k += r
-                    pa(base + k)
-                    va(0)
-                    k += 1
-                elif t:  # EOB
-                    break
-                else:
-                    raise ValueError("bad huffman code")
-        _check_exhausted(i, nb, total)
+        _dec_sequential(segments[seg_i], comps, units[lo : lo + step], 0, True)
     for (ci, _, _), p, v in zip(scan_comps, pos, val):
         _scatter(zz[ci], p, v)
 

@@ -289,7 +289,7 @@ def connected_components(mask: np.ndarray) -> list[tuple[int, int, int, int]]:
     stride = w + 2
     skey = srow * stride + scol
     ekey = srow * stride + ecol
-    prev_row = skey - scol - stride  # row - 1, scaled
+    prev_row = (srow - 1) * stride
     lo = np.searchsorted(ekey, prev_row + scol, "left")
     hi = np.searchsorted(skey, prev_row + ecol + 1, "left")
     cnt = np.maximum(hi - lo, 0)

@@ -8,6 +8,7 @@ import pytest
 from ms_ocr_spark.extraction.arc90 import extract_main_text
 from ms_ocr_spark.extraction.ocr.glyphs import ALPHABET, glyph_bitmap, render_text
 from ms_ocr_spark.extraction.ocr.kernel import (
+    SKEW_GRID,
     binarize,
     connected_components,
     decode_image,
@@ -119,6 +120,77 @@ def test_connected_components_counts():
 def test_connected_components_diagonal_is_8_connected():
     mask = np.eye(5, dtype=bool)
     assert connected_components(mask) == [(0, 0, 5, 5)]
+
+
+def _flood_fill_boxes(mask: np.ndarray) -> list[tuple[int, int, int, int]]:
+    """Reference 8-connected labeling: BFS from each unlabeled ink pixel in
+    row-major order, so components come out in order of their first pixel."""
+    h, w = mask.shape
+    seen = np.zeros_like(mask)
+    boxes = []
+    for y0, x0 in zip(*np.nonzero(mask)):
+        if seen[y0, x0]:
+            continue
+        seen[y0, x0] = True
+        todo, box = [(y0, x0)], [x0, y0, x0 + 1, y0 + 1]
+        while todo:
+            y, x = todo.pop()
+            box = [min(box[0], x), min(box[1], y), max(box[2], x + 1), max(box[3], y + 1)]
+            for ny in range(max(y - 1, 0), min(y + 2, h)):
+                for nx in range(max(x - 1, 0), min(x + 2, w)):
+                    if mask[ny, nx] and not seen[ny, nx]:
+                        seen[ny, nx] = True
+                        todo.append((ny, nx))
+        boxes.append(tuple(int(v) for v in box))
+    return boxes
+
+
+def test_connected_components_matches_flood_fill():
+    """Random masks and serpentines (one component whose labels must
+    travel the whole snake): same boxes in the same order as BFS."""
+    rng = np.random.default_rng(3)
+    masks = [rng.random(tuple(rng.integers(1, 30, 2))) < rng.uniform(0.05, 0.7) for _ in range(300)]
+    for h, w in ((9, 7), (21, 40), (40, 3)):
+        snake = np.zeros((h, w), dtype=bool)
+        snake[::2] = True
+        for r in range(1, h, 2):
+            snake[r, 0 if (r // 2) % 2 else w - 1] = True
+        masks += [snake, snake[::-1], snake.T]
+    for mask in masks:
+        assert connected_components(mask) == _flood_fill_boxes(mask)
+
+
+def _skew_one_angle_at_a_time(mask: np.ndarray) -> float:
+    """Reference projection-profile search: one rotation and two
+    histograms per candidate angle, first maximum wins."""
+    ys, xs = np.nonzero(mask)
+    if len(ys) > 6000:
+        step = len(ys) // 6000 + 1
+        ys, xs = ys[::step], xs[::step]
+    xs32 = (xs - xs.mean()).astype(np.float32)
+    ys32 = (ys - ys.mean()).astype(np.float32)
+    best_deg, best_score = 0.0, -1
+    for deg in SKEW_GRID:
+        th = np.deg2rad(-deg)
+        c, s = np.float32(np.cos(th)), np.float32(np.sin(th))
+        rows = np.rint(-s * xs32 + c * ys32).astype(np.int64)
+        cols = np.rint(c * xs32 + s * ys32).astype(np.int64)
+        score = sum(int((np.unique(v, return_counts=True)[1] ** 2).sum()) for v in (rows, cols))
+        if score > best_score:
+            best_deg, best_score = float(deg), score
+    return best_deg
+
+
+def test_estimate_skew_matches_per_angle_search():
+    rng = np.random.default_rng(4)
+    masks = [
+        binarize(median3(rotate_bilinear(render_text(text), deg)))
+        for text in ("LINE GRAFT HELLO", "AB 12\nCD 34\nEF 56")
+        for deg in (-2.5, -1.0, 0.0, 0.5, 3.0)
+    ]
+    masks += [rng.random((60, 400)) < 0.3]  # over 6000 ink pixels: stride sample
+    for mask in masks:
+        assert estimate_skew(mask) == _skew_one_angle_at_a_time(mask)
 
 
 def test_ocr_corpus_round_trip():
