@@ -96,7 +96,7 @@ def _build_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]
     return out
 
 
-@functools.lru_cache(maxsize=16)
+@functools.lru_cache(maxsize=8)
 def _huff_table(spec: bytes, ac: bool) -> tuple[list, int, int]:
     """Canonical Huffman decode table for one DHT entry (`spec` = the 16
     code counts, then the symbols) -> (lookahead list, its width in
@@ -111,7 +111,8 @@ def _huff_table(spec: bytes, ac: bool) -> tuple[list, int, int]:
     `bits` the code length and `size` the magnitude bits still to read
     (0 for EOB, EOB runs and ZRL).  A prefix no code matches holds
     all-zero fields.  Codes an over-subscribed table pushes past their
-    length, and the earlier code of a repeated symbol, never match."""
+    length, and the earlier code of a repeated symbol, never match.
+    Cached per table: decoders only read the list."""
     codes = _build_codes([0, *spec[:16]], list(spec[16:]))
     width = 16 if ac else max((ln for _, ln in codes.values()), default=1)
     look = [(0, 0, 0, 0) if ac else (0, 0)] * (1 << width)
