@@ -396,7 +396,7 @@ def _check_exhausted(i: int, nb: int, total: int) -> None:
         raise ValueError("entropy data exhausted")
 
 
-def _scatter(z: np.ndarray, pos: list[int], val) -> None:
+def _scatter(z: np.ndarray, pos: list[int], val: list[int] | np.ndarray) -> None:
     """Store decoded coefficients into a (blocks, 64) array; `pos` holds
     `block << 8 | zigzag index`.  An index past 63 raises, as the direct
     store `z[block, k]` would."""
