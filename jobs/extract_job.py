@@ -11,10 +11,11 @@ Cluster usage (north rule: packaged for --py-files, resumable):
         --job-id     extract-2026-08-16 \\
         --buckets    4096 --salt-partitions 8192
 
-Re-running the same command after a failure resumes: committed buckets
-(lineage markers, written through the output path's Hadoop FileSystem so
-they work on object stores too) are skipped; partial buckets are
-re-written by the dynamic partition overwrite.
+Re-running the same command after a failure resumes: buckets named by a
+committed run's lineage marker (one per run, written through the output
+path's Hadoop FileSystem so it works on object stores too) are skipped; the
+buckets of a run that crashed before its marker are re-written by the
+dynamic partition overwrite.
 
 Local smoke:
 

@@ -1,27 +1,30 @@
-"""Per-partition-range checkpoint commits with lineage + metrics tables.
+"""Per-run checkpoint commits with lineage + metrics tables.
 
 North rule: "per-partition checkpoint commits to Iceberg with lineage +
 extraction-metrics side tables so any failed partition range is resumable".
-The sandbox has no Iceberg catalog jars, so the commit unit here is a
-dynamic partition overwrite of the pending bucket partitions + an atomic
-lineage marker per bucket — the same idempotence contract as an Iceberg
-`overwritePartitions()`; swap `_write_pending` for
-`writeTo(table).overwritePartitions()` on a real catalog.
+The sandbox has no Iceberg catalog jars, so one run commits as a dynamic
+partition overwrite of its pending bucket partitions + ONE atomic lineage
+marker naming those buckets — the same idempotence contract as an Iceberg
+`overwritePartitions()`, which commits the whole run as one snapshot; swap
+the write for `writeTo(table).overwritePartitions()` on a real catalog.
+The run, not the bucket, is the commit unit: its buckets land in one write
+job, so one marker per run is all the commit there is, whatever the
+bucket count.
 
 ONE scan of the input per call: all pending buckets are selected with a
 single `bucket IN (...)` filter and written in one job via
 `partitionBy("bucket")` with partitionOverwriteMode=dynamic (only the
 written partitions are replaced).  A per-bucket loop would rescan the
-full 100 TB documents table once per bucket.
+full 100 TB documents table once per bucket.  The run's counts ride that
+write through one `Observation`, so nothing re-reads the output.
 
 Resume semantics (exactly-once):
-  1. pending bucket partitions are written (dynamic overwrite -> idempotent
-     on retry)
-  2. ONLY THEN the lineage marker for (job_id, bucket) is committed
-     (atomic rename)
-  3. resume skips buckets whose lineage marker exists; a crash between 1
-     and 2 rewrites those buckets — the overwrite makes the rewrite
-     invisible.
+  1. the run's pending bucket partitions are written (dynamic overwrite ->
+     idempotent on retry)
+  2. ONLY THEN the run's lineage marker is committed (atomic rename)
+  3. resume skips the buckets named by the job's committed markers; a
+     crash between 1 and 2 rewrites all of that run's buckets — the
+     overwrite makes the rewrite invisible.
 
 Lineage markers are written THROUGH the Hadoop FileSystem of `out_dir`
 (local file://, hdfs://, s3a://, ...) so they always live next to the
@@ -35,86 +38,85 @@ Replaces the reference's "retry the HTTP request" failure model
 
 from __future__ import annotations
 
-import os
-import tempfile
+import re
 import time
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ms_ocr_spark.extraction.pipeline import extract_documents
+from ms_ocr_spark.sources.catalog import hadoop_fs
 
-LINEAGE_COLS = [
-    "job_id",
-    "bucket",
-    "n_docs",
-    "n_spans",
-    "n_media_missing",
-    "wall_sec",
-    "committed_at",
-]
+LINEAGE_SCHEMA = pa.schema(
+    [
+        ("job_id", pa.string()),
+        ("run_id", pa.string()),
+        ("buckets", pa.list_(pa.int32())),
+        ("n_docs", pa.int64()),
+        ("n_spans", pa.int64()),
+        ("n_media_missing", pa.int64()),
+        ("wall_sec", pa.float64()),
+        ("committed_at", pa.float64()),
+    ]
+)
 
 
 def _bucket_col(n_buckets: int):
     return F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
 
 
-def _fs(spark: SparkSession, path_str: str):
-    """(Hadoop FileSystem, Path) for any supported scheme."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(path_str)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, path
-
-
-def _lineage_path(out_dir: str, job_id: str, bucket: int) -> str:
-    return f"{out_dir.rstrip('/')}/_lineage/{job_id}_bucket_{bucket:05d}.parquet"
+def _lineage_dir(out_dir: str) -> str:
+    return f"{out_dir.rstrip('/')}/_lineage"
 
 
 def completed_buckets(
     spark: SparkSession, out_dir: str, job_id: str, n_buckets: int
 ) -> set[int]:
-    """Buckets of `job_id` whose lineage marker is committed: one listing
-    of `_lineage`, matched against the exact marker names."""
-    fs, root = _fs(spark, f"{out_dir.rstrip('/')}/_lineage")
+    """Buckets named by `job_id`'s committed run markers: one listing of
+    `_lineage`, exact marker names only, each marker's `buckets` read
+    through the Hadoop FS (no Spark job)."""
+    fs, root = hadoop_fs(spark, _lineage_dir(out_dir))
     if not fs.exists(root):
         return set()
-    names = {st.getPath().getName() for st in fs.listStatus(root)}
-    return {
-        b
-        for b in range(n_buckets)
-        if _lineage_path(out_dir, job_id, b).rsplit("/", 1)[1] in names
-    }
+    name = re.compile(re.escape(job_id) + r"_run_[0-9a-f]{32}\.parquet")
+    done: set[int] = set()
+    for st in fs.listStatus(root):
+        if name.fullmatch(st.getPath().getName()):
+            stream = fs.open(st.getPath())
+            try:
+                data = stream.readAllBytes()
+            finally:
+                stream.close()
+            marker = pq.read_table(pa.BufferReader(data), columns=["buckets"])
+            done.update(b for bs in marker["buckets"].to_pylist() for b in bs)
+    return {b for b in done if b < n_buckets}
 
 
-def _commit_lineage(spark: SparkSession, out_dir: str, job_id: str, row: dict) -> None:
-    """Marker commit: local one-row parquet -> copy next to the data via
-    the Hadoop FS -> rename into place (marker existence IS the commit
+def _commit_lineage(spark: SparkSession, out_dir: str, row: dict) -> None:
+    """Marker commit: one-row parquet written next to the data as `.tmp`
+    via the Hadoop FS -> rename into place (marker existence IS the commit
     flag, so it must appear whole or not at all).
 
     The rename is atomic on HDFS/local; on S3A it is copy+delete (not
     atomic) — marker semantics tolerate that (a torn marker is absent or
-    whole-file, and resume re-writes the bucket idempotently), but the
-    rename's boolean RETURN must still be checked: Hadoop FileSystem
+    whole-file, and resume re-writes the run's buckets idempotently), but
+    the rename's boolean RETURN must still be checked: Hadoop FileSystem
     reports failure by returning false, not by throwing."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    final = _lineage_path(out_dir, job_id, int(row["bucket"]))
-    fs, final_p = _fs(spark, final)
-    fs.mkdirs(final_p.getParent())
-    with tempfile.TemporaryDirectory() as td:
-        local = os.path.join(td, "marker.parquet")
-        pq.write_table(pa.Table.from_pylist([row]), local)
-        jvm = spark._jvm
-        tmp_p = jvm.org.apache.hadoop.fs.Path(final + ".tmp")
-        fs.copyFromLocalFile(False, True, jvm.org.apache.hadoop.fs.Path(local), tmp_p)
-        if fs.exists(final_p):
-            fs.delete(final_p, False)
-        if not fs.rename(tmp_p, final_p):
-            raise IOError(
-                f"lineage marker rename failed (bucket NOT committed): {final}"
-            )
+    final = f"{_lineage_dir(out_dir)}/{row['job_id']}_run_{row['run_id']}.parquet"
+    fs, final_p = hadoop_fs(spark, final)
+    tmp_p = final_p.suffix(".tmp")
+    buf = pa.BufferOutputStream()
+    pq.write_table(pa.Table.from_pylist([row], schema=LINEAGE_SCHEMA), buf)
+    stream = fs.create(tmp_p, True)
+    try:
+        stream.write(buf.getvalue().to_pybytes())
+    finally:
+        stream.close()
+    if not fs.rename(tmp_p, final_p):
+        raise IOError(f"lineage marker rename failed (run NOT committed): {final}")
 
 
 def pending_extraction(
@@ -154,58 +156,36 @@ def run_with_checkpoints(
     if not pending:
         return []
 
-    t0 = time.time()
-    data_path = f"{out_dir.rstrip('/')}/data"
-    result = pending_extraction(docs, media, pending, n_buckets, **extract_kw)
+    obs = Observation()
+    media_missing = F.filter("spans", lambda s: (s["kind"] == "media") & s["text"].isNull())
+    result = pending_extraction(docs, media, pending, n_buckets, **extract_kw).observe(
+        obs,
+        F.count(F.lit(1)).alias("n_docs"),
+        F.coalesce(F.sum(F.size("spans")), F.lit(0)).alias("n_spans"),
+        F.coalesce(F.sum(F.size(media_missing)), F.lit(0)).alias("n_media_missing"),
+    )
+    t0 = time.perf_counter()
     (
         result.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket")
-        .parquet(data_path)
+        .parquet(f"{out_dir.rstrip('/')}/data")
     )
-    wall = time.time() - t0
-
-    # per-bucket stats from ONE scan of the just-written output (never a
-    # second scan of the input)
-    out_df = spark.read.parquet(data_path).filter(F.col("bucket").isin(pending))
-    stats = (
-        out_df.groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.coalesce(F.sum(F.size("spans")), F.lit(0)).alias("n_spans"),
-            F.coalesce(
-                F.sum(
-                    F.size(
-                        F.filter(
-                            "spans",
-                            lambda s: (s["kind"] == "media") & s["text"].isNull(),
-                        )
-                    )
-                ),
-                F.lit(0),
-            ).alias("n_media_missing"),
-        )
-        .collect()
-    )
-    by_bucket = {int(r["bucket"]): r for r in stats}
-
-    committed: list[int] = []
-    per_bucket_wall = wall / len(pending)
-    for bucket in pending:
-        r = by_bucket.get(bucket)
-        row = {
+    counts = obs.get
+    # lineage marker LAST: its existence == the run's buckets are committed
+    _commit_lineage(
+        spark,
+        out_dir,
+        {
             "job_id": job_id,
-            "bucket": bucket,
-            "n_docs": int(r["n_docs"]) if r else 0,
-            "n_spans": int(r["n_spans"]) if r else 0,
-            "n_media_missing": int(r["n_media_missing"]) if r else 0,
-            "wall_sec": float(per_bucket_wall),
-            "committed_at": float(time.time()),
-        }
-        # lineage marker LAST: its existence == the bucket is committed
-        _commit_lineage(spark, out_dir, job_id, row)
-        committed.append(bucket)
-    return committed
+            "run_id": uuid.uuid4().hex,
+            "buckets": pending,
+            **{k: int(v) for k, v in counts.items()},
+            "wall_sec": time.perf_counter() - t0,
+            "committed_at": time.time(),
+        },
+    )
+    return pending
 
 
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -213,14 +193,14 @@ def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{out_dir.rstrip('/')}/_lineage")
+    return spark.read.parquet(_lineage_dir(out_dir))
 
 
 def extraction_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
     """Aggregate job metrics from lineage (the metrics side table)."""
     lin = read_lineage(spark, out_dir)
     return lin.groupBy("job_id").agg(
-        F.count(F.lit(1)).alias("n_buckets"),
+        F.sum(F.size("buckets")).alias("n_buckets"),
         F.sum("n_docs").alias("n_docs"),
         F.sum("n_spans").alias("n_spans"),
         F.sum("n_media_missing").alias("n_media_missing"),

@@ -25,6 +25,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
+def hadoop_fs(spark: SparkSession, path_str: str):
+    """(Hadoop FileSystem, Path) for any supported scheme.
+
+    The Path class is resolved by its fully qualified name in one lookup;
+    py4j's dotted walk (`jvm.org.apache...`) first tries every package
+    segment as a class, each a failing lookup across every jar."""
+    path = getattr(spark._jvm, "org.apache.hadoop.fs.Path")(path_str)
+    return path.getFileSystem(spark._jsc.hadoopConfiguration()), path
+
+
 def is_table_identifier(target: str) -> bool:
     """catalog.db.table identifiers vs filesystem paths."""
     return "/" not in target and "." in target
@@ -111,11 +121,9 @@ def expire_old(spark: SparkSession, target: str, older_than_ts: str) -> list[str
         )
         return []
     cutoff_ms = int(cutoff_utc.timestamp() * 1000)
-    jvm = spark._jvm
     deleted: list[str] = []
     for sub in ("data", "_lineage"):
-        root = jvm.org.apache.hadoop.fs.Path(f"{target.rstrip('/')}/{sub}")
-        fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+        fs, root = hadoop_fs(spark, f"{target.rstrip('/')}/{sub}")
         if not fs.exists(root):
             continue
         for status in fs.listStatus(root):

@@ -3,6 +3,7 @@ byte-identical output, no duplicate commits."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ms_ocr_spark.plans import checkpoint as cp
@@ -37,9 +38,13 @@ def test_checkpoint_resume_exactly_once(spark, corpus_dir, tmp_path):
     g = golden.select("doc_id", F.to_json("spans").alias("js"))
     assert g.join(r, ["doc_id", "js"]).count() == golden.count()
 
-    # lineage + metrics side tables
+    # lineage + metrics side tables: one lineage row per run, and the two
+    # runs together name every bucket once
     lin = cp.read_lineage(spark, out)
-    assert lin.count() == 8
+    assert lin.count() == 2
+    assert sorted(
+        r[0] for r in lin.select(F.explode("buckets")).collect()
+    ) == list(range(8))
     met = cp.extraction_metrics(spark, out).collect()[0]
     assert met["n_docs"] == golden.count()
     assert met["n_spans"] == golden.select(F.sum(F.size("spans"))).collect()[0][0]
@@ -47,20 +52,128 @@ def test_checkpoint_resume_exactly_once(spark, corpus_dir, tmp_path):
 
 
 def test_completed_buckets_matches_exact_marker_names(spark, tmp_path):
-    """Only `<job>_bucket_<b>.parquet` markers with b < n_buckets count: a
-    leftover `.tmp`, another job's marker and an out-of-range bucket do not."""
-    lineage = tmp_path / "out" / "_lineage"
-    lineage.mkdir(parents=True)
-    for name in (
-        "job_bucket_00000.parquet",
-        "job_bucket_00003.parquet",
-        "job_bucket_00005.parquet.tmp",
-        "job_2_bucket_00001.parquet",
-        "job_bucket_00008.parquet",
-    ):
-        (lineage / name).write_bytes(b"")
-    assert cp.completed_buckets(spark, str(tmp_path / "out"), "job", 8) == {0, 3}
+    """Only `<job>_run_<32 hex>.parquet` markers count, and only their
+    buckets < n_buckets: a leftover `.tmp`, another job's run marker and
+    an out-of-range bucket do not."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "out")
+
+    def marker(job_id, buckets):
+        return {
+            "job_id": job_id, "run_id": uuid.uuid4().hex, "buckets": buckets,
+            "n_docs": 0, "n_spans": 0, "n_media_missing": 0,
+            "wall_sec": 0.0, "committed_at": 0.0,
+        }
+
+    cp._commit_lineage(spark, out, marker("job", [0, 3, 8]))
+    cp._commit_lineage(spark, out, marker("job_2", [1]))
+    pq.write_table(
+        pa.Table.from_pylist([marker("job", [5])], schema=cp.LINEAGE_SCHEMA),
+        str(tmp_path / "out" / "_lineage" / f"job_run_{uuid.uuid4().hex}.parquet.tmp"),
+    )
+    assert cp.completed_buckets(spark, out, "job", 8) == {0, 3}
+    assert cp.completed_buckets(spark, out, "job_2", 8) == {1}
     assert cp.completed_buckets(spark, str(tmp_path / "missing"), "job", 8) == set()
+
+
+def test_checkpoint_run_is_one_sql_execution(spark, corpus_dir, tmp_path):
+    """One run is one write: the counts ride it through `observe`, so the
+    call adds exactly one SQL execution and no job outside it (no output
+    re-scan, no parquet schema-inference job)."""
+    docs = spark.read.parquet(f"{corpus_dir}/documents.parquet")
+    media = spark.read.parquet(f"{corpus_dir}/media_store.parquet")
+    store = spark._jsparkSession.sharedState().statusStore()
+    before = {e.executionId() for e in _scala_list(store.executionsList())}
+    sc = spark.sparkContext
+    sc.setJobGroup("one_run", "one checkpoint run")
+    try:
+        assert cp.run_with_checkpoints(
+            spark, docs, media, str(tmp_path / "out"), job_id="one", n_buckets=8
+        ) == list(range(8))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    new = [
+        e for e in _scala_list(store.executionsList()) if e.executionId() not in before
+    ]
+    assert len(new) == 1
+    jobs = sc.statusTracker().getJobIdsForGroup("one_run")
+    assert len(jobs) == new[0].jobs().size() > 0
+
+
+def _scala_list(seq):
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def test_crash_before_marker_reruns_the_run(spark, corpus_dir, tmp_path, monkeypatch):
+    """A crash between the write and the marker commit leaves no bucket
+    committed; the resume rewrites every bucket of that run, the output
+    equals golden (the dynamic overwrite hides the rerun) and exactly one
+    marker exists."""
+    docs = spark.read.parquet(f"{corpus_dir}/documents.parquet")
+    media = spark.read.parquet(f"{corpus_dir}/media_store.parquet")
+    golden = spark.read.parquet(f"{corpus_dir}/golden_spans.parquet")
+    out = str(tmp_path / "out")
+    commit = cp._commit_lineage
+    calls = []
+
+    def crash_once(*args):
+        calls.append(args)
+        if len(calls) == 1:
+            raise IOError("crash before the marker commit")
+        commit(*args)
+
+    monkeypatch.setattr(cp, "_commit_lineage", crash_once)
+    with pytest.raises(IOError, match="crash before the marker commit"):
+        cp.run_with_checkpoints(spark, docs, media, out, job_id="c", n_buckets=8)
+    assert cp.completed_buckets(spark, out, "c", 8) == set()
+
+    assert cp.run_with_checkpoints(
+        spark, docs, media, out, job_id="c", n_buckets=8
+    ) == list(range(8))
+    result = cp.read_output(spark, out)
+    assert result.count() == golden.count()
+    r = result.select("doc_id", F.to_json("spans").alias("js"))
+    g = golden.select("doc_id", F.to_json("spans").alias("js"))
+    assert g.join(r, ["doc_id", "js"]).count() == golden.count()
+    markers = [p.name for p in (tmp_path / "out" / "_lineage").iterdir()]
+    assert len([m for m in markers if m.endswith(".parquet")]) == 1, markers
+
+
+def test_corrupt_admitted_payload_counted_as_media_missing(spark, corpus_dir, tmp_path):
+    """A payload that passes admission (PNG magic) but cannot be decoded
+    comes out as NULL text, and the run's lineage row counts every media
+    span that references it in `n_media_missing`."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    media_t = pq.read_table(f"{corpus_dir}/media_store.parquet")
+    bad_ref = media_t["media_ref"][0].as_py()
+    payloads = media_t["payload"].to_pylist()
+    payloads[0] = b"\x89PNG\r\n\x1a\n" + b"\x00corrupt-payload" * 4
+    media_t = media_t.set_column(
+        media_t.schema.get_field_index("payload"), "payload", pa.array(payloads, pa.binary())
+    )
+    media_path = str(tmp_path / "media_store.parquet")
+    pq.write_table(media_t, media_path)
+    expected = sum(
+        s["kind"] == "media" and s["media_ref"] == bad_ref
+        for spans in pq.read_table(f"{corpus_dir}/golden_spans.parquet")["spans"].to_pylist()
+        for s in spans
+    )
+    assert expected > 0
+
+    docs = spark.read.parquet(f"{corpus_dir}/documents.parquet")
+    media = spark.read.parquet(media_path)
+    out = str(tmp_path / "out")
+    cp.run_with_checkpoints(spark, docs, media, out, job_id="bad", n_buckets=4)
+    (row,) = cp.read_lineage(spark, out).collect()
+    assert row["n_media_missing"] == expected
+    assert cp.extraction_metrics(spark, out).collect()[0]["n_buckets"] == 4
 
 
 def test_checkpoint_single_input_scan(spark, corpus_dir):
@@ -193,7 +306,7 @@ def test_expire_old_sweeps_stale_buckets(spark, corpus_dir, tmp_path):
         datetime.datetime.now(datetime.timezone.utc) + datetime.timedelta(hours=1)
     ).strftime("%Y-%m-%dT%H:%M:%S")
     deleted = expire_old(spark, out, future)  # everything predates +1h
-    assert len(deleted) == 8  # 4 bucket dirs + 4 lineage markers
+    assert len(deleted) == 5  # 4 bucket dirs + 1 run marker
     assert cp.completed_buckets(spark, out, "t", 4) == set()
 
 
