@@ -17,6 +17,14 @@ path's Hadoop FileSystem so it works on object stores too) are skipped; the
 buckets of a run that crashed before its marker are re-written by the
 dynamic partition overwrite.
 
+Each output row carries its doc's `quarantine` array (media spans that are
+missing, invalid, out of decode scope or undecodable), so quarantine rows
+commit and resume with their bucket.  Every call then rewrites
+`<output>/_quarantine` from that column of the committed `data/` (parquet
+column pruning reads only `doc_id` and `quarantine`).  An output committed
+before the column existed has no `quarantine` to read: write such a job to
+a new output.
+
 Local smoke:
 
     python jobs/extract_job.py --documents .cache/bench_corpus_8000/documents.parquet \\
@@ -42,8 +50,13 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--no-broadcast-media", action="store_true")
     args = p.parse_args(argv)
 
-    from ms_ocr_spark.extraction.pipeline import quarantine_invalid_media
-    from ms_ocr_spark.plans.checkpoint import extraction_metrics, run_with_checkpoints
+    from pyspark.sql import functions as F
+
+    from ms_ocr_spark.plans.checkpoint import (
+        extraction_metrics,
+        read_output,
+        run_with_checkpoints,
+    )
     from ms_ocr_spark.session import get_spark
 
     spark = get_spark(app=f"extract:{args.job_id}")
@@ -59,10 +72,12 @@ def main(argv: list[str] | None = None) -> int:
         broadcast_media=not args.no_broadcast_media,
         salt_partitions=args.salt_partitions,
     )
-    # admission-rejected / out-of-scope media (null text in the output)
-    quarantine_invalid_media(docs, media).write.mode("overwrite").parquet(
-        f"{args.output.rstrip('/')}/_quarantine"
-    )
+    # media spans that are not admitted, out of scope or undecodable (null
+    # text in the output), from the committed output's `quarantine` column:
+    # no second read of the input
+    read_output(spark, args.output).select("doc_id", F.inline("quarantine")).write.mode(
+        "overwrite"
+    ).parquet(f"{args.output.rstrip('/')}/_quarantine")
     metrics = extraction_metrics(spark, args.output).collect()
     print(
         json.dumps(

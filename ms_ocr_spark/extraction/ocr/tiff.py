@@ -607,7 +607,8 @@ def tiff_scope_reason(data: bytes) -> str | None:
     short reason string — a HEADER-ONLY probe (IFD tags, no pixel work)
     for quarantine telemetry, the TIFF analog of
     `jpeg.is_progressive_jpeg`.  Malformed structure returns None (the
-    admission/decode path reports that as plain `invalid`)."""
+    decode then raises, which `pipeline.media_status` reports as
+    `decode_error:<ExceptionClass>`)."""
     try:
         tags, _ = _parse(data)
     except (ValueError, struct.error, IndexError):

@@ -2,11 +2,17 @@
 
 Plan shape (SURVEY.md §7 step 3, north_rule):
 
-    documents ──posexplode(spans)──┬── kind='text'  ── arc90 pandas UDF ──┐
-                                   │                                      ├─ unionByName
-                                   └── kind='media' ─ join media_store ───┘
-                                       (forced broadcast by default) ocr UDF
+    documents ──posexplode(spans)── left join media_store on media_ref
+                                    (forced broadcast by default)
+    ── JVM admission: magic-byte MIME + 30 MB cap (missing / invalid)
+    ── extract_span Arrow UDF (kind, text, admitted payload, mime, language)
+       -> struct<text, status>: Arc90 strip or `media_status`
     ── groupBy(doc_id) ── array_sort(collect_list(struct(offset,…))) ── spans
+                      └── array_sort(collect_list(not-ok media))  ── quarantine
+
+One pass, one Python boundary: every span row crosses into Python once,
+and the quarantine side output is a column of the same re-stitch, so a
+caller never re-reads the input to learn what happened to a media span.
 
 A doc whose `spans` is empty or NULL keeps one placeholder row through the
 (outer) explode, which the re-stitch skips, so it comes out with `[]`.
@@ -19,77 +25,101 @@ first field is `offset` re-stitches the original interleaving exactly.
 Scale notes (100 TB / 10^12 docs):
   * the explode turns per-doc work into per-span rows, so one mega-document
     never pins a single task — `salt_partitions` adds an explicit
-    repartition on (doc_id, offset) before the expensive UDFs (the
+    repartition on (doc_id, offset) before the expensive UDF (the
     "salted repartitioning" of the north rule); AQE skew-join handles the
     media join side.
   * the media join is an equi-join on media_ref: a forced broadcast
     (`broadcast_media=True`, the default, whatever the store's size), else
     Catalyst/AQE picks (sort-merge when the store is large).
-  * UDFs are Arrow-batched pandas UDFs (input_hint: no per-row Python).
+  * the UDF is an Arrow UDF over `pyarrow.Array`s (input_hint: no per-row
+    Python boundary, no pandas conversion).
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-SPAN_STRUCT = T.StructType(
-    [
-        T.StructField("kind", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("offset", T.IntegerType()),
-    ]
-)
-OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("spans", T.ArrayType(SPAN_STRUCT)),
-    ]
+_SPAN_RESULT = T.StructType(
+    [T.StructField("text", T.StringType()), T.StructField("status", T.StringType())]
 )
 
 
-@F.pandas_udf(T.StringType())
-def extract_text_spans(html: pd.Series) -> pd.Series:
-    """Arc90-style boilerplate strip (north_rule text branch), Arrow-batched."""
-    from ms_ocr_spark.extraction.arc90 import extract_main_text
+def media_status(buf: bytes, mime: str, language: str | None) -> tuple[str | None, str]:
+    """(text, status) of one admitted media payload — the one statement of
+    what happens to a media span past admission.
 
-    return html.map(extract_main_text, na_action="ignore")
+    `mime` is the JVM-side magic-byte sniff.  `language` routes the kernel
+    layout mode per document (reference request field `-|ja|ja_vert|en`,
+    `src/controller/Ocr.ts:37-39`); NULL/`-` auto-detects.
+
+    `status` values, with NULL text for every one but `ok`:
+      * `ok` — decoded and OCR'd;
+      * `truncated_jpeg` (JPEG whose marker walk ends before a scan) and
+        `unsupported_jpeg_layout` (arithmetic / lossless / hierarchical
+        coding, 12-bit precision, sampling factors above 4 or fractional
+        sampling ratios, and 4-component frames that are untagged, carry
+        an unknown Adobe transform, or are progressive) — the
+        `jpeg_scope_reason` header probe;
+      * `unsupported_tiff_layout` (exotic compression / photometric) — the
+        `tiff_scope_reason` header probe;
+      * `decode_error:<ExceptionClass>` — in scope, but the probe or the
+        decode raised.
+    The scope reasons are quarantined BY DESIGN by the codecs, found by
+    header-only sniffs before any pixel decode; the distinct reasons let a
+    corpus operator see the decode-scope cost (VERDICT r3 item 7).
+    Admission rejects (`missing`, `invalid`) are decided JVM-side and
+    never reach this function.
+
+    One corrupt payload in 10^12 docs must not kill the bucket, so a
+    decode failure is a status, never a task failure — and never a silent
+    NULL: its exception class names it.
+    """
+    from ms_ocr_spark.extraction.ocr import decode_image, decode_media
+    from ms_ocr_spark.extraction.ocr.jpeg import jpeg_scope_reason
+    from ms_ocr_spark.extraction.ocr.tiff import tiff_scope_reason
+
+    try:
+        if mime == "jpeg":
+            reason = jpeg_scope_reason(buf)
+            if reason is not None:
+                return None, reason
+        elif mime == "tiff" and tiff_scope_reason(buf) is not None:
+            return None, "unsupported_tiff_layout"
+        return decode_image(decode_media(buf), language), "ok"
+    except Exception as e:
+        return None, f"decode_error:{type(e).__name__}"
 
 
-@F.pandas_udf(T.StringType())
-def ocr_media_spans(payload: pd.Series, language: pd.Series) -> pd.Series:
-    """OCR kernel (binarize/deskew/CC-segment/decode), Arrow-batched.
+@F.arrow_udf(_SPAN_RESULT)
+def extract_span(
+    kind: pa.Array, text: pa.Array, payload: pa.Array, mime: pa.Array, language: pa.Array
+) -> pa.Array:
+    """One span row -> (text, status), Arrow-batched: the Arc90 boilerplate
+    strip for a text span (north_rule text branch), `media_status` for an
+    admitted media payload.  A row without an admitted payload gets
+    (NULL, NULL); the JVM side names it `missing` or `invalid`.
 
     Replaces the reference's per-request engine subprocess
     (`/root/reference/src/library/engine_tesseract/main.py:117-131`); the
-    kernel is stateless/pure so a Series->Series UDF suffices (no
-    per-partition model init to amortize — cf. SURVEY.md §2.10).
+    kernel is stateless/pure, so there is no per-partition model init to
+    amortize (cf. SURVEY.md §2.10)."""
+    from ms_ocr_spark.extraction.arc90 import extract_main_text
 
-    `language` routes the kernel layout mode per document (reference
-    request field `-|ja|ja_vert|en`, `src/controller/Ocr.ts:37-39`);
-    null/`-` auto-detects.  Values are rlike-validated JVM-side before
-    they reach this UDF (P13).
-    """
-    from ms_ocr_spark.extraction.ocr import decode_image, decode_media
-
-    def _one(buf, lang) -> str | None:
+    def _one(k, html, buf, m, lang):
+        if k == "text":
+            return (None if html is None else extract_main_text(html)), "ok"
         if buf is None:
-            return None
-        try:
-            return decode_image(decode_media(bytes(buf)), lang)
-        except Exception:
-            # One corrupt/unsupported payload in 10^12 docs must not kill
-            # the bucket: undecodable bytes -> null text (the quarantine
-            # signal `quarantine_invalid_media` surfaces), never a task
-            # failure.  Mirrors the reference rejecting bad uploads at
-            # admission (`/root/reference/src/controller/Upload.ts:22-32`).
-            return None
+            return None, None
+        return media_status(buf, m, lang)
 
-    return pd.Series(
-        [_one(b, lg) for b, lg in zip(payload, language)], dtype=object
+    cols = (a.to_pylist() for a in (kind, text, payload, mime, language))
+    texts, statuses = zip(*(_one(*r) for r in zip(*cols))) if len(kind) else ((), ())
+    return pa.StructArray.from_arrays(
+        [pa.array(texts, pa.string()), pa.array(statuses, pa.string())],
+        names=["text", "status"],
     )
 
 
@@ -129,25 +159,40 @@ def explode_spans(docs: DataFrame) -> DataFrame:
 
 
 def _restitch(flat: DataFrame) -> DataFrame:
-    """(doc_id, pos, kind, out_text, media_ref, offset) -> (doc_id, spans)
-    ordered by offset; a span-less doc's placeholder row (NULL `pos`) is
-    skipped, so that doc gets `[]`."""
+    """(doc_id, pos, kind, out_text, media_ref, offset, mime, n_bytes,
+    status) -> (doc_id, spans, quarantine), both ordered by offset.
+
+    `spans`: a span-less doc's placeholder row (NULL `pos`) is skipped, so
+    that doc gets `[]`.  `quarantine`: the doc's media spans whose status
+    is not `ok`, as (offset, media_ref, mime, n_bytes, reason)."""
     # array_sort over struct(offset, ...) sorts by offset (first field);
-    # fields are then re-ordered to the public span layout.
+    # span fields are then re-ordered to the public span layout.
     sortable = F.struct(
         F.col("offset").alias("offset"),
         F.col("kind").alias("kind"),
         F.col("out_text").alias("text"),
         F.col("media_ref").alias("media_ref"),
     )
+    quarantined = F.struct(
+        F.col("offset").alias("offset"),
+        F.col("media_ref").alias("media_ref"),
+        F.col("mime").alias("mime"),
+        F.col("n_bytes").alias("n_bytes"),
+        F.col("status").alias("reason"),
+    )
+    is_quarantined = (F.col("kind") == "media") & (F.col("status") != "ok")
     grouped = flat.groupBy("doc_id").agg(
         F.array_sort(
             F.collect_list(F.when(F.col("pos").isNotNull(), sortable))
-        ).alias("sorted_spans")
+        ).alias("sorted_spans"),
+        F.array_sort(F.collect_list(F.when(is_quarantined, quarantined))).alias(
+            "quarantine"
+        ),
     )
     return grouped.select(
         "doc_id",
         F.transform(F.col("sorted_spans"), _reorder_span_fields).alias("spans"),
+        "quarantine",
     )
 
 
@@ -166,10 +211,11 @@ def extract_documents(
     broadcast_media: bool = True,
     salt_partitions: int | None = None,
 ) -> DataFrame:
-    """Run the full extraction; returns (doc_id, spans) matching golden_spans.
+    """Run the full extraction; returns (doc_id, spans, quarantine), whose
+    `spans` match golden_spans.
 
     `salt_partitions`: explicit repartition on (doc_id, offset) before the
-    UDFs — defuses large-document skew by spreading a mega-doc's spans over
+    UDF — defuses large-document skew by spreading a mega-doc's spans over
     the cluster instead of one input partition.
 
     `broadcast_media`: force a broadcast of `media_store` (payloads
@@ -177,113 +223,64 @@ def extract_documents(
 
     Every doc comes out, one with no spans as `[]`.  Media payloads are
     admission-controlled JVM-side (magic-byte MIME + 30 MB cap, reference
-    S2-S4) BEFORE the OCR UDF — invalid payloads never enter Python, their
-    spans come out with null text, and they are counted by lineage as
-    n_media_missing; list them with `quarantine_invalid_media` for the
-    side sink.
+    S2-S4) BEFORE the UDF — a missing or invalid payload never enters
+    Python.  A media span that is not admitted, out of decode scope or
+    undecodable comes out with NULL text (counted by lineage as
+    n_media_missing) and as one row of its doc's `quarantine` array, with
+    `reason` `missing`, `invalid` or a `media_status` status.
     """
-    from ms_ocr_spark.operators.multimodal import valid_payload_col
+    from ms_ocr_spark.operators.multimodal import mime_col, valid_payload_col
 
     flat = explode_spans(docs)
     if salt_partitions:
         flat = flat.repartition(salt_partitions, "doc_id", "offset")
 
-    # Single-pass plan: one shuffle, one join, no union.  A two-branch
-    # filter/union shape re-explodes and re-shuffles the input twice (the
-    # exchanges are not reused across the branches) and doubles shuffle-
-    # write cost; instead both UDFs are projected once — each is ~free on
-    # the other kind's rows (null input -> null output) — and a CASE picks
-    # the survivor.  The media join stays a left join on media_ref
-    # (forced broadcast, or AQE's choice with broadcast_media=False).
+    # Single-pass plan: one shuffle, one join, one Arrow UDF, no union.  A
+    # two-branch filter/union shape re-explodes and re-shuffles the input
+    # twice (the exchanges are not reused across the branches).  The media
+    # join stays a left join on media_ref (forced broadcast, or AQE's
+    # choice with broadcast_media=False).
     media_side = media.select("media_ref", "payload")
     if broadcast_media:
         media_side = F.broadcast(media_side)
-    joined = flat.join(media_side, "media_ref", "left")
-    # invalid payloads become NULL before the UDF: they never cross the
-    # Arrow boundary and decode to null text (quarantine signal)
-    payload = F.when(valid_payload_col("payload"), F.col("payload"))
+    joined = (
+        flat.join(media_side, "media_ref", "left")
+        .withColumn("mime", mime_col("payload"))
+        .withColumn("n_bytes", F.length("payload"))
+        .withColumn(
+            "admission",
+            F.when(F.col("payload").isNull(), "missing").when(
+                ~valid_payload_col("payload"), "invalid"
+            ),
+        )
+    )
     lang = (
         F.col("language")
         if "language" in flat.columns
         else F.lit(None).cast(T.StringType())
     )
-    with_text = joined.withColumn(
-        "out_text",
-        F.when(
-            F.col("kind") == "text", extract_text_spans(F.col("text"))
-        ).otherwise(ocr_media_spans(payload, lang)),
+    # only admitted bytes cross the Arrow boundary
+    admitted = F.when(F.col("admission").isNull(), F.col("payload"))
+    cols = ["doc_id", "pos", "kind", "media_ref", "offset", "mime", "n_bytes"]
+    with_out = joined.select(
+        *cols,
+        "admission",
+        extract_span("kind", "text", admitted, "mime", lang).alias("out"),
     )
-
-    cols = ["doc_id", "pos", "kind", "out_text", "media_ref", "offset"]
-    return _restitch(with_text.select(*cols))
-
-
-@F.pandas_udf(T.StringType())
-def _scope_reason_udf(mime: pd.Series, payload: pd.Series) -> pd.Series:
-    """Arrow-batched decode-scope probe over admitted payloads, keyed by
-    the JVM-side `mime_col` value: a JPEG's `jpeg_scope_reason`
-    (`truncated_jpeg` / `unsupported_jpeg_layout`),
-    `unsupported_tiff_layout` for an out-of-scope TIFF, else null (in
-    scope).  Header-only (marker walk / IFD tags) — never touches entropy
-    data or pixels."""
-    from ms_ocr_spark.extraction.ocr.jpeg import jpeg_scope_reason
-    from ms_ocr_spark.extraction.ocr.tiff import tiff_scope_reason
-
-    def _one(fmt, buf) -> str | None:
-        if buf is None:
-            return None
-        if fmt == "jpeg":
-            return jpeg_scope_reason(bytes(buf))
-        if fmt == "tiff" and tiff_scope_reason(bytes(buf)) is not None:
-            return "unsupported_tiff_layout"
-        return None
-
-    return pd.Series([_one(m, b) for m, b in zip(mime, payload)], dtype=object)
+    return _restitch(
+        with_out.select(
+            *cols,
+            F.col("out.text").alias("out_text"),
+            F.coalesce("admission", "out.status").alias("status"),
+        )
+    )
 
 
 def quarantine_invalid_media(docs: DataFrame, media: DataFrame) -> DataFrame:
-    """Side output for the validation gate: media spans whose payload
-    fails admission (unknown magic bytes / oversized / missing) — the
-    relational analog of the reference's upload rejection
-    (`/root/reference/src/controller/Upload.ts:22-32`) — or whose bytes
-    pass admission but sit outside this engine's decode scope.  Write
-    this to a quarantine sink next to the main output.
-
-    `reason` values: `missing` (no payload row), `invalid` (magic-byte /
-    size rejection), `truncated_jpeg` (JPEG whose marker walk ends
-    before a scan), `unsupported_jpeg_layout` (arithmetic / lossless /
-    hierarchical coding, 12-bit precision, sampling factors above 4 or
-    fractional sampling ratios, and 4-component frames that are
-    untagged, carry an unknown Adobe transform, or are progressive) and `unsupported_tiff_layout`
-    (exotic compression / photometric) — all quarantined BY DESIGN by
-    the codecs; the distinct reasons let a corpus operator see the
-    decode-scope cost (VERDICT r3 item 7).  Progressive (SOF2) JPEGs
-    decode since round 5, 3-component YCbCr color since round 6,
-    baseline 4-component CMYK/YCCK (Adobe APP14 transform 0/2) and
-    progressive restart intervals since round 6 as well, so none of
-    those appear here.  All probes are header-only sniffs, never pixel
-    decodes."""
-    from ms_ocr_spark.operators.multimodal import mime_col, valid_payload_col
-
-    flat = explode_spans(docs).filter(F.col("kind") == "media")
-    joined = flat.join(media.select("media_ref", "payload"), "media_ref", "left")
-    scope_reason = _scope_reason_udf(F.col("mime"), F.col("payload"))
-    return (
-        joined.withColumn("mime", mime_col("payload"))
-        .withColumn(
-            "reason",
-            F.when(F.col("payload").isNull(), "missing")
-            .when(~valid_payload_col("payload"), "invalid")
-            .when(scope_reason.isNotNull(), scope_reason)
-            .otherwise("ok"),
-        )
-        .filter(F.col("reason") != "ok")
-        .select(
-            "doc_id",
-            "offset",
-            "media_ref",
-            "mime",
-            F.length("payload").alias("n_bytes"),
-            "reason",
-        )
-    )
+    """Quarantine side output, one row per media span that is not `ok`:
+    (doc_id, offset, media_ref, mime, n_bytes, reason) — the relational
+    analog of the reference's upload rejection (reference
+    `src/controller/Upload.ts:22-32`).  `reason` is
+    `missing` (no payload row), `invalid` (magic-byte / size rejection) or
+    a `media_status` status."""
+    return extract_documents(docs, media).select("doc_id", F.inline("quarantine"))

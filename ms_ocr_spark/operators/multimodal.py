@@ -71,28 +71,13 @@ def mime_col(payload_col: str = "payload"):
     )
 
 
-def valid_payload_col(payload_col: str = "payload", max_bytes: int = MAX_MEDIA_BYTES):
+def valid_payload_col(payload_col: str = "payload"):
     """Admission predicate Column: known MIME + size cap (reference
     S3/S4, `/root/reference/src/HelperSrc.ts:408-430`)."""
     from pyspark.sql import functions as F
 
     return (mime_col(payload_col) != "unknown") & (
-        F.length(payload_col) <= max_bytes
-    )
-
-
-def validate_media(
-    media: DataFrame,
-    payload_col: str = "payload",
-    max_bytes: int = MAX_MEDIA_BYTES,
-) -> DataFrame:
-    """Admission control, JVM-side (no UDF): MIME sniff by magic bytes +
-    size cap, reference S2/S3/S4 (`/root/reference/src/HelperSrc.ts:
-    184-430`, 30 MB limit `env/local.env:26`).  Adds `mime` and
-    `is_valid`; route `~is_valid` rows to a quarantine sink.
-    """
-    return media.withColumn("mime", mime_col(payload_col)).withColumn(
-        "is_valid", valid_payload_col(payload_col, max_bytes)
+        F.length(payload_col) <= MAX_MEDIA_BYTES
     )
 
 

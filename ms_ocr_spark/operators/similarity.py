@@ -25,6 +25,17 @@ from ms_ocr_spark.plans.cache import track
 from .windows import top_k_per_group
 
 
+def _matrix(vectors, dim: int) -> np.ndarray:
+    """Stack `vectors` into an (n, dim) float64 matrix.  A vector of any
+    other length raises: a reshape would silently fold, say, pairs of
+    32-float vectors into 64-float rows and mispair every value."""
+    rows = [np.asarray(v, np.float64) for v in vectors]
+    bad = {len(r) for r in rows} - {dim}
+    if bad:
+        raise ValueError(f"expected vectors of dim={dim}, got lengths {sorted(bad)}")
+    return np.array(rows) if rows else np.zeros((0, dim))
+
+
 def dot(a: Column, b: Column) -> Column:
     """Sequential-fold dot product (deterministic FP order)."""
     return F.aggregate(
@@ -68,8 +79,8 @@ def cosine_pandas(dim: int = 64):
         out = pd.Series([None] * len(a), index=a.index, dtype=object)
         if not bool(valid.any()):
             return out
-        A = np.array(a[valid].tolist(), dtype=np.float64).reshape(-1, dim)
-        B = np.array(b[valid].tolist(), dtype=np.float64).reshape(-1, dim)
+        A = _matrix(a[valid], dim)
+        B = _matrix(b[valid], dim)
         dot_ = np.zeros(len(A))
         na = np.zeros(len(A))
         nb = np.zeros(len(A))
@@ -117,13 +128,7 @@ def brute_force_topk(
     qpd = queries.select(id_col, vec_col).toPandas()
     q_ids = qpd[id_col].to_numpy()
     q_valid = np.array([v is not None for v in qpd[vec_col]])
-    Qm = (
-        np.array(
-            [np.asarray(v, dtype=np.float64) for v in qpd[vec_col][q_valid]]
-        ).reshape(-1, dim)
-        if q_valid.any()
-        else np.zeros((0, dim))
-    )
+    Qm = _matrix(qpd[vec_col][q_valid], dim)
     vq_ids = q_ids[q_valid]
     nq_ids = q_ids[~q_valid]
     qn = np.zeros(len(Qm))
@@ -139,9 +144,7 @@ def brute_force_topk(
             valid = np.array([v is not None for v in pdf[vec_col]])
             out_q, out_n, out_s = [], [], []
             if valid.any() and len(Qm):
-                C = np.array(
-                    [np.asarray(v, np.float64) for v in pdf[vec_col][valid]]
-                ).reshape(-1, dim)
+                C = _matrix(pdf[vec_col][valid], dim)
                 cid = c_ids[valid]
                 m = len(C)
                 dot = np.zeros((len(Qm), m))
@@ -276,7 +279,7 @@ def lsh_buckets_pandas(
             # an all-NULL Arrow batch: tolist() would yield a 1-D empty
             # array and X[:, i:i+1] would raise — short-circuit to NULLs
             return pd.Series([None] * len(emb), index=emb.index, dtype=object)
-        X = np.array(emb[valid].tolist(), dtype=np.float64).reshape(-1, dim)
+        X = _matrix(emb[valid], dim)
         acc = np.zeros((len(X), n_proj), dtype=np.float64)
         for i in range(dim):
             # same op sequence per (row, plane) as the sequential fold
@@ -420,9 +423,7 @@ def ivf_cell_assignments(
     cells = cpd["cell"].to_numpy()
     order = np.argsort(cells, kind="stable")
     cells = cells[order]
-    CENT = np.array(
-        [np.asarray(v, np.float64) for v in cpd["cent_vec"].to_numpy()[order]]
-    ).reshape(-1, dim)
+    CENT = _matrix(cpd["cent_vec"].to_numpy()[order], dim)
     n_cells = len(cells)
     id_type = vectors.schema[id_col].dataType.simpleString()
 
@@ -432,9 +433,7 @@ def ivf_cell_assignments(
             valid = np.array([v is not None for v in pdf[vec_col]])
             out_i, out_c = [], []
             if valid.any() and n_cells:
-                X = np.array(
-                    [np.asarray(v, np.float64) for v in pdf[vec_col][valid]]
-                ).reshape(-1, dim)
+                X = _matrix(pdf[vec_col][valid], dim)
                 d = np.zeros((len(X), n_cells))
                 for i in range(dim):
                     # same IEEE accumulation order per element as `dot`
@@ -566,9 +565,7 @@ def embedding_neardup_pairs(
             return pd.DataFrame({"id_a": [], "id_b": [], "sim": []})
         order = np.argsort(ids)
         ids = ids[order]
-        X = np.array(
-            [np.asarray(v, np.float64) for v in pdf[vec_col][valid]]
-        ).reshape(-1, dim)[order]
+        X = _matrix(pdf[vec_col][valid], dim)[order]
         m = len(X)
         nrm = np.zeros(m)
         for i in range(dim):

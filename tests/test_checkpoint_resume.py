@@ -190,50 +190,33 @@ def test_checkpoint_single_input_scan(spark, corpus_dir):
     assert plan.count("documents.parquet") == 1, "documents scanned more than once"
 
 
-def test_streaming_incremental(spark, corpus_dir, tmp_path):
-    from ms_ocr_spark.streaming.incremental import stream_extract
+def _extract_job():
+    import os
+    import sys
 
-    media = spark.read.parquet(f"{corpus_dir}/media_store.parquet")
-    golden = spark.read.parquet(f"{corpus_dir}/golden_spans.parquet")
-    out = str(tmp_path / "stream_out")
-    # the file stream source requires a DIRECTORY of files
-    docs_dir = tmp_path / "docs_in"
-    docs_dir.mkdir()
-    (docs_dir / "part-0.parquet").symlink_to(f"{corpus_dir}/documents.parquet")
-    q = stream_extract(
-        spark,
-        str(docs_dir),
-        media,
-        out,
-        str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(300)
-    result = spark.read.parquet(out + "/epoch=*")
-    assert result.count() == golden.count()
-    r = result.select("doc_id", F.to_json("spans").alias("js"))
-    g = golden.select("doc_id", F.to_json("spans").alias("js"))
-    assert g.join(r, ["doc_id", "js"]).count() == golden.count()
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, os.path.join(repo, "jobs"))
+    try:
+        import extract_job
+    finally:
+        sys.path.pop(0)
+    return extract_job
+
+
+def _job_args(corpus_dir, out):
+    return [
+        "--documents", f"{corpus_dir}/documents.parquet",
+        "--media", f"{corpus_dir}/media_store.parquet",
+        "--output", out, "--buckets", "4", "--job-id", "t",
+    ]
 
 
 def test_extract_job_cli(spark, corpus_dir, tmp_path):
     """spark-submit entrypoint smoke: run via main(), resume is a no-op,
     and the quarantine side sink is written."""
-    import os
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    jobs_dir = os.path.join(repo, "jobs")
-    sys.path.insert(0, jobs_dir)
-    try:
-        import extract_job
-    finally:
-        sys.path.pop(0)
+    extract_job = _extract_job()
     out = str(tmp_path / "cli_out")
-    args = [
-        "--documents", f"{corpus_dir}/documents.parquet",
-        "--media", f"{corpus_dir}/media_store.parquet",
-        "--output", out, "--buckets", "4", "--job-id", "t",
-    ]
+    args = _job_args(corpus_dir, out)
     assert extract_job.main(args) == 0
     golden = spark.read.parquet(f"{corpus_dir}/golden_spans.parquet")
     from ms_ocr_spark.plans.checkpoint import read_output
@@ -247,40 +230,33 @@ def test_extract_job_cli(spark, corpus_dir, tmp_path):
     assert read_output(spark, out).count() == golden.count()
 
 
-def test_streaming_second_epoch_exactly_once(spark, corpus_dir, tmp_path):
-    """New files landing later are extracted exactly once: re-running the
-    stream with the same checkpoint skips epoch-1 files and emits only the
-    new docs; the union has no duplicates."""
-    from ms_ocr_spark.sources.datagen import write_corpus
-    from ms_ocr_spark.streaming.incremental import stream_extract
-
-    # corpus generation is deterministic per doc INDEX, so a 70-doc corpus
-    # at the same seed is a strict superset of the shared 60-doc fixture:
-    # docs 60..69 are a brand-new second batch with consistent media refs
-    import duckdb
-
-    big = write_corpus(str(tmp_path / "c70"), n_docs=70, seed=42)
-    media = spark.read.parquet(big["media_store"])
-    batch2 = str(tmp_path / "batch2.parquet")
-    duckdb.sql(
-        f"COPY (SELECT * FROM read_parquet('{big['documents']}') "
-        "WHERE doc_id >= 'doc-00000060') TO '" + batch2 + "' (FORMAT PARQUET)"
-    )
-    docs_dir = tmp_path / "docs_in"
-    docs_dir.mkdir()
-    (docs_dir / "batch1.parquet").symlink_to(f"{corpus_dir}/documents.parquet")
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-
-    q = stream_extract(spark, str(docs_dir), media, out, ckpt)
-    q.awaitTermination(300)
-    n1 = spark.read.parquet(out + "/epoch=*").count()
-
-    (docs_dir / "batch2.parquet").symlink_to(batch2)
-    q2 = stream_extract(spark, str(docs_dir), media, out, ckpt)
-    q2.awaitTermination(300)
-    result = spark.read.parquet(out + "/epoch=*")
-    assert result.count() == n1 + 10
-    assert result.select("doc_id").distinct().count() == result.count()
+def test_extract_job_scans_each_input_once(spark, corpus_dir, tmp_path):
+    """One job run reads `documents` and `media_store` once each: the
+    quarantine sink comes from the committed output's `quarantine` column,
+    not from a second explode and join of the input.  Scans are counted
+    over the run's SQL executions in the session's status store."""
+    extract_job = _extract_job()
+    store = spark._jsparkSession.sharedState().statusStore()
+    before = {e.executionId() for e in _scala_list(store.executionsList())}
+    sc = spark.sparkContext
+    sc.setJobGroup("job_scans", "one extract_job run")
+    try:
+        assert extract_job.main(_job_args(corpus_dir, str(tmp_path / "out"))) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    group = set(sc.statusTracker().getJobIdsForGroup("job_scans"))
+    scans = [
+        node.desc()
+        for e in _scala_list(store.executionsList())
+        if e.executionId() not in before
+        and group.intersection(int(j) for j in _scala_list(e.jobs().keys().toSeq()))
+        for node in _scala_list(store.planGraph(e.executionId()).allNodes())
+        if node.name().startswith("Scan")
+    ]
+    n_docs = sum("documents.parquet" in d for d in scans)
+    n_media = sum("media_store.parquet" in d for d in scans)
+    assert (n_docs, n_media) == (1, 1), scans
 
 
 def test_expire_old_sweeps_stale_buckets(spark, corpus_dir, tmp_path):

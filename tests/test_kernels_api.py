@@ -67,19 +67,28 @@ def test_scalar_helpers(spark):
 
 
 def test_validate_media(spark, corpus_dir):
-    from ms_ocr_spark.operators.multimodal import validate_media
+    """Admission control through the quarantine path: a junk payload is
+    `invalid` with mime `unknown`; a PNG-magic payload one byte over the
+    30 MB cap is `invalid` with mime `png`.  Neither decodes."""
+    from ms_ocr_spark.extraction.pipeline import extract_documents
+    from ms_ocr_spark.operators.multimodal import MAX_MEDIA_BYTES
 
-    media = spark.read.parquet(f"{corpus_dir}/media_store.parquet")
-    junk = spark.createDataFrame(
-        [("bad-1", bytearray(b"not an image"), "x")], media.schema
+    schema = spark.read.parquet(f"{corpus_dir}/media_store.parquet").schema
+    big = b"\x89PNG\r\n\x1a\n" + bytes(MAX_MEDIA_BYTES + 1 - 8)
+    media = spark.createDataFrame(
+        [("bad-1", bytearray(b"not an image"), "x"), ("big-1", bytearray(big), "x")],
+        schema,
     )
-    out = validate_media(media.unionByName(junk))
-    rows = {r["media_ref"]: (r["mime"], r["is_valid"]) for r in out.collect()}
-    assert rows["bad-1"] == ("unknown", False)
-    del rows["bad-1"]
-    assert all(v == ("png", True) for v in rows.values())
-    tiny = validate_media(media, max_bytes=10)
-    assert tiny.filter(F.col("is_valid")).count() == 0
+    docs = spark.createDataFrame(
+        [("doc-a", [("media", None, "bad-1", 0), ("media", None, "big-1", 1)])],
+        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+    )
+    (row,) = extract_documents(docs, media).collect()
+    assert [s["text"] for s in row["spans"]] == [None, None]
+    assert [tuple(q) for q in row["quarantine"]] == [
+        (0, "bad-1", "unknown", 12, "invalid"),
+        (1, "big-1", "png", MAX_MEDIA_BYTES + 1, "invalid"),
+    ]
 
 
 def test_heatmap_and_draw():

@@ -164,6 +164,42 @@ def test_validate_payloads_quarantines_corrupt_media(spark, corpus_dir):
     assert n_null == 1
 
 
+def test_decode_error_is_quarantined_with_its_class(spark, corpus_dir):
+    """An admitted, in-scope payload whose decode raises (PNG magic, a
+    valid IHDR, an IDAT too short for its scanlines) comes out as NULL
+    text and one quarantine row naming the exception class — not as a
+    silent NULL with no quarantine row."""
+    import struct
+    import zlib
+
+    def chunk(tag: bytes, data: bytes) -> bytes:
+        crc = struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
+        return struct.pack(">I", len(data)) + tag + data + crc
+
+    ihdr = struct.pack(">IIBBBBB", 16, 16, 8, 0, 0, 0, 0)
+    corrupt = (
+        b"\x89PNG\r\n\x1a\n"
+        + chunk(b"IHDR", ihdr)
+        + chunk(b"IDAT", zlib.compress(b"\x00" * 3))
+        + chunk(b"IEND", b"")
+    )
+    docs, media, _ = _load(spark, corpus_dir)
+    one_ref = media.limit(1).collect()[0]["media_ref"]
+    patched = media.filter(F.col("media_ref") != one_ref).unionByName(
+        spark.createDataFrame([(one_ref, bytearray(corrupt), "x")], media.schema)
+    )
+
+    from ms_ocr_spark.extraction.pipeline import quarantine_invalid_media
+
+    out = extract_documents(docs, patched)
+    spans = out.select(F.explode("spans").alias("s")).filter(F.col("s.media_ref") == one_ref)
+    assert [r["s"]["text"] for r in spans.collect()] == [None]
+    q = quarantine_invalid_media(docs, patched).collect()
+    assert [(r["media_ref"], r["mime"], r["n_bytes"], r["reason"]) for r in q] == [
+        (one_ref, "png", len(corrupt), "decode_error:ValueError")
+    ]
+
+
 def test_language_routing_required_for_squares(spark, tmp_path):
     """ja_vert docs render square glyph grids that auto-detect misreads
     (row/column band counts tie); the language column must flip the

@@ -14,14 +14,14 @@ def _plan(df) -> str:
 
 
 def test_extraction_single_pass_plan(spark, corpus_dir):
-    """One salt exchange, one Arrow stage with BOTH UDFs, broadcast join,
-    no union of duplicated subplans."""
+    """One salt exchange, one Arrow stage with the one span UDF, broadcast
+    join, no union of duplicated subplans."""
     docs = spark.read.parquet(f"{corpus_dir}/documents.parquet")
     media = spark.read.parquet(f"{corpus_dir}/media_store.parquet")
     plan = _plan(extract_documents(docs, media, salt_partitions=8))
     assert plan.count("REPARTITION_BY_NUM") == 1, "salt shuffle duplicated"
     assert plan.count("ArrowEvalPython") == 1, "UDF stage duplicated"
-    assert "extract_text_spans" in plan and "ocr_media_spans" in plan
+    assert plan.count("extract_span(") == 1
     assert "BroadcastHashJoin" in plan
     assert "Union" not in plan
     assert "BatchEvalPython" not in plan  # no row-at-a-time Python, ever

@@ -174,6 +174,19 @@ def test_brute_force_topk_null_vectors_rank_last(spark):
     assert [r["sim"] for r in out[2:]] == [None, None]
 
 
+def test_brute_force_topk_rejects_wrong_dimension(spark):
+    """32-float vectors under dim=64 raise a ValueError naming the dim,
+    instead of being folded pairwise into half as many 64-float rows."""
+    from ms_ocr_spark.operators.similarity import brute_force_topk
+
+    rng = np.random.default_rng(5)
+    rows = [(i, [float(x) for x in rng.standard_normal(32)]) for i in range(8)]
+    # one partition: an even count per Arrow batch folds without an error
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>").coalesce(1)
+    with pytest.raises(ValueError, match="dim=64"):
+        brute_force_topk(df.filter("vec_id < 4"), df, k=2, dim=64).collect()
+
+
 def test_embedding_neardup_bucket_path_matches_join_path(spark):
     """The per-bucket blockwise pair generator must produce exactly the
     pairs (and 6-dp sims) of the reference bucket self-join + pairwise
