@@ -66,7 +66,9 @@ def media_status(buf: bytes, mime: str, language: str | None) -> tuple[str | Non
       * `unsupported_tiff_layout` (exotic compression / photometric) — the
         `tiff_scope_reason` header probe;
       * `decode_error:<ExceptionClass>` — in scope, but the probe or the
-        decode raised.
+        decode raised; a class outside the builtins is module-qualified
+        (`decode_error:zlib.error`, `decode_error:struct.error`, but
+        `decode_error:ValueError`).
     The scope reasons are quarantined BY DESIGN by the codecs, found by
     header-only sniffs before any pixel decode; the distinct reasons let a
     corpus operator see the decode-scope cost (VERDICT r3 item 7).
@@ -90,7 +92,11 @@ def media_status(buf: bytes, mime: str, language: str | None) -> tuple[str | Non
             return None, "unsupported_tiff_layout"
         return decode_image(decode_media(buf), language), "ok"
     except Exception as e:
-        return None, f"decode_error:{type(e).__name__}"
+        cls = type(e)
+        name = cls.__qualname__
+        if cls.__module__ != "builtins":
+            name = f"{cls.__module__}.{name}"
+        return None, f"decode_error:{name}"
 
 
 @F.arrow_udf(_SPAN_RESULT)
@@ -229,7 +235,7 @@ def extract_documents(
     n_media_missing) and as one row of its doc's `quarantine` array, with
     `reason` `missing`, `invalid` or a `media_status` status.
     """
-    from ms_ocr_spark.operators.multimodal import mime_col, valid_payload_col
+    from ms_ocr_spark.operators.multimodal import MAX_MEDIA_BYTES, magic_col, mime_col
 
     flat = explode_spans(docs)
     if salt_partitions:
@@ -239,18 +245,22 @@ def extract_documents(
     # two-branch filter/union shape re-explodes and re-shuffles the input
     # twice (the exchanges are not reused across the branches).  The media
     # join stays a left join on media_ref (forced broadcast, or AQE's
-    # choice with broadcast_media=False).
+    # choice with broadcast_media=False).  Admission is a known MIME and
+    # the size cap (reference S3/S4, `/root/reference/src/HelperSrc.ts:
+    # 408-430`), read from the projected `mime` and `n_bytes`.
     media_side = media.select("media_ref", "payload")
     if broadcast_media:
         media_side = F.broadcast(media_side)
     joined = (
         flat.join(media_side, "media_ref", "left")
-        .withColumn("mime", mime_col("payload"))
+        .withColumn("magic", magic_col("payload"))
+        .withColumn("mime", mime_col("magic"))
         .withColumn("n_bytes", F.length("payload"))
         .withColumn(
             "admission",
             F.when(F.col("payload").isNull(), "missing").when(
-                ~valid_payload_col("payload"), "invalid"
+                (F.col("mime") == "unknown") | (F.col("n_bytes") > MAX_MEDIA_BYTES),
+                "invalid",
             ),
         )
     )

@@ -23,6 +23,8 @@ from __future__ import annotations
 
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -705,41 +707,39 @@ def simhash_signatures(
     """Per-doc SimHash over token md5-hashes (bit b set when the sum of
     ±1 votes across tokens is positive).  Token multiplicity counts.
 
-    Round 8 (guide §4.2): the signature is a pure per-document function,
-    so it is computed row-locally in one Arrow pass — tokenize stays in
-    the JVM, the UDF hashes each token with the exact md5-prefix integer
-    of the relational path and packs the vote signs with vectorized
-    int64 bit math.  The former explode + 16/32 vote columns +
-    groupBy(doc) moved one row per TOKEN through an exchange to count
-    votes that never leave their document.  Docs with no tokens drop out
-    in both formulations; values are bit-identical (integer math only).
+    The signature is a pure per-document function, so it is computed
+    row-locally in one Arrow pass: tokenize stays in the JVM, and the
+    Arrow UDF hashes each DISTINCT token of a batch once (a corpus
+    vocabulary is far smaller than its token count) with the exact
+    md5-prefix integer of the relational path, then counts each bit's
+    votes per doc with one bincount over the batch's tokens, so memory
+    stays a few bytes per token, never O(tokens x bits).  Docs with no
+    tokens drop out, as in the relational formulation; values are
+    bit-identical (integer math only).
     """
     import numpy as np
 
-    bit_idx = np.arange(bits, dtype=np.int64)
-
-    @F.pandas_udf("long")
-    def _sim(toks: pd.Series) -> pd.Series:
+    @F.arrow_udf("long")
+    def _sim(toks: pa.Array) -> pa.Array:
         import hashlib
 
-        out = []
-        for t in toks:
-            if t is None or len(t) == 0:
-                out.append(None)
-                continue
-            h = np.fromiter(
-                (
-                    int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-                    for s in t
-                ),
-                dtype=np.int64,
-                count=len(t),
-            )
-            votes = (((h[:, None] >> bit_idx[None, :]) & 1) * 2 - 1).sum(
-                axis=0
-            )
-            out.append(int(((votes > 0).astype(np.int64) << bit_idx).sum()))
-        return pd.Series(out, dtype=object)
+        n_tok = pc.fill_null(pc.list_value_length(toks), 0).to_numpy()
+        enc = pc.dictionary_encode(pc.list_flatten(toks))
+        vocab = enc.dictionary.to_pylist()
+        h = np.fromiter(
+            (int(hashlib.md5(s.encode()).hexdigest()[:15], 16) for s in vocab),
+            dtype=np.int64,
+            count=len(vocab),
+        )
+        tok = enc.indices.to_numpy()
+        doc = np.repeat(np.arange(len(toks), dtype=np.int32), n_tok)
+        sig = np.zeros(len(toks), dtype=np.int64)
+        for b in range(bits):
+            # +1 per token with bit b set, -1 per other token: the sum is
+            # positive when more than half of the doc's tokens set it
+            ones = np.bincount(doc[((h >> b) & 1).astype(bool)[tok]], minlength=len(toks))
+            sig |= (2 * ones > n_tok).astype(np.int64) << b
+        return pa.array(sig, mask=n_tok == 0)
 
     # non-deterministic mark (guide §4.4): see
     # minhash_signature_arrays_from_docs — stops the optimizer from
@@ -776,42 +776,7 @@ def simhash_near_dup_pairs(
             f"{n_bands - 1} (got {max_hamming}); raise n_bands"
         )
     band_width = bits // n_bands
-    # The signature IS the payload here (one long), so it rides through
-    # the band join directly (round 8, guide §2.3/§8: when the payload is
-    # lighter than the join keys there is nothing to save by re-attaching
-    # it later).  The former shape deduped the raw candidate set — tens of
-    # millions of (id_a, id_b) rows at corpus scale — through a full
-    # shuffle, then re-joined the signature relation TWICE to score them.
-    # Carrying the two longs through the band join lets the Hamming filter
-    # run inside the join stage, so the only post-join shuffle (the final
-    # distinct) sees the already-filtered near-dup pairs, orders of
-    # magnitude fewer rows.  Output is identical: every pair within
-    # max_hamming matches in >= 1 band (pigeonhole), duplicates from
-    # multi-band matches collapse in the final distinct, and `hamming` is
-    # a pure function of the pair so the distinct never merges rows that
-    # disagree.
-    bands = track(
-        simhash_signatures(df, id_col, text_col, bits).select(
-            id_col,
-            "simhash",
-            F.posexplode(
-                F.array(
-                    *[
-                        F.shiftright("simhash", b * band_width).bitwiseAND(
-                            F.lit((1 << band_width) - 1)
-                        )
-                        for b in range(n_bands)
-                    ]
-                )
-            ).alias("band", "band_val"),
-        )
-    )
-    a = bands.select(
-        F.col(id_col).alias("id_a"), F.col("simhash").alias("h_a"), "band", "band_val"
-    )
-    b = bands.select(
-        F.col(id_col).alias("id_b"), F.col("simhash").alias("h_b"), "band", "band_val"
-    )
+    mask = (1 << band_width) - 1
     # pin the self-join's partition count EXPLICITLY (guide §2.5): its
     # INPUT is tiny (n x n_bands rows of four integers) so AQE's
     # input-byte coalescing would fold the join into one or two tasks —
@@ -820,22 +785,55 @@ def simhash_near_dup_pairs(
     # measured 8x slower with the collapsed layout.  The width derives
     # from the context (defaultParallelism), not a local constant, and
     # user-specified repartitioning is exempt from AQE coalescing.
-    n_part = pinned_width(df)
+    #
+    # The signature IS the payload (one long), so it rides through the
+    # band join and the Hamming filter runs inside the join stage.  Both
+    # join sides are this ONE repartitioned relation: AQE plans the second
+    # side as a ReusedExchange, so the UDF and the shuffle run once, with
+    # no persisted copy.
+    bands = (
+        simhash_signatures(df, id_col, text_col, bits)
+        .select(
+            id_col,
+            "simhash",
+            F.posexplode(
+                F.array(
+                    *[
+                        F.shiftright("simhash", b * band_width).bitwiseAND(F.lit(mask))
+                        for b in range(n_bands)
+                    ]
+                )
+            ).alias("band", "band_val"),
+        )
+        .repartition(pinned_width(df), "band", "band_val")
+    )
+    a = bands.select(
+        F.col(id_col).alias("id_a"), F.col("simhash").alias("h_a"), "band", "band_val"
+    )
+    b = bands.select(
+        F.col(id_col).alias("id_b"), F.col("simhash").alias("h_b"), "band", "band_val"
+    )
+    # A pair matches in every band where its xor is zero; it is kept only
+    # from the lowest of them, so no pair repeats and no distinct (a
+    # further shuffle) is needed.
+    x = F.col("h_a").bitwiseXOR(F.col("h_b"))
+    lowest_band = F.coalesce(
+        *[
+            F.when(F.shiftright(x, j * band_width).bitwiseAND(F.lit(mask)) == 0, F.lit(j))
+            for j in range(n_bands)
+        ]
+    )
     # shuffled-hash, not sort-merge: per-partition band relations are a
     # few MB (hash build is trivially safe) while SMJ would sort both
     # sides AND copy rows across the large duplicate-key groups the
     # candidate stream produces (guide §3.1)
     return (
-        a.repartition(n_part, "band", "band_val")
-        .hint("shuffle_hash")
-        .join(b.repartition(n_part, "band", "band_val"), ["band", "band_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "hamming", F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-        )
+        a.hint("shuffle_hash")
+        .join(b, ["band", "band_val"])
+        .filter((F.col("id_a") < F.col("id_b")) & (F.col("band") == lowest_band))
+        .withColumn("hamming", F.bit_count(x))
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", F.col("hamming").cast("long").alias("hamming"))
-        .distinct()
     )
 
 

@@ -58,26 +58,25 @@ _MAGIC = {"png": "89504E47", "jpeg": "FFD8FF", "tiff_le": "49492A00", "tiff_be":
 MAX_MEDIA_BYTES = 30 * 1024 * 1024  # reference size cap, env/local.env:26
 
 
-def mime_col(payload_col: str = "payload"):
-    """JVM-side magic-byte MIME sniff Column (reference S2)."""
+def magic_col(payload_col: str = "payload"):
+    """Hex of a payload's first four bytes: the input of `mime_col`."""
     from pyspark.sql import functions as F
 
-    head = F.upper(F.hex(F.substring(F.col(payload_col), 1, 4)))
+    return F.hex(F.substring(F.col(payload_col), 1, 4))
+
+
+def mime_col(magic: str = "magic"):
+    """JVM-side magic-byte MIME sniff Column (reference S2) over the column
+    `magic`, a projected `magic_col`: the sniff reads it in four branches,
+    and a projected column is evaluated once per row."""
+    from pyspark.sql import functions as F
+
+    head = F.col(magic)
     return (
         F.when(head.startswith(_MAGIC["png"]), "png")
         .when(head.startswith(_MAGIC["jpeg"]), "jpeg")
         .when(head.startswith(_MAGIC["tiff_le"]) | head.startswith(_MAGIC["tiff_be"]), "tiff")
         .otherwise("unknown")
-    )
-
-
-def valid_payload_col(payload_col: str = "payload"):
-    """Admission predicate Column: known MIME + size cap (reference
-    S3/S4, `/root/reference/src/HelperSrc.ts:408-430`)."""
-    from pyspark.sql import functions as F
-
-    return (mime_col(payload_col) != "unknown") & (
-        F.length(payload_col) <= MAX_MEDIA_BYTES
     )
 
 

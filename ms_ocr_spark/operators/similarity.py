@@ -16,24 +16,47 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ms_ocr_spark.functions.hashing import md5_long, plane_weights
-from ms_ocr_spark.plans.cache import track
 
 from .windows import top_k_per_group
 
 
+# The most query vectors `brute_force_topk` ships in its task closure: each
+# Arrow batch of the corpus is scored as one (queries x batch) matrix.
+MAX_CLOSURE_QUERIES = 4096
+
+
 def _matrix(vectors, dim: int) -> np.ndarray:
-    """Stack `vectors` into an (n, dim) float64 matrix.  A vector of any
-    other length raises: a reshape would silently fold, say, pairs of
-    32-float vectors into 64-float rows and mispair every value."""
-    rows = [np.asarray(v, np.float64) for v in vectors]
-    bad = {len(r) for r in rows} - {dim}
+    """Stack `vectors` (non-NULL; a `pyarrow` list array or any iterable of
+    sequences) into an (n, dim) float64 matrix.  A vector of any other
+    length raises: a reshape would silently fold, say, pairs of 32-float
+    vectors into 64-float rows and mispair every value."""
+    arrow = isinstance(vectors, pa.Array)
+    if arrow:
+        lengths = pc.unique(pc.list_value_length(vectors)).to_pylist()
+    else:
+        vectors = [np.asarray(v, np.float64) for v in vectors]
+        lengths = [len(v) for v in vectors]
+    bad = set(lengths) - {dim}
     if bad:
         raise ValueError(f"expected vectors of dim={dim}, got lengths {sorted(bad)}")
-    return np.array(rows) if rows else np.zeros((0, dim))
+    if arrow:
+        vectors = pc.list_flatten(vectors).to_numpy(zero_copy_only=False)
+    return np.array(vectors, dtype=np.float64).reshape(-1, dim)
+
+
+def _norms(X: np.ndarray) -> np.ndarray:
+    """Row norms of `X`, squares summed dimension by dimension (the folds'
+    IEEE order)."""
+    sq = np.zeros(len(X))
+    for i in range(X.shape[1]):
+        sq += X[:, i] * X[:, i]
+    return np.sqrt(sq)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -59,6 +82,18 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def _scorable(vectors: pd.Series, dim: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(mask, matrix, norms) of the vectors a cosine is defined for: not
+    NULL and of non-zero norm."""
+    mask = np.array([v is not None for v in vectors], dtype=bool)
+    X = _matrix(vectors[mask], dim)
+    n = _norms(X)
+    if not n.all():  # copy the batch only when a zero vector drops out
+        mask[mask] = n > 0
+        X, n = X[n > 0], n[n > 0]
+    return mask, X, n
+
+
 def cosine_pandas(dim: int = 64):
     """Arrow-batched pandas cosine — bit-identical to `cosine`'s folds.
 
@@ -82,13 +117,9 @@ def cosine_pandas(dim: int = 64):
         A = _matrix(a[valid], dim)
         B = _matrix(b[valid], dim)
         dot_ = np.zeros(len(A))
-        na = np.zeros(len(A))
-        nb = np.zeros(len(A))
         for i in range(dim):
             dot_ += A[:, i] * B[:, i]
-            na += A[:, i] * A[:, i]
-            nb += B[:, i] * B[:, i]
-        out.loc[valid] = (dot_ / (np.sqrt(na) * np.sqrt(nb))).tolist()
+        out.loc[valid] = (dot_ / (_norms(A) * _norms(B))).tolist()
         return out
 
     return _cos
@@ -117,43 +148,40 @@ def brute_force_topk(
     whose unrounded sim is more than 1.1e-6 below its batch's k-th best
     cannot survive 6-dp rounding (|round(x) - x| <= 5e-7), so the exact
     JVM round + window ranking runs over ~Q*k rows per batch instead of
-    Q x N.  NULL vectors keep their former ranking semantics: null-sim
-    candidate rows are emitted (pruned to the k smallest neighbor ids,
-    their tie-break order) and rank below every scored row in the
-    NULLS-LAST window, exactly as the crossJoin produced them.
-    """
-    import numpy as np
-    import pandas as pd
+    Q x N.  NULL and zero-norm vectors get a NULL sim (the oracle's
+    0/0 is NULL): their candidate rows are emitted (pruned to the k
+    smallest neighbor ids, their tie-break order) and rank below every
+    scored row in the NULLS-LAST window, exactly as the crossJoin
+    produced them.
 
-    qpd = queries.select(id_col, vec_col).toPandas()
+    More than `MAX_CLOSURE_QUERIES` queries raise a ValueError; the check
+    rides on the one collect of the query side.
+    """
+    qpd = queries.select(id_col, vec_col).limit(MAX_CLOSURE_QUERIES + 1).toPandas()
+    if len(qpd) > MAX_CLOSURE_QUERIES:
+        raise ValueError(
+            f"brute_force_topk ships its query side in the task closure: at most "
+            f"MAX_CLOSURE_QUERIES={MAX_CLOSURE_QUERIES} queries, got more"
+        )
     q_ids = qpd[id_col].to_numpy()
-    q_valid = np.array([v is not None for v in qpd[vec_col]])
-    Qm = _matrix(qpd[vec_col][q_valid], dim)
+    q_valid, Qm, qn = _scorable(qpd[vec_col], dim)
     vq_ids = q_ids[q_valid]
-    nq_ids = q_ids[~q_valid]
-    qn = np.zeros(len(Qm))
-    for i in range(dim):
-        qn += Qm[:, i] * Qm[:, i]
-    qn = np.sqrt(qn)
     id_type = corpus.schema[id_col].dataType.simpleString()
     schema = f"query_id {id_type}, neighbor_id {id_type}, sim double"
 
     def _score(batches):
         for pdf in batches:
             c_ids = pdf[id_col].to_numpy()
-            valid = np.array([v is not None for v in pdf[vec_col]])
+            valid, C, cn = _scorable(pdf[vec_col], dim)
             out_q, out_n, out_s = [], [], []
             if valid.any() and len(Qm):
-                C = _matrix(pdf[vec_col][valid], dim)
                 cid = c_ids[valid]
                 m = len(C)
                 dot = np.zeros((len(Qm), m))
-                cn = np.zeros(m)
                 for i in range(dim):
                     # same IEEE accumulation order per element as the folds
                     dot += Qm[:, i : i + 1] * C[:, i][None, :]
-                    cn += C[:, i] * C[:, i]
-                sim = dot / (qn[:, None] * np.sqrt(cn)[None, :])
+                sim = dot / (qn[:, None] * cn[None, :])
                 self_mask = cid[None, :] == vq_ids[:, None]
                 sim_rank = np.where(self_mask, -np.inf, sim)
                 if m > k:
@@ -172,28 +200,17 @@ def brute_force_topk(
                     "sim": np.concatenate(out_s) if out_s else [],
                 }
             )
-            # null-sim rows: null corpus vectors against every query, and
-            # every corpus vector against null queries — k smallest
-            # neighbor ids per query per batch is a superset of their
-            # possible global ranks (ties order by neighbor_id)
+            # null-sim rows: the null and zero corpus vectors for a scored
+            # query, every corpus vector for a null or zero query — k
+            # smallest neighbor ids per query per batch is a superset of
+            # their possible global ranks (ties order by neighbor_id)
+            pools = {True: np.sort(c_ids[~valid]), False: np.sort(c_ids)}
             null_parts = []
-            if (~valid).any():
-                nn = np.sort(c_ids[~valid])
-                for qid in q_ids:
-                    take = [K for K in nn[: k + 1] if K != qid][:k]
+            for qid, scored in zip(q_ids, q_valid):
+                take = [K for K in pools[scored][: k + 1] if K != qid][:k]
+                if take:
                     null_parts.append(
-                        pd.DataFrame(
-                            {"query_id": qid, "neighbor_id": take, "sim": None}
-                        )
-                    )
-            if len(nq_ids) and valid.any():
-                vv = np.sort(c_ids[valid])
-                for qid in nq_ids:
-                    take = [K for K in vv[: k + 1] if K != qid][:k]
-                    null_parts.append(
-                        pd.DataFrame(
-                            {"query_id": qid, "neighbor_id": take, "sim": None}
-                        )
+                        pd.DataFrame({"query_id": qid, "neighbor_id": take, "sim": None})
                     )
             if null_parts:
                 res = pd.concat([res] + null_parts, ignore_index=True)
@@ -242,11 +259,11 @@ def lsh_bucket(vec: Column, n_planes: int = 8, dim: int = 64, table: int = 0) ->
     return bucket
 
 
-def lsh_buckets_pandas(
+def lsh_buckets_arrow(
     n_planes: int = 8, dim: int = 64, tables: tuple[int, ...] = (0,)
 ):
-    """Arrow-batched pandas UDF computing all per-table bucket ids —
-    BIT-IDENTICAL to `lsh_bucket`'s folds, ~20x cheaper per row.
+    """Arrow UDF computing all per-table bucket ids — BIT-IDENTICAL to
+    `lsh_bucket`'s folds, ~20x cheaper per row.  NULL vectors get NULL.
 
     The JVM fold pays interpreted higher-order-function overhead per
     vector element per plane (tables x planes x dim lambda calls per
@@ -269,18 +286,13 @@ def lsh_buckets_pandas(
         ],
         dtype=np.float64,
     )
-    n_proj = len(tables) * n_planes
     pows = np.array([1 << p for p in range(n_planes)], dtype=np.int64)
 
-    @F.pandas_udf("array<int>")
-    def _buckets(emb: pd.Series) -> pd.Series:
-        valid = emb.notna()
-        if not bool(valid.any()):
-            # an all-NULL Arrow batch: tolist() would yield a 1-D empty
-            # array and X[:, i:i+1] would raise — short-circuit to NULLs
-            return pd.Series([None] * len(emb), index=emb.index, dtype=object)
-        X = _matrix(emb[valid], dim)
-        acc = np.zeros((len(X), n_proj), dtype=np.float64)
+    @F.arrow_udf("array<int>")
+    def _buckets(emb: pa.Array) -> pa.Array:
+        valid = emb.is_valid()
+        X = _matrix(emb.filter(valid), dim)
+        acc = np.zeros((len(X), w.shape[1]), dtype=np.float64)
         for i in range(dim):
             # same op sequence per (row, plane) as the sequential fold
             acc += X[:, i : i + 1] * w[i][None, :]
@@ -292,13 +304,13 @@ def lsh_buckets_pandas(
             ],
             axis=1,
         )
-        out = pd.Series([None] * len(emb), index=emb.index, dtype=object)
-        out.loc[valid] = pd.Series(
-            [[int(v) for v in row] for row in buckets],
-            index=emb.index[valid],
-            dtype=object,
+        # one list of len(tables) ids per valid row, an empty NULL slot
+        # per NULL vector
+        sizes = valid.to_numpy(zero_copy_only=False) * len(tables)
+        offsets = np.concatenate([[0], np.cumsum(sizes)]).astype(np.int32)
+        return pa.ListArray.from_arrays(
+            offsets, pa.array(buckets.ravel().astype(np.int32)), mask=pc.invert(valid)
         )
-        return out
 
     return _buckets
 
@@ -314,7 +326,7 @@ def lsh_topk(
     """Approximate top-k: only candidates in the query's LSH bucket are
     scored.  Equi-join on bucket -> per-query top-k; recall trades off
     against 2^n_planes."""
-    buckets = lsh_buckets_pandas(n_planes)
+    buckets = lsh_buckets_arrow(n_planes)
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
@@ -362,7 +374,7 @@ def lsh_topk_multitable(
     vectors re-attached by two id equi-joins for scoring — the same shape
     the DuckDB oracle uses.
     """
-    buckets = lsh_buckets_pandas(n_planes, tables=tuple(range(n_tables)))
+    buckets = lsh_buckets_arrow(n_planes, tables=tuple(range(n_tables)))
 
     def bucket_keys(df: DataFrame, out_id: str) -> DataFrame:
         return df.select(
@@ -533,24 +545,20 @@ def embedding_neardup_pairs(
     (pairs in different buckets are never compared — documented recall
     tradeoff, same bucketing as the oracle).
 
-    Round 8 (guide §2.3/§4.2): the former bucket self-join materialized
-    every candidate pair WITH both 64-float vectors attached and shipped
-    them through Arrow to a pairwise cosine UDF — ~1 KB per candidate.
-    Now each bucket's vectors cross the boundary once: groupBy(bucket) +
-    applyInPandas computes the in-bucket pairwise cosines blockwise in
+    Each bucket's vectors cross the boundary once: groupBy(bucket) +
+    applyInArrow computes the in-bucket pairwise cosines blockwise in
     numpy with the exact per-dimension accumulation order of the
     `cosine` fold (bit-identical doubles), pre-filters with a
     conservative margin (round6(x) >= threshold requires
     x >= threshold - 5e-7), and the exact 6-dp round + threshold run in
-    the JVM as before.  Pair orientation (id_a < id_b on raw ids), NULL
-    vectors (never compared) and NULL buckets (never joined) behave
-    identically.  Block size bounds memory to block x |bucket| doubles,
-    so a pathologically hot bucket degrades gracefully instead of
-    allocating |bucket|^2 at once.
+    the JVM.  A bucket arrives as one Arrow table, with no pandas frame
+    per group.  Pair orientation (id_a < id_b on raw ids), NULL vectors
+    (NULL bucket, never joined) behave as in the bucket self-join.  Block
+    size bounds memory to block x |bucket| doubles, so a pathologically
+    hot bucket degrades gracefully instead of allocating |bucket|^2 at
+    once.
     """
-    import numpy as np
-
-    buckets = lsh_buckets_pandas(n_planes).asNondeterministic()
+    buckets = lsh_buckets_arrow(n_planes).asNondeterministic()
     c = corpus.select(
         id_col, vec_col, buckets(F.col(vec_col))[0].alias("bucket")
     ).filter(F.col("bucket").isNotNull())
@@ -558,20 +566,14 @@ def embedding_neardup_pairs(
     lo = threshold - 1e-6
     block = 1024
 
-    def _pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        valid = np.array([v is not None for v in pdf[vec_col]])
-        ids = pdf[id_col].to_numpy()[valid]
-        if len(ids) < 2:
-            return pd.DataFrame({"id_a": [], "id_b": [], "sim": []})
+    def _pairs(t: pa.Table) -> pa.Table:
+        ids = t.column(id_col).to_numpy()
         order = np.argsort(ids)
         ids = ids[order]
-        X = _matrix(pdf[vec_col][valid], dim)[order]
+        X = _matrix(t.column(vec_col).combine_chunks(), dim)[order]
         m = len(X)
-        nrm = np.zeros(m)
-        for i in range(dim):
-            nrm += X[:, i] * X[:, i]
-        nrm = np.sqrt(nrm)
-        out_a, out_b, out_s = [], [], []
+        nrm = _norms(X)
+        out_a, out_b, out_s = [ids[:0]], [ids[:0]], [np.zeros(0)]
         for b0 in range(0, m - 1, block):
             b1 = min(b0 + block, m)
             dot = np.zeros((b1 - b0, m))
@@ -588,15 +590,16 @@ def embedding_neardup_pairs(
             out_a.append(ids[ri + b0])
             out_b.append(ids[cj])
             out_s.append(sim[ri, cj])
-        return pd.DataFrame(
+        id_arrow = t.schema.field(id_col).type
+        return pa.table(
             {
-                "id_a": np.concatenate(out_a) if out_a else [],
-                "id_b": np.concatenate(out_b) if out_b else [],
-                "sim": np.concatenate(out_s) if out_s else [],
+                "id_a": pa.array(np.concatenate(out_a), id_arrow),
+                "id_b": pa.array(np.concatenate(out_b), id_arrow),
+                "sim": np.concatenate(out_s),
             }
         )
 
-    out = c.groupBy("bucket").applyInPandas(
+    out = c.groupBy("bucket").applyInArrow(
         _pairs, schema=f"id_a {id_type}, id_b {id_type}, sim double"
     )
     return (

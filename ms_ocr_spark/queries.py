@@ -52,8 +52,29 @@ def _register(name: str, sql: str | None = None):
     return deco
 
 
+# The driver tables' schemas, as `spark.read.parquet(...).schema.toDDL()`
+# gives them: a declared schema spares each read its one-task footer job.
+# A column the file lacks would read as NULLs, so
+# tests/test_ops_driver_cost.py pins these to the files.
+_SCHEMAS = {
+    "customer": "c_custkey BIGINT,c_name STRING,c_nationkey INT,c_acctbal DOUBLE,c_mktsegment STRING",
+    "documents": "doc_id BIGINT,text STRING,lang STRING,source STRING,n_chars BIGINT",
+    "embeddings": "vec_id BIGINT,embedding ARRAY<FLOAT>,label INT",
+    "events": "event_id BIGINT,ts TIMESTAMP_NTZ,user_id BIGINT,event_type STRING,value DOUBLE,props STRING",
+    "lineitem": (
+        "l_orderkey BIGINT,l_partkey BIGINT,l_suppkey BIGINT,l_linenumber INT,"
+        "l_quantity DOUBLE,l_extendedprice DOUBLE,l_discount DOUBLE,l_tax DOUBLE,"
+        "l_returnflag STRING,l_linestatus STRING,l_shipdate TIMESTAMP_NTZ"
+    ),
+    "orders": (
+        "o_orderkey BIGINT,o_custkey BIGINT,o_orderstatus STRING,o_totalprice DOUBLE,"
+        "o_orderdate TIMESTAMP_NTZ,o_orderpriority STRING"
+    ),
+}
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return spark.read.schema(_SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
 
 
 # --------------------------------------------------------------------------

@@ -471,12 +471,12 @@ def test_lsh_candidate_pairs_strict_rejects_bad_signatures(spark):
 def test_vectorized_udfs_handle_all_null_batches(spark):
     """ADVICE r3 (medium): an Arrow batch of only NULL embeddings must
     yield NULL outputs, not an IndexError task failure."""
-    from ms_ocr_spark.operators.similarity import cosine_pandas, lsh_buckets_pandas
+    from ms_ocr_spark.operators.similarity import cosine_pandas, lsh_buckets_arrow
 
     df = spark.createDataFrame(
         [(1, None), (2, None)], "vec_id long, embedding array<float>"
     ).repartition(1)
-    b = df.select(lsh_buckets_pandas()(F.col("embedding")).alias("b")).collect()
+    b = df.select(lsh_buckets_arrow()(F.col("embedding")).alias("b")).collect()
     assert all(r["b"] is None for r in b)
     c = df.select(
         cosine_pandas()(F.col("embedding"), F.col("embedding")).alias("s")
@@ -508,7 +508,7 @@ def test_vectorized_lsh_and_cosine_bit_identical(spark):
         cosine,
         cosine_pandas,
         lsh_bucket,
-        lsh_buckets_pandas,
+        lsh_buckets_arrow,
     )
 
     rng = np.random.default_rng(99)
@@ -526,7 +526,7 @@ def test_vectorized_lsh_and_cosine_bit_identical(spark):
         ).alias("b"),
     )
     pdu = df.select(
-        "vec_id", lsh_buckets_pandas(tables=(0, 1, 2))(F.col("embedding")).alias("b")
+        "vec_id", lsh_buckets_arrow(tables=(0, 1, 2))(F.col("embedding")).alias("b")
     )
     assert (
         fold.alias("f").join(pdu.alias("p"), "vec_id")

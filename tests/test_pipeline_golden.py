@@ -8,6 +8,9 @@ main.py:274-283`).
 
 from __future__ import annotations
 
+import struct
+import zlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -164,25 +167,23 @@ def test_validate_payloads_quarantines_corrupt_media(spark, corpus_dir):
     assert n_null == 1
 
 
-def test_decode_error_is_quarantined_with_its_class(spark, corpus_dir):
-    """An admitted, in-scope payload whose decode raises (PNG magic, a
-    valid IHDR, an IDAT too short for its scanlines) comes out as NULL
-    text and one quarantine row naming the exception class — not as a
-    silent NULL with no quarantine row."""
-    import struct
-    import zlib
+def _png(idat: bytes) -> bytes:
+    """A 16x16 gray PNG with a valid IHDR and the given IDAT data."""
 
     def chunk(tag: bytes, data: bytes) -> bytes:
         crc = struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
         return struct.pack(">I", len(data)) + tag + data + crc
 
     ihdr = struct.pack(">IIBBBBB", 16, 16, 8, 0, 0, 0, 0)
-    corrupt = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(b"\x00" * 3))
-        + chunk(b"IEND", b"")
-    )
+    return b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr) + chunk(b"IDAT", idat) + chunk(b"IEND", b"")
+
+
+def test_decode_error_is_quarantined_with_its_class(spark, corpus_dir):
+    """An admitted, in-scope payload whose decode raises (PNG magic, a
+    valid IHDR, an IDAT too short for its scanlines) comes out as NULL
+    text and one quarantine row naming the exception class — not as a
+    silent NULL with no quarantine row."""
+    corrupt = _png(zlib.compress(b"\x00" * 3))
     docs, media, _ = _load(spark, corpus_dir)
     one_ref = media.limit(1).collect()[0]["media_ref"]
     patched = media.filter(F.col("media_ref") != one_ref).unionByName(
@@ -198,6 +199,19 @@ def test_decode_error_is_quarantined_with_its_class(spark, corpus_dir):
     assert [(r["media_ref"], r["mime"], r["n_bytes"], r["reason"]) for r in q] == [
         (one_ref, "png", len(corrupt), "decode_error:ValueError")
     ]
+
+
+def test_decode_error_status_tells_exception_modules_apart():
+    """A corrupt deflate stream and a short header read raise classes that
+    are both named `error` (zlib.error, struct.error); the status
+    module-qualifies them so they stay apart.  Builtins stay bare."""
+    from ms_ocr_spark.extraction.pipeline import media_status
+
+    not_zlib = _png(b"not a zlib stream")
+    assert media_status(not_zlib, "png", None) == (None, "decode_error:zlib.error")
+    assert media_status(not_zlib[:20], "png", None) == (None, "decode_error:struct.error")
+    short = _png(zlib.compress(b"\x00" * 3))
+    assert media_status(short, "png", None) == (None, "decode_error:ValueError")
 
 
 def test_language_routing_required_for_squares(spark, tmp_path):

@@ -27,6 +27,16 @@ def test_extraction_single_pass_plan(spark, corpus_dir):
     assert "BatchEvalPython" not in plan  # no row-at-a-time Python, ever
 
 
+def test_extraction_sniffs_magic_bytes_once(spark, corpus_dir):
+    """The MIME sniff and the admission check share one projected hex of
+    the payload's first bytes; admission reads the projected `mime` and
+    `n_bytes` instead of re-expanding the sniff."""
+    docs = spark.read.parquet(f"{corpus_dir}/documents.parquet")
+    media = spark.read.parquet(f"{corpus_dir}/media_store.parquet")
+    below_udf = _plan(extract_documents(docs, media)).split("ArrowEvalPython")[1]
+    assert below_udf.count("hex(substring(payload") == 1, below_udf
+
+
 def test_extraction_sortmerge_variant(spark, corpus_dir):
     """broadcast_media=False lets Catalyst choose; with auto-broadcast off
     (the 100-TB media-store situation) the join must degrade to a shuffle

@@ -187,6 +187,53 @@ def test_brute_force_topk_rejects_wrong_dimension(spark):
         brute_force_topk(df.filter("vec_id < 4"), df, k=2, dim=64).collect()
 
 
+def test_brute_force_topk_zero_vectors_get_null_sim(spark):
+    """A zero vector has no cosine: like the oracle's 0/0, its sim is NULL
+    and it ranks with the NULL vectors, after every scored neighbor.  It
+    must not take a top-k slot of its batch from a real candidate."""
+    from ms_ocr_spark.operators.similarity import brute_force_topk
+
+    rng = np.random.default_rng(23)
+    vecs = {i: rng.standard_normal(64) for i in range(1, 9)}
+    vecs[5] = np.zeros(64)
+    rows = [(i, [float(x) for x in v]) for i, v in vecs.items()] + [(9, None)]
+    # one partition, so every candidate is scored in one Arrow batch
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>").coalesce(1)
+
+    q = np.asarray(vecs[1], np.float32).astype(np.float64)
+    sims = {}
+    for i, v in vecs.items():
+        c = np.asarray(v, np.float32).astype(np.float64)
+        if i != 1 and np.linalg.norm(c) > 0:
+            sims[i] = np.dot(q, c) / (np.linalg.norm(q) * np.linalg.norm(c))
+    ranked = sorted(sims, key=lambda i: (-round(sims[i], 6), i))
+
+    top3 = brute_force_topk(df.filter("vec_id = 1"), df, k=3).collect()
+    assert [r["neighbor_id"] for r in top3] == ranked[:3]
+    full = brute_force_topk(df.filter("vec_id = 1"), df, k=8).collect()
+    assert [r["neighbor_id"] for r in full] == ranked + [5, 9]
+    assert [r["sim"] for r in full[-2:]] == [None, None]
+
+    # a zero query scores nothing: its k rows are NULL sims by neighbor id
+    zero_q = brute_force_topk(df.filter("vec_id = 5"), df, k=3).collect()
+    assert [(r["neighbor_id"], r["sim"]) for r in zero_q] == [(1, None), (2, None), (3, None)]
+
+
+def test_brute_force_topk_bounds_the_collected_query_side(spark):
+    """The query side rides in the task closure; a query side above the
+    bound fails loudly, naming it, instead of collecting it whole."""
+    from ms_ocr_spark.operators.similarity import MAX_CLOSURE_QUERIES, brute_force_topk
+
+    corpus = spark.createDataFrame(
+        [(0, [1.0] * 64)], "vec_id long, embedding array<float>"
+    )
+    queries = spark.range(MAX_CLOSURE_QUERIES + 1).select(
+        F.col("id").alias("vec_id"), F.lit(None).cast("array<float>").alias("embedding")
+    )
+    with pytest.raises(ValueError, match=f"MAX_CLOSURE_QUERIES={MAX_CLOSURE_QUERIES}"):
+        brute_force_topk(queries, corpus)
+
+
 def test_embedding_neardup_bucket_path_matches_join_path(spark):
     """The per-bucket blockwise pair generator must produce exactly the
     pairs (and 6-dp sims) of the reference bucket self-join + pairwise
@@ -194,7 +241,7 @@ def test_embedding_neardup_bucket_path_matches_join_path(spark):
     from ms_ocr_spark.operators.similarity import (
         cosine_pandas,
         embedding_neardup_pairs,
-        lsh_buckets_pandas,
+        lsh_buckets_arrow,
     )
 
     rng = np.random.default_rng(11)
@@ -212,7 +259,7 @@ def test_embedding_neardup_bucket_path_matches_join_path(spark):
     c = df.select(
         "vec_id",
         "embedding",
-        lsh_buckets_pandas(8)(F.col("embedding"))[0].alias("bucket"),
+        lsh_buckets_arrow(8)(F.col("embedding"))[0].alias("bucket"),
     )
     a = c.select(
         F.col("vec_id").alias("id_a"), F.col("embedding").alias("v_a"), "bucket"
