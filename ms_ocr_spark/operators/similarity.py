@@ -204,10 +204,11 @@ def brute_force_topk(
             # query, every corpus vector for a null or zero query — k
             # smallest neighbor ids per query per batch is a superset of
             # their possible global ranks (ties order by neighbor_id)
-            pools = {True: np.sort(c_ids[~valid]), False: np.sort(c_ids)}
+            null_ids, all_ids = np.sort(c_ids[~valid]), np.sort(c_ids)
             null_parts = []
             for qid, scored in zip(q_ids, q_valid):
-                take = [K for K in pools[scored][: k + 1] if K != qid][:k]
+                pool = null_ids if scored else all_ids
+                take = [K for K in pool[: k + 1] if K != qid][:k]
                 if take:
                     null_parts.append(
                         pd.DataFrame({"query_id": qid, "neighbor_id": take, "sim": None})
