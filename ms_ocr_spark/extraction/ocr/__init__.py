@@ -1,6 +1,6 @@
 import numpy as np
 
-from .jpeg import decode_gray_jpeg, encode_gray_jpeg, jfif_density
+from .jpeg import decode_gray_jpeg, encode_gray_jpeg
 from .kernel import decode_image
 from .png import decode_gray, encode_gray
 from .tiff import decode_gray_tiff, encode_gray_tiff, tiff_dpi
@@ -26,7 +26,6 @@ __all__ = [
     "encode_gray",
     "decode_gray_jpeg",
     "encode_gray_jpeg",
-    "jfif_density",
     "decode_gray_tiff",
     "encode_gray_tiff",
     "tiff_dpi",

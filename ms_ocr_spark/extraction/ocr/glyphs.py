@@ -149,7 +149,7 @@ _KANA_FONT: dict[str, tuple[str, ...]] = {
 #
 #   * unvoiced glyphs: same constraints as katakana — ONE 8-connected
 #     component, full height (rows 0 and 6).
-#   * VOICED glyphs (dakuten ゛ / handakuten ゜ in _VOICED_KANA): TWO
+#   * VOICED glyphs (dakuten ゛ / handakuten ゜: がざだばぴぷ): TWO
 #     8-connected components — the diacritic mark is a separate
 #     component at rows 0-1, cols 3-4 (dakuten = 2-px diagonal,
 #     handakuten = 2x2 block), the base occupies rows 2-6 with row-2 ink
@@ -492,8 +492,6 @@ _FONT.update(_HIRA_FONT)
 _FONT.update(_KANJI_FONT)
 _FONT.update(_KANJI2_FONT)
 
-# glyphs whose diacritic mark is a SEPARATE connected component
-VOICED_KANA = "がざだばぴぷ"
 # short-class bar glyphs (round 6): not full height, horizontal only
 BAR_KANJI = "一"
 

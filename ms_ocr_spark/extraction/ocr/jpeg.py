@@ -582,26 +582,6 @@ def encode_progressive_stub(h: int = 32, w: int = 64) -> bytes:
     return b"\xff\xd8\xff\xc2" + sof2 + b"\xff\xd9"
 
 
-def jfif_density(data: bytes) -> float | None:
-    """dpi from the JFIF APP0 density fields (units==1), else None."""
-    if data[:2] != b"\xff\xd8":
-        return None
-    pos = 2
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            return None
-        marker = data[pos + 1]
-        if marker in (0xD9, 0xDA):
-            return None
-        (seg_len,) = struct.unpack(">H", data[pos + 2 : pos + 4])
-        payload = data[pos + 4 : pos + 2 + seg_len]
-        if marker == 0xE0 and payload[:5] == b"JFIF\x00":
-            units, xd, _yd = struct.unpack(">BHH", payload[7:12])
-            return float(xd) if units == 1 else None
-        pos += 2 + seg_len
-    return None
-
-
 # ---------------------------------------------------------------------------
 # Progressive JPEG (SOF2) — ITU T.81 Annex G, single-component grayscale.
 #
@@ -1099,22 +1079,6 @@ def jpeg_scope_reason(data: bytes) -> str | None:
             progressive = marker == 0xC2
         pos += 2 + seg_len
     return "truncated_jpeg"
-
-
-def encode_multicomponent_stub(h: int = 32, w: int = 64) -> bytes:
-    """Minimal syntactically-valid THREE-component baseline header (SOI +
-    SOF0(YCbCr) + EOI, no scan).  Since round 6 color frames are IN
-    scope, so this stream now classifies as `truncated_jpeg` (EOI before
-    any SOS — the shape of a transfer-cut color JPEG); the
-    `unsupported_jpeg_layout` telemetry fixture is
-    `encode_lossless_stub`."""
-    sof0 = (
-        struct.pack(">BHHB", 8, h, w, 3)
-        + bytes([1, 0x22, 0])
-        + bytes([2, 0x11, 1])
-        + bytes([3, 0x11, 1])
-    )
-    return b"\xff\xd8" + _seg(0xFFC0, sof0) + b"\xff\xd9"
 
 
 def jpeg_side_values(data: bytes) -> dict:

@@ -474,10 +474,6 @@ def _build_template_stack(
 
 
 _TPL_STACK, _TPL_CHARS, _TPL_TALL, _TPL_ASPECT = _build_template_stack()
-# bit-packed templates: XOR + popcount-LUT moves 8x fewer bytes per compare
-# than bool-array != (the kernel is bandwidth-bound at high core counts)
-_TPL_PACKED = np.packbits(_TPL_STACK.reshape(len(_TPL_STACK), -1), axis=1)
-_TPL_LOG_ASPECT = np.log(_TPL_ASPECT)
 _ASPECT_GATE = np.log(1.6)  # crop/template aspect must agree within 1.6x
 
 
@@ -752,35 +748,3 @@ def decode_image(img: np.ndarray, language: str | None = None) -> str:
         " ".join(t for _, t in line) for line in decode_layout(img, mode, charset)
     )
 
-
-def debug_stage_images(img: np.ndarray) -> dict[str, np.ndarray]:
-    """Named intermediate images of one kernel pass (reference S10 debug
-    image sink: uint8 normalize + mode select + write,
-    `image_processor/main.py:330-398` write/writeMemory):
-
-      * ``gray``      — median-denoised input (2-D uint8)
-      * ``deskewed``  — denoised image after skew correction
-      * ``binarized`` — the decoded mask as 0/255
-      * ``boxes``     — word boxes outlined on the deskewed gray (K14)
-      * ``heatmap``   — JET-colorized ink intensity, HxWx3 (K13)
-
-    Segmentation/decode run ONCE on the same mask the real decode path
-    uses; the sink layer encodes 2-D maps as gray PNG and 3-D as RGB.
-    """
-    from .morphology import draw_rectangles, heatmap
-
-    den = median3(img)
-    mask = binarize(den)
-    corr = estimate_skew(mask)
-    desk = rotate_bilinear(den, corr) if corr != 0.0 else den
-    if corr != 0.0:
-        mask = binarize(desk, 160)
-    layout, _, _ = _layout_from_mask(mask)
-    boxes = [bbox for line in layout for bbox, _ in line]
-    return {
-        "gray": den,
-        "deskewed": desk,
-        "binarized": (mask * np.uint8(255)).astype(np.uint8),
-        "boxes": draw_rectangles(desk, boxes),
-        "heatmap": heatmap((255 - desk).astype(np.float64)),
-    }

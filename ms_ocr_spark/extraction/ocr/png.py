@@ -206,34 +206,6 @@ def encode_rgba(img: np.ndarray) -> bytes:
     )
 
 
-def encode_gray_lowdepth(img: np.ndarray, depth: int) -> bytes:
-    """uint8 HxW array (values already quantized to the depth's levels)
-    -> PNG bytes (color type 0, bit depth 1/2/4, filter 0) — the
-    fax/scan layouts (round 7).  Input values are FULL-RANGE 8-bit and
-    must be exact multiples of 255/(2^depth - 1)."""
-    if depth not in (1, 2, 4):
-        raise ValueError("depth must be 1, 2 or 4")
-    if img.dtype != np.uint8 or img.ndim != 2:
-        raise ValueError("encode_gray_lowdepth expects a 2-D uint8 array")
-    scale = 255 // ((1 << depth) - 1)
-    if (img % scale).any():
-        raise ValueError("pixel values must be multiples of the depth scale")
-    q = (img // scale).astype(np.uint8)
-    h, w = img.shape
-    ihdr = struct.pack(">IIBBBBB", w, h, depth, 0, 0, 0, 0)
-    rows = []
-    for r in range(h):
-        bits = np.unpackbits(q[r][:, None], axis=1, count=8)[:, 8 - depth :]
-        packed = np.packbits(bits.reshape(-1))
-        rows.append(b"\x00" + packed.tobytes())
-    return (
-        _SIGNATURE
-        + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", zlib.compress(b"".join(rows), 6))
-        + _chunk(b"IEND", b"")
-    )
-
-
 def _paeth(a: int, b: int, c: int) -> int:
     p = a + b - c
     pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
@@ -244,8 +216,7 @@ def _paeth(a: int, b: int, c: int) -> int:
 
 def encode_rgb(img: np.ndarray) -> bytes:
     """uint8 HxWx3 array -> PNG bytes (color type 2, bit depth 8, filter
-    0) — debug-artifact color path (reference S10 heatmap writes,
-    `image_processor/main.py:325-362`)."""
+    0) — the color-corpus layout."""
     if img.dtype != np.uint8 or img.ndim != 3 or img.shape[2] != 3:
         raise ValueError("encode_rgb expects an HxWx3 uint8 array")
     h, w, _ = img.shape
@@ -257,38 +228,6 @@ def encode_rgb(img: np.ndarray) -> bytes:
         + _chunk(b"IDAT", zlib.compress(raw, 6))
         + _chunk(b"IEND", b"")
     )
-
-
-def decode_rgb(data: bytes) -> np.ndarray:
-    """PNG bytes (truecolor-8, filter 0 — what `encode_rgb` writes) ->
-    uint8 HxWx3 array.  Debug-artifact scope only; filtered scanlines
-    raise."""
-    if data[:8] != _SIGNATURE:
-        raise ValueError("not a PNG")
-    pos = 8
-    width = height = None
-    idat = bytearray()
-    while pos < len(data):
-        (length,) = struct.unpack(">I", data[pos : pos + 4])
-        tag = data[pos + 4 : pos + 8]
-        payload = data[pos + 8 : pos + 8 + length]
-        pos += 12 + length
-        if tag == b"IHDR":
-            width, height, depth, ctype = struct.unpack(">IIBB", payload[:10])
-            if depth != 8 or ctype != 2:
-                raise ValueError(f"unsupported PNG: depth={depth} ctype={ctype}")
-        elif tag == b"IDAT":
-            idat.extend(payload)
-        elif tag == b"IEND":
-            break
-    if width is None:
-        raise ValueError("missing IHDR")
-    raw = zlib.decompress(bytes(idat))
-    stride = width * 3 + 1
-    flat = np.frombuffer(raw, dtype=np.uint8).reshape(height, stride)
-    if flat[:, 0].any():
-        raise ValueError("decode_rgb supports filter-0 scanlines only")
-    return flat[:, 1:].reshape(height, width, 3).copy()
 
 
 def rgb_to_gray(img: np.ndarray) -> np.ndarray:

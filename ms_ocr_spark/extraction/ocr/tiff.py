@@ -563,26 +563,6 @@ def decode_gray_tiff(data: bytes) -> np.ndarray:
     return img
 
 
-def encode_tiled_tiff_stub(h: int = 32, w: int = 64) -> bytes:
-    """Minimal syntactically-valid TILED-TIFF header (no tile data).
-    Since round 6 the tiled LAYOUT is in scope, so this stream now fails
-    on its missing tile offsets (decode ValueError, class `invalid`) —
-    the out-of-scope telemetry fixture is `encode_jpeg_in_tiff_stub`."""
-    tags = [
-        (_T_WIDTH, 4, 1, w),
-        (_T_HEIGHT, 4, 1, h),
-        (_T_BITS, 3, 1, 8),
-        (_T_COMPRESSION, 3, 1, 1),
-        (_T_PHOTOMETRIC, 3, 1, 1),
-        (_T_TILE_WIDTH, 4, 1, 16),
-    ]
-    ifd = [struct.pack("<H", len(tags))]
-    for tag, typ, count, value in sorted(tags):
-        ifd.append(struct.pack("<HHII", tag, typ, count, value))
-    ifd.append(struct.pack("<I", 0))
-    return struct.pack("<2sHI", b"II", 42, 8) + b"".join(ifd)
-
-
 def encode_jpeg_in_tiff_stub(h: int = 32, w: int = 64) -> bytes:
     """Minimal syntactically-valid JPEG-in-TIFF header (Compression 7,
     no image data) — the frame class that genuinely remains outside this
@@ -636,7 +616,7 @@ def tiff_scope_reason(data: bytes) -> str | None:
 
 def tiff_dpi(data: bytes) -> float | None:
     """X-resolution in dots/inch when present with inch units, else None
-    (metadata side-channel parity with `jpeg.jfif_density`)."""
+    (metadata side-channel parity with `jpeg.jpeg_side_values`)."""
     try:
         tags, _ = _parse(data)
     except (ValueError, struct.error, IndexError):

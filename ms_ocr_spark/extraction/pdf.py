@@ -22,10 +22,9 @@ layout (VERDICT r5 item 5):
     (next line + show), with Td/TD/Tm maintaining the LINE start the
     way the spec's text line matrix does (TD also sets leading).
 
-Covers the engine's own sink dialect (`operators/sinks.py::
-pdf_from_boxes`, classic layout) and the modern-layout fixture
-(`datagen.pdf_modern_bytes`: ObjStm + xref stream + 2-stream pages +
-incremental update); anything unparsable raises ValueError so the
+Covers the classic layout (`datagen.pdf_from_boxes`) and the
+modern-layout fixture (`datagen.pdf_modern_bytes`: ObjStm + xref stream
++ 2-stream pages + incremental update); anything unparsable raises ValueError so the
 pipeline's quarantine catch applies.
 
 This is a SOURCE: the reference service only ever renders PDF overlays
@@ -70,29 +69,59 @@ _TOUNI_RE = re.compile(rb"/ToUnicode\s+(\d+)\s+0\s+R")
 _BFCHAR_RE = re.compile(rb"beginbfchar(.*?)endbfchar", re.S)
 _BFRANGE_RE = re.compile(rb"beginbfrange(.*?)endbfrange", re.S)
 _CMAP_TOK_RE = re.compile(rb"<([0-9A-Fa-f]+)>|(\[)|(\])")
-_ENCRYPT_RE = re.compile(rb"/Encrypt\s+\d+\s+\d+\s+R")
+_TRAILER_DICT_RE = re.compile(rb"trailer\s*<<")
 _XREF_STREAM_RE = re.compile(rb"/Type\s*/XRef")
+# what a dictionary scan must see: string escapes and parentheses, nested
+# dictionaries, hex strings (so `<AB>>>` is not read as `<AB` + `>>>`),
+# and the /Encrypt reference itself
+_DICT_TOKEN_RE = re.compile(
+    rb"\\.|\(|\)|<<|>>|<[0-9A-Fa-f\s]*>|/Encrypt\s+\d+\s+\d+\s+R", re.S
+)
+
+
+def _dict_has_encrypt(data: bytes, start: int) -> bool:
+    """Whether the dictionary opened by the `<<` at `start` holds an
+    /Encrypt reference as one of its own entries.  The scan runs to the
+    matching `>>`, counting nested dictionaries and skipping literal
+    strings (escapes, balanced parentheses) and hex strings."""
+    depth = paren = 0
+    for m in _DICT_TOKEN_RE.finditer(data, start):
+        tok = m.group()
+        if paren:
+            paren += {b"(": 1, b")": -1}.get(tok, 0)
+        elif tok == b"(":
+            paren = 1
+        elif tok == b"<<":
+            depth += 1
+        elif tok == b">>":
+            depth -= 1
+            if depth == 0:
+                return False
+        elif tok.startswith(b"/Encrypt") and depth == 1:
+            return True
+    return False
 
 
 def _is_encrypted(data: bytes) -> bool:
-    """True when a TRAILER dictionary carries /Encrypt (ISO 32000-1 7.6).
+    """True when a trailer dictionary carries /Encrypt (ISO 32000-1 7.6).
 
-    The probe is scoped to the regions where the reference can legally
-    appear — after each `trailer` keyword and around /Type /XRef
-    cross-reference stream dictionaries — instead of the whole byte
-    stream: an unencrypted PDF whose content or string data happens to
-    contain the literal `/Encrypt 9 0 R` must not be quarantined
-    (round-8 fix of the r7 advisory finding).
+    Each `trailer` dictionary and each /Type /XRef cross-reference stream
+    dictionary is scanned up to its matching `>>`, wherever the key sits
+    in it.  Nothing else is searched: an unencrypted PDF whose content or
+    string data happens to contain the literal `/Encrypt 9 0 R` is not
+    quarantined.
     """
-    for m in re.finditer(rb"trailer", data):
-        if _ENCRYPT_RE.search(data, m.end(), m.end() + 2048):
+    for m in _TRAILER_DICT_RE.finditer(data):
+        if _dict_has_encrypt(data, m.end() - 2):
             return True
     for m in _XREF_STREAM_RE.finditer(data):
-        if _ENCRYPT_RE.search(
-            data, max(0, m.start() - 2048), m.start() + 2048
-        ):
+        # the stream dictionary opens after its object header
+        obj = data.rfind(b"obj", 0, m.start())
+        start = data.find(b"<<", obj, m.start()) if obj >= 0 else -1
+        if start >= 0 and _dict_has_encrypt(data, start):
             return True
     return False
+
 
 # Adobe Glyph List subset covering the names a text-layer /Differences
 # realistically uses (ASCII + common Latin-1 accents + typographic
@@ -622,19 +651,6 @@ def _extract_from_stream(
     return spans
 
 
-def pdf_scope_reason(data: bytes) -> str | None:
-    """None when the file is inside this parser's scope, else a short
-    reason string — the PDF analog of `jpeg_scope_reason` (header-level
-    probe for quarantine telemetry).  Encrypted PDFs (a trailer
-    /Encrypt reference, ISO 32000-1 7.6) cannot be text-extracted
-    without key material and get a distinct class."""
-    if data[:4] != b"%PDF":
-        return "not_a_pdf"
-    if _is_encrypted(data):
-        return "encrypted_pdf"
-    return None
-
-
 def pdf_text_spans(data: bytes) -> list[tuple]:
     """PDF bytes -> [(page, x, y, text)] spans in page + drawing order.
 
@@ -643,8 +659,8 @@ def pdf_text_spans(data: bytes) -> list[tuple]:
     decode maps (/ToUnicode, /Encoding /Differences).  PDFs without a
     parseable page tree fall back to scanning every stream object in
     object order (tolerant mode for linearized/cut files).  Encrypted
-    PDFs raise (quarantine class `encrypted_pdf` via
-    `pdf_scope_reason`)."""
+    PDFs raise ValueError, so the operator's quarantine catch yields
+    the all-null row."""
     if _is_encrypted(data):
         raise ValueError("encrypted PDF (/Encrypt) — no key material")
     objs = _pdf_objects(data)

@@ -232,7 +232,6 @@ def lsh_candidate_pairs(
     id_col: str = "doc_id",
     rows_per_band: int = 4,
     num_hashes: int = 16,
-    strict: bool = False,
 ) -> DataFrame:
     """Band the signature, bucket-join: pairs sharing any full band.
 
@@ -245,11 +244,11 @@ def lsh_candidate_pairs(
     `num_hashes` must match the signature length: a mismatch would either
     read past the array (NULL elements -> every doc shares an empty band
     key -> near-cross-join) or silently ignore trailing bands (recall
-    loss).  Signatures of the wrong length are therefore rejected up
-    front, and the band key uses `concat` (NULL-propagating) rather than
-    `concat_ws` (NULL-dropping) so any residual NULL minhash nulls the
-    whole band key instead of colliding — NULL band keys never match in
-    the equi-join.
+    loss).  Signatures of the wrong length are therefore dropped (and
+    counted) up front, and the band key uses `concat` (NULL-propagating)
+    rather than `concat_ws` (NULL-dropping) so any residual NULL minhash
+    nulls the whole band key instead of colliding — NULL band keys never
+    match in the equi-join.
     """
     if "sig" not in signatures.columns:
         signatures = signatures.groupBy(id_col).agg(
@@ -262,10 +261,9 @@ def lsh_candidate_pairs(
     # cheap filter, prevents the silent cross-join class.  The drop count
     # is LOUD, not silent: a named observation ("lsh_signature_guard_<h>"
     # / dropped_signatures) rides the plan at zero cost and surfaces
-    # through any QueryExecutionListener, and strict=True pays one extra
-    # count() action to refuse malformed inputs outright — a doc dropped
-    # here exits candidate generation entirely and would survive as a
-    # keeper.  The observation name must satisfy TWO constraints at once:
+    # through any QueryExecutionListener — a doc dropped here exits
+    # candidate generation entirely and would survive as a keeper.  The
+    # observation name must satisfy TWO constraints at once:
     # Spark requires observed-metric names to be unique per query (a
     # fixed name fails at analysis the moment two LSH invocations over
     # DIFFERENT inputs compose into one plan), while the tracked cache
@@ -274,14 +272,6 @@ def lsh_candidate_pairs(
     # a cache miss — measured 1.16x -> 2.0x CC overhead).  A suffix
     # derived from the input plan's semantic hash gives both: same input
     # -> same name -> cache hit; different inputs -> distinct names.
-    if strict:
-        n_bad = signatures.filter(F.size("sig") != num_hashes).count()
-        if n_bad:
-            raise ValueError(
-                f"lsh_candidate_pairs: {n_bad} signature(s) have length != "
-                f"num_hashes={num_hashes}; these docs would silently exit "
-                "dedup. Fix the signature stage or pass strict=False."
-            )
     plan_hash = (
         signatures._jdf.queryExecution().analyzed().semanticHash() & 0x7FFFFFFF
     )

@@ -146,67 +146,6 @@ def image_metadata(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     )
 
 
-RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-    ]
-)
-
-
-def image_resize(
-    media: DataFrame, max_side: int = 2024, payload_col: str = "payload"
-) -> DataFrame:
-    """Cap the long side at `max_side` (reference K1 resize,
-    `/root/reference/src/library/image_processor/main.py:145-187`);
-    nearest-neighbor, re-encoded PNG."""
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ms_ocr_spark.extraction.ocr.png import decode_gray, encode_gray
-
-        for pdf in batches:
-            rows = []
-            for ref, buf in zip(pdf["media_ref"], pdf[payload_col]):
-                img = decode_gray(bytes(buf))
-                h, w = img.shape
-                long_side = max(h, w)
-                if long_side > max_side:
-                    s = max_side / long_side
-                    nh, nw = max(1, int(h * s)), max(1, int(w * s))
-                    ys = (np.arange(nh) * h / nh).astype(np.int64)
-                    xs = (np.arange(nw) * w / nw).astype(np.int64)
-                    img = img[np.ix_(ys, xs)]
-                rows.append((ref, encode_gray(img), img.shape[1], img.shape[0]))
-            yield pd.DataFrame(rows, columns=[f.name for f in RESIZE_SCHEMA.fields])
-
-    return media.select("media_ref", payload_col).mapInPandas(
-        _resize, schema=RESIZE_SCHEMA
-    )
-
-
-def snap_to_multiple(h: int, w: int, multiple: int = 32, search: int = 10) -> tuple[int, int]:
-    """Snap (h, w) to multiples of `multiple` minimizing aspect-ratio
-    error over +/- `search` steps (reference K2 `resizeMultiple`,
-    `/root/reference/src/library/image_processor/main.py:65-143` — CNN
-    stride alignment).  Deterministic: smallest error wins, ties to the
-    smaller size."""
-    aspect = w / h
-    base_h = max(multiple, round(h / multiple) * multiple)
-    best = None
-    for dh in range(-search, search + 1):
-        nh = base_h + dh * multiple
-        if nh < multiple:
-            continue
-        nw = max(multiple, round(nh * aspect / multiple) * multiple)
-        err = abs(nw / nh - aspect)
-        key = (err, nh, nw)
-        if best is None or key < best:
-            best = key
-    return best[1], best[2]
-
-
 FRAME_SCHEMA = T.StructType(
     [
         T.StructField("media_ref", T.StringType()),

@@ -267,8 +267,3 @@ def table_html(grid_m: DataFrame, doc_col: str = "doc_id") -> DataFrame:
         F.concat(F.lit("<table>\n"), body, F.lit("\n</table>")).alias("html"),
     )
 
-
-def extract_tables(media: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Full composition: media -> (cells matrix, html per doc)."""
-    grid = detect_merges(grid_from_boxes(ocr_boxes(media)))
-    return table_cells(grid), table_html(grid)

@@ -48,7 +48,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ms_ocr_spark.extraction.pipeline import extract_documents
-from ms_ocr_spark.sources.catalog import hadoop_fs
 
 LINEAGE_SCHEMA = pa.schema(
     [
@@ -62,6 +61,16 @@ LINEAGE_SCHEMA = pa.schema(
         ("committed_at", pa.float64()),
     ]
 )
+
+
+def hadoop_fs(spark: SparkSession, path_str: str):
+    """(Hadoop FileSystem, Path) for any supported scheme.
+
+    The Path class is resolved by its fully qualified name in one lookup;
+    py4j's dotted walk (`jvm.org.apache...`) first tries every package
+    segment as a class, each a failing lookup across every jar."""
+    path = getattr(spark._jvm, "org.apache.hadoop.fs.Path")(path_str)
+    return path.getFileSystem(spark._jsc.hadoopConfiguration()), path
 
 
 def _bucket_col(n_buckets: int):

@@ -291,11 +291,6 @@ def render_media_image(seed: int, media_ref: str, truth: str) -> np.ndarray:
     return img
 
 
-def render_media_payload(seed: int, media_ref: str, truth: str) -> bytes:
-    """PNG bytes of render_media_image."""
-    return encode_gray(render_media_image(seed, media_ref, truth))
-
-
 # color tier (round 4): seeded ink/background colors with luminance far
 # from the binarize thresholds (Y_ink < 45, Y_bg > 240), so the kernel's
 # gray-threshold decode of the BT.601 luminance stays inside the same
@@ -1458,8 +1453,8 @@ def write_video_corpus(
 
 # ---------------------------------------------------------------------------
 # PDF tier (round 5 — north_rule "PDF/layout parse" as a SOURCE):
-# deterministic positioned-text PDFs written by the engine's own sink
-# dialect + an independent straight-line golden of the spans a correct
+# deterministic positioned-text PDFs (`pdf_from_boxes`, plus the modern
+# and custom-encoding layouts below) + an independent straight-line golden of the spans a correct
 # parser recovers.  ~1 in 9 payloads is garbage (single all-null golden
 # row — the quarantine contract).
 # ---------------------------------------------------------------------------
@@ -1476,6 +1471,48 @@ PDF_GOLDEN_SCHEMA = pa.schema(
 )
 
 _PDF_TAILS = ("", "", " (v2)", " [a]", " 50%", " \\x", ")(")
+
+
+def pdf_from_boxes(boxes: list[dict], page_w: int = 612, page_h: int = 792) -> bytes:
+    """Minimal one-page PDF: each box's text drawn at its (x1, y1) with
+    the PDF y-axis flip (reference white-canvas overlay).  Deterministic
+    object ordering; Flate-compressed content stream."""
+    parts = ["BT /F1 10 Tf"]
+    for b in sorted(boxes, key=lambda b: (b["y1"], b["x1"])):
+        x = float(b["x1"])
+        y = page_h - float(b["y1"]) - 10
+        text = (
+            str(b["text"]).replace("\\", r"\\").replace("(", r"\(").replace(")", r"\)")
+        )
+        parts.append(f"1 0 0 1 {x:.1f} {y:.1f} Tm ({text}) Tj")
+    parts.append("ET")
+    stream = zlib.compress("\n".join(parts).encode("latin-1", "replace"))
+    objs = [
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        f"<< /Type /Pages /Kids [3 0 R] /Count 1 >>".encode(),
+        (
+            f"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 {page_w} {page_h}] "
+            "/Resources << /Font << /F1 4 0 R >> >> /Contents 5 0 R >>"
+        ).encode(),
+        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
+        (f"<< /Length {len(stream)} /Filter /FlateDecode >>\nstream\n").encode()
+        + stream
+        + b"\nendstream",
+    ]
+    out = bytearray(b"%PDF-1.4\n")
+    offsets = []
+    for i, body in enumerate(objs, 1):
+        offsets.append(len(out))
+        out += f"{i} 0 obj\n".encode() + body + b"\nendobj\n"
+    xref_at = len(out)
+    out += f"xref\n0 {len(objs) + 1}\n0000000000 65535 f \n".encode()
+    for off in offsets:
+        out += f"{off:010d} 00000 n \n".encode()
+    out += (
+        f"trailer\n<< /Size {len(objs) + 1} /Root 1 0 R >>\n"
+        f"startxref\n{xref_at}\n%%EOF\n"
+    ).encode()
+    return bytes(out)
 
 
 def pdf_modern_bytes(
@@ -1776,8 +1813,6 @@ def pdf_custom_encoding_golden(
 
 def write_pdf_corpus(out_dir: str, n_docs: int, seed: int = 42) -> dict[str, str]:
     import json
-
-    from ms_ocr_spark.operators.sinks import pdf_from_boxes
 
     os.makedirs(out_dir, exist_ok=True)
     paths = {

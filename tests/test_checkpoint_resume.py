@@ -259,152 +259,6 @@ def test_extract_job_scans_each_input_once(spark, corpus_dir, tmp_path):
     assert (n_docs, n_media) == (1, 1), scans
 
 
-def test_expire_old_sweeps_stale_buckets(spark, corpus_dir, tmp_path):
-    """S13 retention sweep on the plain-filesystem layout: entries older
-    than the cutoff are deleted (data partitions + lineage markers),
-    newer ones survive."""
-    import datetime
-
-    from ms_ocr_spark.sources.catalog import expire_old
-
-    docs = spark.read.parquet(f"{corpus_dir}/documents.parquet")
-    media = spark.read.parquet(f"{corpus_dir}/media_store.parquet")
-    out = str(tmp_path / "ttl_out")
-    cp.run_with_checkpoints(spark, docs, media, out, job_id="t", n_buckets=4)
-    assert cp.read_output(spark, out).count() > 0
-
-    past = (
-        datetime.datetime.now(datetime.timezone.utc) - datetime.timedelta(hours=1)
-    ).strftime("%Y-%m-%dT%H:%M:%S")
-    assert expire_old(spark, out, past) == []  # nothing older than 1h ago
-
-    future = (
-        datetime.datetime.now(datetime.timezone.utc) + datetime.timedelta(hours=1)
-    ).strftime("%Y-%m-%dT%H:%M:%S")
-    deleted = expire_old(spark, out, future)  # everything predates +1h
-    assert len(deleted) == 5  # 4 bucket dirs + 1 run marker
-    assert cp.completed_buckets(spark, out, "t", 4) == set()
-
-
-def test_stream_dedup_first_seen_across_restarts(spark, tmp_path):
-    """applyInPandasWithState first-seen dedup: within a batch the min id
-    wins; a duplicate arriving in a LATER drain (fresh query, same
-    checkpoint -> persisted GroupState) is suppressed."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from ms_ocr_spark.streaming.stateful import stream_dedup_first_seen
-
-    docs_dir = tmp_path / "sd_in"
-    docs_dir.mkdir()
-    out = str(tmp_path / "sd_out")
-    ckpt = str(tmp_path / "sd_ckpt")
-    schema = pa.schema([("doc_id", pa.string()), ("text", pa.string())])
-
-    def drain(rows, fname):
-        pq.write_table(
-            pa.Table.from_pylist(rows, schema=schema), str(docs_dir / fname)
-        )
-        stream = (
-            spark.readStream.schema("doc_id string, text string")
-            .parquet(str(docs_dir))
-        )
-        q = (
-            stream_dedup_first_seen(stream)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-
-    drain(
-        [
-            {"doc_id": "d2", "text": "alpha"},
-            {"doc_id": "d1", "text": "alpha"},  # same content, smaller id
-            {"doc_id": "d3", "text": "beta"},
-        ],
-        "b1.parquet",
-    )
-    got1 = {(r["doc_id"], r["text"]) for r in spark.read.parquet(out).collect()}
-    assert got1 == {("d1", "alpha"), ("d3", "beta")}
-
-    drain(
-        [
-            {"doc_id": "d4", "text": "alpha"},  # dup across restarts
-            {"doc_id": "d5", "text": "gamma"},  # genuinely new
-        ],
-        "b2.parquet",
-    )
-    got2 = {(r["doc_id"], r["text"]) for r in spark.read.parquet(out).collect()}
-    assert got2 == {("d1", "alpha"), ("d3", "beta"), ("d5", "gamma")}
-
-
-def test_stream_windowed_counts_drop_late_events(spark, tmp_path):
-    """Watermarked tumbling windows: a second drain whose event is older
-    than (max seen ts - watermark) is dropped; finalized windows emit
-    exactly once (append mode)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from ms_ocr_spark.streaming.stateful import stream_windowed_event_counts
-
-    ev_dir = tmp_path / "ev_in"
-    ev_dir.mkdir()
-    out = str(tmp_path / "ev_out")
-    ckpt = str(tmp_path / "ev_ckpt")
-    schema = pa.schema([("ts", pa.timestamp("us")), ("user", pa.string())])
-
-    import datetime as dt
-
-    base = dt.datetime(2024, 1, 1, 12, 0, 0)
-
-    def drain(rows, fname):
-        pq.write_table(
-            pa.Table.from_pylist(rows, schema=schema), str(ev_dir / fname)
-        )
-        stream = spark.readStream.schema("ts timestamp, user string").parquet(
-            str(ev_dir)
-        )
-        q = (
-            stream_windowed_event_counts(stream)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-
-    # batch 1: two events in [12:00,12:05), one at 13:00 (advances the
-    # watermark to 12:50 and finalizes the noon window)
-    drain(
-        [
-            {"ts": base, "user": "a"},
-            {"ts": base + dt.timedelta(minutes=2), "user": "b"},
-            {"ts": base + dt.timedelta(hours=1), "user": "c"},
-        ],
-        "e1.parquet",
-    )
-    rows1 = {
-        (str(r["win_start"]), r["n_events"])
-        for r in spark.read.parquet(out).collect()
-    }
-    assert ("2024-01-01 12:00:00", 2) in rows1
-    # batch 2: a LATE event for the finalized noon window -> dropped (no
-    # duplicate/updated emission for that window)
-    drain([{"ts": base + dt.timedelta(minutes=1), "user": "late"}], "e2.parquet")
-    rows2 = [
-        r["n_events"]
-        for r in spark.read.parquet(out).collect()
-        if str(r["win_start"]) == "2024-01-01 12:00:00"
-    ]
-    assert rows2 == [2]
-
-
 def test_checkpoint_job_routes_language_column(spark, tmp_path):
     """The checkpointed job path (run_with_checkpoints -> pending_extraction
     -> extract_documents) must carry the doc-level language column through

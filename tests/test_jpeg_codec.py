@@ -11,9 +11,8 @@ from ms_ocr_spark.extraction.ocr import decode_image, decode_media
 from ms_ocr_spark.extraction.ocr.jpeg import (
     decode_gray_jpeg,
     encode_gray_jpeg,
-    jfif_density,
+    jpeg_side_values,
 )
-
 
 def test_round_trip_flat_quant_error_bound():
     rng = np.random.default_rng(7)
@@ -34,8 +33,8 @@ def test_round_trip_text_like_image():
 
 def test_jfif_density_round_trip():
     img = np.zeros((16, 16), dtype=np.uint8)
-    assert jfif_density(encode_gray_jpeg(img, dpi=300.0)) == 300.0
-    assert jfif_density(encode_gray_jpeg(img)) is None
+    assert jpeg_side_values(encode_gray_jpeg(img, dpi=300.0))["dpi"] == 300.0
+    assert jpeg_side_values(encode_gray_jpeg(img))["dpi"] is None
 
 
 def test_lossy_quant_table_decodes():
@@ -93,11 +92,11 @@ def test_jpeg_tier_ocr_exact():
 # ---------------------------------------------------------------- progressive
 from ms_ocr_spark.extraction.ocr.jpeg import (  # noqa: E402
     encode_gray_jpeg_progressive,
-    encode_multicomponent_stub,
     encode_progressive_stub,
     is_progressive_jpeg,
     jpeg_scope_reason,
 )
+from codec_stubs import encode_multicomponent_stub  # noqa: E402
 
 
 def _image_zoo() -> list[np.ndarray]:
@@ -175,7 +174,7 @@ def test_progressive_decode_with_fill_bytes_and_dispatch():
 
 def test_progressive_jfif_density():
     img = np.zeros((16, 16), dtype=np.uint8)
-    assert jfif_density(encode_gray_jpeg_progressive(img, dpi=144.0)) == 144.0
+    assert jpeg_side_values(encode_gray_jpeg_progressive(img, dpi=144.0))["dpi"] == 144.0
 
 
 def test_jpeg_scope_reasons():
@@ -842,10 +841,8 @@ def test_png_alpha_layouts_decode():
 
 def test_png_lowdepth_gray_decode():
     """Bit depths 1/2/4 (fax/scan layouts) decode to full-range 8-bit."""
-    from ms_ocr_spark.extraction.ocr.png import (
-        decode_gray as png_decode_gray,
-        encode_gray_lowdepth,
-    )
+    from codec_stubs import encode_gray_lowdepth
+    from ms_ocr_spark.extraction.ocr.png import decode_gray as png_decode_gray
 
     rng = np.random.default_rng(13)
     for depth in (1, 2, 4):

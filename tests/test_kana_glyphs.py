@@ -56,7 +56,9 @@ def test_kana_glyphs_component_structure_full_height():
     0-1 / cols 3-4 plus a base at rows 2-6 whose row-2 ink stays in cols
     0-1 — the geometry that makes the kernel's existing x-overlap /
     y-gap proximity merges group mark with base in BOTH layouts."""
-    from ms_ocr_spark.extraction.ocr.glyphs import BAR_KANJI, VOICED_KANA
+    from ms_ocr_spark.extraction.ocr.glyphs import BAR_KANJI
+
+    VOICED_KANA = "がざだばぴぷ"  # glyphs whose diacritic mark is its own component
 
     for ch in KANA_ALPHABET:
         bm = glyph_bitmap(ch)

@@ -197,7 +197,7 @@ def test_ocr_corpus_round_trip():
     """End-to-end kernel accuracy on 300 corpus-distribution samples."""
     for i in range(300):
         truth = datagen.make_media_truth(42, i, i % 5)
-        payload = datagen.render_media_payload(42, f"img-t-{i}", truth)
+        payload = encode_gray(datagen.render_media_image(42, f"img-t-{i}", truth))
         assert decode_image(decode_gray(payload)) == truth, f"sample {i}: {truth!r}"
 
 

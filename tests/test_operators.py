@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from ms_ocr_spark.operators.boxes import dedup_overlap_keep_first
 from ms_ocr_spark.operators.multimodal import (
     image_metadata,
-    image_resize,
     sniff_format,
     video_frame_sample,
 )
@@ -79,9 +78,6 @@ def test_image_metadata_and_resize(spark, corpus_dir):
     assert (meta["format"] == "png").all()
     assert (meta["width"] > 0).all() and (meta["height"] > 0).all()
     assert ((meta["ink_ratio"] > 0) & (meta["ink_ratio"] < 0.6)).all()
-
-    small = image_resize(media.limit(4), max_side=32).toPandas()
-    assert (small[["width", "height"]].max(axis=1) <= 32).all()
 
 
 def test_video_frame_sample_fanout(spark, tmp_path):
@@ -455,17 +451,17 @@ def test_component_labels_single_upstream_materialization(spark):
 
 
 def test_lsh_candidate_pairs_strict_rejects_bad_signatures(spark):
-    """ADVICE r3: wrong-length signatures silently exit dedup; strict
-    mode must refuse them, non-strict must drop them from candidates."""
+    """ADVICE r3: a wrong-length signature must not reach the band join —
+    read past its end or short of it, it would pair on the bands it
+    shares; it is dropped from the candidates (and counted by the
+    plan's `lsh_signature_guard_*` observation)."""
     from ms_ocr_spark.operators.dedup import lsh_candidate_pairs
 
-    good = [(f"d{i}", [int(i)] * 16) for i in range(4)]
-    bad = [("dbad", [1, 2, 3])]
+    good = [(f"d{i}", [int(i)] * 16) for i in range(4)] + [("d1b", [1] * 16)]
+    bad = [("dbad", [1] * 20), ("dshort", [1, 1, 1, 1])]
     sigs = spark.createDataFrame(good + bad, "doc_id string, sig array<bigint>")
-    with pytest.raises(ValueError, match="dbad|1 signature"):
-        lsh_candidate_pairs(sigs, strict=True)
-    pairs = lsh_candidate_pairs(sigs, strict=False).collect()
-    assert all("dbad" not in (r["id_a"], r["id_b"]) for r in pairs)
+    pairs = {(r["id_a"], r["id_b"]) for r in lsh_candidate_pairs(sigs).collect()}
+    assert pairs == {("d1", "d1b")}
 
 
 def test_vectorized_udfs_handle_all_null_batches(spark):

@@ -1,12 +1,15 @@
 """PDF text-extraction source tests (extraction/pdf.py, round 5 —
-north_rule 'PDF/layout parse': the inverse of the PDF overlay sink)."""
+north_rule 'PDF/layout parse') and the classic-layout fixture writer
+(`datagen.pdf_from_boxes`) they parse."""
 
 from __future__ import annotations
+
+import zlib
 
 import pytest
 
 from ms_ocr_spark.extraction.pdf import pdf_text_spans
-from ms_ocr_spark.operators.sinks import pdf_from_boxes
+from ms_ocr_spark.sources.datagen import pdf_from_boxes
 
 
 def test_pdf_round_trip_escapes_and_order():
@@ -21,6 +24,23 @@ def test_pdf_round_trip_escapes_and_order():
         (0, 100.0, 762.0, "SPARK 42"),
         (0, 15.0, 732.0, "back\\slash"),
     ]
+
+
+def test_pdf_overlay_structure():
+    boxes = [
+        {"doc_id": "d", "x1": 10, "y1": 20, "x2": 60, "y2": 40, "text": "HELLO (1)"},
+        {"doc_id": "d", "x1": 10, "y1": 60, "x2": 60, "y2": 80, "text": "WORLD"},
+    ]
+    data = pdf_from_boxes(boxes)
+    assert data.startswith(b"%PDF-1.4") and data.rstrip().endswith(b"%%EOF")
+    # extract + inflate the content stream, check overlay text and escaping
+    start = data.index(b"stream\n") + 7
+    end = data.index(b"\nendstream")
+    content = zlib.decompress(data[start:end]).decode()
+    assert r"(HELLO \(1\)) Tj" in content and "(WORLD) Tj" in content
+    # y-flip: first box (y1=20) lands at 792-20-10=762
+    assert "1 0 0 1 10.0 762.0 Tm" in content
+    assert data == pdf_from_boxes(boxes)  # deterministic
 
 
 def test_pdf_uncompressed_stream_and_td_tj_array():
@@ -339,19 +359,34 @@ def test_pdf_glyph_names_agl_and_uni():
 
 
 def test_pdf_encrypted_quarantines_with_reason():
-    """Encrypted PDFs (/Encrypt in the trailer) raise — the operator's
-    quarantine catch yields the all-null row — and pdf_scope_reason
-    reports the distinct class."""
-    from ms_ocr_spark.extraction.pdf import pdf_scope_reason
-
+    """Encrypted PDFs (/Encrypt in the trailer, ISO 32000-1 7.6) raise —
+    the operator's quarantine catch yields the all-null row — wherever
+    the key sits in the trailer dictionary.  `/Encrypt 9 0 R` inside a
+    content stream of a plain PDF is text, not encryption."""
     boxes = [{"x1": 10, "y1": 20, "x2": 60, "y2": 35, "text": "SECRET"}]
     good = pdf_from_boxes(boxes)
-    enc = good.replace(b"/Root 1 0 R", b"/Root 1 0 R /Encrypt 9 0 R")
-    assert pdf_scope_reason(good) is None
-    assert pdf_scope_reason(enc) == "encrypted_pdf"
-    assert pdf_scope_reason(b"garbage") == "not_a_pdf"
-    with pytest.raises(ValueError, match="[Ee]ncrypt"):
-        pdf_text_spans(enc)
+    assert pdf_text_spans(good) == [(0, 10.0, 762.0, "SECRET")]
+    near = good.replace(b"/Root 1 0 R", b"/Root 1 0 R /Encrypt 9 0 R")
+    # the key 2 KB into the trailer, behind an /Info string whose nested
+    # and escaped parentheses and `>>` do not end the dictionary
+    info = b"(" + b"(n) \\) >> " * 210 + b")"
+    far = good.replace(b"/Root 1 0 R", b"/Root 1 0 R /Info " + info + b" /Encrypt 9 0 R")
+    for enc in (near, far):
+        with pytest.raises(ValueError, match="[Ee]ncrypt"):
+            pdf_text_spans(enc)
+
+    content = b"BT /F1 10 Tf 1 0 0 1 50 700 Tm (/Encrypt 9 0 R) Tj ET"
+    objs = [
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents 4 0 R >>",
+        b"<< /Length %d >>\nstream\n%s\nendstream" % (len(content), content),
+    ]
+    plain = bytearray(b"%PDF-1.4\n")
+    for i, body in enumerate(objs, 1):
+        plain += b"%d 0 obj\n" % i + body + b"\nendobj\n"
+    plain += b"trailer\n<< /Size 5 /Root 1 0 R >>\n%%EOF\n"
+    assert pdf_text_spans(bytes(plain)) == [(0, 50.0, 700.0, "/Encrypt 9 0 R")]
 
 
 def test_pdf_custom_encoding_fixture_class():

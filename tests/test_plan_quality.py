@@ -198,31 +198,6 @@ def test_passage_dedup_reads_cached_gram_relation(spark):
     assert "EvalPython" not in plan  # fully JVM
 
 
-def test_bucketed_join_has_no_shuffle(spark, corpus_dir):
-    """Two tables bucketed on the join key join with ZERO exchanges —
-    the co-location recipe for the recurring media_ref join at 100 TB."""
-    from ms_ocr_spark.sources.catalog import write_bucketed
-
-    media = spark.read.parquet(f"{corpus_dir}/media_store.parquet")
-    refs = media.select("media_ref", F.length("payload").alias("n_bytes"))
-    write_bucketed(media.select("media_ref", "truth_text"), "b_media", "media_ref", 8)
-    write_bucketed(refs, "b_refs", "media_ref", 8)
-    try:
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = spark.table("b_media").join(spark.table("b_refs"), "media_ref")
-            plan = _plan(joined)
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        assert "Exchange" not in plan, "bucketed join should be shuffle-free"
-        assert "SortMergeJoin" in plan
-        assert joined.count() == media.count()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_media")
-        spark.sql("DROP TABLE IF EXISTS b_refs")
-
-
 def test_partition_pruning_on_partitioned_output(spark, corpus_dir, tmp_path):
     """partitionBy output + key filter -> only matching partitions scanned
     (PartitionFilters in the scan, not a post-scan filter)."""

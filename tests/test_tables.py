@@ -8,8 +8,8 @@ from pyspark.sql import functions as F
 
 from ms_ocr_spark.operators.tables import (
     detect_merges,
-    extract_tables,
     grid_from_boxes,
+    ocr_boxes,
     table_cells,
     table_html,
 )
@@ -22,7 +22,8 @@ def test_table_extraction_matches_layout_golden(spark, tmp_path):
 
     paths = write_table_corpus(str(tmp_path / "tables"), n_tables=12, seed=9)
     media = spark.read.parquet(paths["tables_media"])
-    cells, html = extract_tables(media)
+    grid = detect_merges(grid_from_boxes(ocr_boxes(media)))
+    cells, html = table_cells(grid), table_html(grid)
 
     got_c = cells.toPandas().sort_values(["doc_id", "row_idx", "col_idx"]).reset_index(drop=True)
     want_c = (
@@ -84,7 +85,7 @@ def test_table_plan_is_arrow_batched_single_udf_stage(spark, tmp_path):
 
     paths = write_table_corpus(str(tmp_path / "tables2"), n_tables=4, seed=5)
     media = spark.read.parquet(paths["tables_media"])
-    cells, _ = extract_tables(media)
+    cells = table_cells(detect_merges(grid_from_boxes(ocr_boxes(media))))
     plan = cells._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan  # Arrow-batched mapInPandas only
     assert plan.count("MapInPandas") == 1

@@ -203,10 +203,10 @@ def test_tiled_side_values_and_scope():
         decode_gray_tiff,
         encode_gray_tiff,
         encode_jpeg_in_tiff_stub,
-        encode_tiled_tiff_stub,
         tiff_scope_reason,
         tiff_side_values,
     )
+    from codec_stubs import encode_tiled_tiff_stub
 
     img = np.random.default_rng(9).integers(0, 256, (40, 50), dtype=np.uint8)
     b = encode_gray_tiff(img, tile=(16, 16), dpi=300.0, icc_name="sRGB", orientation=6)
