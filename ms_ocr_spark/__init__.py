@@ -8,7 +8,7 @@ needs.
 
 Design rules (see SURVEY.md §7):
   * DataFrame/SQL first — Catalyst owns the physical plan.
-  * Python only inside vectorized pandas/Arrow UDFs (never per-row).
+  * Python only inside vectorized Arrow UDFs (never per-row).
   * Order-dependent reference semantics carried by explicit order columns.
   * Deterministic everything — seeded generators, pure kernels.
 """

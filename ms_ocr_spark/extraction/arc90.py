@@ -13,7 +13,7 @@ new; its scoring follows the published Arc90 readability heuristic:
   * the best container's paragraph texts, in document order, are the main
     content (joined by "\\n")
 
-Pure function of the HTML string -> safe inside an Arrow-batched pandas
+Pure function of the HTML string -> safe inside an Arrow-batched Python
 UDF and reusable verbatim by the plain-Python oracle (SURVEY.md §7 step 2).
 Parser: stdlib html.parser (no external deps).
 """

@@ -17,7 +17,7 @@ stages mirror the reference's image-processor kernels:
                        per step against a fixed charset)
 
 Everything is a pure function of the input bytes — no models, no state —
-so it is safe (and cheap) inside an Arrow-batched pandas UDF.
+so it is safe (and cheap) inside an Arrow-batched Python UDF.
 """
 
 from __future__ import annotations

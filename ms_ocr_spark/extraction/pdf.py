@@ -713,12 +713,13 @@ def pdf_text_spans(data: bytes) -> list[tuple]:
 
 def pdf_extract_spans_df(artifacts, id_col: str = "doc_id", payload_col: str = "artifact"):
     """DataFrame operator: (id, pdf bytes) -> one row per text span
-    (id, page, x, y, text).  Same mapInPandas shape as the other binary
+    (id, page, x, y, text).  Same mapInArrow shape as the other binary
     media paths — PDF bytes stream through Arrow batches executor-side;
     unparsable payloads yield a single all-null row (quarantine
     contract), never a task failure."""
-    import pandas as pd
     from pyspark.sql import types as T
+
+    from ms_ocr_spark.operators.multimodal import rows_batch
 
     schema = T.StructType(
         [
@@ -731,14 +732,16 @@ def pdf_extract_spans_df(artifacts, id_col: str = "doc_id", payload_col: str = "
     )
 
     def _gen(batches):
-        for pdf in batches:
+        for batch in batches:
             rows = []
-            for did, buf in zip(pdf[id_col], pdf[payload_col]):
+            for did, buf in zip(
+                batch.column(id_col).to_pylist(), batch.column(payload_col).to_pylist()
+            ):
                 try:
-                    for page, x, y, text in pdf_text_spans(bytes(buf)):
+                    for page, x, y, text in pdf_text_spans(buf):
                         rows.append((str(did), page, x, y, text))
                 except Exception:
                     rows.append((str(did), None, None, None, None))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+            yield rows_batch(rows, schema)
 
-    return artifacts.select(id_col, payload_col).mapInPandas(_gen, schema=schema)
+    return artifacts.select(id_col, payload_col).mapInArrow(_gen, schema=schema)

@@ -10,7 +10,7 @@ J1/J2, §2.4 A2-A5):
   * containment_anti    ~ nested-box drop (`detection_craft/main.py:98-111`)
   * dedup_overlap_keep_first ~ `_filterOverlapBox` greedy keep-first
                           (`engine_paddle/main.py:56-83`) — order-dependent,
-                          so it runs as a grouped pandas UDF sorted by
+                          so it runs per document over an Arrow stream in
                           detection order, never as a join
   * table_grid          ~ `_clusterPosition`/`_buildDataFrame` grid pivot
                           (`data_to_table/main.py:177-210,256-272`)
@@ -21,7 +21,8 @@ Box convention: integer (x1, y1, x2, y2), end-exclusive areas
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -107,36 +108,32 @@ def dedup_overlap_keep_first(
     are independent -> perfectly parallel, the keyed shuffle is the only
     data movement).
 
-    Round 8 (guide §4.1/§4.2): the per-doc solve now runs inside ONE
-    mapInPandas stream per partition with an in-process pandas groupby —
-    the former groupBy().applyInPandas shipped every document as its own
-    Arrow batch and paid per-group serialization overhead that measured
-    ~45% of the operator's wall on a 10k-doc corpus (identity
-    applyInPandas alone cost 4.9 s of the 11 s total).  The partition
-    count is pinned (user repartition is exempt from AQE coalescing) and
-    derives from the context, never a local constant.  For typical group
-    sizes the greedy scan consults a precomputed pairwise overlap-hit
-    matrix (same element-wise double divisions, so every threshold
-    comparison is bit-identical to the scalar scan — which remains the
-    fallback for outsized documents where the O(n^2) matrix would not
-    fit).  Keep-set semantics and output rows are unchanged.
+    The per-doc solve runs inside ONE mapInArrow stream per partition
+    (round 8, guide §4.1/§4.2: a grouped-map UDF per document shipped every
+    document as its own Arrow batch and paid per-group serialization
+    overhead that measured ~45% of the operator's wall on a 10k-doc
+    corpus).  The partition is sorted by document, so the stream cuts it
+    into documents as it reads and carries the open one across batches:
+    memory is bounded by the largest document, not the partition, and
+    the rows with a NULL document form one document of their own.  The
+    partition count is pinned (user repartition is exempt from AQE
+    coalescing) and derives from the context, never a local constant.
+    For typical group sizes the greedy scan consults a precomputed
+    pairwise overlap-hit matrix (same element-wise double divisions, so
+    every threshold comparison is bit-identical to the scalar scan —
+    which remains the fallback for outsized documents where the O(n^2)
+    matrix would not fit).
     """
-    import numpy as np
-
-    schema = boxes.schema
     matrix_max = 1000  # ~6 n^2 doubles transient per group above this
 
-    def _dedup(pdf: pd.DataFrame) -> pd.DataFrame:
+    def _dedup(doc: pa.Table) -> pa.Table:
         # full-tuple sort: order_col ties (duplicate detection ids) would
         # otherwise leave the greedy scan order — and thus the keep-set —
         # dependent on partition-internal row order.  lexsort keys are
-        # listed last-key-primary, mirroring
-        # sort_values([order_col, x1, y1, x2, y2]).
-        box_id = pdf[order_col].to_numpy()
-        x1 = pdf["x1"].to_numpy()
-        y1 = pdf["y1"].to_numpy()
-        x2 = pdf["x2"].to_numpy()
-        y2 = pdf["y2"].to_numpy()
+        # listed last-key-primary: (order_col, x1, y1, x2, y2).
+        box_id, x1, y1, x2, y2 = (
+            doc.column(c).to_numpy() for c in (order_col, "x1", "y1", "x2", "y2")
+        )
         order = np.lexsort((y2, x2, y1, x1, box_id))
         x1, y1, x2, y2 = x1[order], y1[order], x2[order], y2[order]
         area = (x2 - x1) * (y2 - y1)
@@ -174,7 +171,7 @@ def dedup_overlap_keep_first(
                 kept[kn] = i
                 kn += 1
                 blocked |= hit_m[i]
-            return pdf.iloc[order[kept[:kn]]]
+            return doc.take(order[kept[:kn]])
         for i in range(n):
             if kn and area[i] > 0:
                 # one vectorized pass against the whole kept set (2.4x
@@ -195,18 +192,39 @@ def dedup_overlap_keep_first(
                     continue
             kept[kn] = i
             kn += 1
-        return pdf.iloc[order[kept[:kn]]]
+        return doc.take(order[kept[:kn]])
 
     def _run(batches):
-        buf = list(batches)
-        if not buf:
-            return
-        big = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-        outs = [_dedup(g) for _, g in big.groupby(doc_col, sort=False)]
-        yield pd.concat(outs, ignore_index=True) if outs else big.iloc[0:0]
+        open_doc: list[pa.RecordBatch] = []  # the document being read
+        open_key = None
+
+        def _close():
+            nonlocal open_doc
+            kept, open_doc = _dedup(pa.Table.from_batches(open_doc)), []
+            return kept
+
+        for batch in batches:
+            keys = batch.column(doc_col).to_pylist()  # NULL is None == None
+            if not keys:
+                continue
+            done = [_close()] if open_doc and keys[0] != open_key else []
+            cuts = [i for i in range(1, len(keys)) if keys[i] != keys[i - 1]]
+            for lo, hi in zip([0, *cuts], [*cuts, len(keys)]):
+                open_doc.append(batch.slice(lo, hi - lo))
+                if hi < len(keys):
+                    done.append(_close())
+            open_key = keys[-1]
+            if done:
+                yield from pa.concat_tables(done).combine_chunks().to_batches()
+        if open_doc:
+            yield from _close().combine_chunks().to_batches()
 
     n_part = dedup_mod.pinned_width(boxes)
-    return boxes.repartition(n_part, doc_col).mapInPandas(_run, schema=schema)
+    return (
+        boxes.repartition(n_part, doc_col)
+        .sortWithinPartitions(doc_col)
+        .mapInArrow(_run, schema=boxes.schema)
+    )
 
 
 def table_grid(

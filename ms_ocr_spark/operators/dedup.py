@@ -21,8 +21,9 @@ Scale notes (round 8):
 
 from __future__ import annotations
 
+import hashlib
 
-import pandas as pd
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
@@ -31,6 +32,8 @@ from pyspark.sql import types as T
 
 from ms_ocr_spark.functions.hashing import MERSENNE31, md5_long, perm_params
 from ms_ocr_spark.plans.cache import track
+
+from .multimodal import rows_batch
 
 TOKEN_PATTERN = "\\s+"
 
@@ -69,6 +72,70 @@ def tokens_col(text_col: str = "text"):
     return F.filter(
         F.split(F.lower(F.col(text_col)), TOKEN_PATTERN), lambda t: t != ""
     )
+
+
+def token_counts(toks: pa.Array, weigh) -> list[np.ndarray]:
+    """Per-row sums of per-token integer weights over a batch of token
+    lists: `weigh` maps the batch's distinct tokens (a string array) to a
+    list of weight columns, and each column comes back as one int64 count
+    per row (0 for a NULL or empty list).  A token is weighed once per
+    batch however often it occurs.  Rows are repeated by list length, not
+    read from `pc.list_parent_indices`, which also counts the values under
+    a NULL slot that `pc.list_flatten` skips."""
+    n_tok = pc.fill_null(pc.list_value_length(toks), 0).to_numpy()
+    row = np.repeat(np.arange(len(toks)), n_tok)
+    enc = pc.dictionary_encode(pc.list_flatten(toks))
+    tok = enc.indices.to_numpy()
+    return [
+        np.bincount(row, np.asarray(w, np.int64)[tok], len(toks)).astype(np.int64)
+        for w in weigh(enc.dictionary)
+    ]
+
+
+def token_count_udf(names: list[str], weigh):
+    """Arrow UDF over a token-list column -> struct<name: long, ...> of
+    `token_counts(toks, weigh)`; a NULL list gives NULL fields.  Marked
+    non-deterministic (guide §4.4) so a filter or several field
+    projections on the result never re-evaluate it."""
+    fields = ", ".join(f"{n}:long" for n in names)
+
+    @F.arrow_udf(f"struct<{fields}>")
+    def _counts(toks: pa.Array) -> pa.Array:
+        null = toks.is_null().to_numpy(zero_copy_only=False)
+        cols = token_counts(toks, weigh)
+        return pa.StructArray.from_arrays(
+            [pa.array(c, pa.int64(), mask=null) for c in cols], names=names
+        )
+
+    return _counts.asNondeterministic()
+
+
+def _md5_prefix(strings: pa.Array) -> np.ndarray:
+    """The md5-prefix long `md5_long` gives each string (the first 15 hex
+    digits of its md5), hashing each distinct value of the batch once."""
+    enc = pc.dictionary_encode(strings)
+    vocab = enc.dictionary.to_pylist()
+    h = np.fromiter(
+        (int(hashlib.md5(s.encode()).hexdigest()[:15], 16) for s in vocab),
+        dtype=np.int64,
+        count=len(vocab),
+    )
+    return h[enc.indices.to_numpy()]
+
+
+def _windows(toks: pa.Array, k: int) -> tuple[np.ndarray, np.ndarray, pa.Array]:
+    """(row, pos, gram) of every k-token window of a batch of token lists,
+    grouped by row: `gram` is the window's tokens joined by single spaces,
+    `pos` its 0-based start.  A list shorter than k (or NULL) has none.
+    Tokens hold no whitespace, so gram equality is token-tuple equality."""
+    n_tok = pc.fill_null(pc.list_value_length(toks), 0).to_numpy()
+    n_win = np.maximum(n_tok - (k - 1), 0)
+    row = np.repeat(np.arange(len(toks)), n_win)
+    pos = np.arange(len(row)) - np.repeat(np.cumsum(n_win) - n_win, n_win)
+    first = (np.cumsum(n_tok) - n_tok)[row] + pos
+    flat = pc.list_flatten(toks)
+    gram = pc.binary_join_element_wise(*[flat.take(first + j) for j in range(k)], " ")
+    return row, pos, gram
 
 
 def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3) -> DataFrame:
@@ -144,8 +211,8 @@ def minhash_signature_arrays_from_docs(
     the signature is a pure per-document function, so it is computed
     row-locally in one Arrow batch pass (round 8, guide §4.2): tokenize
     stays in the JVM (identical split/lower semantics), the UDF builds
-    the per-doc distinct shingle set, hashes each shingle with the exact
-    md5-prefix integer the relational path uses, and takes the
+    every shingle of the batch, hashes each distinct one once with the
+    exact md5-prefix integer the relational path uses, and takes the
     `num_hashes` universal-hash minima with vectorized int64 math
     (a < 2^31 and h < 2^31-1, so a*h+b < 2^62 never overflows — the
     same bound the JVM/oracle expressions rely on).  Values are
@@ -154,36 +221,25 @@ def minhash_signature_arrays_from_docs(
     the former explode + min-aggregate moved every (doc, shingle) row
     through an exchange.
     """
-    import numpy as np
-
     params = perm_params(num_hashes)
-    A = np.array([a for a, _ in params], dtype=np.int64)[:, None]
-    B = np.array([b for _, b in params], dtype=np.int64)[:, None]
 
-    @F.pandas_udf("array<long>")
-    def _sig(toks: pd.Series) -> pd.Series:
-        import hashlib
-
-        out = []
-        for t in toks:
-            if t is None or len(t) < shingle_n:
-                out.append(None)
-                continue
-            sh = {
-                " ".join(t[i : i + shingle_n])
-                for i in range(len(t) - shingle_n + 1)
-            }
-            h = np.fromiter(
-                (
-                    int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-                    % MERSENNE31
-                    for s in sh
-                ),
-                dtype=np.int64,
-                count=len(sh),
-            )
-            out.append(((A * h[None, :] + B) % MERSENNE31).min(axis=1).tolist())
-        return pd.Series(out, dtype=object)
+    @F.arrow_udf("array<long>")
+    def _sig(toks: pa.Array) -> pa.Array:
+        row, _, gram = _windows(toks, shingle_n)
+        h = _md5_prefix(gram) % MERSENNE31
+        starts = np.flatnonzero(np.diff(row, prepend=-1))  # first shingle per row
+        # one permutation at a time keeps the transient at a few longs
+        # per shingle; a repeated shingle cannot move a minimum
+        sig = np.stack(
+            [np.minimum.reduceat((a * h + b) % MERSENNE31, starts) for a, b in params],
+            axis=1,
+        )
+        has = np.zeros(len(toks), dtype=bool)
+        has[row] = True
+        offsets = np.r_[0, np.cumsum(has * num_hashes)].astype(np.int32)
+        return pa.ListArray.from_arrays(
+            offsets, pa.array(sig.ravel(), pa.int64()), mask=pa.array(~has)
+        )
 
     # non-deterministic mark (guide §4.4): the no-shingle filter on the
     # UDF-computed column otherwise makes the optimizer evaluate the UDF
@@ -235,9 +291,8 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """Band the signature, bucket-join: pairs sharing any full band.
 
-    Accepts either the array form from `minhash_signature_arrays` (fast
-    path: band keys are pure projections, no extra shuffle) or the public
-    (id, salt, minhash) row form (re-grouped first).  Band key =
+    Takes the (id, sig) array form of `minhash_signature_arrays` (band
+    keys are pure projections, no extra shuffle).  Band key =
     comma-joined minhashes in salt order (deterministic; the oracle builds
     the identical string).
 
@@ -250,13 +305,6 @@ def lsh_candidate_pairs(
     nulls the whole band key instead of colliding — NULL band keys never
     match in the equi-join.
     """
-    if "sig" not in signatures.columns:
-        signatures = signatures.groupBy(id_col).agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("salt", "minhash"))),
-                lambda s: s["minhash"],
-            ).alias("sig")
-        )
     # guard: drop any signature whose length disagrees with num_hashes —
     # cheap filter, prevents the silent cross-join class.  The drop count
     # is LOUD, not silent: a named observation ("lsh_signature_guard_<h>"
@@ -341,30 +389,23 @@ def jaccard_verify(
     space-joined shingles == equality of token tuples).
     """
 
-    @F.pandas_udf("struct<n_inter:long,n_a:long,n_b:long>")
-    def _inter(ta: pd.Series, tb: pd.Series) -> pd.DataFrame:
-        ni, na, nb = [], [], []
-        for a, b in zip(ta, tb):
-            sa = (
-                {
-                    " ".join(a[i : i + shingle_n])
-                    for i in range(len(a) - shingle_n + 1)
-                }
-                if a is not None and len(a) >= shingle_n
-                else set()
-            )
-            sb = (
-                {
-                    " ".join(b[i : i + shingle_n])
-                    for i in range(len(b) - shingle_n + 1)
-                }
-                if b is not None and len(b) >= shingle_n
-                else set()
-            )
-            ni.append(len(sa & sb))
-            na.append(len(sa))
-            nb.append(len(sb))
-        return pd.DataFrame({"n_inter": ni, "n_a": na, "n_b": nb})
+    @F.arrow_udf("struct<n_inter:long,n_a:long,n_b:long>")
+    def _inter(ta: pa.Array, tb: pa.Array) -> pa.Array:
+        n = len(ta)
+        ra, _, ga = _windows(ta, shingle_n)
+        rb, _, gb = _windows(tb, shingle_n)
+        # (row, shingle) keys over one shared dictionary: exact string
+        # identity, no hash collisions
+        enc = pc.dictionary_encode(pa.concat_arrays([ga, gb]))
+        code = enc.indices.to_numpy().astype(np.int64)
+        v = max(len(enc.dictionary), 1)
+        ka = np.unique(ra * v + code[: len(ga)])
+        kb = np.unique(rb * v + code[len(ga) :])
+        both = np.intersect1d(ka, kb, assume_unique=True)
+        cols = [np.bincount(x // v, minlength=n) for x in (both, ka, kb)]
+        return pa.StructArray.from_arrays(
+            [pa.array(c, pa.int64()) for c in cols], names=["n_inter", "n_a", "n_b"]
+        )
 
     toks = df.select(F.col(id_col), tokens_col(text_col).alias("t"))
     a = toks.select(F.col(id_col).alias("id_a"), F.col("t").alias("t_a"))
@@ -386,10 +427,9 @@ def duplicate_passage_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 8,
-    min_docs: int = 2,
 ) -> DataFrame:
     """Cross-document repeated-passage spans: token ranges covered by a
-    k-token gram that appears in >= `min_docs` distinct documents.
+    k-token gram that appears in two or more distinct documents.
 
     Set-based approximation of suffix-array substring dedup (Lee et al.,
     "Deduplicating Training Data Makes Language Models Better", ACL'22):
@@ -401,9 +441,9 @@ def duplicate_passage_spans(
 
     Plan shape (100 TB): one positional explode (pos kept from
     posexplode — NO per-doc sort window), one groupBy on the gram hash
-    (map-side combinable count-distinct via the two-level agg Spark
-    plans), one equi-join of positions against the (small) duplicated-
-    gram set, then the W2 interval merge per doc.  Everything JVM-side.
+    (map-side combinable min/max of the doc id), one equi-join of
+    positions against the (small) duplicated-gram set, then the W2
+    interval merge per doc.  Only the gram build runs in Python.
 
     Output: (id_col, start_tok, end_tok, n_grams) — token offsets are
     0-based, end exclusive.
@@ -418,55 +458,34 @@ def duplicate_passage_spans(
     id_type = df.schema[id_col].dataType.simpleString()
 
     def _grams(batches):
-        import hashlib
-
-        for pdf in batches:
-            ids_out: list = []
-            pos_out: list = []
-            gh_out: list = []
-            for did, t in zip(pdf[id_col], pdf["t"]):
-                if t is None:
-                    continue
-                for i in range(max(len(t) - (k - 1), 0)):
-                    ids_out.append(did)
-                    pos_out.append(i)
-                    gh_out.append(
-                        int(
-                            hashlib.md5(
-                                " ".join(t[i : i + k]).encode()
-                            ).hexdigest()[:15],
-                            16,
-                        )
-                    )
-            yield pd.DataFrame(
-                {id_col: ids_out, "pos": pos_out, "gh": gh_out}
+        for batch in batches:
+            row, pos, gram = _windows(batch.column("t"), k)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(id_col).take(row),
+                    pa.array(pos, pa.int32()),
+                    pa.array(_md5_prefix(gram), pa.int64()),
+                ],
+                names=[id_col, "pos", "gh"],
             )
 
     # persist: the duplicated-gram aggregate AND the position join both
     # read this relation — without the cache the tokenize+gram+hash
     # subtree runs twice over the full corpus
     gh = track(
-        toks.mapInPandas(_grams, f"{id_col} {id_type}, pos int, gh long")
+        toks.mapInArrow(_grams, f"{id_col} {id_type}, pos int, gh long")
     )
-    if min_docs == 2:
-        # "appears in >= 2 distinct docs" == min(doc) != max(doc): both
-        # map-side-combinable, ONE exchange of (gh, min, max) partials —
-        # the count-distinct formulation pays a second full exchange of
-        # (gh, id) pairs for an exact count the predicate never needs
-        # (round 8, guide §2.3: aggregate before you shuffle)
-        dup = (
-            gh.groupBy("gh")
-            .agg(F.min(id_col).alias("_mn"), F.max(id_col).alias("_mx"))
-            .filter(F.col("_mn") != F.col("_mx"))
-            .select("gh")
-        )
-    else:
-        dup = (
-            gh.groupBy("gh")
-            .agg(F.countDistinct(id_col).alias("nd"))
-            .filter(F.col("nd") >= min_docs)
-            .select("gh")
-        )
+    # "appears in >= 2 distinct docs" == min(doc) != max(doc): both
+    # map-side-combinable, ONE exchange of (gh, min, max) partials — a
+    # count-distinct would pay a second full exchange of (gh, id) pairs
+    # for an exact count the predicate never needs (round 8, guide §2.3:
+    # aggregate before you shuffle)
+    dup = (
+        gh.groupBy("gh")
+        .agg(F.min(id_col).alias("_mn"), F.max(id_col).alias("_mx"))
+        .filter(F.col("_mn") != F.col("_mx"))
+        .select("gh")
+    )
     flagged = gh.join(dup, "gh").select(
         id_col,
         F.col("pos").cast("long").alias("start_tok"),
@@ -512,31 +531,30 @@ def doc_repetition_stats(
     is published.
     """
 
-    @F.pandas_udf(
+    @F.arrow_udf(
         "struct<n_grams:long,n_distinct:long,n_dup_positions:long,top_c:long>"
     )
-    def _rep_counts(toks: pd.Series) -> pd.DataFrame:
-        from collections import Counter
-
-        ng, nd, ndup, top = [], [], [], []
-        for t in toks:
-            if t is None or len(t) < n:
-                ng.append(0), nd.append(0), ndup.append(0), top.append(0)
-                continue
-            c = Counter(zip(*[t[i : len(t) - (n - 1) + i] for i in range(n)]))
-            total = len(t) - (n - 1)
-            singles = sum(1 for v in c.values() if v == 1)
-            ng.append(total)
-            nd.append(len(c))
-            ndup.append(total - singles)
-            top.append(max(c.values()))
-        return pd.DataFrame(
-            {
-                "n_grams": ng,
-                "n_distinct": nd,
-                "n_dup_positions": ndup,
-                "top_c": top,
-            }
+    def _rep_counts(toks: pa.Array) -> pa.Array:
+        m = len(toks)
+        row, _, gram = _windows(toks, n)
+        enc = pc.dictionary_encode(gram)
+        v = max(len(enc.dictionary), 1)
+        key, cnt = np.unique(
+            row * v + enc.indices.to_numpy().astype(np.int64), return_counts=True
+        )
+        r = key // v
+        n_grams = np.bincount(row, minlength=m)
+        top = np.zeros(m, dtype=np.int64)
+        np.maximum.at(top, r, cnt)
+        cols = [
+            n_grams,
+            np.bincount(r, minlength=m),
+            n_grams - np.bincount(r[cnt == 1], minlength=m),
+            top,
+        ]
+        return pa.StructArray.from_arrays(
+            [pa.array(c, pa.int64()) for c in cols],
+            names=["n_grams", "n_distinct", "n_dup_positions", "top_c"],
         )
 
     # non-deterministic mark (guide §4.4): the zero-gram filter and the
@@ -591,31 +609,22 @@ def _containment_candidates(
     id_type = df.schema[id_col].dataType.simpleString()
 
     def _dgrams(batches):
-        import hashlib
-
-        for pdf in batches:
-            ids_out: list = []
-            gh_out: list = []
-            for did, t in zip(pdf[id_col], pdf["t"]):
-                if t is None:
-                    continue
-                seen = {
-                    int(
-                        hashlib.md5(
-                            " ".join(t[i : i + k]).encode()
-                        ).hexdigest()[:15],
-                        16,
-                    )
-                    for i in range(max(len(t) - (k - 1), 0))
-                }
-                ids_out.extend([did] * len(seen))
-                gh_out.extend(seen)
-            yield pd.DataFrame({id_col: ids_out, "gh": gh_out})
+        for batch in batches:
+            row, _, gram = _windows(batch.column("t"), k)
+            gh = _md5_prefix(gram)
+            order = np.lexsort((gh, row))
+            row, gh = row[order], gh[order]
+            first = np.ones(len(row), dtype=bool)
+            first[1:] = (row[1:] != row[:-1]) | (gh[1:] != gh[:-1])
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(id_col).take(row[first]), pa.array(gh[first], pa.int64())],
+                names=[id_col, "gh"],
+            )
 
     # distinct (doc, gram-hash): consumed three times (frequency agg,
     # anchor pick, outer side) -> persisted via track()
     doc_grams = track(
-        toks.mapInPandas(_dgrams, f"{id_col} {id_type}, gh long")
+        toks.mapInArrow(_dgrams, f"{id_col} {id_type}, gh long")
     )
     gram_freq = doc_grams.groupBy("gh").agg(F.count(F.lit(1)).alias("gdf"))
     rarest = (
@@ -702,33 +711,24 @@ def simhash_signatures(
     Arrow UDF hashes each DISTINCT token of a batch once (a corpus
     vocabulary is far smaller than its token count) with the exact
     md5-prefix integer of the relational path, then counts each bit's
-    votes per doc with one bincount over the batch's tokens, so memory
-    stays a few bytes per token, never O(tokens x bits).  Docs with no
+    votes per doc with `token_counts` (one bincount per bit over the
+    batch's tokens), so memory stays O(vocabulary x bits) plus a few
+    bytes per token, never O(tokens x bits).  Docs with no
     tokens drop out, as in the relational formulation; values are
     bit-identical (integer math only).
     """
-    import numpy as np
+    def _bits(vocab: pa.Array) -> list[np.ndarray]:
+        h = _md5_prefix(vocab)
+        return [np.ones(len(h))] + [(h >> b) & 1 for b in range(bits)]
 
     @F.arrow_udf("long")
     def _sim(toks: pa.Array) -> pa.Array:
-        import hashlib
-
-        n_tok = pc.fill_null(pc.list_value_length(toks), 0).to_numpy()
-        enc = pc.dictionary_encode(pc.list_flatten(toks))
-        vocab = enc.dictionary.to_pylist()
-        h = np.fromiter(
-            (int(hashlib.md5(s.encode()).hexdigest()[:15], 16) for s in vocab),
-            dtype=np.int64,
-            count=len(vocab),
-        )
-        tok = enc.indices.to_numpy()
-        doc = np.repeat(np.arange(len(toks), dtype=np.int32), n_tok)
+        # +1 per token with bit b set, -1 per other token: the sum is
+        # positive when more than half of the doc's tokens set it
+        n_tok, *ones = token_counts(toks, _bits)
         sig = np.zeros(len(toks), dtype=np.int64)
-        for b in range(bits):
-            # +1 per token with bit b set, -1 per other token: the sum is
-            # positive when more than half of the doc's tokens set it
-            ones = np.bincount(doc[((h >> b) & 1).astype(bool)[tok]], minlength=len(toks))
-            sig |= (2 * ones > n_tok).astype(np.int64) << b
+        for b, o in enumerate(ones):
+            sig |= (2 * o > n_tok).astype(np.int64) << b
         return pa.array(sig, mask=n_tok == 0)
 
     # non-deterministic mark (guide §4.4): see
@@ -905,8 +905,6 @@ def _component_labels_inner(
         def _uf_partition(batches):
             # incremental union-find over the Arrow batch stream: only
             # the parent map is retained, never the raw edge list
-            import pandas as pd
-
             parent: dict = {}
             nodes: set = set()
 
@@ -918,18 +916,15 @@ def _component_labels_inner(
                     parent[x], x = root, parent[x]
                 return root
 
-            for pdf in batches:
-                for a, b in zip(pdf["a"], pdf["b"]):
+            for batch in batches:
+                for a, b in zip(batch.column("a").to_pylist(), batch.column("b").to_pylist()):
                     nodes.add(a)
                     nodes.add(b)
                     ra, rb = _find(a), _find(b)
                     if ra != rb:
                         # union-by-min: every set's root stays its min id
                         parent[max(ra, rb)] = min(ra, rb)
-            yield pd.DataFrame(
-                [(n, _find(n)) for n in sorted(nodes)],
-                columns=["id", "component"],
-            )
+            yield rows_batch([(n, _find(n)) for n in sorted(nodes)], schema)
 
         # single-partition executor-side solve (same boundedness as the
         # former driver collect, minus two driver round trips).
@@ -940,7 +935,7 @@ def _component_labels_inner(
         # materializes the result ONCE for all downstream consumers.
         return (
             sym.coalesce(1)
-            .mapInPandas(_uf_partition, schema=schema)
+            .mapInArrow(_uf_partition, schema=schema)
             .localCheckpoint()
         )
     # distributed path: sym is already checkpointed, so every propagation

@@ -7,9 +7,11 @@ Everything here is REAL decode — no stubs remain (round 5):
     own baseline-JPEG decoder (`extraction/ocr/avi.py`), zero external
     codecs
 
-Pattern notes (100 TB): mapInPandas streams Arrow batches through one
-Python worker per core — payload bytes never round-trip the driver;
-metadata-only queries never deserialize payloads (column pruning).
+Pattern notes (100 TB): mapInArrow streams Arrow record batches through
+one Python worker per core, and each decoder's rows go straight back into
+one record batch (`rows_batch`) — payload bytes never round-trip the
+driver, and no pandas frame is built per batch; metadata-only queries
+never deserialize payloads (column pruning).
 """
 
 from __future__ import annotations
@@ -17,9 +19,10 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 IMAGE_META_SCHEMA = T.StructType(
     [
@@ -36,6 +39,21 @@ IMAGE_META_SCHEMA = T.StructType(
         T.StructField("orientation", T.IntegerType()),
     ]
 )
+
+
+def rows_batch(rows: list[tuple], schema: T.StructType) -> pa.RecordBatch:
+    """Row tuples (None for NULL) -> one Arrow record batch of `schema`'s
+    exact column types, as mapInArrow requires."""
+    arrow = to_arrow_schema(schema)
+    cols = zip(*rows) if rows else [()] * len(arrow)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(list(c), f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+
+
+def media_payloads(batch: pa.RecordBatch, payload_col: str):
+    """(media_ref, payload bytes or None) of each row of a media batch."""
+    return zip(batch.column("media_ref").to_pylist(), batch.column(payload_col).to_pylist())
 
 
 def sniff_format(buf: bytes | None) -> str:
@@ -83,7 +101,7 @@ def mime_col(magic: str = "magic"):
 def image_metadata(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Decode payloads (real PNG decode) -> per-image metadata rows."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from ms_ocr_spark.extraction.ocr.jpeg import (
             decode_gray_jpeg,
             jpeg_side_values,
@@ -94,24 +112,24 @@ def image_metadata(media: DataFrame, payload_col: str = "payload") -> DataFrame:
             tiff_side_values,
         )
 
-        for pdf in batches:
+        for batch in batches:
             rows = []
-            for ref, buf in zip(pdf["media_ref"], pdf[payload_col]):
-                fmt = sniff_format(bytes(buf) if buf is not None else None)
+            for ref, buf in media_payloads(batch, payload_col):
+                fmt = sniff_format(buf)
                 try:
                     # side-value parity across all three containers
                     # (round 5, S5): dpi + ICC name + EXIF orientation
                     # from pHYs/iCCP/eXIf (PNG), JFIF/APP2/APP1 (JPEG),
                     # XResolution/34675/274 (TIFF)
                     if fmt == "png":
-                        img = decode_gray(bytes(buf))
-                        sv = side_values(bytes(buf))
+                        img = decode_gray(buf)
+                        sv = side_values(buf)
                     elif fmt == "tiff":
-                        img = decode_gray_tiff(bytes(buf))
-                        sv = tiff_side_values(bytes(buf))
+                        img = decode_gray_tiff(buf)
+                        sv = tiff_side_values(buf)
                     elif fmt == "jpeg":
-                        img = decode_gray_jpeg(bytes(buf))
-                        sv = jpeg_side_values(bytes(buf))
+                        img = decode_gray_jpeg(buf)
+                        sv = jpeg_side_values(buf)
                     else:
                         raise ValueError("unknown format")
                     # rounded to 6dp with Python round(): bit-identical to
@@ -137,11 +155,9 @@ def image_metadata(media: DataFrame, payload_col: str = "payload") -> DataFrame:
                     # sniffed format preserved — never a task failure
                     # (same contract as the OCR UDF's quarantine path)
                     rows.append((ref, None, None, None, None, fmt, None, None, None))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in IMAGE_META_SCHEMA.fields]
-            )
+            yield rows_batch(rows, IMAGE_META_SCHEMA)
 
-    return media.select("media_ref", payload_col).mapInPandas(
+    return media.select("media_ref", payload_col).mapInArrow(
         _extract, schema=IMAGE_META_SCHEMA
     )
 
@@ -170,18 +186,18 @@ def video_frame_sample(
     features, md5 of the decoded pixels); undecodable payloads yield a
     single all-null row, mirroring the image/audio quarantine contract.
     Same 100-TB shape as the other media paths: payloads stream through
-    Arrow batches inside mapInPandas, never the driver."""
+    Arrow batches inside mapInArrow, never the driver."""
 
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _sample(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import hashlib
 
         from ms_ocr_spark.extraction.ocr.avi import avi_frames
 
-        for pdf in batches:
+        for batch in batches:
             rows = []
-            for ref, buf in zip(pdf["media_ref"], pdf[payload_col]):
+            for ref, buf in media_payloads(batch, payload_col):
                 try:
-                    frames = avi_frames(bytes(buf))
+                    frames = avi_frames(buf)
                 except Exception:
                     rows.append((ref, None, None, None, None, None, None))
                     continue
@@ -198,9 +214,9 @@ def video_frame_sample(
                             hashlib.md5(f.tobytes()).hexdigest(),
                         )
                     )
-            yield pd.DataFrame(rows, columns=[f.name for f in FRAME_SCHEMA.fields])
+            yield rows_batch(rows, FRAME_SCHEMA)
 
-    return media.select("media_ref", payload_col).mapInPandas(
+    return media.select("media_ref", payload_col).mapInArrow(
         _sample, schema=FRAME_SCHEMA
     )
 
@@ -250,24 +266,22 @@ def wav_features(buf: bytes) -> tuple | None:
 def audio_features(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Audio feature extraction over binary WAV payloads (round 4 — the
     last stub closed): RIFF/WAVE PCM-16 parsed with the stdlib `wave`
-    module inside `mapInPandas` (no external codec needed); compressed or
+    module inside `mapInArrow` (no external codec needed); compressed or
     non-WAV payloads yield all-null feature rows, mirroring the
     image_metadata quarantine contract.  Same 100-TB shape as the image
     path: payloads stream through Arrow batches, never the driver."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def _extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             rows = []
-            for ref, buf in zip(pdf["media_ref"], pdf[payload_col]):
-                feats = wav_features(bytes(buf)) if buf is not None else None
+            for ref, buf in media_payloads(batch, payload_col):
+                feats = wav_features(buf) if buf is not None else None
                 if feats is None:
                     rows.append((ref, None, None, None, None, None, None))
                 else:
                     rows.append((ref, *feats))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUDIO_SCHEMA.fields]
-            )
+            yield rows_batch(rows, AUDIO_SCHEMA)
 
-    return media.select("media_ref", payload_col).mapInPandas(
+    return media.select("media_ref", payload_col).mapInArrow(
         _extract, schema=AUDIO_SCHEMA
     )

@@ -22,13 +22,14 @@ Formula: the Lucene/Robertson "plus one" BM25:
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ms_ocr_spark.plans.cache import track
 
-from .dedup import _fanout, tokens_col
+from .dedup import _fanout, token_count_udf, tokens_col
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -56,22 +57,15 @@ def bm25_topk(
     # postings with an extra id join.  Counts are exact integers, every
     # downstream expression (idf rounding, tf scaling, the term-sorted
     # fold) is unchanged JVM arithmetic.
-    @F.pandas_udf("struct<dl:long,tfs:array<long>>")
-    def _doc_tf(toks: pd.Series) -> pd.DataFrame:
-        dls, tfs = [], []
-        for t in toks:
-            if t is None:
-                dls.append(None), tfs.append(None)
-                continue
-            dls.append(len(t))
-            tfs.append([sum(1 for x in t if x == term) for term in q])
-        return pd.DataFrame({"dl": dls, "tfs": tfs})
+    doc_tf = token_count_udf(
+        ["dl", *[f"tf{i}" for i in range(len(q))]],
+        lambda v: [np.ones(len(v))]
+        + [pc.equal(v, t).to_numpy(zero_copy_only=False) for t in q],
+    )
 
     # consumed twice (corpus stats + postings) -> persisted via track()
     base = track(
-        _fanout(df).select(
-            id_col, _doc_tf.asNondeterministic()(tokens_col(text_col)).alias("_b")
-        )
+        _fanout(df).select(id_col, doc_tf(tokens_col(text_col)).alias("_b"))
     )
     lens = base.select(id_col, F.col("_b.dl").alias("dl"))
     stats = lens.agg(
@@ -82,7 +76,9 @@ def bm25_topk(
         base.select(
             id_col,
             F.col("_b.dl").alias("dl"),
-            F.posexplode("_b.tfs").alias("qi", "tf"),
+            F.posexplode(F.array(*[f"_b.tf{i}" for i in range(len(q))])).alias(
+                "qi", "tf"
+            ),
         )
         .filter(F.col("tf") > 0)
         .select(id_col, "dl", q_arr[F.col("qi")].alias("term"), "tf")

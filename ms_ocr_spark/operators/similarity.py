@@ -4,18 +4,21 @@ Brute-force cosine top-k as the exact baseline; random-hyperplane LSH
 bucketing as the scale path (buckets shrink the candidate set ~2^planes).
 Dot products run as sequential left-folds (zip_with + aggregate) so the
 floating-point result is bit-identical to the DuckDB oracle's
-list_reduce(list_transform(...)) — same operation order.
+list_reduce(list_transform(...)) — same operation order.  The Arrow
+bodies keep that order with two numpy kernels: `_row_dot` (row by row)
+and `_outer_dot` (every row of one matrix against every row of another),
+both summing dimension by dimension.
 
-Scale notes: brute force is a broadcast-join of the (small) query set
-against the corpus — O(Q*N) but embarrassingly parallel with no shuffle
-beyond the final per-query top-k; LSH replaces the N side with one
-bucket's worth of rows via an equi-join on the bucket key.
+Scale notes: brute force ships the (small, bounded) query matrix in the
+task closure and scores each corpus Arrow batch against it — O(Q*N) but
+embarrassingly parallel with no shuffle beyond the final per-query top-k;
+LSH replaces the N side with one bucket's worth of rows via an equi-join
+on the bucket key.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
@@ -31,32 +34,39 @@ from .windows import top_k_per_group
 MAX_CLOSURE_QUERIES = 4096
 
 
-def _matrix(vectors, dim: int) -> np.ndarray:
-    """Stack `vectors` (non-NULL; a `pyarrow` list array or any iterable of
-    sequences) into an (n, dim) float64 matrix.  A vector of any other
-    length raises: a reshape would silently fold, say, pairs of 32-float
-    vectors into 64-float rows and mispair every value."""
-    arrow = isinstance(vectors, pa.Array)
-    if arrow:
-        lengths = pc.unique(pc.list_value_length(vectors)).to_pylist()
-    else:
-        vectors = [np.asarray(v, np.float64) for v in vectors]
-        lengths = [len(v) for v in vectors]
-    bad = set(lengths) - {dim}
+def _matrix(vectors: pa.Array, dim: int) -> np.ndarray:
+    """Stack `vectors` (a non-NULL `pyarrow` list array) into an (n, dim)
+    float64 matrix.  A vector of any other length raises: a reshape would
+    silently fold, say, pairs of 32-float vectors into 64-float rows and
+    mispair every value."""
+    bad = set(pc.unique(pc.list_value_length(vectors)).to_pylist()) - {dim}
     if bad:
         raise ValueError(f"expected vectors of dim={dim}, got lengths {sorted(bad)}")
-    if arrow:
-        vectors = pc.list_flatten(vectors).to_numpy(zero_copy_only=False)
-    return np.array(vectors, dtype=np.float64).reshape(-1, dim)
+    flat = pc.list_flatten(vectors).to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64).reshape(-1, dim)
+
+
+def _row_dot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Dot product of each row of `A` with the same row of `B`, products
+    summed dimension by dimension from 0.0 (the folds' IEEE order)."""
+    out = np.zeros(len(A))
+    for i in range(A.shape[1]):
+        out += A[:, i] * B[:, i]
+    return out
+
+
+def _outer_dot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """(len(A), len(B)) dot products of every row of `A` with every row of
+    `B`, each summed dimension by dimension from 0.0 (the folds' order)."""
+    out = np.zeros((len(A), len(B)))
+    for i in range(A.shape[1]):
+        out += A[:, i : i + 1] * B[:, i][None, :]
+    return out
 
 
 def _norms(X: np.ndarray) -> np.ndarray:
-    """Row norms of `X`, squares summed dimension by dimension (the folds'
-    IEEE order)."""
-    sq = np.zeros(len(X))
-    for i in range(X.shape[1]):
-        sq += X[:, i] * X[:, i]
-    return np.sqrt(sq)
+    """Row norms of `X` in the folds' order."""
+    return np.sqrt(_row_dot(X, X))
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -82,11 +92,11 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def _scorable(vectors: pd.Series, dim: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+def _scorable(vectors: pa.Array, dim: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(mask, matrix, norms) of the vectors a cosine is defined for: not
     NULL and of non-zero norm."""
-    mask = np.array([v is not None for v in vectors], dtype=bool)
-    X = _matrix(vectors[mask], dim)
+    mask = vectors.is_valid().to_numpy(zero_copy_only=False)
+    X = _matrix(vectors.filter(vectors.is_valid()), dim)
     n = _norms(X)
     if not n.all():  # copy the batch only when a zero vector drops out
         mask[mask] = n > 0
@@ -94,33 +104,34 @@ def _scorable(vectors: pd.Series, dim: int) -> tuple[np.ndarray, np.ndarray, np.
     return mask, X, n
 
 
-def cosine_pandas(dim: int = 64):
-    """Arrow-batched pandas cosine — bit-identical to `cosine`'s folds.
+def _nan_null(x: np.ndarray) -> pa.Array:
+    """Doubles with every NaN (a 0/0 cosine, or a position never scored)
+    as NULL, the oracle's 0/0."""
+    return pa.array(x, pa.float64(), mask=np.isnan(x))
+
+
+def cosine_arrow(dim: int = 64):
+    """Arrow-batched cosine — bit-identical to `cosine`'s folds.
 
     dot and the two squared norms accumulate dimension-by-dimension
     across the batch (same IEEE-double op order per row as the
-    sequential folds), then one vectorized sqrt/divide.  Used on the
-    brute-force path where the cross join evaluates O(Q*N) cosines and
-    the per-element HOF interpreter cost dominates; bucket-join paths
-    score few candidates and keep the column-expression form.
+    sequential folds), then one vectorized sqrt/divide.  A NULL vector on
+    either side, or a zero vector, gives a NULL sim.  Used on the
+    bucket and cell join paths, where the per-element HOF interpreter
+    cost of the column expression would dominate.
     """
 
-    @F.pandas_udf("double")
-    def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        # NULL vectors on either side yield NULL sim (matches the column
-        # expression's propagation); compute only on the valid rows so a
-        # ragged object array never reaches numpy.
-        valid = a.notna() & b.notna()
-        out = pd.Series([None] * len(a), index=a.index, dtype=object)
-        if not bool(valid.any()):
-            return out
-        A = _matrix(a[valid], dim)
-        B = _matrix(b[valid], dim)
-        dot_ = np.zeros(len(A))
-        for i in range(dim):
-            dot_ += A[:, i] * B[:, i]
-        out.loc[valid] = (dot_ / (_norms(A) * _norms(B))).tolist()
-        return out
+    @F.arrow_udf("double")
+    def _cos(a: pa.Array, b: pa.Array) -> pa.Array:
+        valid = pc.and_(a.is_valid(), b.is_valid())
+        A = _matrix(a.filter(valid), dim)
+        B = _matrix(b.filter(valid), dim)
+        out = np.full(len(a), np.nan)
+        with np.errstate(invalid="ignore"):
+            out[valid.to_numpy(zero_copy_only=False)] = _row_dot(A, B) / (
+                _norms(A) * _norms(B)
+            )
+        return _nan_null(out)
 
     return _cos
 
@@ -141,9 +152,9 @@ def brute_force_topk(
     just so a pairwise UDF could re-read the same query vectors millions
     of times.  Now the (small, bounded — same assumption the previous
     broadcast made) query matrix rides once in the task closure and one
-    mapInPandas pass over the CORPUS scores each Arrow batch against all
+    mapInArrow pass over the CORPUS scores each Arrow batch against all
     queries at once with the identical per-dimension accumulation order
-    as `cosine_pandas`/`cosine` (bit-identical doubles).  Each batch is
+    as `cosine_arrow`/`cosine` (bit-identical doubles).  Each batch is
     pre-pruned to a provable superset of the global top-k: a candidate
     whose unrounded sim is more than 1.1e-6 below its batch's k-th best
     cannot survive 6-dp rounding (|round(x) - x| <= 5e-7), so the exact
@@ -157,31 +168,28 @@ def brute_force_topk(
     More than `MAX_CLOSURE_QUERIES` queries raise a ValueError; the check
     rides on the one collect of the query side.
     """
-    qpd = queries.select(id_col, vec_col).limit(MAX_CLOSURE_QUERIES + 1).toPandas()
-    if len(qpd) > MAX_CLOSURE_QUERIES:
+    qt = queries.select(id_col, vec_col).limit(MAX_CLOSURE_QUERIES + 1).toArrow()
+    if qt.num_rows > MAX_CLOSURE_QUERIES:
         raise ValueError(
             f"brute_force_topk ships its query side in the task closure: at most "
             f"MAX_CLOSURE_QUERIES={MAX_CLOSURE_QUERIES} queries, got more"
         )
-    q_ids = qpd[id_col].to_numpy()
-    q_valid, Qm, qn = _scorable(qpd[vec_col], dim)
+    q_ids = qt.column(id_col).to_numpy()
+    q_valid, Qm, qn = _scorable(qt.column(vec_col).combine_chunks(), dim)
     vq_ids = q_ids[q_valid]
     id_type = corpus.schema[id_col].dataType.simpleString()
     schema = f"query_id {id_type}, neighbor_id {id_type}, sim double"
 
     def _score(batches):
-        for pdf in batches:
-            c_ids = pdf[id_col].to_numpy()
-            valid, C, cn = _scorable(pdf[vec_col], dim)
-            out_q, out_n, out_s = [], [], []
+        for batch in batches:
+            id_arrow = batch.schema.field(id_col).type
+            c_ids = batch.column(id_col).to_numpy(zero_copy_only=False)
+            valid, C, cn = _scorable(batch.column(vec_col), dim)
+            out_q, out_n, out_s = [vq_ids[:0]], [c_ids[:0]], [np.zeros(0)]
             if valid.any() and len(Qm):
                 cid = c_ids[valid]
                 m = len(C)
-                dot = np.zeros((len(Qm), m))
-                for i in range(dim):
-                    # same IEEE accumulation order per element as the folds
-                    dot += Qm[:, i : i + 1] * C[:, i][None, :]
-                sim = dot / (qn[:, None] * cn[None, :])
+                sim = _outer_dot(Qm, C) / (qn[:, None] * cn[None, :])
                 self_mask = cid[None, :] == vq_ids[:, None]
                 sim_rank = np.where(self_mask, -np.inf, sim)
                 if m > k:
@@ -193,31 +201,27 @@ def brute_force_topk(
                 out_q.append(vq_ids[qi])
                 out_n.append(cid[ci])
                 out_s.append(sim[qi, ci])
-            res = pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q) if out_q else [],
-                    "neighbor_id": np.concatenate(out_n) if out_n else [],
-                    "sim": np.concatenate(out_s) if out_s else [],
-                }
-            )
             # null-sim rows: the null and zero corpus vectors for a scored
             # query, every corpus vector for a null or zero query — k
             # smallest neighbor ids per query per batch is a superset of
             # their possible global ranks (ties order by neighbor_id)
             null_ids, all_ids = np.sort(c_ids[~valid]), np.sort(c_ids)
-            null_parts = []
             for qid, scored in zip(q_ids, q_valid):
-                pool = null_ids if scored else all_ids
-                take = [K for K in pool[: k + 1] if K != qid][:k]
-                if take:
-                    null_parts.append(
-                        pd.DataFrame({"query_id": qid, "neighbor_id": take, "sim": None})
-                    )
-            if null_parts:
-                res = pd.concat([res] + null_parts, ignore_index=True)
-            yield res
+                pool = (null_ids if scored else all_ids)[: k + 1]
+                take = pool[pool != qid][:k]
+                out_q.append(np.full(len(take), qid, dtype=q_ids.dtype))
+                out_n.append(take)
+                out_s.append(np.full(len(take), np.nan))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.concatenate(out_q), id_arrow),
+                    pa.array(np.concatenate(out_n), id_arrow),
+                    _nan_null(np.concatenate(out_s)),
+                ],
+                names=["query_id", "neighbor_id", "sim"],
+            )
 
-    scored = corpus.select(id_col, vec_col).mapInPandas(_score, schema)
+    scored = corpus.select(id_col, vec_col).mapInArrow(_score, schema)
     return top_k_per_group(
         scored.select(
             "query_id", "neighbor_id", F.round("sim", 6).alias("sim")
@@ -269,7 +273,7 @@ def lsh_buckets_arrow(
     The JVM fold pays interpreted higher-order-function overhead per
     vector element per plane (tables x planes x dim lambda calls per
     row).  Here the projection accumulates dimension-by-dimension across
-    the whole Arrow batch: `acc[:, p] += x_i * w_p_i` performs, for each
+    the whole Arrow batch (`_outer_dot`): `acc[:, p] += x_i * w_p_i` performs, for each
     (row, plane), the same IEEE-double additions in the same index order
     starting from 0.0 as the sequential fold — so bucket assignment (and
     the DuckDB oracle parity that rides on it) is preserved exactly,
@@ -278,13 +282,9 @@ def lsh_buckets_arrow(
     the column-expression form (used by the oracle-SQL mirror and as the
     executable definition the equality test pins the UDF against).
     """
-    # dim x (tables*planes) weight matrix, column order = (table, plane)
-    by_table = [plane_weights(n_planes, dim, t) for t in tables]
-    w = np.array(
-        [
-            [by_table[ti][p][i] for ti in range(len(tables)) for p in range(n_planes)]
-            for i in range(dim)
-        ],
+    # (tables*planes) x dim weight matrix, row order = (table, plane)
+    W = np.array(
+        [row for t in tables for row in plane_weights(n_planes, dim, t)],
         dtype=np.float64,
     )
     pows = np.array([1 << p for p in range(n_planes)], dtype=np.int64)
@@ -292,11 +292,8 @@ def lsh_buckets_arrow(
     @F.arrow_udf("array<int>")
     def _buckets(emb: pa.Array) -> pa.Array:
         valid = emb.is_valid()
-        X = _matrix(emb.filter(valid), dim)
-        acc = np.zeros((len(X), w.shape[1]), dtype=np.float64)
-        for i in range(dim):
-            # same op sequence per (row, plane) as the sequential fold
-            acc += X[:, i : i + 1] * w[i][None, :]
+        # same op sequence per (row, plane) as the sequential fold
+        acc = _outer_dot(_matrix(emb.filter(valid), dim), W)
         signs = acc > 0
         buckets = np.stack(
             [
@@ -341,7 +338,7 @@ def lsh_topk(
     scored = (
         q.join(c, "bucket")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", F.round(cosine_pandas()(F.col("q_vec"), F.col("c_vec")), 6))
+        .withColumn("sim", F.round(cosine_arrow()(F.col("q_vec"), F.col("c_vec")), 6))
     )
     return top_k_per_group(
         scored.select("query_id", "neighbor_id", "sim"),
@@ -399,7 +396,7 @@ def lsh_topk_multitable(
     scored = (
         cand.join(q_vecs, "query_id")
         .join(c_vecs, "neighbor_id")
-        .withColumn("sim", F.round(cosine_pandas()(F.col("q_vec"), F.col("c_vec")), 6))
+        .withColumn("sim", F.round(cosine_arrow()(F.col("q_vec"), F.col("c_vec")), 6))
     )
     return top_k_per_group(
         scored.select("query_id", "neighbor_id", "sim"),
@@ -429,28 +426,22 @@ def ivf_cell_assignments(
     total order, and emits only the `top_cells` winning rows — the
     window disappears entirely.  NULL vectors keep the former
     NULLS-LAST row_number semantics (cells 0..top_cells-1)."""
-    import numpy as np
-    import pandas as pd
-
-    cpd = centroids.toPandas()
-    cells = cpd["cell"].to_numpy()
+    ct = centroids.toArrow()
+    cells = ct.column("cell").to_numpy()
     order = np.argsort(cells, kind="stable")
     cells = cells[order]
-    CENT = _matrix(cpd["cent_vec"].to_numpy()[order], dim)
+    CENT = _matrix(ct.column("cent_vec").combine_chunks(), dim)[order]
     n_cells = len(cells)
     id_type = vectors.schema[id_col].dataType.simpleString()
 
     def _assign(batches):
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            valid = np.array([v is not None for v in pdf[vec_col]])
-            out_i, out_c = [], []
+        for batch in batches:
+            ids = batch.column(id_col).to_numpy(zero_copy_only=False)
+            vecs = batch.column(vec_col)
+            valid = vecs.is_valid().to_numpy(zero_copy_only=False)
+            out_i, out_c = [ids[:0]], [cells[:0]]
             if valid.any() and n_cells:
-                X = _matrix(pdf[vec_col][valid], dim)
-                d = np.zeros((len(X), n_cells))
-                for i in range(dim):
-                    # same IEEE accumulation order per element as `dot`
-                    d += X[:, i : i + 1] * CENT[:, i][None, :]
+                d = _outer_dot(_matrix(vecs.filter(vecs.is_valid()), dim), CENT)
                 # rank (d DESC, cell ASC): cells are sorted ascending, so
                 # a stable argsort on -d preserves the cell tie-break
                 rk = np.argsort(-d, axis=1, kind="stable")[:, :top_cells]
@@ -460,14 +451,15 @@ def ivf_cell_assignments(
                 t = min(top_cells, n_cells)
                 out_i.append(np.repeat(ids[~valid], t))
                 out_c.append(np.tile(cells[:t], (~valid).sum()))
-            yield pd.DataFrame(
-                {
-                    id_col: np.concatenate(out_i) if out_i else [],
-                    "cell": np.concatenate(out_c) if out_c else [],
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.concatenate(out_i), batch.schema.field(id_col).type),
+                    pa.array(np.concatenate(out_c), pa.int32()),
+                ],
+                names=[id_col, "cell"],
             )
 
-    return vectors.select(id_col, vec_col).mapInPandas(
+    return vectors.select(id_col, vec_col).mapInArrow(
         _assign, f"{id_col} {id_type}, cell int"
     )
 
@@ -524,7 +516,7 @@ def ivf_topk(
     scored = (
         cand.join(q_vecs, "query_id")
         .join(c_vecs, "neighbor_id")
-        .withColumn("sim", F.round(cosine_pandas()(F.col("q_vec"), F.col("c_vec")), 6))
+        .withColumn("sim", F.round(cosine_arrow()(F.col("q_vec"), F.col("c_vec")), 6))
     )
     return top_k_per_group(
         scored.select("query_id", "neighbor_id", "sim"),
@@ -577,11 +569,7 @@ def embedding_neardup_pairs(
         out_a, out_b, out_s = [ids[:0]], [ids[:0]], [np.zeros(0)]
         for b0 in range(0, m - 1, block):
             b1 = min(b0 + block, m)
-            dot = np.zeros((b1 - b0, m))
-            for i in range(dim):
-                # same IEEE accumulation order per element as the folds
-                dot += X[b0:b1, i : i + 1] * X[:, i][None, :]
-            sim = dot / (nrm[b0:b1, None] * nrm[None, :])
+            sim = _outer_dot(X[b0:b1], X) / (nrm[b0:b1, None] * nrm[None, :])
             ri, cj = np.nonzero(sim >= lo)
             # strict id comparison, exactly the join's id_a < id_b — on
             # the id-sorted layout this is the upper triangle, and rows

@@ -31,11 +31,12 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .multimodal import media_payloads, rows_batch
 from .windows import gap_cluster
 
 BOX_SCHEMA = T.StructType(
@@ -58,20 +59,20 @@ def ocr_boxes(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     reference's detector output, `engine_paddle/main.py:232-285`).
     """
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from ms_ocr_spark.extraction.ocr import decode_gray
         from ms_ocr_spark.extraction.ocr.kernel import decode_words
 
-        for pdf in batches:
+        for batch in batches:
             rows = []
-            for ref, buf in zip(pdf["media_ref"], pdf[payload_col]):
+            for ref, buf in media_payloads(batch, payload_col):
                 for i, (x1, y1, x2, y2, text) in enumerate(
-                    decode_words(decode_gray(bytes(buf)))
+                    decode_words(decode_gray(buf))
                 ):
                     rows.append((ref, i, x1, y1, x2, y2, text))
-            yield pd.DataFrame(rows, columns=[f.name for f in BOX_SCHEMA.fields])
+            yield rows_batch(rows, BOX_SCHEMA)
 
-    return media.select("media_ref", payload_col).mapInPandas(
+    return media.select("media_ref", payload_col).mapInArrow(
         _extract, schema=BOX_SCHEMA
     )
 

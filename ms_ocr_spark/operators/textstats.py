@@ -1,21 +1,26 @@
 """Text analysis operators: language-ID, quality scoring, token counts,
 document fingerprinting.
 
-All are built-in-function column expressions (JVM-side, codegen'd) with
-exact DuckDB oracle twins; nothing here touches Python at runtime.
-The NFKC normalizer (reference `_checkMatch`, `/root/reference/src/
-library/engine_realtime/main.py:35-53`) is the one genuine pandas UDF —
-Unicode normalization has no Spark builtin.
+Each has an exact DuckDB oracle twin.  Tokenizing, regex counts and
+every ratio, round and flag are built-in column expressions (JVM-side,
+codegen'd).  Per-token counts (stopword, badword, word-length and
+alphabetic-word counts) run in one Arrow UDF pass each, all through the
+shared `dedup.token_counts` kernel.  The NFKC normalizer (reference
+`_checkMatch`, `/root/reference/src/library/engine_realtime/
+main.py:35-53`) is an Arrow UDF too — Unicode normalization has no Spark
+builtin.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .dedup import _fanout, tokens_col
+from .dedup import _fanout, token_count_udf, tokens_col
 
 # tiny per-language stopword inventories for the n-gram/stopword heuristic;
 # ASCII-only so the same literals work verbatim in the DuckDB oracle.
@@ -28,31 +33,23 @@ LANG_STOPWORDS: dict[str, list[str]] = {
 LANG_ORDER = ["en", "es", "fr", "de"]  # deterministic tie-break order
 
 
+def _in(words):
+    """Token weight: 1 for a token in `words`, else 0."""
+    value_set = pa.array(sorted(words), pa.string())
+    return lambda vocab: pc.is_in(vocab, value_set=value_set).to_numpy(zero_copy_only=False)
+
+
 def _lang_scores_udf():
     """Per-doc stopword-hit counts for all languages in ONE Arrow pass
     (round 8, guide §4.2): a column-expression form would re-walk the
     token array through an interpreted higher-order filter per language.
     Exact-match token counting is engine-trivial, so the counts are
-    bit-identical; a NULL token array yields a NULL struct (propagating
+    bit-identical; a NULL token array yields NULL scores (propagating
     exactly like size(filter(NULL)))."""
-    fields = ", ".join(f"score_{lang}:int" for lang in LANG_ORDER)
-    sets = [frozenset(LANG_STOPWORDS[lang]) for lang in LANG_ORDER]
-
-    @F.pandas_udf(f"struct<{fields}>")
-    def _scores(toks: pd.Series) -> pd.DataFrame:
-        cols: list[list] = [[] for _ in LANG_ORDER]
-        for t in toks:
-            if t is None:
-                for c in cols:
-                    c.append(None)
-                continue
-            for c, sw in zip(cols, sets):
-                c.append(sum(1 for x in t if x in sw))
-        return pd.DataFrame(
-            {f"score_{lang}": cols[i] for i, lang in enumerate(LANG_ORDER)}
-        )
-
-    return _scores.asNondeterministic()
+    hits = [_in(LANG_STOPWORDS[lang]) for lang in LANG_ORDER]
+    return token_count_udf(
+        [f"score_{lang}" for lang in LANG_ORDER], lambda v: [h(v) for h in hits]
+    )
 
 
 def lang_id(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -60,7 +57,8 @@ def lang_id(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
     scored = _fanout(df).select(
         id_col, _lang_scores_udf()(tokens_col(text_col)).alias("_s")
     ).select(
-        id_col, *[F.col(f"_s.score_{lang}").alias(f"score_{lang}") for lang in LANG_ORDER]
+        id_col,
+        *[F.col(f"_s.score_{lang}").cast("int").alias(f"score_{lang}") for lang in LANG_ORDER],
     )
     # fold in declared order with strict greater-than: first language wins ties
     best = F.lit("und")
@@ -84,31 +82,19 @@ def quality_features(
           + (1 - min(punct_ratio*10, 1)) * 0.3
           + min(stopword_ratio*5, 1)   * 0.3           (rounded to 6 dp)
     """
-    all_sw = frozenset(w for v in LANG_STOPWORDS.values() for w in v)
+    is_sw = _in({w for v in LANG_STOPWORDS.values() for w in v})
 
     # token-wise counts in ONE Arrow pass (round 8, guide §4.2 — the
     # stopword filter was an interpreted per-token HOF); the text-level
     # regex counts and every ratio/round stay in the JVM, bit-identical
-    @F.pandas_udf("struct<n_tokens:int,n_sw:int>")
-    def _counts(toks: pd.Series) -> pd.DataFrame:
-        nt, ns = [], []
-        for t in toks:
-            if t is None:
-                nt.append(None), ns.append(None)
-                continue
-            nt.append(len(t))
-            ns.append(sum(1 for x in t if x in all_sw))
-        return pd.DataFrame({"n_tokens": nt, "n_sw": ns})
-
+    counts = token_count_udf(["n_tokens", "n_sw"], lambda v: [np.ones(len(v)), is_sw(v)])
     base = _fanout(df).select(
-        id_col,
-        F.col(text_col),
-        _counts.asNondeterministic()(tokens_col(text_col)).alias("_c"),
+        id_col, F.col(text_col), counts(tokens_col(text_col)).alias("_c")
     )
-    n_tokens = F.col("_c.n_tokens")
+    n_tokens = F.col("_c.n_tokens").cast("int")
     n_chars = F.length(text_col)
     n_punct = n_chars - F.length(F.regexp_replace(F.col(text_col), "[.,;:!?]", ""))
-    n_sw = F.col("_c.n_sw")
+    n_sw = F.col("_c.n_sw").cast("int")
     punct_ratio = F.when(n_chars > 0, n_punct / n_chars).otherwise(F.lit(0.0))
     sw_ratio = F.when(n_tokens > 0, n_sw / n_tokens).otherwise(F.lit(0.0))
     score = (
@@ -155,33 +141,25 @@ def gopher_quality_flags(
     """
     # token-wise counts in ONE Arrow pass (round 8, guide §4.2): word
     # count, summed word length and the has-an-[a-z]-character count were
-    # interpreted per-token HOF/regex walks.  Python len() and Spark
-    # length() both count code points, and `x.rlike("[a-z]")` is an
-    # unanchored search exactly like the set intersection below, so every
-    # count — and therefore every downstream ratio and flag, all still
-    # computed in the JVM — is bit-identical.  The text-level # and
+    # interpreted per-token HOF/regex walks.  Arrow's utf8_length and
+    # Spark's length() both count code points, and `x.rlike("[a-z]")` is
+    # an unanchored search exactly like the substring regex below, so
+    # every count — and therefore every downstream ratio and flag, all
+    # still computed in the JVM — is bit-identical.  The text-level # and
     # ellipsis counts stay as single-pass JVM regexes.
-    _AZ = frozenset("abcdefghijklmnopqrstuvwxyz")
-
-    @F.pandas_udf("struct<n_words:long,sum_len:int,n_alpha:long>")
-    def _counts(toks: pd.Series) -> pd.DataFrame:
-        nw, sl, na = [], [], []
-        for t in toks:
-            if t is None:
-                nw.append(None), sl.append(None), na.append(None)
-                continue
-            nw.append(len(t))
-            sl.append(sum(len(x) for x in t))
-            na.append(sum(1 for x in t if not _AZ.isdisjoint(x)))
-        return pd.DataFrame({"n_words": nw, "sum_len": sl, "n_alpha": na})
-
+    counts = token_count_udf(
+        ["n_words", "sum_len", "n_alpha"],
+        lambda v: [
+            np.ones(len(v)),
+            pc.utf8_length(v).to_numpy(),
+            pc.match_substring_regex(v, "[a-z]").to_numpy(zero_copy_only=False),
+        ],
+    )
     df = _fanout(df).select(
-        F.col(id_col),
-        F.col(text_col),
-        _counts.asNondeterministic()(tokens_col(text_col)).alias("_c"),
+        F.col(id_col), F.col(text_col), counts(tokens_col(text_col)).alias("_c")
     )
     n_words = F.col("_c.n_words")
-    sum_len = F.col("_c.sum_len")
+    sum_len = F.col("_c.sum_len").cast("int")
     mean_wl = F.when(n_words > 0, sum_len / n_words).otherwise(F.lit(0.0))
     n_hash = F.length(text_col) - F.length(
         F.regexp_replace(F.col(text_col), "#", "")
@@ -256,13 +234,14 @@ def fingerprint(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     )
 
 
-@F.pandas_udf(T.StringType())
-def nfkc_norm(s: pd.Series) -> pd.Series:
+@F.arrow_udf(T.StringType())
+def nfkc_norm(s: pa.Array) -> pa.Array:
     """NFKC normalization (reference F1, `engine_realtime/main.py:39-40`)."""
     import unicodedata
 
-    return s.map(
-        lambda v: unicodedata.normalize("NFKC", v) if v is not None else None
+    return pa.array(
+        [None if v is None else unicodedata.normalize("NFKC", v) for v in s.to_pylist()],
+        pa.string(),
     )
 
 
@@ -302,30 +281,19 @@ def badword_fraction(
     max_frac: float = 0.05,
 ) -> DataFrame:
     """Per-doc blocklisted-token fraction + pass flag (the C4 badword
-    filter shape).  Single-pass JVM array ops: one tokenize, one filtered
-    size — no joins, no Python; the blocklist travels as a literal array
-    (at 100 TB a large list would broadcast instead, same plan shape).
+    filter shape).  One JVM tokenize and one Arrow token-count pass — no
+    joins; the blocklist travels in the UDF closure (at 100 TB a large
+    list would broadcast instead, same plan shape).
     Integer counts until the final division (bit-exact cross-engine)."""
-    bad = frozenset(badwords)
+    is_bad = _in(badwords)
 
     # token counts in ONE Arrow pass (round 8, guide §4.2 — the blocklist
     # filter was an interpreted per-token HOF with a linear array scan
     # per token); exact-match counting is engine-trivial, ratios and the
     # flag stay in the JVM, bit-identical
-    @F.pandas_udf("struct<n_tokens:long,n_bad:long>")
-    def _counts(toks: pd.Series) -> pd.DataFrame:
-        nt, nb = [], []
-        for t in toks:
-            if t is None:
-                nt.append(None), nb.append(None)
-                continue
-            nt.append(len(t))
-            nb.append(sum(1 for x in t if x in bad))
-        return pd.DataFrame({"n_tokens": nt, "n_bad": nb})
-
+    counts = token_count_udf(["n_tokens", "n_bad"], lambda v: [np.ones(len(v)), is_bad(v)])
     base = _fanout(df).select(
-        F.col(id_col),
-        _counts.asNondeterministic()(tokens_col(text_col)).alias("_c"),
+        F.col(id_col), counts(tokens_col(text_col)).alias("_c")
     )
     n_tokens = F.col("_c.n_tokens")
     n_bad = F.col("_c.n_bad")

@@ -563,8 +563,9 @@ def grid_pivot_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register("dedup_boxes_keep_first")
 def dedup_boxes_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P7 `_filterOverlapBox` greedy keep-first dedup — order-dependent,
-    applyInPandas per doc; rows-only check (not SQL-expressible because the
-    keep-set evolves during the scan)."""
+    one Arrow stream per partition cut into docs.  Not SQL-expressible
+    (the keep-set evolves during the scan), so its oracle is the golden
+    parquet `_keepfirst_golden_oracle` writes from a Python twin."""
     texts = _texts_df(spark, sf_dir)
     return dedup_overlap_keep_first(texts, threshold=0.5)
 
@@ -903,7 +904,7 @@ def passage_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans covered by an 8-gram appearing in >= 2 distinct documents,
     interval-merged per doc."""
     return dedup.duplicate_passage_spans(
-        _t(spark, sf_dir, "documents"), k=_PASSAGE_K, min_docs=2
+        _t(spark, sf_dir, "documents"), k=_PASSAGE_K
     )
 
 
@@ -1848,7 +1849,7 @@ def _audio_corpus_paths() -> dict[str, str]:
 @_register("media_audio_features")
 def media_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio feature extraction over binary WAV payloads (stdlib PCM-16
-    decode inside mapInPandas).  Oracle = the generator's
+    decode inside mapInArrow).  Oracle = the generator's
     golden_audio_features parquet, computed from the raw samples before
     encoding (independent of the engine's decode path)."""
     from ms_ocr_spark.operators.multimodal import audio_features
@@ -1877,7 +1878,7 @@ def pdf_extract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PDF text extraction SOURCE (round 5 — north_rule 'PDF/layout
     parse'): positioned text spans recovered from PDF bytes (object
     scan, FlateDecode streams, BT/Tm/Td/Tj/TJ text operators with
-    string escapes) inside mapInPandas; garbage payloads yield a single
+    string escapes) inside mapInArrow; garbage payloads yield a single
     all-null row.  Oracle = the generator's golden_pdf_spans parquet
     (straight-line derivation from the box rows before PDF encoding,
     independent of the parser)."""
@@ -1905,7 +1906,7 @@ def _video_corpus_paths() -> dict[str, str]:
 def media_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video frame sampling over binary MJPEG-AVI payloads (round 5 —
     the last stub closed): the engine's own RIFF walker + baseline-JPEG
-    decoder inside mapInPandas, one row per sampled frame with size/ink
+    decoder inside mapInArrow, one row per sampled frame with size/ink
     features and an md5 of the decoded pixels; garbage payloads yield a
     single all-null row.  Oracle = the generator's golden_video_frames
     parquet (straight-line derivation from the pre-encode frames,
@@ -2188,7 +2189,7 @@ def scalar_functions_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def search_match_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P11 search-match over documents.  The Spark side runs the full
-    reference chain (NFKC pandas UDF -> casefold -> space strip ->
+    reference chain (NFKC Arrow UDF -> casefold -> space strip ->
     contains); the driver's documents corpus is pure ASCII, where NFKC is
     the identity, so the DuckDB twin is the plain lower/strip/contains —
     the NFKC-specific behavior is pinned by test_search_match_nfkc."""

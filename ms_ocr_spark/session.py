@@ -16,8 +16,8 @@ def get_spark(
     """Build (or reuse) a SparkSession.
 
     Defaults follow the 100-TB design notes (SURVEY.md §4): AQE on for
-    runtime shuffle sizing + skew splitting, Arrow on for pandas-UDF
-    transfer, shuffle partitions sized to the actual parallelism instead of
+    runtime shuffle sizing + skew splitting, Arrow on for the driver's DataFrame
+    conversions, shuffle partitions sized to the actual parallelism instead of
     the 200 default.  In the sandbox `cores` maps to local[N]; on a real
     cluster the same code runs under spark-submit and `master` is simply
     not overridden.

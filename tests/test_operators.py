@@ -103,7 +103,7 @@ def test_video_frame_sample_fanout(spark, tmp_path):
 
 
 def test_audio_features_matches_golden(spark, tmp_path):
-    """Round 4: the WAV path is real — mapInPandas PCM-16 decode must
+    """Round 4: the WAV path is real — mapInArrow PCM-16 decode must
     reproduce the generator's golden features (computed from the raw
     samples before encoding) exactly."""
     from ms_ocr_spark.operators.multimodal import audio_features
@@ -309,7 +309,7 @@ def test_duplicate_passage_spans_finds_planted_passage(spark):
     docs = spark.createDataFrame(rows, "doc_id string, text string")
     out = {
         r["doc_id"]: (r["start_tok"], r["end_tok"], r["n_grams"])
-        for r in duplicate_passage_spans(docs, k=8, min_docs=2).collect()
+        for r in duplicate_passage_spans(docs, k=8).collect()
     }
     # d1: shared run is tokens 3..15 (12 tokens -> 5 overlapping 8-grams)
     assert out["d1"] == (3, 15, 5)
@@ -467,7 +467,7 @@ def test_lsh_candidate_pairs_strict_rejects_bad_signatures(spark):
 def test_vectorized_udfs_handle_all_null_batches(spark):
     """ADVICE r3 (medium): an Arrow batch of only NULL embeddings must
     yield NULL outputs, not an IndexError task failure."""
-    from ms_ocr_spark.operators.similarity import cosine_pandas, lsh_buckets_arrow
+    from ms_ocr_spark.operators.similarity import cosine_arrow, lsh_buckets_arrow
 
     df = spark.createDataFrame(
         [(1, None), (2, None)], "vec_id long, embedding array<float>"
@@ -475,7 +475,7 @@ def test_vectorized_udfs_handle_all_null_batches(spark):
     b = df.select(lsh_buckets_arrow()(F.col("embedding")).alias("b")).collect()
     assert all(r["b"] is None for r in b)
     c = df.select(
-        cosine_pandas()(F.col("embedding"), F.col("embedding")).alias("s")
+        cosine_arrow()(F.col("embedding"), F.col("embedding")).alias("s")
     ).collect()
     assert all(r["s"] is None for r in c)
 
@@ -488,7 +488,7 @@ def test_vectorized_udfs_handle_all_null_batches(spark):
     rows = {
         r["vec_id"]: r["s"]
         for r in mixed.select(
-            "vec_id", cosine_pandas()(F.col("a"), F.col("b")).alias("s")
+            "vec_id", cosine_arrow()(F.col("a"), F.col("b")).alias("s")
         ).collect()
     }
     assert rows[1] == pytest.approx(1.0) and rows[2] is None and rows[3] is None
@@ -502,7 +502,7 @@ def test_vectorized_lsh_and_cosine_bit_identical(spark):
 
     from ms_ocr_spark.operators.similarity import (
         cosine,
-        cosine_pandas,
+        cosine_arrow,
         lsh_bucket,
         lsh_buckets_arrow,
     )
@@ -537,7 +537,7 @@ def test_vectorized_lsh_and_cosine_bit_identical(spark):
         F.col("b.embedding").alias("y"),
     )
     jvm = pairs.withColumn("s", cosine(F.col("x"), F.col("y")))
-    pd_ = pairs.withColumn("s", cosine_pandas()(F.col("x"), F.col("y")))
+    pd_ = pairs.withColumn("s", cosine_arrow()(F.col("x"), F.col("y")))
     assert (
         jvm.select("i", "s").alias("j").join(pd_.select("i", "s").alias("q"), "i")
         .filter(F.col("j.s") != F.col("q.s")).count() == 0

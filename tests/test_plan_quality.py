@@ -89,7 +89,7 @@ def test_brute_force_topk_ships_corpus_once(spark):
     from ms_ocr_spark.queries import ann_brute_force_topk
 
     plan = _plan(ann_brute_force_topk(spark, "/root/testdata/sf0.001"))
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "Join" not in plan
     # the only exchange is the final per-query top-k window
     assert plan.count("Exchange") <= 1
@@ -175,7 +175,7 @@ def test_ivf_assignment_is_one_pass_and_join_is_ids_only(spark):
     from ms_ocr_spark.queries import ann_ivf_topk
 
     plan = _plan(ann_ivf_topk(spark, "/root/testdata/sf0.001"))
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "BatchEvalPython" not in plan
     join_lines = [
         l for l in plan.splitlines() if "Join" in l and "cell" in l

@@ -37,7 +37,7 @@ ALLOWED = {
         "relational MinHash that the Arrow minhash_signature_arrays_from_docs must equal"
     ),
     f"{PKG}.operators.similarity.cosine": (
-        "column-expression cosine that cosine_pandas must equal"
+        "column-expression cosine that cosine_arrow must equal"
     ),
     f"{PKG}.operators.similarity.lsh_bucket": (
         "column-expression bucket fold that lsh_buckets_arrow must equal"
@@ -192,3 +192,23 @@ def test_allowlist_names_unreached_definitions():
     assert ALLOWED.keys() <= every_def, sorted(ALLOWED.keys() - every_def)
     reached = _reached(edges, roots)
     assert not ALLOWED.keys() & reached, sorted(ALLOWED.keys() & reached)
+
+
+# The pandas side of PySpark's Python boundary; the product uses the Arrow
+# side only (`F.arrow_udf`, `mapInArrow`, `applyInArrow`, `toArrow`).
+PANDAS_IDIOM = {"pandas_udf", "mapInPandas", "applyInPandas", "toPandas"}
+
+
+def test_product_modules_use_the_arrow_udf_idiom():
+    modules, _ = _load()
+    offenders = set()
+    for m in modules.values():
+        if any(target.split(".")[0] == "pandas" for target in m.bindings.values()):
+            offenders.add(f"{m.name}: imports pandas")
+        for node in ast.walk(m.tree):
+            name = node.attr if isinstance(node, ast.Attribute) else getattr(node, "id", None)
+            if name in PANDAS_IDIOM:
+                offenders.add(f"{m.name}: {name}")
+    assert not offenders, "pandas UDF idiom in product modules:\n  " + "\n  ".join(
+        sorted(offenders)
+    )

@@ -41,6 +41,37 @@ def test_doc_repetition_stats_edge_docs(spark):
     assert rows[5]["dup_gram_frac"] == 0.0
 
 
+def test_token_kernels_match_python_loops():
+    """The shared Arrow kernels equal plain loops over each token list, on
+    a sliced batch whose NULL slot still spans values (`list_flatten`
+    skips them)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    rng = np.random.default_rng(3)
+    lists = [[f"w{rng.integers(6)}" for _ in range(rng.integers(0, 9))] for _ in range(40)]
+    offsets = np.r_[0, np.cumsum([len(t) for t in lists])].astype(np.int32)
+    nulls = np.zeros(len(lists), dtype=bool)
+    nulls[[3, 17]] = True
+    toks = pa.ListArray.from_arrays(
+        offsets, pa.array([w for t in lists for w in t]), mask=pa.array(nulls)
+    ).slice(2)
+    lists = [None if n else t for t, n in zip(lists, nulls)][2:]
+    row, pos, gram = dedup._windows(toks, 3)
+    want = [
+        (r, i, " ".join(t[i : i + 3]))
+        for r, t in enumerate(lists)
+        if t
+        for i in range(len(t) - 2)
+    ]
+    assert list(zip(row.tolist(), pos.tolist(), gram.to_pylist())) == want
+    n_tok, n_chars = dedup.token_counts(
+        toks, lambda v: [np.ones(len(v)), pc.utf8_length(v).to_numpy()]
+    )
+    assert n_tok.tolist() == [len(t) if t else 0 for t in lists]
+    assert n_chars.tolist() == [sum(map(len, t)) if t else 0 for t in lists]
+
+
 def test_minhash_udf_matches_relational_formula(spark):
     """The Arrow signature path must equal the (retained) relational
     aggregation over the shingle relation — including short-doc drops."""
@@ -153,6 +184,53 @@ def test_keep_first_matrix_equals_scalar_path(spark):
     assert fast == ref
 
 
+def test_keep_first_keeps_null_doc_boxes(spark):
+    """Boxes with a NULL doc_id are one document of their own: the
+    duplicate among them drops, the others stay (none may vanish)."""
+    from ms_ocr_spark.operators.boxes import dedup_overlap_keep_first
+
+    rows = [
+        ("d1", 1, 0, 0, 10, 10),
+        ("d1", 2, 20, 20, 30, 30),
+        (None, 3, 0, 0, 10, 10),
+        (None, 4, 0, 0, 10, 10),
+        (None, 5, 50, 50, 60, 60),
+    ]
+    df = spark.createDataFrame(
+        rows, "doc_id string, box_id long, x1 long, y1 long, x2 long, y2 long"
+    )
+    out = dedup_overlap_keep_first(df, threshold=0.5).collect()
+    assert sorted((r["doc_id"] or "", r["box_id"]) for r in out) == [
+        ("", 3), ("", 5), ("d1", 1), ("d1", 2)
+    ]
+
+
+def test_keep_first_documents_span_arrow_batches(spark):
+    """A document cut across Arrow batches keeps the same boxes as one
+    read whole: the stream carries the open document to the next batch."""
+    from ms_ocr_spark.operators.boxes import dedup_overlap_keep_first
+
+    rng = np.random.default_rng(7)
+    rows = []
+    for doc in [None, *range(5)]:
+        for b in range(int(rng.integers(1, 40))):
+            x1, y1 = int(rng.integers(0, 30)), int(rng.integers(0, 30))
+            rows.append((doc, b, x1, y1, x1 + int(rng.integers(1, 12)), y1 + 6))
+    df = spark.createDataFrame(
+        rows, "doc_id long, box_id long, x1 long, y1 long, x2 long, y2 long"
+    )
+    whole = {tuple(r) for r in dedup_overlap_keep_first(df, threshold=0.5).collect()}
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        cut = {tuple(r) for r in dedup_overlap_keep_first(df, threshold=0.5).collect()}
+    finally:
+        spark.conf.set(key, old)
+    assert cut == whole
+    assert {r[0] for r in whole} == {None, *range(5)}
+
+
 def test_brute_force_topk_null_vectors_rank_last(spark):
     """NULL corpus vectors keep the crossJoin's NULLS-LAST ranking: they
     fill trailing ranks (ordered by neighbor id) when a query has fewer
@@ -239,7 +317,7 @@ def test_embedding_neardup_bucket_path_matches_join_path(spark):
     pairs (and 6-dp sims) of the reference bucket self-join + pairwise
     cosine, including NULL vectors never pairing."""
     from ms_ocr_spark.operators.similarity import (
-        cosine_pandas,
+        cosine_arrow,
         embedding_neardup_pairs,
         lsh_buckets_arrow,
     )
@@ -271,7 +349,7 @@ def test_embedding_neardup_bucket_path_matches_join_path(spark):
         (r["id_a"], r["id_b"]): r["sim"]
         for r in a.join(b, "bucket")
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("sim", F.round(cosine_pandas()(F.col("v_a"), F.col("v_b")), 6))
+        .withColumn("sim", F.round(cosine_arrow()(F.col("v_a"), F.col("v_b")), 6))
         .filter(F.col("sim") >= 0.3)
         .select("id_a", "id_b", "sim")
         .collect()

@@ -87,8 +87,8 @@ def test_table_plan_is_arrow_batched_single_udf_stage(spark, tmp_path):
     media = spark.read.parquet(paths["tables_media"])
     cells = table_cells(detect_merges(grid_from_boxes(ocr_boxes(media))))
     plan = cells._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan  # Arrow-batched mapInPandas only
-    assert plan.count("MapInPandas") == 1
+    assert "BatchEvalPython" not in plan  # Arrow-batched mapInArrow only
+    assert plan.count("MapInArrow") == 1
 
 
 def test_table_multi_hit_cell_concat(spark):
