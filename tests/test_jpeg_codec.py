@@ -964,3 +964,92 @@ def test_truncated_entropy_data_raises():
         for tail in (b"", b"\xff\xd9"):
             with pytest.raises(Exception):
                 decode_media(cut + tail)
+
+
+# ------------------------------------------------------------ scope reasons
+def _segment_span(b: bytes, marker: int) -> tuple[int, int]:
+    """(start, end) of the first segment with `marker` in an encoder's
+    header (the encoders write no 0xFF pair before their first SOS)."""
+    i = b.find(bytes([0xFF, marker]))
+    return i, i + 2 + int.from_bytes(b[i + 2 : i + 4], "big")
+
+
+def _with_marker(b: bytes, old: int, new: int) -> bytes:
+    i, _ = _segment_span(b, old)
+    return b[: i + 1] + bytes([new]) + b[i + 2 :]
+
+
+def _with_sof(b: bytes, edit) -> bytes:
+    """`b` with its frame header payload replaced by `edit(payload)`."""
+    from ms_ocr_spark.extraction.ocr.jpeg import _seg
+
+    marker = 0xC0 if b.find(b"\xff\xc0") != -1 else 0xC2
+    i, j = _segment_span(b, marker)
+    return b[:i] + _seg(0xFF00 | marker, edit(bytearray(b[i + 4 : j]))) + b[j:]
+
+
+def _sos_before_sof(b: bytes) -> bytes:
+    i, j = _segment_span(b, 0xC0)
+    return b[:i] + b[j:-2] + b[i:j] + b[-2:]
+
+
+def _precision(bits: int):
+    def edit(p: bytearray) -> bytes:
+        p[0] = bits
+        return bytes(p)
+
+    return edit
+
+
+def _two_components(p: bytearray) -> bytes:
+    p[5] = 2
+    return bytes(p[: 6 + 2 * 3])
+
+
+def _reason_rows() -> dict:
+    from ms_ocr_spark.extraction.ocr.jpeg import encode_cmyk_jpeg
+
+    img = (np.arange(24 * 40).reshape(24, 40) % 251).astype(np.uint8)
+    rgb = np.stack([img, 255 - img, img // 2], axis=2)
+    g = encode_gray_jpeg(img)
+    c = encode_color_jpeg(rgb, "444")
+    dqt = _segment_span(g, 0xDB)
+    # name -> (stream, probe reason, exception the decoder raises on the
+    # parent and on the change; None where the two differ)
+    return {
+        "sos_before_sof": (_sos_before_sof(g), "truncated_jpeg", ValueError),
+        "sof_payload_5_bytes": (_with_sof(g, lambda p: bytes(p[:5])), "truncated_jpeg", None),
+        "precision_12_gray": (_with_sof(g, _precision(12)), "unsupported_jpeg_layout", None),
+        "precision_12_color": (_with_sof(c, _precision(12)), "unsupported_jpeg_layout", ValueError),
+        "precision_12_progressive": (
+            _with_sof(encode_gray_jpeg_progressive(img), _precision(12)),
+            "unsupported_jpeg_layout",
+            ValueError,
+        ),
+        "sof1": (_with_marker(g, 0xC0, 0xC1), "unsupported_jpeg_layout", ValueError),
+        "sof9": (_with_marker(g, 0xC0, 0xC9), "unsupported_jpeg_layout", ValueError),
+        "sof1_color": (_with_marker(c, 0xC0, 0xC1), "unsupported_jpeg_layout", ValueError),
+        "two_components": (_with_sof(c, _two_components), "unsupported_jpeg_layout", ValueError),
+        "progressive_cmyk": (
+            _with_marker(encode_cmyk_jpeg(rgb), 0xC0, 0xC2),
+            "unsupported_jpeg_layout",
+            ValueError,
+        ),
+        "ends_inside_dqt": (g[: (dqt[0] + dqt[1]) // 2], "truncated_jpeg", ValueError),
+        "ends_inside_sof": (g[: _segment_span(g, 0xC0)[0] + 7], "truncated_jpeg", None),
+        "ends_inside_dht": (g[: _segment_span(g, 0xC4)[0] + 30], "truncated_jpeg", None),
+    }
+
+
+@pytest.mark.parametrize("row", sorted(_reason_rows()))
+def test_scope_reason_table(row):
+    """Header classes the probe names: `jpeg_scope_reason` and
+    `media_status` give the reason, and the decoder raises."""
+    from ms_ocr_spark.extraction.pipeline import media_status
+
+    b, reason, exc = _reason_rows()[row]
+    assert jpeg_scope_reason(b) == reason
+    assert media_status(b, "jpeg", None) == (None, reason)
+    if exc is not None:
+        with pytest.raises(exc):
+            decode_gray_jpeg(b)
