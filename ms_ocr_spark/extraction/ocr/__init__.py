@@ -3,7 +3,7 @@ import numpy as np
 from .jpeg import decode_gray_jpeg, encode_gray_jpeg
 from .kernel import decode_image
 from .png import decode_gray, encode_gray
-from .tiff import decode_gray_tiff, encode_gray_tiff, tiff_dpi
+from .tiff import decode_gray_tiff, encode_gray_tiff
 
 
 def decode_media(buf: bytes) -> np.ndarray:
@@ -28,6 +28,5 @@ __all__ = [
     "encode_gray_jpeg",
     "decode_gray_tiff",
     "encode_gray_tiff",
-    "tiff_dpi",
     "decode_media",
 ]

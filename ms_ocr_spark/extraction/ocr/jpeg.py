@@ -13,7 +13,9 @@ successive approximation, EOB runs), restart intervals in both.  Out of
 scope: arithmetic coding, lossless/hierarchical frames and the other
 layouts `jpeg_scope_reason` classifies for the quarantine telemetry.
 The decoder reads DQT/DHT tables from the stream, so conforming streams
-from other encoders decode too.
+from other encoders decode too.  The scope probe, the side-value and
+APP14 readers and the decoder all walk the markers through one segment
+reader, `_segments`.
 
 Decoding: every scan loop (baseline, progressive DC first, AC first, AC
 refinement) inlines one table-driven bit reader (see "reader" below):
@@ -34,7 +36,9 @@ lossy round trip by construction.
 from __future__ import annotations
 
 import functools
+import re
 import struct
+from collections.abc import Iterator
 
 import numpy as np
 
@@ -409,167 +413,119 @@ def _scatter(z: np.ndarray, pos: list[int], val: list[int] | np.ndarray) -> None
     z.reshape(-1)[(p >> 8) * 64 + k] = val
 
 
-def _split_restart_segments(data: bytes) -> list[bytes]:
-    """Split entropy-coded data at RSTn markers (T.81 B.2.1.2): returns
-    the byte runs between restart markers, stopping at the first
-    non-restart marker (EOI/next segment).  Stuffed 0xFF00 pairs stay in
-    the segments (`_unstuff` removes them); fill bytes before markers are
-    consumed."""
-    segs: list[bytes] = []
-    cur = 0
-    n = len(data)
-    i = data.find(b"\xff")
-    while i != -1 and i + 1 < n:
-        if data[i + 1] == 0x00:  # stuffed data byte
-            i = data.find(b"\xff", i + 2)
-            continue
-        j = i  # fill bytes: 0xFF runs before the marker byte
-        while j + 1 < n and data[j + 1] == 0xFF:
-            j += 1
-        segs.append(data[cur:i])
-        if not (j + 1 < n and 0xD0 <= data[j + 1] <= 0xD7):
-            return segs  # real marker: end of scan
-        cur = j + 2
-        i = data.find(b"\xff", cur)
-    segs.append(data[cur:n])
-    return segs
+# ------------------------------------------------------------- segments
+# T.81 B.1.1 marker-segment syntax is read in one place: `_segments` walks
+# the markers and `_frame` parses and checks the frame header.  The scope
+# probe, the side-value and APP14 readers and the decoder all read
+# through these two, so they skip the same fill bytes and reject the same
+# frames; the probe names the reason that the decoder raises.
+
+_TRUNCATED = "truncated_jpeg"
+_UNSUPPORTED = "unsupported_jpeg_layout"
+# SOFn: 0xC0-0xCF except DHT (C4), JPG (C8) and DAC (CC)
+_SOF_MARKERS = frozenset(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
+# inside a scan's entropy-coded data every 0xFF is a stuffed data byte
+# (0xFF 0x00) or starts an RSTn marker, perhaps after 0xFF fill bytes;
+# the first other marker ends the scan
+_SCAN_END = re.compile(rb"\xff+[^\x00\xd0-\xd7\xff]")
+_RST = re.compile(rb"\xff+[\xd0-\xd7]")
 
 
-def _jpeg_frame_components(data: bytes) -> int | None:
-    """Component count from the first SOFn segment (marker walk, no
-    entropy scan); None when no frame header is found."""
+def _segments(data: bytes) -> Iterator[tuple[int, bytes]]:
+    """(marker, payload) of each marker segment after SOI, up to EOI or
+    the end of the data.  0xFF fill bytes before a marker (T.81 B.1.1.2)
+    and the standalone markers (RSTn, SOI, TEM) are skipped.  Resumed
+    after an SOS segment, it yields (0, the scan's entropy-coded data with
+    its RSTn markers), so a reader that stops at SOS scans no entropy
+    data.  A stream without SOI, out of marker alignment or ending inside
+    a segment raises ValueError("truncated_jpeg", what is wrong)."""
     if data[:2] != b"\xff\xd8":
-        return None
-    pos = 2
+        raise ValueError(_TRUNCATED, "no SOI marker")
     n = len(data)
-    while pos + 4 <= n:
+    pos = 2
+    while pos + 1 < n:
         if data[pos] != 0xFF:
-            return None
-        while pos + 4 <= n and data[pos + 1] == 0xFF:
-            pos += 1
-        if pos + 4 > n:
-            return None
+            raise ValueError(_TRUNCATED, "bad marker alignment")
         marker = data[pos + 1]
-        if marker in (0xD9, 0xDA):
-            return None
-        if 0xD0 <= marker <= 0xD8 or marker == 0x01:
-            pos += 2
+        if marker == 0xFF:  # fill byte
+            pos += 1
             continue
-        (seg_len,) = struct.unpack(">H", data[pos + 2 : pos + 4])
-        if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-            payload = data[pos + 4 : pos + 2 + seg_len]
-            if len(payload) >= 6:
-                return payload[5]
-            return None
-        pos += 2 + seg_len
-    return None
+        pos += 2
+        if marker == 0xD9:  # EOI
+            return
+        if 0xD0 <= marker <= 0xD8 or marker == 0x01:
+            continue
+        end = pos + int.from_bytes(data[pos : pos + 2], "big")
+        if not pos + 2 <= end <= n:
+            raise ValueError(_TRUNCATED, "truncated segment")
+        yield marker, data[pos + 2 : end]
+        pos = end
+        if marker == 0xDA:
+            m = _SCAN_END.search(data, end)
+            pos = m.start() if m else n
+            yield 0, data[end:pos]
+
+
+def _frame(
+    marker: int, payload: bytes, data: bytes
+) -> tuple[int, int, list[tuple[int, int, int, int]], int | None]:
+    """Parse and check one SOFn segment of `data` -> (height, width,
+    components as (id, h factor, v factor, quant table), Adobe APP14
+    transform of a 4-component frame, else None).
+
+    In scope: 8-bit baseline (SOF0) or progressive (SOF2) frames of 1, 3
+    or 4 components, sampling factors 1..4 in integer ratios, and
+    4-component frames only baseline with Adobe transform 0 (CMYK) or 2
+    (YCCK).  Any other frame raises ValueError(reason, what is wrong),
+    `reason` being the quarantine reason `jpeg_scope_reason` reports."""
+    if marker not in (0xC0, 0xC2):
+        raise ValueError(_UNSUPPORTED, f"SOF{marker & 0xF} frame")
+    if len(payload) < 6:
+        raise ValueError(_TRUNCATED, "short frame header")
+    prec, h, w, n_comp = struct.unpack(">BHHB", payload[:6])
+    if prec != 8:
+        raise ValueError(_UNSUPPORTED, f"{prec}-bit precision")
+    if n_comp not in (1, 3, 4):
+        raise ValueError(_UNSUPPORTED, f"{n_comp}-component frame")
+    transform = None
+    if n_comp == 4:
+        transform = adobe_app14_transform(data)
+        if marker == 0xC2 or transform not in (0, 2):
+            raise ValueError(_UNSUPPORTED, "4-component frame not baseline Adobe CMYK/YCCK")
+    if len(payload) < 6 + 3 * n_comp:
+        raise ValueError(_TRUNCATED, "short frame header")
+    comps = [
+        (payload[6 + 3 * i], payload[7 + 3 * i] >> 4, payload[7 + 3 * i] & 0xF, payload[8 + 3 * i])
+        for i in range(n_comp)
+    ]
+    if not all(1 <= fh <= 4 and 1 <= fv <= 4 for _, fh, fv, _ in comps):
+        raise ValueError(_UNSUPPORTED, "sampling factors outside 1..4")
+    hmax = max(c[1] for c in comps)
+    vmax = max(c[2] for c in comps)
+    # integer-ratio upsampling only (every layout cameras emit:
+    # 4:4:4/4:2:2/4:2:0/4:1:1/4:4:0); fractional ratios such as 3:2 are out
+    if any(hmax % fh or vmax % fv for _, fh, fv, _ in comps):
+        raise ValueError(_UNSUPPORTED, "non-integer sampling ratio")
+    return h, w, comps, transform
 
 
 def decode_gray_jpeg(data: bytes) -> np.ndarray:
-    """JFIF bytes -> uint8 HxW GRAY array (baseline sequential OR
-    progressive — SOF2 streams dispatch to the T.81 §G decoder, round 5).
-    Three-component YCbCr frames (round 6) decode through the
-    multi-component core and convert RGB->gray via the same BT.601
-    luminance as the PNG color path, matching the reference's
-    decode-then-gray order (`image_processor/main.py:58-63,189-207`).
+    """JPEG bytes -> uint8 HxW GRAY array, for every frame kind in scope
+    (see `_frame`).  Color frames decode through `decode_jpeg` and convert
+    RGB->gray via the same BT.601 luminance as the PNG color path,
+    matching the reference's decode-then-gray order
+    (`image_processor/main.py:58-63,189-207`).
 
     Tables (DQT/DHT) are read from the stream, so output from any
     conforming encoder inside the documented scope decodes — not just
     this module's.
     """
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    n_comp = _jpeg_frame_components(data)
-    if n_comp == 3:
-        from ms_ocr_spark.extraction.ocr.png import rgb_to_gray
+    img = decode_jpeg(data)
+    if img.ndim == 2:
+        return img
+    from ms_ocr_spark.extraction.ocr.png import rgb_to_gray
 
-        return rgb_to_gray(decode_jpeg_rgb(data))
-    if n_comp == 4:
-        from ms_ocr_spark.extraction.ocr.png import rgb_to_gray
-
-        return rgb_to_gray(decode_cmyk_jpeg_rgb(data))
-    if is_progressive_jpeg(data):
-        return decode_gray_jpeg_progressive(data)
-    pos = 2
-    quant: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], tuple] = {}
-    h = w = None
-    comp_q = 0
-    dc_id = ac_id = 0
-    restart_interval = 0
-    scan_start = None
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            raise ValueError("bad marker alignment")
-        marker = data[pos + 1]
-        if marker == 0xD9:  # EOI
-            break
-        (seg_len,) = struct.unpack(">H", data[pos + 2 : pos + 4])
-        payload = data[pos + 4 : pos + 2 + seg_len]
-        pos += 2 + seg_len
-        if marker == 0xDB:  # DQT (possibly several tables per segment)
-            _read_dqt(payload, quant)
-        elif marker == 0xC0:  # SOF0 baseline
-            _prec, h, w, n_comp = struct.unpack(">BHHB", payload[:6])
-            if n_comp != 1:
-                raise ValueError("only single-component (grayscale) JPEG supported")
-            comp_q = payload[8]
-        elif marker in (0xC1, 0xC2, 0xC3):
-            raise ValueError("non-baseline JPEG unsupported")
-        elif marker == 0xDD:  # DRI (restart interval in MCUs)
-            (restart_interval,) = struct.unpack(">H", payload[:2])
-        elif marker == 0xC4:  # DHT (possibly several tables)
-            _read_dht(payload, huff)
-        elif marker == 0xDA:  # SOS
-            dc_id, ac_id = payload[2] >> 4, payload[2] & 0xF
-            scan_start = pos
-            break
-    if h is None or scan_start is None:
-        raise ValueError("missing SOF/SOS")
-
-    q = quant[comp_q]
-    ph, pw = (h + 7) // 8 * 8, (w + 7) // 8 * 8
-    zz = np.zeros(((ph // 8) * (pw // 8), 64), dtype=np.int64)
-    # a one-component scan walks its blocks in raster order, whatever
-    # sampling factors the frame header declares
-    _dec_baseline_scan(
-        [zz], data[scan_start:], huff, [(0, dc_id, ac_id)], [(1, 1)],
-        pw // 8, ph // 8, h, w, restart_interval,
-    )
-    return _blocks_to_pixels(zz, q, h, w)
-
-
-def is_progressive_jpeg(data: bytes) -> bool:
-    """True when the frame header is progressive (SOF2/6/10/14) — the
-    `decode_gray_jpeg` dispatch predicate (round 5: SOF2 routes to the
-    progressive decoder; SOF6/10/14 raise there as unsupported frame
-    types).  Walks marker segments up to SOS; entropy data is never
-    scanned, so no false positives from 0xFFC2 byte pairs inside
-    compressed data."""
-    if data[:2] != b"\xff\xd8":
-        return False
-    pos = 2
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            return False
-        # T.81 B.1.1.2: markers may be preceded by any number of 0xFF
-        # fill bytes — skip them or a padded stream misreads the marker
-        # byte as a segment length
-        while pos + 4 <= len(data) and data[pos + 1] == 0xFF:
-            pos += 1
-        if pos + 4 > len(data):
-            return False
-        marker = data[pos + 1]
-        if marker in (0xC2, 0xC6, 0xCA, 0xCE):
-            return True
-        if marker in (0xD9, 0xDA):  # EOI / SOS: frame header already seen
-            return False
-        if 0xD0 <= marker <= 0xD8 or marker == 0x01:  # standalone markers
-            pos += 2
-            continue
-        (seg_len,) = struct.unpack(">H", data[pos + 2 : pos + 4])
-        pos += 2 + seg_len
-    return False
+    return rgb_to_gray(img)
 
 
 def encode_progressive_stub(h: int = 32, w: int = 64) -> bytes:
@@ -593,9 +549,8 @@ def encode_progressive_stub(h: int = 32, w: int = 64) -> bytes:
 # coefficient bands) and successive approximation (per-scan bit-plane
 # precision, Ah/Al), including cross-block EOB runs and the in-band
 # correction-bit protocol of refinement scans.  Algorithms follow the
-# public spec (T.81 figures G.3-G.7); no restart markers (scope cut —
-# deterministic fixtures never emit them, and a DRI stream raises
-# cleanly rather than decoding wrong).
+# public spec (T.81 figures G.3-G.7); restart intervals reset the DC
+# predictors and EOB runs at every RSTn.
 #
 # The encoder exists to make REAL fixtures (datagen progressive tier): a
 # 6-scan script covering every decoder path — DC first (Al=1), DC refine,
@@ -840,7 +795,7 @@ def _restart_chunks(entropy: bytes, units: list, step: int) -> list[tuple[bytes,
     without DRI, else one per `step` units with as many RSTn segments."""
     if not step:
         return [(entropy, units)]
-    segs = _split_restart_segments(entropy)
+    segs = _RST.split(entropy)
     chunks = [units[lo : lo + step] for lo in range(0, len(units), step)]
     if len(segs) != len(chunks):
         raise ValueError("restart segment count mismatch")
@@ -983,23 +938,12 @@ def _dec_ac_refine(
     _check_exhausted(i, nb, total)
 
 
-def decode_gray_jpeg_progressive(data: bytes) -> np.ndarray:
-    """Progressive (SOF2) grayscale JFIF bytes -> uint8 HxW array.
-
-    Round 6: dispatches to the component-generic T.81 §G core
-    (`_decode_jpeg_planes`), which also carries restart-interval
-    (DRI/RSTn) support — every scan segment re-byte-aligns with DC
-    predictors and EOB runs reset.  `tests/test_decode_pin.py` pins its
-    output on the progressive gray corpora."""
-    return _decode_jpeg_planes(data, expect_comps=1)[0]
-
-
 def jpeg_scope_reason(data: bytes) -> str | None:
     """Decode-scope probe (header-only, no pixel work): None when the
-    stream is inside this codec's scope (single-component 8-bit baseline
-    OR progressive), else a quarantine reason:
+    stream is inside this codec's scope (see `_frame`), else a quarantine
+    reason:
 
-      * `truncated_jpeg`           — SOI present but the marker walk hits
+      * `truncated_jpeg`           — no SOI, a broken marker walk, or
                                      EOI/end-of-data before a scan
       * `unsupported_jpeg_layout`  — component counts other than
                                      1/3/4; 4-component frames that are
@@ -1011,74 +955,19 @@ def jpeg_scope_reason(data: bytes) -> str | None:
                                      arithmetic coding; lossless/
                                      differential/hierarchical frames
 
-    Final round-6 scope: 3-component (YCbCr) baseline AND progressive
-    decode, baseline 4-component CMYK (transform 0) and YCCK (transform
-    2) decode, progressive restart intervals decode; what remains is
-    the genuinely exotic tail listed above."""
-    if data[:2] != b"\xff\xd8":
-        return "truncated_jpeg"
-    pos = 2
-    n = len(data)
-    saw_sof = False
-    progressive = False
-    saw_dri = False
-    while pos + 2 <= n:
-        if data[pos] != 0xFF:
-            return "truncated_jpeg"
-        while pos + 2 <= n and data[pos + 1] == 0xFF:
-            pos += 1
-        if pos + 2 > n:
-            return "truncated_jpeg"
-        marker = data[pos + 1]
-        if marker == 0xD9:  # EOI before any scan
-            return "truncated_jpeg"
-        if marker == 0xDA:  # SOS
-            if not saw_sof:
-                return "truncated_jpeg"
-            # restart intervals decode in BOTH the baseline (round 5)
-            # and progressive (round 6) paths — no longer a scope gate
-            return None
-        if marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7,
-                      0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            return "unsupported_jpeg_layout"
-        if 0xD0 <= marker <= 0xD8 or marker == 0x01:
-            pos += 2
-            continue
-        if pos + 4 > n:
-            return "truncated_jpeg"
-        (seg_len,) = struct.unpack(">H", data[pos + 2 : pos + 4])
-        payload = data[pos + 4 : pos + 2 + seg_len]
-        if marker == 0xDD:
-            saw_dri = True
-        if marker in (0xC0, 0xC2):
-            if len(payload) < 6:
-                return "truncated_jpeg"
-            prec, _h, _w, n_comp = struct.unpack(">BHHB", payload[:6])
-            if n_comp not in (1, 3, 4) or prec != 8:
-                return "unsupported_jpeg_layout"
-            if n_comp == 4 and (
-                adobe_app14_transform(data) not in (0, 2)
-                or marker == 0xC2
-            ):
-                # 4-component needs the Adobe APP14 tag with transform 0
-                # (CMYK) or 2 (YCCK, round 6); untagged 4-comp and
-                # progressive CMYK stay out of scope
-                return "unsupported_jpeg_layout"
-            if len(payload) < 6 + 3 * n_comp:
-                return "truncated_jpeg"
-            fs = []
-            for ci in range(n_comp):
-                hv = payload[7 + ci * 3]
-                fs.append((hv >> 4, hv & 0xF))
-            if not all(1 <= fh <= 4 and 1 <= fv <= 4 for fh, fv in fs):
-                return "unsupported_jpeg_layout"
-            fhm, fvm = max(f[0] for f in fs), max(f[1] for f in fs)
-            if any(fhm % fh or fvm % fv for fh, fv in fs):
-                return "unsupported_jpeg_layout"  # fractional ratio
-            saw_sof = True
-            progressive = marker == 0xC2
-        pos += 2 + seg_len
-    return "truncated_jpeg"
+    The decoder raises on every stream rejected here, with this reason as
+    the ValueError's first argument."""
+    saw_frame = False
+    try:
+        for marker, payload in _segments(data):
+            if marker in _SOF_MARKERS:
+                _frame(marker, payload, data)
+                saw_frame = True
+            elif marker == 0xDA:
+                return None if saw_frame else _TRUNCATED
+    except ValueError as e:
+        return e.args[0]
+    return _TRUNCATED
 
 
 def jpeg_side_values(data: bytes) -> dict:
@@ -1090,28 +979,11 @@ def jpeg_side_values(data: bytes) -> dict:
     from ms_ocr_spark.extraction.ocr.icc import icc_profile_name
 
     out: dict = {"dpi": None, "icc_name": None, "orientation": None}
-    if data[:2] != b"\xff\xd8":
-        return out
-    pos = 2
-    n = len(data)
     icc_chunks: list[tuple[int, bytes]] = []
     try:
-        while pos + 4 <= n:
-            if data[pos] != 0xFF:
+        for marker, payload in _segments(data):
+            if marker == 0xDA:
                 break
-            while pos + 4 <= n and data[pos + 1] == 0xFF:
-                pos += 1
-            if pos + 4 > n:
-                break
-            marker = data[pos + 1]
-            if marker in (0xD9, 0xDA):
-                break
-            if 0xD0 <= marker <= 0xD8 or marker == 0x01:
-                pos += 2
-                continue
-            (seg_len,) = struct.unpack(">H", data[pos + 2 : pos + 4])
-            payload = data[pos + 4 : pos + 2 + seg_len]
-            pos += 2 + seg_len
             if marker == 0xE0 and payload[:5] == b"JFIF\x00":
                 units, xd, _yd = struct.unpack(">BHH", payload[7:12])
                 if units == 1:
@@ -1132,7 +1004,7 @@ def jpeg_side_values(data: bytes) -> dict:
                             )[0]
             elif marker == 0xE2 and payload[:12] == b"ICC_PROFILE\x00":
                 icc_chunks.append((payload[12], payload[14:]))
-    except (struct.error, IndexError):
+    except (ValueError, struct.error, IndexError):
         pass
     if icc_chunks:
         profile = b"".join(c for _, c in sorted(icc_chunks))
@@ -1479,118 +1351,73 @@ def encode_color_jpeg_progressive(
     )
 
 
-def _scan_entropy_end(data: bytes, pos: int) -> int:
-    """Index just past the entropy-coded data starting at `pos`: the
-    first 0xFF followed by a non-stuffing, non-RSTn byte."""
-    n = len(data)
-    end = data.find(b"\xff", pos)
-    while end != -1 and end + 1 < n:
-        nxt = data[end + 1]
-        if nxt != 0x00 and not 0xD0 <= nxt <= 0xD7:
-            return end
-        end = data.find(b"\xff", end + 1)
-    return max(pos, n - 1)
+def decode_jpeg(data: bytes) -> np.ndarray:
+    """JPEG bytes -> uint8 pixels: HxW for a 1-component frame, HxWx3 RGB
+    for a 3-component YCbCr frame (JFIF BT.601) or a 4-component Adobe
+    frame — transform 0 stores CMYK inverted, transform 2 (YCCK) stores
+    the inverted CMY channels through the YCbCr transform and K scalar."""
+    planes, transform = _decode_jpeg_planes(data)
+    if len(planes) == 1:
+        return planes[0]
+    if len(planes) == 4 and transform == 0:
+        cmy = [255 - p for p in planes[:3]]
+    else:
+        rgb = ycbcr_to_rgb(*[p.astype(np.float64) for p in planes[:3]])
+        if len(planes) == 3:
+            return rgb
+        cmy = [255 - rgb[:, :, i] for i in range(3)]
+    return cmyk_to_rgb(*cmy, 255 - planes[3])
 
 
-def decode_jpeg_rgb(data: bytes) -> np.ndarray:
-    """3-component YCbCr JFIF bytes -> uint8 HxWx3 RGB (baseline OR
-    progressive, sampling factors 1..2, baseline restart intervals).
+def _decode_jpeg_planes(data: bytes) -> tuple[list[np.ndarray], int | None]:
+    """The decode core for every frame kind -> (per-component uint8 planes
+    at FULL image resolution, subsampled chroma pixel-replicated up; the
+    Adobe transform of a 4-component frame).
 
-    One unified marker walk: tables (DQT/DHT) read from the stream,
-    coefficients accumulated per component in MCU-padded block arrays,
-    then per-plane IDCT, chroma upsampling by pixel replication (JFIF
-    box placement), and the BT.601 inverse transform."""
-    planes = _decode_jpeg_planes(data, expect_comps=3)
-    return ycbcr_to_rgb(*[p.astype(np.float64) for p in planes])
-
-
-def _decode_jpeg_planes(data: bytes, expect_comps: int) -> list[np.ndarray]:
-    """Shared multi-component decode core -> per-component uint8 planes
-    at FULL image resolution (subsampled chroma pixel-replicated up)."""
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
-    n = len(data)
+    Tables (DQT/DHT/DRI) are read from the stream wherever they appear;
+    coefficients accumulate per component in MCU-padded block arrays
+    (baseline scans, progressive DC and AC scans), then each plane takes
+    one IDCT."""
     quant: dict[int, np.ndarray] = {}
     huff: dict[tuple[int, int], tuple] = {}
-    h = w = None
-    progressive = False
     comps: list[tuple[int, int, int, int]] = []  # (cid, fh, fv, tq)
-    factors: list[tuple[int, int]] = []
-    zz: list[np.ndarray] = []
-    mcux = mcuy = 0
     restart_interval = 0
-    while pos + 2 <= n:
-        if data[pos] != 0xFF:
-            raise ValueError("bad marker alignment")
-        while pos + 2 <= n and data[pos + 1] == 0xFF:
-            pos += 1  # T.81 B.1.1.2 fill bytes
-        if pos + 2 > n:
-            break
-        marker = data[pos + 1]
-        pos += 2
-        if marker == 0xD9:
-            break
-        if 0xD0 <= marker <= 0xD8 or marker == 0x01:
-            continue
-        if pos + 2 > n:
-            raise ValueError("truncated segment")
-        (seg_len,) = struct.unpack(">H", data[pos : pos + 2])
-        payload = data[pos + 2 : pos + seg_len]
-        pos += seg_len
+    n_scans = 0
+    segments = _segments(data)
+    for marker, payload in segments:
         if marker == 0xDB:
             _read_dqt(payload, quant)
         elif marker == 0xC4:
             _read_dht(payload, huff)
         elif marker == 0xDD:
             (restart_interval,) = struct.unpack(">H", payload[:2])
-        elif marker in (0xC0, 0xC2):
+        elif marker in _SOF_MARKERS:
+            h, w, comps, transform = _frame(marker, payload, data)
             progressive = marker == 0xC2
-            prec, h, w, n_comp = struct.unpack(">BHHB", payload[:6])
-            if prec != 8:
-                raise ValueError("only 8-bit precision supported")
-            if n_comp != expect_comps:
-                raise ValueError(f"expected {expect_comps}-component frame")
-            for ci in range(n_comp):
-                cid = payload[6 + ci * 3]
-                fh, fv = payload[7 + ci * 3] >> 4, payload[7 + ci * 3] & 0xF
-                tq = payload[8 + ci * 3]
-                if not (1 <= fh <= 4 and 1 <= fv <= 4):
-                    raise ValueError("sampling factors outside 1..4")
-                comps.append((cid, fh, fv, tq))
-                factors.append((fh, fv))
+            factors = [(fh, fv) for _, fh, fv, _ in comps]
             hmax = max(f[0] for f in factors)
             vmax = max(f[1] for f in factors)
-            # integer-ratio upsampling only (covers every layout real
-            # cameras emit: 4:4:4/4:2:2/4:2:0/4:1:1/4:4:0 — round 7);
-            # fractional ratios (e.g. 3:2) stay out of scope
-            if any(hmax % fh or vmax % fv for fh, fv in factors):
-                raise ValueError("non-integer sampling ratio")
             mcux = (w + 8 * hmax - 1) // (8 * hmax)
             mcuy = (h + 8 * vmax - 1) // (8 * vmax)
             zz = [
                 np.zeros((mcux * fh * mcuy * fv, 64), dtype=np.int64)
                 for fh, fv in factors
             ]
-        elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7,
-                        0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError("unsupported JPEG frame type")
         elif marker == 0xDA:
             if not comps:
-                raise ValueError("SOS before SOF")
+                raise ValueError(_TRUNCATED, "SOS before SOF")
+            _, entropy = next(segments)
+            n_scans += 1
             ns = payload[0]
             scan_comps: list[tuple[int, int, int]] = []  # (ci, td, ta)
             for si in range(ns):
                 cid = payload[1 + si * 2]
                 tdta = payload[2 + si * 2]
-                ci = next(i for i, c in enumerate(comps) if c[0] == cid)
+                ci = [c[0] for c in comps].index(cid)  # ValueError if absent
                 scan_comps.append((ci, tdta >> 4, tdta & 0xF))
             ss, se = payload[1 + ns * 2], payload[2 + ns * 2]
             ahal = payload[3 + ns * 2]
             ah, al = ahal >> 4, ahal & 0xF
-            end = _scan_entropy_end(data, pos)
-            entropy = data[pos:end]
-            pos = end
             if not progressive:
                 _dec_baseline_scan(
                     zz, entropy, huff, scan_comps, factors,
@@ -1637,10 +1464,8 @@ def _decode_jpeg_planes(data: bytes, expect_comps: int) -> list[np.ndarray]:
                         rows = z[blocks].tolist()
                         _dec_ac_refine(seg, tab, blocks, rows, ss, se, al, cpos, cval)
                 _scatter(z, cpos, np.array(cval, dtype=np.int64) << al if ah == 0 else cval)
-    if not comps or h is None:
-        raise ValueError("missing SOF/SOS")
-    hmax = max(f[0] for f in factors)
-    vmax = max(f[1] for f in factors)
+    if not n_scans:
+        raise ValueError(_TRUNCATED, "missing SOF/SOS")
     out: list[np.ndarray] = []
     for (cid, fh, fv, tq), z in zip(comps, zz):
         bh, bw_ = mcuy * fv, mcux * fh
@@ -1653,7 +1478,7 @@ def _decode_jpeg_planes(data: bytes, expect_comps: int) -> list[np.ndarray]:
                 np.repeat(plane, vmax // fv, axis=0), hmax // fh, axis=1
             )
         out.append(plane[:h, :w])
-    return out
+    return out, transform
 
 
 def _scan_units(
@@ -1773,7 +1598,7 @@ def _dec_baseline_scan(
     single-component scan over its in-range block grid) with RSTn
     restart segments — every component's DC predictor resets."""
     units, per_mcu = _scan_units(scan_comps, factors, mcux, mcuy, h, w)
-    segments = _split_restart_segments(entropy)
+    segments = _RST.split(entropy)
     step = restart_interval * per_mcu or len(units) or 1
     pos: list[list[int]] = [[] for _ in scan_comps]
     val: list[list[int]] = [[] for _ in scan_comps]
@@ -1804,8 +1629,9 @@ def encode_lossless_stub(h: int = 32, w: int = 64) -> bytes:
 # values are stored INVERTED (0xFF = no ink).  The reference decodes
 # them via PIL (`image_processor/main.py:58-63`, mode "CMYK") and grays
 # the RGB conversion.  The T.81 machinery here is component-generic, so
-# this section is only: RGB<->CMYK converters, the APP14 probe, a
-# 4-component baseline encoder (4:4:4), and the gray dispatch.  Scope:
+# this section is only: RGB<->CMYK converters, the APP14 probe and the
+# 4-component baseline encoders (4:4:4); `decode_jpeg` converts the
+# decoded planes to RGB.  Scope:
 # baseline only, Adobe transforms 0 (plain CMYK) AND 2 (YCCK — the
 # inverted CMY channels ride the standard YCbCr transform with K
 # scalar, final round-6 commit); untagged or unknown-transform
@@ -1846,27 +1672,16 @@ def cmyk_to_rgb(c, m, y, k) -> np.ndarray:
 
 def adobe_app14_transform(data: bytes) -> int | None:
     """Color-transform byte of the Adobe APP14 segment (0=CMYK/RGB,
-    1=YCbCr, 2=YCCK), or None when absent — header marker walk only.
-    Skips 0xFF fill bytes before each marker (T.81 B.1.1.2), same as
-    `_jpeg_frame_components` (ADVICE r6)."""
-    pos = 2
-    n = len(data)
-    while pos + 4 <= n and data[pos] == 0xFF:
-        while pos + 4 <= n and data[pos + 1] == 0xFF:
-            pos += 1
-        if pos + 4 > n:
-            return None
-        marker = data[pos + 1]
-        if marker in (0xD9, 0xDA):
-            return None
-        if 0xD0 <= marker <= 0xD8 or marker == 0x01:
-            pos += 2
-            continue
-        (seg_len,) = struct.unpack(">H", data[pos + 2 : pos + 4])
-        if marker == 0xEE and data[pos + 4 : pos + 9] == b"Adobe":
-            payload = data[pos + 4 : pos + 2 + seg_len]
-            return payload[11] if len(payload) >= 12 else None
-        pos += 2 + seg_len
+    1=YCbCr, 2=YCCK), or None when absent — header-only, through
+    `_segments`, so fill bytes before a marker do not hide it."""
+    try:
+        for marker, payload in _segments(data):
+            if marker == 0xDA:
+                break
+            if marker == 0xEE and payload[:5] == b"Adobe":
+                return payload[11] if len(payload) >= 12 else None
+    except ValueError:
+        pass
     return None
 
 
@@ -1950,27 +1765,3 @@ def encode_ycck_jpeg(
     ] + [255 - planes4[3]]
     return _encode_4comp(stored, rgb.shape[0], rgb.shape[1], 2,
                          dpi, icc_name, exif_orientation)
-
-
-def decode_cmyk_jpeg_rgb(data: bytes) -> np.ndarray:
-    """4-component Adobe JPEG -> uint8 HxWx3 RGB.  Transform 0 (plain
-    CMYK, samples inverted) and transform 2 (YCCK, round 6: the CMY
-    channels ride the YCbCr transform) both decode; anything else
-    raises."""
-    tr = adobe_app14_transform(data)
-    if tr not in (0, 2):
-        raise ValueError("4-component JPEG without Adobe APP14 transform 0/2")
-    planes = _decode_jpeg_planes(data, expect_comps=4)
-    if tr == 2:
-        inv_rgbish = ycbcr_to_rgb(
-            planes[0].astype(np.float64),
-            planes[1].astype(np.float64),
-            planes[2].astype(np.float64),
-        )
-        c = 255 - inv_rgbish[:, :, 0]
-        m = 255 - inv_rgbish[:, :, 1]
-        y = 255 - inv_rgbish[:, :, 2]
-        k = 255 - planes[3]
-        return cmyk_to_rgb(c, m, y, k)
-    c, m, y, k = [255 - p for p in planes]  # undo the Adobe inversion
-    return cmyk_to_rgb(c, m, y, k)

@@ -586,7 +586,7 @@ def tiff_scope_reason(data: bytes) -> str | None:
     """None when the file is inside this codec's decode scope, else a
     short reason string — a HEADER-ONLY probe (IFD tags, no pixel work)
     for quarantine telemetry, the TIFF analog of
-    `jpeg.is_progressive_jpeg`.  Malformed structure returns None (the
+    `jpeg.jpeg_scope_reason`.  Malformed structure returns None (the
     decode then raises, which `pipeline.media_status` reports as
     `decode_error:<ExceptionClass>`)."""
     try:
@@ -614,34 +614,23 @@ def tiff_scope_reason(data: bytes) -> str | None:
     return None
 
 
-def tiff_dpi(data: bytes) -> float | None:
-    """X-resolution in dots/inch when present with inch units, else None
-    (metadata side-channel parity with `jpeg.jpeg_side_values`)."""
-    try:
-        tags, _ = _parse(data)
-    except (ValueError, struct.error, IndexError):
-        return None
-    if _T_XRES not in tags:
-        return None
-    unit = tags.get(_T_RES_UNIT, [2])[0]
-    if unit == 2:
-        return float(tags[_T_XRES][0])
-    if unit == 3:  # dots/cm
-        return float(tags[_T_XRES][0]) * 2.54
-    return None
-
-
 def tiff_side_values(data: bytes) -> dict:
     """Decode side-values (S5 parity, round 5): XResolution dpi,
     Orientation (tag 274), ICC profile name (tag 34675 'desc').
     Malformed structure degrades to null fields."""
     from ms_ocr_spark.extraction.ocr.icc import icc_profile_name
 
-    out: dict = {"dpi": tiff_dpi(data), "icc_name": None, "orientation": None}
+    out: dict = {"dpi": None, "icc_name": None, "orientation": None}
     try:
         tags, _ = _parse(data)
     except (ValueError, struct.error, IndexError):
         return out
+    if _T_XRES in tags:
+        unit = tags.get(_T_RES_UNIT, [2])[0]  # 2 = inch (default), 3 = cm
+        if unit == 2:
+            out["dpi"] = float(tags[_T_XRES][0])
+        elif unit == 3:
+            out["dpi"] = float(tags[_T_XRES][0]) * 2.54
     if _T_ORIENTATION in tags and tags[_T_ORIENTATION]:
         out["orientation"] = int(tags[_T_ORIENTATION][0])
     if _T_ICC in tags:

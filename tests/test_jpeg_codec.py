@@ -91,12 +91,21 @@ def test_jpeg_tier_ocr_exact():
 
 # ---------------------------------------------------------------- progressive
 from ms_ocr_spark.extraction.ocr.jpeg import (  # noqa: E402
+    _SOF_MARKERS,
+    _segments,
     encode_gray_jpeg_progressive,
     encode_progressive_stub,
-    is_progressive_jpeg,
     jpeg_scope_reason,
 )
 from codec_stubs import encode_multicomponent_stub  # noqa: E402
+
+
+def _sof(b: bytes) -> tuple[int | None, bytes]:
+    """(marker, payload) of a JPEG's frame header as the codec's segment
+    reader finds it; (None, b"") for a stream without one."""
+    if b[:3] != b"\xff\xd8\xff":
+        return None, b""
+    return next(((m, p) for m, p in _segments(b) if m in _SOF_MARKERS), (None, b""))
 
 
 def _image_zoo() -> list[np.ndarray]:
@@ -127,7 +136,7 @@ def test_progressive_decode_bit_identical_to_baseline():
     precision, so progressive decode == baseline decode EXACTLY."""
     for img in _image_zoo():
         pb = encode_gray_jpeg_progressive(img)
-        assert is_progressive_jpeg(pb)
+        assert _sof(pb)[0] == 0xC2
         assert jpeg_scope_reason(pb) is None
         assert np.array_equal(
             decode_gray_jpeg(pb), decode_gray_jpeg(encode_gray_jpeg(img))
@@ -208,7 +217,7 @@ def test_progressive_tier_ocr_exact():
     n_prog = 0
     for row in media.to_pylist():
         buf = bytes(row["payload"])
-        if is_progressive_jpeg(buf):
+        if _sof(buf)[0] == 0xC2:
             n_prog += 1
         assert decode_image(decode_media(buf)) == row["truth_text"]
     assert n_prog > 0
@@ -293,7 +302,7 @@ def test_dri_in_scope_for_baseline_and_progressive():
     for ri in (1, 4, 11):
         pb = encode_gray_jpeg_progressive(img, restart_interval=ri)
         assert jpeg_scope_reason(pb) is None
-        assert is_progressive_jpeg(pb)
+        assert _sof(pb)[0] == 0xC2
         assert np.array_equal(decode_gray_jpeg(pb), base), ri
     # declared-but-absent restarts: malformed, quarantined at decode
     pb = encode_gray_jpeg_progressive(img)
@@ -308,17 +317,17 @@ def test_color_progressive_restart_intervals():
     progressive decodes bit-identically to the no-DRI encoding."""
     rgb = _color_zoo()[1]
     for samp in ("444", "420"):
-        base = decode_jpeg_rgb(encode_color_jpeg_progressive(rgb, samp))
+        base = decode_jpeg(encode_color_jpeg_progressive(rgb, samp))
         for ri in (1, 3):
             b = encode_color_jpeg_progressive(rgb, samp, restart_interval=ri)
             assert jpeg_scope_reason(b) is None
-            assert np.array_equal(decode_jpeg_rgb(b), base), (samp, ri)
+            assert np.array_equal(decode_jpeg(b), base), (samp, ri)
 
 
 # ------------------------------------------------------------------- color
 from ms_ocr_spark.extraction.ocr.jpeg import (  # noqa: E402
     _box_downsample,
-    decode_jpeg_rgb,
+    decode_jpeg,
     encode_color_jpeg,
     encode_color_jpeg_progressive,
     rgb_to_ycbcr,
@@ -358,7 +367,7 @@ def test_color_roundtrip_within_subsampling_loss():
         for samp in ("444", "420"):
             ref = rgb if samp == "444" else _ideal_420(rgb)
             for enc in (encode_color_jpeg, encode_color_jpeg_progressive):
-                out = decode_jpeg_rgb(enc(rgb, samp))
+                out = decode_jpeg(enc(rgb, samp))
                 assert out.shape == rgb.shape
                 err = np.abs(out.astype(int) - ref.astype(int)).max()
                 assert err <= 8, (samp, enc.__name__, err)
@@ -385,7 +394,7 @@ def test_color_luminance_invariant_under_chroma_subsampling():
         src = rgb_to_gray(rgb)
         for samp in ("444", "420"):
             for enc in (encode_color_jpeg, encode_color_jpeg_progressive):
-                got = rgb_to_gray(decode_jpeg_rgb(enc(rgb, samp)))
+                got = rgb_to_gray(decode_jpeg(enc(rgb, samp)))
                 assert np.array_equal(got < 128, src < 128), (ink, samp)
                 err = np.abs(got.astype(int) - src.astype(int)).max()
                 assert err <= 32, (ink, samp, enc.__name__, err)
@@ -398,7 +407,7 @@ def test_color_gray_dispatch_and_scope():
         p = encode_color_jpeg_progressive(rgb, samp)
         assert jpeg_scope_reason(b) is None
         assert jpeg_scope_reason(p) is None
-        assert is_progressive_jpeg(p) and not is_progressive_jpeg(b)
+        assert _sof(p)[0] == 0xC2 and _sof(b)[0] != 0xC2
         # decode_gray_jpeg dispatches 3-component frames through the
         # color core -> BT.601 gray
         g = decode_gray_jpeg(b)
@@ -407,11 +416,11 @@ def test_color_gray_dispatch_and_scope():
 
 def test_color_restart_intervals():
     rgb = _color_zoo()[0]
-    plain = decode_jpeg_rgb(encode_color_jpeg(rgb, "420"))
+    plain = decode_jpeg(encode_color_jpeg(rgb, "420"))
     for ri in (1, 3, 7):
         b = encode_color_jpeg(rgb, "420", restart_interval=ri)
         assert jpeg_scope_reason(b) is None
-        assert np.array_equal(decode_jpeg_rgb(b), plain), ri
+        assert np.array_equal(decode_jpeg(b), plain), ri
 
 
 def test_color_side_values():
@@ -550,7 +559,7 @@ def test_color_422_roundtrip():
         for enc in (encode_color_jpeg, encode_color_jpeg_progressive):
             b = enc(rgb, "422")
             assert jpeg_scope_reason(b) is None
-            err = np.abs(decode_jpeg_rgb(b).astype(int) - ref.astype(int)).max()
+            err = np.abs(decode_jpeg(b).astype(int) - ref.astype(int)).max()
             assert err <= 8, (enc.__name__, err)
 
 
@@ -583,7 +592,7 @@ def test_cmyk_adobe_round_trip():
     from ms_ocr_spark.extraction.ocr.jpeg import (
         adobe_app14_transform,
         cmyk_to_rgb,
-        decode_cmyk_jpeg_rgb,
+        decode_jpeg,
         encode_cmyk_jpeg,
         jpeg_side_values,
         rgb_to_cmyk,
@@ -596,7 +605,7 @@ def test_cmyk_adobe_round_trip():
         assert jpeg_scope_reason(b) is None
         ideal = cmyk_to_rgb(*rgb_to_cmyk(rgb))
         err = np.abs(
-            decode_cmyk_jpeg_rgb(b).astype(int) - ideal.astype(int)
+            decode_jpeg(b).astype(int) - ideal.astype(int)
         ).max()
         assert err <= 4, err
         g = decode_gray_jpeg(b)
@@ -622,7 +631,7 @@ def test_ycck_round_trip():
     from ms_ocr_spark.extraction.ocr.jpeg import (
         adobe_app14_transform,
         cmyk_to_rgb,
-        decode_cmyk_jpeg_rgb,
+        decode_jpeg,
         encode_ycck_jpeg,
         rgb_to_cmyk,
     )
@@ -634,7 +643,7 @@ def test_ycck_round_trip():
         assert jpeg_scope_reason(b) is None
         ideal = cmyk_to_rgb(*rgb_to_cmyk(rgb))
         err = np.abs(
-            decode_cmyk_jpeg_rgb(b).astype(int) - ideal.astype(int)
+            decode_jpeg(b).astype(int) - ideal.astype(int)
         ).max()
         assert err <= 6, err
         g = decode_gray_jpeg(b)
@@ -665,14 +674,13 @@ def test_cmyk_untagged_and_unknown_transform_quarantine():
 
 
 def test_cmyk_tier_ocr_exact():
-    from ms_ocr_spark.extraction.ocr.jpeg import _jpeg_frame_components
     from ms_ocr_spark.sources.datagen import gen_corpus
 
     _, media, _, _, _ = gen_corpus(40, seed=53, color_jpeg_pct=0.55, processes=1)
     n_cmyk = 0
     for row in media.to_pylist():
         buf = bytes(row["payload"])
-        if buf[:3] == b"\xff\xd8\xff" and _jpeg_frame_components(buf) == 4:
+        if _sof(buf)[1][5:6] == b"\x04":
             n_cmyk += 1
         assert decode_image(decode_media(buf)) == row["truth_text"]
     assert n_cmyk >= 3
@@ -1053,3 +1061,89 @@ def test_scope_reason_table(row):
     if exc is not None:
         with pytest.raises(exc):
             decode_gray_jpeg(b)
+
+
+@pytest.mark.parametrize("row", sorted(_reason_rows()))
+def test_decoder_raises_the_probe_reason(row):
+    """The decoder rejects every stream the probe quarantines: it raises
+    ValueError with the probe's reason as its first argument."""
+    b, reason, _ = _reason_rows()[row]
+    with pytest.raises(ValueError) as e:
+        decode_gray_jpeg(b)
+    assert e.value.args[0] == reason
+
+
+# -------------------------------------------------------------- fill bytes
+def _pad_after_soi(b: bytes) -> bytes:
+    """One T.81 B.1.1.2 fill byte (0xFF) before the first marker after SOI."""
+    return b[:2] + b"\xff" + b[2:]
+
+
+@pytest.mark.parametrize(
+    "encoder",
+    ["encode_gray_jpeg", "encode_gray_jpeg_progressive", "encode_color_jpeg", "encode_cmyk_jpeg"],
+)
+def test_fill_byte_after_soi_decodes(encoder):
+    """A fill byte after SOI leaves every frame kind in scope and decoding
+    to the unpadded pixels."""
+    from ms_ocr_spark.extraction.ocr import jpeg
+    from ms_ocr_spark.extraction.ocr.glyphs import render_text
+    from ms_ocr_spark.extraction.pipeline import media_status
+
+    gray = render_text("FILL 0xFF\nAFTER SOI")
+    img = gray if "gray" in encoder else np.stack([gray, 255 - gray // 2, gray], axis=2)
+    b = getattr(jpeg, encoder)(img)
+    padded = _pad_after_soi(b)
+    assert jpeg_scope_reason(padded) is None
+    assert np.array_equal(decode_media(padded), decode_media(b))
+    assert media_status(padded, "jpeg", None)[1] == "ok"
+
+
+def test_corpus_jpegs_in_scope_decode_plain_and_padded():
+    """Every cached-corpus JPEG the probe puts in scope decodes, and so does
+    the same stream with a fill byte after SOI, to the same pixels."""
+    import pyarrow.parquet as pq
+
+    from ms_ocr_spark import queries as Q
+
+    corpora = [Q._tier_paths(name) for name in Q._TIERS] + [Q._corpus_paths_quarantine()]
+    n = 0
+    for paths in corpora:
+        media = pq.read_table(paths["media_store"], columns=["media_ref", "payload"])
+        for ref, buf in zip(*(media.column(c).to_pylist() for c in ("media_ref", "payload"))):
+            if buf is None or buf[:3] != b"\xff\xd8\xff" or jpeg_scope_reason(buf) is not None:
+                continue
+            n += 1
+            padded = _pad_after_soi(buf)
+            assert jpeg_scope_reason(padded) is None, ref
+            assert np.array_equal(decode_media(padded), decode_media(buf)), ref
+    assert n == 172, n  # 95 gray baseline; 77 progressive, color or CMYK
+
+
+@pytest.mark.parametrize(
+    "encoder",
+    ["encode_gray_jpeg", "encode_gray_jpeg_progressive", "encode_color_jpeg",
+     "encode_color_jpeg_progressive", "encode_cmyk_jpeg"],
+)
+def test_stream_without_eoi_decodes(encoder):
+    """A stream that stops right after its last scan, with no EOI, decodes
+    to the full stream's pixels: the last scan's data runs to the end."""
+    from ms_ocr_spark.extraction.ocr import jpeg
+    from ms_ocr_spark.extraction.ocr.glyphs import render_text
+
+    gray = render_text("NO EOI\nMARKER 0123")
+    img = gray if "gray" in encoder else np.stack([gray, 255 - gray // 2, gray], axis=2)
+    b = getattr(jpeg, encoder)(img)
+    assert b[-2:] == b"\xff\xd9"
+    assert np.array_equal(decode_gray_jpeg(b[:-2]), decode_gray_jpeg(b))
+
+
+def test_scan_of_an_absent_component_is_a_value_error():
+    """An SOS naming a component the frame lacks fails as ValueError, not
+    as a StopIteration leaking out of the component lookup."""
+    from ms_ocr_spark.extraction.pipeline import media_status
+
+    b = encode_gray_jpeg(np.full((16, 16), 200, np.uint8))
+    i = b.find(b"\xff\xda")
+    bad = b[: i + 5] + b"\x07" + b[i + 6 :]  # component id 1 -> 7
+    assert media_status(bad, "jpeg", None) == (None, "decode_error:ValueError")

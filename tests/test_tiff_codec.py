@@ -13,7 +13,7 @@ from ms_ocr_spark.extraction.ocr import decode_image, decode_media
 from ms_ocr_spark.extraction.ocr.tiff import (
     decode_gray_tiff,
     encode_gray_tiff,
-    tiff_dpi,
+    tiff_side_values,
 )
 
 
@@ -34,8 +34,8 @@ def test_multi_strip_layout():
 
 def test_dpi_round_trip():
     img = np.zeros((16, 16), dtype=np.uint8)
-    assert tiff_dpi(encode_gray_tiff(img, dpi=300)) == 300.0
-    assert tiff_dpi(encode_gray_tiff(img)) is None
+    assert tiff_side_values(encode_gray_tiff(img, dpi=300))["dpi"] == 300.0
+    assert tiff_side_values(encode_gray_tiff(img))["dpi"] is None
 
 
 def _hand_built(img: np.ndarray, endian: str, photometric: int) -> bytes:
@@ -98,7 +98,7 @@ def test_variant_round_trip_lossless(comp, bits):
     img = rng.integers(0, 256, (77, 41), dtype=np.uint8)
     buf = encode_gray_tiff(img, dpi=200, compression=comp, bits=bits)
     assert np.array_equal(decode_gray_tiff(buf), img)
-    assert tiff_dpi(buf) == 200.0
+    assert tiff_side_values(buf)["dpi"] == 200.0
 
 
 def test_lzw_compresses_rendered_text():
