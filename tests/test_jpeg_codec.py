@@ -1022,8 +1022,8 @@ def _reason_rows() -> dict:
     g = encode_gray_jpeg(img)
     c = encode_color_jpeg(rgb, "444")
     dqt = _segment_span(g, 0xDB)
-    # name -> (stream, probe reason, exception the decoder raises on the
-    # parent and on the change; None where the two differ)
+    # name -> (stream, probe reason, exception class the decoder raises;
+    # None where earlier decoders raised another class or decoded it)
     return {
         "sos_before_sof": (_sos_before_sof(g), "truncated_jpeg", ValueError),
         "sof_payload_5_bytes": (_with_sof(g, lambda p: bytes(p[:5])), "truncated_jpeg", None),
