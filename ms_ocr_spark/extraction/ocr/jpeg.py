@@ -426,10 +426,13 @@ _UNSUPPORTED = "unsupported_jpeg_layout"
 _SOF_MARKERS = frozenset(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
 # inside a scan's entropy-coded data every 0xFF is a stuffed data byte
 # (0xFF 0x00) or starts an RSTn marker, perhaps after 0xFF fill bytes;
-# the first other marker ends the scan.  The patterns start with a literal
-# 0xFF, which `re` scans for quickly; a leading `\xff+` tries every byte.
-_SCAN_END = re.compile(rb"\xff\xff*[^\x00\xd0-\xd7\xff]")
-_RST = re.compile(rb"\xff\xff*[\xd0-\xd7]")
+# the first other marker ends the scan.  The patterns match the marker's
+# two bytes only, so a run of 0xFF is one linear pass (a repeat such as
+# `\xff*` before a class backtracks over the run at each of its bytes).
+# Fill bytes stay at the end of the entropy segment before the marker,
+# where `_unstuff` stops at the first of them.
+_SCAN_END = re.compile(rb"\xff[^\x00\xd0-\xd7\xff]")
+_RST = re.compile(rb"\xff[\xd0-\xd7]")
 
 
 def _segments(data: bytes) -> Iterator[tuple[int, bytes]]:
