@@ -8,14 +8,18 @@ restart-interval progressive color, Adobe CMYK and YCCK).  A payload
 that raises contributes `error`.  Digest 2 covers the `decode_image`
 text of every decoded corpus image, read with the `language` of the
 document that references it (NULL where the corpus has no `language`
-column).  Any codec or kernel change that moves one pixel or one
-character changes a digest.  No Spark session is needed.
+column).  Digest 3 covers the `media_status` status of every corpus
+payload whose magic bytes name an image format, in the same order.  Any
+codec or kernel change that moves one pixel or one character changes a
+digest 1 or 2, and any change to what a payload is quarantined for
+changes digest 3.  No Spark session is needed.
 """
 
 from __future__ import annotations
 
 import functools
 import hashlib
+from collections import Counter
 
 import numpy as np
 import pyarrow.parquet as pq
@@ -30,14 +34,51 @@ from ms_ocr_spark.extraction.ocr.jpeg import (
     encode_gray_jpeg,
     encode_ycck_jpeg,
 )
+from ms_ocr_spark.extraction.pipeline import media_status
 
 N_PAYLOADS = 1082
 PIXELS_SHA256 = "327845cf973fa8b70ad3db2b348385c6a99f3ec2a75d3029c91d6460c311a4e0"
 TEXT_SHA256 = "d81561dfe56a381044b65b2e0c0d60288aff300e350de101776965bc1ce64c3d"
+STATUS_SHA256 = "29337446da8b793304fcbe6eb17808200dac1e85b6aff7f8e28c47cfe0245f80"
+STATUS_COUNTS = {
+    ("jpeg", "ok"): 172,
+    ("jpeg", "truncated_jpeg"): 3,
+    ("jpeg", "unsupported_jpeg_layout"): 5,
+    ("png", "ok"): 857,
+    ("tiff", "ok"): 30,
+    ("tiff", "unsupported_tiff_layout"): 6,
+}
+_MAGIC = ((b"\x89PNG", "png"), (b"\xff\xd8\xff", "jpeg"), (b"II*\0", "tiff"), (b"MM\0*", "tiff"))
 
 
 def _corpus_paths() -> list[dict[str, str]]:
     return [Q._tier_paths(name) for name in Q._TIERS] + [Q._corpus_paths_quarantine()]
+
+
+def _mime(buf: bytes) -> str:
+    """The JVM-side magic-byte sniff (`multimodal.mime_col`)."""
+    return next((m for magic, m in _MAGIC if buf.startswith(magic)), "unknown")
+
+
+def _languages(paths: dict[str, str]) -> dict[str, str | None]:
+    """media_ref -> `language` of the document that references it."""
+    docs = pq.read_table(paths["documents"])
+    langs = docs.column("language").to_pylist() if "language" in docs.column_names else None
+    lang_of = {}
+    for i, spans in enumerate(docs.column("spans").to_pylist()):
+        for s in spans or []:
+            if s and s["media_ref"]:
+                lang_of[s["media_ref"]] = langs[i] if langs else None
+    return lang_of
+
+
+def _corpus_media():
+    """(media_ref, payload, language) over the corpora, in media-store order."""
+    for paths in _corpus_paths():
+        lang_of = _languages(paths)
+        media = pq.read_table(paths["media_store"], columns=["media_ref", "payload"])
+        for ref, buf in zip(media.column("media_ref").to_pylist(), media.column("payload").to_pylist()):
+            yield ref, buf, lang_of.get(ref)
 
 
 def _codec_test_encodings() -> list[bytes]:
@@ -65,18 +106,7 @@ def _codec_test_encodings() -> list[bytes]:
 def _decoded() -> tuple[list, list]:
     """([(image or None, language)] over the corpora, [image or None] over
     the codec-test encodings)."""
-    corpus = []
-    for paths in _corpus_paths():
-        docs = pq.read_table(paths["documents"])
-        langs = docs.column("language").to_pylist() if "language" in docs.column_names else None
-        lang_of = {}
-        for i, spans in enumerate(docs.column("spans").to_pylist()):
-            for s in spans or []:
-                if s and s["media_ref"]:
-                    lang_of[s["media_ref"]] = langs[i] if langs else None
-        media = pq.read_table(paths["media_store"], columns=["media_ref", "payload"])
-        for ref, buf in zip(media.column("media_ref").to_pylist(), media.column("payload").to_pylist()):
-            corpus.append((_try_decode(buf), lang_of.get(ref)))
+    corpus = [(_try_decode(buf), lang) for _, buf, lang in _corpus_media()]
     return corpus, [_try_decode(b) for b in _codec_test_encodings()]
 
 
@@ -117,3 +147,18 @@ def test_decode_image_text_is_pinned():
             text = "error"
         h.update(f"{text}\x00".encode())
     assert h.hexdigest() == TEXT_SHA256
+
+
+def test_media_status_is_pinned():
+    """What each admitted corpus payload is quarantined for, or `ok`."""
+    h = hashlib.sha256()
+    counts: Counter = Counter()
+    for _, buf, lang in _corpus_media():
+        mime = "unknown" if buf is None else _mime(bytes(buf))
+        if mime == "unknown":
+            continue
+        _, status = media_status(bytes(buf), mime, lang)
+        counts[(mime, status)] += 1
+        h.update(f"{status}\n".encode())
+    assert dict(counts) == STATUS_COUNTS
+    assert h.hexdigest() == STATUS_SHA256
