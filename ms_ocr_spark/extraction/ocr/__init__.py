@@ -1,5 +1,13 @@
 import numpy as np
 
+
+class ScopeError(ValueError):
+    """A payload outside a codec's decode scope: `args` is (quarantine
+    reason, what is out of scope).  The decoders raise it where they meet
+    the layout, and `pipeline.media_status` reports the reason.  Defined
+    before the codec imports below, which import it from this package."""
+
+
 from .jpeg import decode_gray_jpeg, encode_gray_jpeg
 from .kernel import decode_image
 from .png import decode_gray, encode_gray
@@ -21,6 +29,7 @@ def decode_media(buf: bytes) -> np.ndarray:
 
 
 __all__ = [
+    "ScopeError",
     "decode_image",
     "decode_gray",
     "encode_gray",

@@ -11,11 +11,11 @@ Scope: 8-bit frames of 1, 3 (YCbCr) or 4 (Adobe CMYK/YCCK) components,
 baseline sequential AND progressive (SOF2: spectral selection,
 successive approximation, EOB runs), restart intervals in both.  Out of
 scope: arithmetic coding, lossless/hierarchical frames and the other
-layouts `jpeg_scope_reason` classifies for the quarantine telemetry.
-The decoder reads DQT/DHT tables from the stream, so conforming streams
-from other encoders decode too.  The scope probe, the side-value and
-APP14 readers and the decoder all walk the markers through one segment
-reader, `_segments`.
+layouts `_frame` rejects; the decoder raises `ScopeError` with the
+quarantine reason where it meets one.  The decoder reads DQT/DHT tables
+from the stream, so conforming streams from other encoders decode too.
+The side-value and APP14 readers and the decoder all walk the markers
+through one segment reader, `_segments`.
 
 Decoding: every scan loop (baseline, progressive DC first, AC first, AC
 refinement) inlines one table-driven bit reader (see "reader" below):
@@ -41,6 +41,8 @@ import struct
 from collections.abc import Iterator
 
 import numpy as np
+
+from . import ScopeError
 
 # ---------------------------------------------------------------- tables
 # zig-zag scan order: index i of the scan -> (row, col) in the 8x8 block
@@ -138,12 +140,13 @@ def _huff_table(spec: bytes, ac: bool) -> tuple[list, int, int]:
 
 
 def _read_dqt(payload: bytes, quant: dict[int, np.ndarray]) -> None:
-    """One DQT segment (possibly several 8-bit tables) into `quant`."""
+    """One DQT segment (possibly several 8-bit tables) into `quant`.  T.81
+    allows 16-bit tables only in 12-bit frames, which are out of scope."""
     p = 0
     while p < len(payload):
         pq, tq = payload[p] >> 4, payload[p] & 0xF
         if pq != 0:
-            raise ValueError("16-bit quant tables unsupported")
+            raise ScopeError(_UNSUPPORTED, "16-bit quantization table")
         quant[tq] = np.frombuffer(payload[p + 1 : p + 65], dtype=np.uint8).astype(np.int64)
         p += 65
 
@@ -415,10 +418,11 @@ def _scatter(z: np.ndarray, pos: list[int], val: list[int] | np.ndarray) -> None
 
 # ------------------------------------------------------------- segments
 # T.81 B.1.1 marker-segment syntax is read in one place: `_segments` walks
-# the markers and `_frame` parses and checks the frame header.  The scope
-# probe, the side-value and APP14 readers and the decoder all read
-# through these two, so they skip the same fill bytes and reject the same
-# frames; the probe names the reason that the decoder raises.
+# the markers and `_frame` parses and checks the frame header.  The
+# side-value and APP14 readers and the decoder all read through these
+# two, so they skip the same fill bytes.  Both raise ScopeError with the
+# quarantine reason, so the decoder is the one scope check: a stream is
+# quarantined for the first out-of-scope or cut-off segment it meets.
 
 _TRUNCATED = "truncated_jpeg"
 _UNSUPPORTED = "unsupported_jpeg_layout"
@@ -442,14 +446,14 @@ def _segments(data: bytes) -> Iterator[tuple[int, bytes]]:
     after an SOS segment, it yields (0, the scan's entropy-coded data with
     its RSTn markers), so a reader that stops at SOS scans no entropy
     data.  A stream without SOI, out of marker alignment or ending inside
-    a segment raises ValueError("truncated_jpeg", what is wrong)."""
+    a segment raises ScopeError("truncated_jpeg", what is wrong)."""
     if data[:2] != b"\xff\xd8":
-        raise ValueError(_TRUNCATED, "no SOI marker")
+        raise ScopeError(_TRUNCATED, "no SOI marker")
     n = len(data)
     pos = 2
     while pos + 1 < n:
         if data[pos] != 0xFF:
-            raise ValueError(_TRUNCATED, "bad marker alignment")
+            raise ScopeError(_TRUNCATED, "bad marker alignment")
         marker = data[pos + 1]
         if marker == 0xFF:  # fill byte
             pos += 1
@@ -461,7 +465,7 @@ def _segments(data: bytes) -> Iterator[tuple[int, bytes]]:
             continue
         end = pos + int.from_bytes(data[pos : pos + 2], "big")
         if not pos + 2 <= end <= n:
-            raise ValueError(_TRUNCATED, "truncated segment")
+            raise ScopeError(_TRUNCATED, "truncated segment")
         yield marker, data[pos + 2 : end]
         pos = end
         if marker == 0xDA:
@@ -480,36 +484,36 @@ def _frame(
     In scope: 8-bit baseline (SOF0) or progressive (SOF2) frames of 1, 3
     or 4 components, sampling factors 1..4 in integer ratios, and
     4-component frames only baseline with Adobe transform 0 (CMYK) or 2
-    (YCCK).  Any other frame raises ValueError(reason, what is wrong),
-    `reason` being the quarantine reason `jpeg_scope_reason` reports."""
+    (YCCK).  Any other frame raises ScopeError(quarantine reason, what is
+    wrong)."""
     if marker not in (0xC0, 0xC2):
-        raise ValueError(_UNSUPPORTED, f"SOF{marker & 0xF} frame")
+        raise ScopeError(_UNSUPPORTED, f"SOF{marker & 0xF} frame")
     if len(payload) < 6:
-        raise ValueError(_TRUNCATED, "short frame header")
+        raise ScopeError(_TRUNCATED, "short frame header")
     prec, h, w, n_comp = struct.unpack(">BHHB", payload[:6])
     if prec != 8:
-        raise ValueError(_UNSUPPORTED, f"{prec}-bit precision")
+        raise ScopeError(_UNSUPPORTED, f"{prec}-bit precision")
     if n_comp not in (1, 3, 4):
-        raise ValueError(_UNSUPPORTED, f"{n_comp}-component frame")
+        raise ScopeError(_UNSUPPORTED, f"{n_comp}-component frame")
     transform = None
     if n_comp == 4:
         transform = adobe_app14_transform(data)
         if marker == 0xC2 or transform not in (0, 2):
-            raise ValueError(_UNSUPPORTED, "4-component frame not baseline Adobe CMYK/YCCK")
+            raise ScopeError(_UNSUPPORTED, "4-component frame not baseline Adobe CMYK/YCCK")
     if len(payload) < 6 + 3 * n_comp:
-        raise ValueError(_TRUNCATED, "short frame header")
+        raise ScopeError(_TRUNCATED, "short frame header")
     comps = [
         (payload[6 + 3 * i], payload[7 + 3 * i] >> 4, payload[7 + 3 * i] & 0xF, payload[8 + 3 * i])
         for i in range(n_comp)
     ]
     if not all(1 <= fh <= 4 and 1 <= fv <= 4 for _, fh, fv, _ in comps):
-        raise ValueError(_UNSUPPORTED, "sampling factors outside 1..4")
+        raise ScopeError(_UNSUPPORTED, "sampling factors outside 1..4")
     hmax = max(c[1] for c in comps)
     vmax = max(c[2] for c in comps)
     # integer-ratio upsampling only (every layout cameras emit:
     # 4:4:4/4:2:2/4:2:0/4:1:1/4:4:0); fractional ratios such as 3:2 are out
     if any(hmax % fh or vmax % fv for _, fh, fv, _ in comps):
-        raise ValueError(_UNSUPPORTED, "non-integer sampling ratio")
+        raise ScopeError(_UNSUPPORTED, "non-integer sampling ratio")
     return h, w, comps, transform
 
 
@@ -536,8 +540,8 @@ def encode_progressive_stub(h: int = 32, w: int = 64) -> bytes:
     """Minimal syntactically-valid progressive-JPEG HEADER (SOI + SOF2 +
     EOI, no scan data).  Telemetry fixture for the `truncated_jpeg`
     quarantine class (round 5: complete progressive streams now DECODE —
-    `jpeg_scope_reason` flags this one because EOI arrives before any
-    SOS, the shape of a transfer-truncated web JPEG)."""
+    this one is `truncated_jpeg` because EOI arrives before any SOS, the
+    shape of a transfer-truncated web JPEG)."""
     sof2 = struct.pack(">HBHHB", 11, 8, h, w, 1) + bytes([1, 0x11, 0])
     return b"\xff\xd8\xff\xc2" + sof2 + b"\xff\xd9"
 
@@ -942,38 +946,6 @@ def _dec_ac_refine(
     _check_exhausted(i, nb, total)
 
 
-def jpeg_scope_reason(data: bytes) -> str | None:
-    """Decode-scope probe (header-only, no pixel work): None when the
-    stream is inside this codec's scope (see `_frame`), else a quarantine
-    reason:
-
-      * `truncated_jpeg`           — no SOI, a broken marker walk, or
-                                     EOI/end-of-data before a scan
-      * `unsupported_jpeg_layout`  — component counts other than
-                                     1/3/4; 4-component frames that are
-                                     untagged, carry an Adobe APP14
-                                     transform other than 0/2, or are
-                                     progressive; sampling factors
-                                     above 4 or with fractional
-                                     ratios; non-8-bit precision;
-                                     arithmetic coding; lossless/
-                                     differential/hierarchical frames
-
-    The decoder raises on every stream rejected here, with this reason as
-    the ValueError's first argument."""
-    saw_frame = False
-    try:
-        for marker, payload in _segments(data):
-            if marker in _SOF_MARKERS:
-                _frame(marker, payload, data)
-                saw_frame = True
-            elif marker == 0xDA:
-                return None if saw_frame else _TRUNCATED
-    except ValueError as e:
-        return e.args[0]
-    return _TRUNCATED
-
-
 def jpeg_side_values(data: bytes) -> dict:
     """Parse the decode side-values the reference keeps
     (`image_processor/main.py:58-63`): JFIF dpi, EXIF orientation (APP1,
@@ -1045,8 +1017,8 @@ def jpeg_side_values(data: bytes) -> dict:
 # progressive.  4-component CMYK/YCCK baseline decodes via the later
 # Adobe APP14 section.  Still out: arithmetic coding, lossless/
 # hierarchical frames, 12-bit, fractional sampling ratios,
-# untagged/unknown-transform/progressive 4-component —
-# `jpeg_scope_reason` classifies those.
+# untagged/unknown-transform/progressive 4-component — `_frame` rejects
+# those with `unsupported_jpeg_layout`.
 # ---------------------------------------------------------------------------
 
 
@@ -1394,7 +1366,9 @@ def _decode_jpeg_planes(data: bytes) -> tuple[list[np.ndarray], int | None]:
         elif marker == 0xC4:
             _read_dht(payload, huff)
         elif marker == 0xDD:
-            (restart_interval,) = struct.unpack(">H", payload[:2])
+            if len(payload) < 2:
+                raise ValueError("short DRI segment")
+            restart_interval = int.from_bytes(payload[:2], "big")
         elif marker in _SOF_MARKERS:
             h, w, comps, transform = _frame(marker, payload, data)
             progressive = marker == 0xC2
@@ -1409,10 +1383,12 @@ def _decode_jpeg_planes(data: bytes) -> tuple[list[np.ndarray], int | None]:
             ]
         elif marker == 0xDA:
             if not comps:
-                raise ValueError(_TRUNCATED, "SOS before SOF")
+                raise ScopeError(_TRUNCATED, "SOS before SOF")
             _, entropy = next(segments)
             n_scans += 1
-            ns = payload[0]
+            ns = payload[0] if payload else 0
+            if not 1 <= ns <= 4 or len(payload) < 4 + 2 * ns:
+                raise ValueError(f"short SOS header: {len(payload)} bytes, {ns} components")
             scan_comps: list[tuple[int, int, int]] = []  # (ci, td, ta)
             for si in range(ns):
                 cid = payload[1 + si * 2]
@@ -1435,7 +1411,7 @@ def _decode_jpeg_planes(data: bytes) -> tuple[list[np.ndarray], int | None]:
                 if ah == 0:
                     cpos = [[] for _ in scan_comps]
                     cval = [[] for _ in scan_comps]
-                    tabs = _scan_tables(huff, scan_comps, cpos, cval)
+                    tabs = _scan_tables(huff, scan_comps, cpos, cval, False)
                     for seg, chunk in chunks:
                         _dec_sequential(seg, tabs, chunk, al, False)
                     for (ci, _, _), cp, cv in zip(scan_comps, cpos, cval):
@@ -1454,7 +1430,7 @@ def _decode_jpeg_planes(data: bytes) -> tuple[list[np.ndarray], int | None]:
                 if ns != 1:
                     raise ValueError("interleaved AC scan is not valid T.81")
                 ci, _, ta = scan_comps[0]
-                tab = huff[(1, ta)]
+                tab = _table(huff, 1, ta)
                 z = zz[ci]
                 # restart intervals (round 6): a non-interleaved scan's
                 # MCU is one block, so segments cover Ri blocks; EOB runs
@@ -1469,9 +1445,11 @@ def _decode_jpeg_planes(data: bytes) -> tuple[list[np.ndarray], int | None]:
                         _dec_ac_refine(seg, tab, blocks, rows, ss, se, al, cpos, cval)
                 _scatter(z, cpos, np.array(cval, dtype=np.int64) << al if ah == 0 else cval)
     if not n_scans:
-        raise ValueError(_TRUNCATED, "missing SOF/SOS")
+        raise ScopeError(_TRUNCATED, "missing SOF/SOS")
     out: list[np.ndarray] = []
     for (cid, fh, fv, tq), z in zip(comps, zz):
+        if tq not in quant:
+            raise ValueError(f"no DQT segment defines table {tq}")
         bh, bw_ = mcuy * fv, mcux * fh
         plane = _blocks_to_pixels(z, quant[tq], bh * 8, bw_ * 8)
         cw = (w * fh + hmax - 1) // hmax
@@ -1503,14 +1481,21 @@ def _scan_units(
     return [(0, bi) for bi in idx], 1
 
 
+def _table(huff: dict, tc: int, th: int) -> tuple:
+    """The Huffman table of class `tc` (0 DC, 1 AC) and id `th` a scan
+    names; one no DHT segment defined raises."""
+    if (tc, th) not in huff:
+        raise ValueError(f"no DHT segment defines {'AC' if tc else 'DC'} table {th}")
+    return huff[(tc, th)]
+
+
 def _scan_tables(
-    huff: dict, scan_comps: list[tuple[int, int, int]], pos: list, val: list
+    huff: dict, scan_comps: list[tuple[int, int, int]], pos: list, val: list, with_ac: bool
 ) -> list[tuple]:
-    """Per scan component: its DC and AC tables, `pos.append` and
-    `val.append` as one flat tuple.  A missing table fails at the first
-    block that needs it."""
+    """Per scan component: its DC table, its AC table (`with_ac`, else
+    None placeholders), `pos.append` and `val.append` as one flat tuple."""
     return [
-        (*(huff.get((0, td)) or (None,) * 3), *(huff.get((1, ta)) or (None,) * 3),
+        (*_table(huff, 0, td), *(_table(huff, 1, ta) if with_ac else (None,) * 3),
          p.append, v.append)
         for (_, td, ta), p, v in zip(scan_comps, pos, val)
     ]
@@ -1606,7 +1591,7 @@ def _dec_baseline_scan(
     step = restart_interval * per_mcu or len(units) or 1
     pos: list[list[int]] = [[] for _ in scan_comps]
     val: list[list[int]] = [[] for _ in scan_comps]
-    comps = _scan_tables(huff, scan_comps, pos, val)
+    comps = _scan_tables(huff, scan_comps, pos, val, True)
     for seg_i, lo in enumerate(range(0, len(units), step)):
         if seg_i >= len(segments):
             raise ValueError("missing restart segment")
@@ -1639,7 +1624,7 @@ def encode_lossless_stub(h: int = 32, w: int = 64) -> bytes:
 # baseline only, Adobe transforms 0 (plain CMYK) AND 2 (YCCK — the
 # inverted CMY channels ride the standard YCbCr transform with K
 # scalar, final round-6 commit); untagged or unknown-transform
-# 4-component frames stay out — `jpeg_scope_reason` classifies them.
+# 4-component frames stay out — `_frame` rejects them.
 # ---------------------------------------------------------------------------
 
 

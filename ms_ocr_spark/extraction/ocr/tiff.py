@@ -17,9 +17,13 @@ Scope (documented, honest):
     Photometric 0 (WhiteIsZero -> inverted on load) or 1, any strip
     layout, and — round 6 — TILED layout (tags 322-325, edge tiles
     padded per TIFF 6.0 §15).
-Anything else (multi-sample, 1/4-bit, JPEG-in-TIFF) raises ValueError —
-the pipeline quarantines such rows, the same admission-reject behavior
-the reference applies to bad uploads (`src/controller/Upload.ts:22-32`).
+Anything else (planar or deep-color RGB, other sample counts, 1/4-bit,
+other photometrics, JPEG-in-TIFF) raises `ScopeError`
+("unsupported_tiff_layout", the field and its value), read from the IFD
+before any strip or tile data; the pipeline quarantines such rows with
+that reason, the admission-reject behavior the reference applies to bad
+uploads (`src/controller/Upload.ts:22-32`).  Malformed structure raises
+a plain ValueError.
 """
 
 from __future__ import annotations
@@ -27,6 +31,10 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+
+from . import ScopeError
+
+_UNSUPPORTED = "unsupported_tiff_layout"
 
 # tag ids (TIFF 6.0 baseline)
 _T_WIDTH = 256
@@ -458,22 +466,15 @@ def _parse(data: bytes) -> tuple[dict[int, list[int]], str]:
 def decode_gray_tiff(data: bytes) -> np.ndarray:
     """TIFF bytes -> gray8 ndarray (first IFD; see module scope).
 
-    Malformed structure (truncated IFD, offsets past EOF) surfaces as
-    ValueError so the pipeline's quarantine catch treats codec and
-    structure failures uniformly."""
+    The layout fields are checked first: an out-of-scope layout raises
+    ScopeError whatever else the IFD lacks.  Malformed structure
+    (truncated IFD, a missing strip or tile tag, offsets past EOF)
+    surfaces as ValueError so the pipeline's quarantine catch treats
+    codec and structure failures uniformly."""
     try:
         tags, _ = _parse(data)
     except (struct.error, IndexError) as exc:
         raise ValueError(f"malformed TIFF: {exc}") from exc
-    tiled = _T_TILE_WIDTH in tags
-    try:
-        w, h = tags[_T_WIDTH][0], tags[_T_HEIGHT][0]
-        if tiled:
-            offsets, counts = tags[_T_TILE_OFFSETS], tags[_T_TILE_COUNTS]
-        else:
-            offsets, counts = tags[_T_STRIP_OFFSETS], tags[_T_STRIP_COUNTS]
-    except KeyError as exc:
-        raise ValueError(f"TIFF missing baseline tag {exc}") from exc
     bits_list = tags.get(_T_BITS, [1])
     bits = bits_list[0]
     samples = tags.get(_T_SAMPLES, [1])[0]
@@ -483,22 +484,30 @@ def decode_gray_tiff(data: bytes) -> np.ndarray:
     if samples == 3:
         # RGB (round 7, VERDICT r6 item 4): 8-bit chunky only — the
         # scanner/camera layout; planar (2) and deep color stay out
-        if any(b != 8 for b in bits_list) or planar != 1:
-            raise ValueError(
-                f"unsupported TIFF sample layout: {bits}-bit x{samples}"
-                f" planar={planar}"
-            )
+        if any(b != 8 for b in bits_list):
+            raise ScopeError(_UNSUPPORTED, f"bits per sample {bits_list}")
+        if planar != 1:
+            raise ScopeError(_UNSUPPORTED, f"planar {planar}")
         if photometric != 2:
-            raise ValueError(f"unsupported TIFF photometric {photometric}")
+            raise ScopeError(_UNSUPPORTED, f"photometric {photometric}")
     else:
-        if bits not in (8, 16) or samples != 1:
-            raise ValueError(
-                f"unsupported TIFF sample layout: {bits}-bit x{samples}"
-            )
+        if samples != 1:
+            raise ScopeError(_UNSUPPORTED, f"samples per pixel {samples}")
+        if bits not in (8, 16):
+            raise ScopeError(_UNSUPPORTED, f"bits per sample {bits}")
         if photometric not in (0, 1):
-            raise ValueError(f"unsupported TIFF photometric {photometric}")
+            raise ScopeError(_UNSUPPORTED, f"photometric {photometric}")
     if compression not in (1, 5, 32773):
-        raise ValueError(f"unsupported TIFF compression {compression}")
+        raise ScopeError(_UNSUPPORTED, f"compression {compression}")
+    tiled = _T_TILE_WIDTH in tags
+    try:
+        w, h = tags[_T_WIDTH][0], tags[_T_HEIGHT][0]
+        if tiled:
+            offsets, counts = tags[_T_TILE_OFFSETS], tags[_T_TILE_COUNTS]
+        else:
+            offsets, counts = tags[_T_STRIP_OFFSETS], tags[_T_STRIP_COUNTS]
+    except KeyError as exc:
+        raise ValueError(f"TIFF missing baseline tag {exc}") from exc
     bpp = (bits // 8) * samples
 
     def _decompress(chunk: bytes, n_bytes: int) -> bytes:
@@ -580,38 +589,6 @@ def encode_jpeg_in_tiff_stub(h: int = 32, w: int = 64) -> bytes:
         ifd.append(struct.pack("<HHII", tag, typ, count, value))
     ifd.append(struct.pack("<I", 0))
     return struct.pack("<2sHI", b"II", 42, 8) + b"".join(ifd)
-
-
-def tiff_scope_reason(data: bytes) -> str | None:
-    """None when the file is inside this codec's decode scope, else a
-    short reason string — a HEADER-ONLY probe (IFD tags, no pixel work)
-    for quarantine telemetry, the TIFF analog of
-    `jpeg.jpeg_scope_reason`.  Malformed structure returns None (the
-    decode then raises, which `pipeline.media_status` reports as
-    `decode_error:<ExceptionClass>`)."""
-    try:
-        tags, _ = _parse(data)
-    except (ValueError, struct.error, IndexError):
-        return None
-    bits_list = tags.get(_T_BITS, [1])
-    bits = bits_list[0]
-    samples = tags.get(_T_SAMPLES, [1])[0]
-    compression = tags.get(_T_COMPRESSION, [1])[0]
-    photometric = tags.get(_T_PHOTOMETRIC, [1])[0]
-    planar = tags.get(_T_PLANAR, [1])[0]
-    if samples == 3:
-        # 8-bit chunky RGB decodes (round 7) — planar or deep color out
-        if any(b != 8 for b in bits_list) or planar != 1:
-            return f"sample_layout_{bits}bit_x{samples}"
-        if photometric != 2:
-            return f"photometric_{photometric}"
-    elif bits not in (8, 16) or samples != 1:
-        return f"sample_layout_{bits}bit_x{samples}"
-    elif photometric not in (0, 1):
-        return f"photometric_{photometric}"
-    if compression not in (1, 5, 32773):
-        return f"compression_{compression}"
-    return None
 
 
 def tiff_side_values(data: bytes) -> dict:

@@ -5,8 +5,9 @@ Plan shape (SURVEY.md §7 step 3, north_rule):
     documents ──posexplode(spans)── left join media_store on media_ref
                                     (forced broadcast by default)
     ── JVM admission: magic-byte MIME + 30 MB cap (missing / invalid)
-    ── extract_span Arrow UDF (kind, text, admitted payload, mime, language)
-       -> struct<text, status>: Arc90 strip or `media_status`
+    ── extract_span Arrow UDF (kind, text, admitted payload, language)
+       -> struct<text, status>: Arc90 strip or `media_status`, whose one
+       decode is also the one scope check
     ── groupBy(doc_id) ── array_sort(collect_list(struct(offset,…))) ── spans
                       └── array_sort(collect_list(not-ok media))  ── quarantine
 
@@ -47,30 +48,32 @@ _SPAN_RESULT = T.StructType(
 )
 
 
-def media_status(buf: bytes, mime: str, language: str | None) -> tuple[str | None, str]:
+def media_status(buf: bytes, language: str | None) -> tuple[str | None, str]:
     """(text, status) of one admitted media payload — the one statement of
     what happens to a media span past admission.
 
-    `mime` is the JVM-side magic-byte sniff.  `language` routes the kernel
-    layout mode per document (reference request field `-|ja|ja_vert|en`,
+    `decode_media` dispatches on the same magic bytes as the JVM-side
+    sniff.  `language` routes the kernel layout mode per document
+    (reference request field `-|ja|ja_vert|en`,
     `src/controller/Ocr.ts:37-39`); NULL/`-` auto-detects.
 
     `status` values, with NULL text for every one but `ok`:
       * `ok` — decoded and OCR'd;
-      * `truncated_jpeg` (JPEG whose marker walk ends before a scan) and
-        `unsupported_jpeg_layout` (arithmetic / lossless / hierarchical
-        coding, 12-bit precision, sampling factors above 4 or fractional
-        sampling ratios, and 4-component frames that are untagged, carry
-        an unknown Adobe transform, or are progressive) — the
-        `jpeg_scope_reason` header probe;
-      * `unsupported_tiff_layout` (exotic compression / photometric) — the
-        `tiff_scope_reason` header probe;
-      * `decode_error:<ExceptionClass>` — in scope, but the probe or the
-        decode raised; a class outside the builtins is module-qualified
+      * `truncated_jpeg` (JPEG whose marker walk breaks off, or ends
+        before a frame and a scan) and `unsupported_jpeg_layout`
+        (arithmetic / lossless / hierarchical coding, 12-bit precision,
+        16-bit quantization tables, sampling factors above 4 or
+        fractional sampling ratios, and 4-component frames that are
+        untagged, carry an unknown Adobe transform, or are progressive);
+      * `unsupported_tiff_layout` (exotic compression / photometric /
+        sample layout);
+      * `decode_error:<ExceptionClass>` — in scope, but the decode
+        raised; a class outside the builtins is module-qualified
         (`decode_error:zlib.error`, `decode_error:struct.error`, but
         `decode_error:ValueError`).
-    The scope reasons are quarantined BY DESIGN by the codecs, found by
-    header-only sniffs before any pixel decode; the distinct reasons let a
+    The scope reasons come from the one decode: a codec raises
+    `ScopeError` with the reason where it meets an out-of-scope or cut-off
+    layout, which is quarantined BY DESIGN; the distinct reasons let a
     corpus operator see the decode-scope cost (VERDICT r3 item 7).
     Admission rejects (`missing`, `invalid`) are decided JVM-side and
     never reach this function.
@@ -79,18 +82,12 @@ def media_status(buf: bytes, mime: str, language: str | None) -> tuple[str | Non
     decode failure is a status, never a task failure — and never a silent
     NULL: its exception class names it.
     """
-    from ms_ocr_spark.extraction.ocr import decode_image, decode_media
-    from ms_ocr_spark.extraction.ocr.jpeg import jpeg_scope_reason
-    from ms_ocr_spark.extraction.ocr.tiff import tiff_scope_reason
+    from ms_ocr_spark.extraction.ocr import ScopeError, decode_image, decode_media
 
     try:
-        if mime == "jpeg":
-            reason = jpeg_scope_reason(buf)
-            if reason is not None:
-                return None, reason
-        elif mime == "tiff" and tiff_scope_reason(buf) is not None:
-            return None, "unsupported_tiff_layout"
         return decode_image(decode_media(buf), language), "ok"
+    except ScopeError as e:
+        return None, e.args[0]
     except Exception as e:
         cls = type(e)
         name = cls.__qualname__
@@ -100,9 +97,7 @@ def media_status(buf: bytes, mime: str, language: str | None) -> tuple[str | Non
 
 
 @F.arrow_udf(_SPAN_RESULT)
-def extract_span(
-    kind: pa.Array, text: pa.Array, payload: pa.Array, mime: pa.Array, language: pa.Array
-) -> pa.Array:
+def extract_span(kind: pa.Array, text: pa.Array, payload: pa.Array, language: pa.Array) -> pa.Array:
     """One span row -> (text, status), Arrow-batched: the Arc90 boilerplate
     strip for a text span (north_rule text branch), `media_status` for an
     admitted media payload.  A row without an admitted payload gets
@@ -114,14 +109,14 @@ def extract_span(
     amortize (cf. SURVEY.md §2.10)."""
     from ms_ocr_spark.extraction.arc90 import extract_main_text
 
-    def _one(k, html, buf, m, lang):
+    def _one(k, html, buf, lang):
         if k == "text":
             return (None if html is None else extract_main_text(html)), "ok"
         if buf is None:
             return None, None
-        return media_status(buf, m, lang)
+        return media_status(buf, lang)
 
-    cols = (a.to_pylist() for a in (kind, text, payload, mime, language))
+    cols = (a.to_pylist() for a in (kind, text, payload, language))
     texts, statuses = zip(*(_one(*r) for r in zip(*cols))) if len(kind) else ((), ())
     return pa.StructArray.from_arrays(
         [pa.array(texts, pa.string()), pa.array(statuses, pa.string())],
@@ -230,10 +225,13 @@ def extract_documents(
     Every doc comes out, one with no spans as `[]`.  Media payloads are
     admission-controlled JVM-side (magic-byte MIME + 30 MB cap, reference
     S2-S4) BEFORE the UDF — a missing or invalid payload never enters
-    Python.  A media span that is not admitted, out of decode scope or
-    undecodable comes out with NULL text (counted by lineage as
-    n_media_missing) and as one row of its doc's `quarantine` array, with
-    `reason` `missing`, `invalid` or a `media_status` status.
+    Python.  The JVM-side `mime` decides admission and rides in the
+    quarantine row; the UDF gets the admitted payload alone, and its one
+    decode per payload is also the decode-scope check.  A media span that
+    is not admitted, out of decode scope or undecodable comes out with
+    NULL text (counted by lineage as n_media_missing) and as one row of
+    its doc's `quarantine` array, with `reason` `missing`, `invalid` or a
+    `media_status` status.
     """
     from ms_ocr_spark.operators.multimodal import MAX_MEDIA_BYTES, magic_col, mime_col
 
@@ -275,7 +273,7 @@ def extract_documents(
     with_out = joined.select(
         *cols,
         "admission",
-        extract_span("kind", "text", admitted, "mime", lang).alias("out"),
+        extract_span("kind", "text", admitted, lang).alias("out"),
     )
     return _restitch(
         with_out.select(

@@ -157,7 +157,7 @@ def test_media_status_is_pinned():
         mime = "unknown" if buf is None else _mime(bytes(buf))
         if mime == "unknown":
             continue
-        _, status = media_status(bytes(buf), mime, lang)
+        _, status = media_status(bytes(buf), lang)
         counts[(mime, status)] += 1
         h.update(f"{status}\n".encode())
     assert dict(counts) == STATUS_COUNTS

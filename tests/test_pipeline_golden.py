@@ -208,10 +208,10 @@ def test_decode_error_status_tells_exception_modules_apart():
     from ms_ocr_spark.extraction.pipeline import media_status
 
     not_zlib = _png(b"not a zlib stream")
-    assert media_status(not_zlib, "png", None) == (None, "decode_error:zlib.error")
-    assert media_status(not_zlib[:20], "png", None) == (None, "decode_error:struct.error")
+    assert media_status(not_zlib, None) == (None, "decode_error:zlib.error")
+    assert media_status(not_zlib[:20], None) == (None, "decode_error:struct.error")
     short = _png(zlib.compress(b"\x00" * 3))
-    assert media_status(short, "png", None) == (None, "decode_error:ValueError")
+    assert media_status(short, None) == (None, "decode_error:ValueError")
 
 
 def test_language_routing_required_for_squares(spark, tmp_path):

@@ -9,12 +9,19 @@ import struct
 import numpy as np
 import pytest
 
-from ms_ocr_spark.extraction.ocr import decode_image, decode_media
+from ms_ocr_spark.extraction.ocr import ScopeError, decode_image, decode_media
 from ms_ocr_spark.extraction.ocr.tiff import (
     decode_gray_tiff,
     encode_gray_tiff,
     tiff_side_values,
 )
+
+
+def _scope_error(buf: bytes) -> tuple:
+    """The args (reason, detail) of the ScopeError the decoder raises."""
+    with pytest.raises(ScopeError) as e:
+        decode_gray_tiff(buf)
+    return e.value.args
 
 
 def test_round_trip_lossless():
@@ -84,8 +91,7 @@ def test_unsupported_layouts_raise():
     # patch Compression (tag 259) value to 7 (JPEG-in-TIFF, out of scope)
     idx = jpg.find(struct.pack("<HH", 259, 3))
     jpg[idx + 8 : idx + 10] = struct.pack("<H", 7)
-    with pytest.raises(ValueError):
-        decode_gray_tiff(bytes(jpg))
+    assert _scope_error(bytes(jpg)) == ("unsupported_tiff_layout", "compression 7")
 
 
 @pytest.mark.parametrize("comp", [1, 5, 32773], ids=["none", "lzw", "packbits"])
@@ -130,13 +136,12 @@ def test_tiff_tier_ocr_exact():
 def test_tiff_side_values_round_trip():
     """Orientation tag 274 + ICC tag 34675 + XResolution dpi parse back
     across every compression/bit-depth variant (S5 side-value parity);
-    extra tags never perturb pixel decode or the scope probe."""
+    extra tags never perturb pixel decode."""
     import numpy as np
 
     from ms_ocr_spark.extraction.ocr.tiff import (
         decode_gray_tiff,
         encode_gray_tiff,
-        tiff_scope_reason,
         tiff_side_values,
     )
 
@@ -158,7 +163,6 @@ def test_tiff_side_values_round_trip():
                 "icc_name": "synthetic-gray",
                 "orientation": 1,
             }
-            assert tiff_scope_reason(b) is None
     assert tiff_side_values(encode_gray_tiff(img)) == {
         "dpi": None,
         "icc_name": None,
@@ -176,7 +180,6 @@ def test_tiled_round_trip_all_variants():
     from ms_ocr_spark.extraction.ocr.tiff import (
         decode_gray_tiff,
         encode_gray_tiff,
-        tiff_scope_reason,
     )
 
     rng = np.random.default_rng(4)
@@ -186,7 +189,6 @@ def test_tiled_round_trip_all_variants():
             for bits in (8, 16):
                 for tile in ((16, 16), (32, 16), (48, 32)):
                     b = encode_gray_tiff(img, compression=comp, bits=bits, tile=tile)
-                    assert tiff_scope_reason(b) is None
                     assert np.array_equal(decode_gray_tiff(b), img), (
                         shape,
                         comp,
@@ -203,21 +205,24 @@ def test_tiled_side_values_and_scope():
         decode_gray_tiff,
         encode_gray_tiff,
         encode_jpeg_in_tiff_stub,
-        tiff_scope_reason,
         tiff_side_values,
     )
+    from ms_ocr_spark.extraction.pipeline import media_status
     from codec_stubs import encode_tiled_tiff_stub
 
     img = np.random.default_rng(9).integers(0, 256, (40, 50), dtype=np.uint8)
     b = encode_gray_tiff(img, tile=(16, 16), dpi=300.0, icc_name="sRGB", orientation=6)
     assert tiff_side_values(b) == {"dpi": 300.0, "icc_name": "sRGB", "orientation": 6}
     # round 6: tiled is IN scope — the layout-quarantine fixture is
-    # JPEG-in-TIFF (Compression 7); the header-only tiled stub now fails
-    # at decode (missing tile offsets), not at the scope probe
-    assert tiff_scope_reason(encode_jpeg_in_tiff_stub()) == "compression_7"
-    assert tiff_scope_reason(encode_tiled_tiff_stub()) is None
-    with _pytest.raises(ValueError):
+    # JPEG-in-TIFF (Compression 7), which has no strip tags either: the
+    # layout check comes first, so it reads as out of scope, while the
+    # header-only tiled stub fails as malformed (missing tile offsets)
+    stub = encode_jpeg_in_tiff_stub()
+    assert _scope_error(stub) == ("unsupported_tiff_layout", "compression 7")
+    assert media_status(stub, None) == (None, "unsupported_tiff_layout")
+    with _pytest.raises(ValueError) as e:
         decode_gray_tiff(encode_tiled_tiff_stub())
+    assert not isinstance(e.value, ScopeError)
     # tile dims must be multiples of 16
     with _pytest.raises(ValueError):
         encode_gray_tiff(img, tile=(20, 16))
@@ -249,7 +254,6 @@ def test_rgb_tiff_round_trip_all_variants():
     from ms_ocr_spark.extraction.ocr.png import rgb_to_gray
     from ms_ocr_spark.extraction.ocr.tiff import (
         encode_rgb_tiff,
-        tiff_scope_reason,
         tiff_side_values,
     )
 
@@ -267,28 +271,24 @@ def test_rgb_tiff_round_trip_all_variants():
                 icc_name="synthetic-gray",
             )
             assert np.array_equal(decode_gray_tiff(buf), exp), (comp, tile)
-            assert tiff_scope_reason(buf) is None, (comp, tile)
             sv = tiff_side_values(buf)
             assert sv["dpi"] == 150.0 and sv["orientation"] == 1
             assert sv["icc_name"] == "synthetic-gray"
 
 
 def test_rgb_tiff_out_of_scope_layouts():
-    """Planar (PlanarConfiguration 2) and 16-bit multi-sample stay
-    quarantined with a distinct scope reason."""
+    """Planar RGB (PlanarConfiguration 2) stays quarantined: the decoder
+    raises the scope reason with a detail naming the field."""
     from ms_ocr_spark.extraction.ocr.tiff import (
         _T_PLANAR,
         encode_rgb_tiff,
-        tiff_scope_reason,
     )
 
     rgb = np.zeros((16, 16, 3), dtype=np.uint8)
     buf = bytearray(encode_rgb_tiff(rgb))
     idx = buf.find(struct.pack("<HH", _T_PLANAR, 3))
     buf[idx + 8 : idx + 10] = struct.pack("<H", 2)  # planar
-    assert tiff_scope_reason(bytes(buf)) == "sample_layout_8bit_x3"
-    with pytest.raises(ValueError):
-        decode_gray_tiff(bytes(buf))
+    assert _scope_error(bytes(buf)) == ("unsupported_tiff_layout", "planar 2")
 
 
 def test_tint_exact_luminance_identity():
