@@ -147,6 +147,8 @@ def _read_dqt(payload: bytes, quant: dict[int, np.ndarray]) -> None:
         pq, tq = payload[p] >> 4, payload[p] & 0xF
         if pq != 0:
             raise ScopeError(_UNSUPPORTED, "16-bit quantization table")
+        if p + 65 > len(payload):
+            raise ValueError("short DQT segment")
         quant[tq] = np.frombuffer(payload[p + 1 : p + 65], dtype=np.uint8).astype(np.int64)
         p += 65
 
@@ -158,6 +160,8 @@ def _read_dht(payload: bytes, huff: dict[tuple[int, int], tuple]) -> None:
     while p < len(payload):
         tc, th = payload[p] >> 4, payload[p] & 0xF
         n_vals = sum(payload[p + 1 : p + 17])
+        if p + 17 + n_vals > len(payload):
+            raise ValueError("short DHT segment")
         huff[(tc, th)] = _huff_table(bytes(payload[p + 1 : p + 17 + n_vals]), tc == 1)
         p += 17 + n_vals
 

@@ -1076,16 +1076,21 @@ def _header_faults(b: bytes) -> dict[str, tuple[bytes, str]]:
     """name -> (`b` with a header segment its scans need missing or cut
     short, the segment)."""
     i, j = _segment_span(b, 0xDA)
+    dht, dqt = _segment_span(b, 0xC4), _segment_span(b, 0xDB)
     return {
         "no_dht": (_without(b, 0xC4), "DHT"),
         "no_dqt": (_without(b, 0xDB), "DQT"),
+        "dht_short": (_with_payload(b, 0xC4, b[dht[0] + 4 : dht[0] + 24]), "DHT"),
+        "dqt_short": (_with_payload(b, 0xDB, b[dqt[0] + 4 : dqt[0] + 34]), "DQT"),
         "dri_1_byte": (_with_payload(b, 0xDD, b"\x00"), "DRI"),
         "sos_short": (_with_payload(b, 0xDA, b[i + 4 : i + 7]), "SOS"),
     }
 
 
 @pytest.mark.parametrize("encoder", ["encode_gray_jpeg", "encode_gray_jpeg_progressive"])
-@pytest.mark.parametrize("fault", ["no_dht", "no_dqt", "dri_1_byte", "sos_short"])
+@pytest.mark.parametrize(
+    "fault", ["no_dht", "no_dqt", "dht_short", "dqt_short", "dri_1_byte", "sos_short"]
+)
 def test_missing_or_short_header_segment_is_a_value_error(fault, encoder):
     """A header segment the scans need, missing or shorter than its
     content, fails as a ValueError naming the segment, so one fault class
