@@ -1486,8 +1486,8 @@ def _scan_units(
 
 
 def _table(huff: dict, tc: int, th: int) -> tuple:
-    """The Huffman table of class `tc` (0 DC, 1 AC) and id `th` a scan
-    names; one no DHT segment defined raises."""
+    """The Huffman table of class `tc` (0 DC, 1 AC) and id `th` that a
+    scan names; raises when no DHT segment defined it."""
     if (tc, th) not in huff:
         raise ValueError(f"no DHT segment defines {'AC' if tc else 'DC'} table {th}")
     return huff[(tc, th)]
