@@ -1065,11 +1065,18 @@ def _reason_rows() -> dict:
 
 @pytest.mark.parametrize("row", sorted(_reason_rows()))
 def test_scope_reason_table(row):
-    """Streams out of decode scope or cut off: the decoder raises
-    ScopeError with the quarantine reason, and `media_status` reports it."""
+    """Streams out of decode scope or cut off: `media_status` reports the
+    quarantine reason."""
+    b, reason = _reason_rows()[row]
+    assert media_status(b, None) == (None, reason)
+
+
+@pytest.mark.parametrize("row", sorted(_reason_rows()))
+def test_decoder_raises_the_probe_reason(row):
+    """The decoder rejects every stream in the reason table: it raises
+    ScopeError with the row's quarantine reason as its first argument."""
     b, reason = _reason_rows()[row]
     assert _rejected_as(b) == reason
-    assert media_status(b, None) == (None, reason)
 
 
 def _header_faults(b: bytes) -> dict[str, tuple[bytes, str]]:
