@@ -4,6 +4,8 @@ PNG/JPEG extraction tier (reference allow-list jpg/png/tif,
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pytest
 
@@ -1202,3 +1204,58 @@ def test_scan_of_an_absent_component_is_a_value_error():
     i = b.find(b"\xff\xda")
     bad = b[: i + 5] + b"\x07" + b[i + 6 :]  # component id 1 -> 7
     assert media_status(bad, None) == (None, "decode_error:ValueError")
+
+
+# ------------------------------------------------------------- byte pin
+ENCODER_BYTES_N = 489
+ENCODER_BYTES_SHA256 = "2bbb90dabae6fc4bebb2d9888e2a3ea7d1f262356449b79536b772642bfbf241"
+
+
+def _encoder_byte_grid():
+    """(label, bytes) for every public encoder over a fixed grid: gray
+    and color at odd and sub-block sizes, every subsampling, restart
+    intervals none/1/3/…, the dpi/ICC/EXIF side values, a non-flat gray
+    quant table, and CMYK/YCCK."""
+    from ms_ocr_spark.extraction.ocr import jpeg
+    from ms_ocr_spark.extraction.ocr.glyphs import render_text
+
+    rng = np.random.default_rng(151)
+    side = {"dpi": 300.0, "icc_name": "sRGB", "exif_orientation": 6}
+    grays = [rng.integers(0, 256, s, dtype=np.uint8) for s in ((1, 1), (17, 23), (33, 9), (64, 64))]
+    grays.append(render_text("PIN 0123\nJPEG"))
+    for gi, img in enumerate(grays):
+        for enc in ("encode_gray_jpeg", "encode_gray_jpeg_progressive"):
+            for ri in (None, 1, 3, 8, 11):
+                for kw in ({}, side):
+                    yield (enc, gi, ri, bool(kw)), getattr(jpeg, enc)(img, restart_interval=ri, **kw)
+    q = np.arange(1, 65, dtype=np.int64) % 7 + 1
+    for gi, img in enumerate(grays):
+        yield ("quant", gi), jpeg.encode_gray_jpeg(img, quant=q)
+    rgbs = [
+        rng.integers(0, 256, (*s, 3), dtype=np.uint8)
+        for s in ((1, 1), (9, 17), (17, 23), (33, 9), (24, 40), (40, 72))
+    ]
+    for ci, rgb in enumerate(rgbs):
+        for samp in ("444", "422", "420", "411", "440"):
+            for enc in ("encode_color_jpeg", "encode_color_jpeg_progressive"):
+                for ri in (None, 1, 3, 5, 7):
+                    yield (enc, ci, samp, ri), getattr(jpeg, enc)(rgb, samp, restart_interval=ri)
+                yield (enc, ci, samp, "side"), getattr(jpeg, enc)(rgb, samp, **side)
+    for ci, rgb in enumerate(rgbs):
+        for enc in ("encode_cmyk_jpeg", "encode_ycck_jpeg"):
+            for kw in ({}, side):
+                yield (enc, ci, bool(kw)), getattr(jpeg, enc)(rgb, **kw)
+
+
+def test_encoder_bytes_are_pinned():
+    """The sha256 of the bytes every public encoder writes over a fixed
+    grid.  The decode pins hash decoded pixels, so an encoder change that
+    moves a byte but decodes to the same pixels passes them; this pin
+    does not."""
+    h = hashlib.sha256()
+    n = 0
+    for _, b in _encoder_byte_grid():
+        h.update(len(b).to_bytes(8, "big"))
+        h.update(b)
+        n += 1
+    assert (n, h.hexdigest()) == (ENCODER_BYTES_N, ENCODER_BYTES_SHA256)
