@@ -26,6 +26,13 @@ magnitude bits fit in the 16-bit window.  Coefficients are collected in
 lists and stored once per scan.  The inverse DCT is two matrix products
 per block stack, `C.T @ blocks @ C`.
 
+Encoding: every public encoder (gray, color, CMYK/YCCK; baseline and
+progressive) builds its component planes and calls one core,
+`_encode_frame`.  The core pads each plane to the MCU grid, quantizes
+it with `_quantize_blocks`, orders the blocks with `_mcu_block_order`
+(which the decoder shares) and writes the framing and the scans once
+(see "encoder" below).
+
 Encoding defaults to a FLAT quantization table of all ones ("archival
 quality"): the only loss is integer rounding of DCT coefficients, which
 bounds the pixel round-trip error to a few gray levels — far inside the
@@ -233,17 +240,13 @@ def _meta_segments(icc_name: str | None, exif_orientation: int | None) -> bytes:
 
 
 def _quantize_blocks(img: np.ndarray, q: np.ndarray) -> np.ndarray:
-    """uint8 HxW -> (n_blocks, 64) quantized coefficients in ZIGZAG order
-    (blocks in raster order, edge-replication padding to 8x8 multiples).
-    Shared by the baseline and progressive encoders."""
+    """uint8 HxW, both multiples of 8 -> (n_blocks, 64) quantized
+    coefficients in ZIGZAG order, blocks in raster order.  The encoder
+    core, `_encode_frame`, runs every component plane through it."""
     h, w = img.shape
-    ph, pw = (h + 7) // 8 * 8, (w + 7) // 8 * 8
-    padded = np.pad(img, ((0, ph - h), (0, pw - w)), mode="edge").astype(np.float64)
     # all blocks at once: (n_blocks, 8, 8) -> DCT -> quantize -> zigzag
-    blocks = (
-        padded.reshape(ph // 8, 8, pw // 8, 8).transpose(0, 2, 1, 3).reshape(-1, 8, 8)
-        - 128.0
-    )
+    blocks = img.astype(np.float64).reshape(h // 8, 8, w // 8, 8).transpose(0, 2, 1, 3)
+    blocks = blocks.reshape(-1, 8, 8) - 128.0
     coeffs = np.einsum("ux,bxy,vy->buv", _C, blocks, _C)
     qmat = q[_ZZ.argsort()].reshape(8, 8)  # natural-order quant matrix
     quantized = np.round(coeffs / qmat).astype(np.int64)
@@ -298,6 +301,186 @@ def _encode_baseline_block(bw: _BitWriter, blk: np.ndarray, prev_dc: int) -> int
     return int(blk[0])
 
 
+def _mcu_block_order(
+    factors: list[tuple[int, int]], mcux: int, mcuy: int
+) -> list[tuple[int, int]]:
+    """Interleaved scan order as (component index, block index into that
+    component's raster-order MCU-padded block array) — T.81 A.2.3."""
+    order: list[tuple[int, int]] = []
+    for my in range(mcuy):
+        for mx in range(mcux):
+            for ci, (fh, fv) in enumerate(factors):
+                bw = mcux * fh
+                for vy in range(fv):
+                    for vx in range(fh):
+                        order.append((ci, (my * fv + vy) * bw + (mx * fh + vx)))
+    return order
+
+
+def _inrange_idx(
+    ci: int, factors: list[tuple[int, int]], mcux: int, mcuy: int, h: int, w: int
+) -> list[int]:
+    """Raster indices of component ci's IN-RANGE blocks (the ceil(dim/8)
+    grid a non-interleaved scan covers) inside its MCU-padded array."""
+    fh, fv = factors[ci]
+    hmax = max(f[0] for f in factors)
+    vmax = max(f[1] for f in factors)
+    cw = (w * fh + hmax - 1) // hmax
+    ch = (h * fv + vmax - 1) // vmax
+    nbw, nbh = (cw + 7) // 8, (ch + 7) // 8
+    bw = mcux * fh
+    return [by * bw + bx for by in range(nbh) for bx in range(nbw)]
+
+
+# --------------------------------------------------------------- encoder
+# The encoder core, `_encode_frame`, codes its scans with one restart
+# chunker (`_restart_join`) and one coder per scan kind:
+# baseline (`_enc_baseline_scan`), progressive DC first/refine
+# (`_enc_dc_scan`) and progressive AC first/refine (`_enc_ac_first`,
+# `_enc_ac_refine`, in the progressive section below).
+
+
+def _restart_join(code, units, step: int) -> bytes:
+    """`code(units)`, or with `step` > 0 one `code` call per `step` units
+    joined by RST0..RST7 in turn (T.81 B.2.1.2): each call is a fresh,
+    flushed bit stream, so every restart interval starts byte-aligned
+    with its DC predictors and EOB run reset."""
+    if not step:
+        return code(units)
+    return b"".join(
+        (bytes([0xFF, 0xD0 + (si - 1) % 8]) if si else b"")
+        + code(units[lo : lo + step])
+        for si, lo in enumerate(range(0, len(units), step))
+    )
+
+
+def _enc_baseline_scan(zz: list[np.ndarray], units: list[tuple[int, int]]) -> bytes:
+    """Baseline scan over (component, block) units: per-component DC
+    predictors, one `_encode_baseline_block` per unit."""
+    bw = _BitWriter()
+    prev = [0] * len(zz)
+    for ci, bi in units:
+        prev[ci] = _encode_baseline_block(bw, zz[ci][bi], prev[ci])
+    return bw.flush()
+
+
+def _enc_dc_scan(
+    zz: list[np.ndarray], units: list[tuple[int, int]], ah: int, al: int
+) -> bytes:
+    """Progressive DC scan over (component, block) units (T.81 G.1.2.1):
+    a first scan (ah=0) DC-diff codes the point-transformed `dc >> al`, a
+    refinement (ah=1) writes bit `al` of each DC raw."""
+    bw = _BitWriter()
+    prev = [0] * len(zz)
+    for ci, bi in units:
+        v = int(zz[ci][bi, 0]) >> al
+        if ah:
+            bw.write(v & 1, 1)
+            continue
+        size, code = _magnitude(v - prev[ci])
+        prev[ci] = v
+        c, ln = _DC_ENC[size]
+        bw.write(c, ln)
+        if size:
+            bw.write(code, size)
+    return bw.flush()
+
+
+def _encode_frame(
+    planes: list[np.ndarray],
+    factors: list[tuple[int, int]],
+    tq: list[int],
+    q: np.ndarray = _FLAT_QUANT,
+    bands: tuple[tuple[int, int], ...] | None = None,
+    adobe_transform: int | None = None,
+    dpi: float | None = None,
+    icc_name: str | None = None,
+    exif_orientation: int | None = None,
+    restart_interval: int | None = None,
+) -> bytes:
+    """uint8 component planes at their sampling `factors` [(h_i, v_i)],
+    component 0 at full resolution -> JPEG bytes.  `tq` names each
+    component's quantization table; every table is `q`.
+
+    Each plane is edge-padded to the MCU grid, quantized and put in MCU
+    order.  `bands` None writes a baseline frame (SOF0, one interleaved
+    scan).  Otherwise it writes a progressive frame (SOF2): interleaved
+    DC first (Al=1) and DC refine, then for the first (Al=1) and then
+    the refinement pass, per AC band, per component, one non-interleaved
+    scan over the component's own ceil(dim/8) block grid.
+    `adobe_transform` adds an Adobe APP14 segment with that transform;
+    `restart_interval` (in MCUs) a DRI segment and RSTn markers."""
+    if any(p.dtype != np.uint8 or p.ndim != 2 for p in planes):
+        raise ValueError("JPEG encoder expects 2-D uint8 planes")
+    h, w = planes[0].shape
+    hmax = max(fh for fh, _ in factors)
+    vmax = max(fv for _, fv in factors)
+    mcux = (w + 8 * hmax - 1) // (8 * hmax)
+    mcuy = (h + 8 * vmax - 1) // (8 * vmax)
+    zz = []
+    for p, (fh, fv) in zip(planes, factors):
+        pad = ((0, 8 * fv * mcuy - p.shape[0]), (0, 8 * fh * mcux - p.shape[1]))
+        zz.append(_quantize_blocks(np.pad(p, pad, mode="edge"), q))
+    order = _mcu_block_order(factors, mcux, mcuy)
+    ri = restart_interval or 0
+    step = ri * sum(fh * fv for fh, fv in factors)  # blocks per interval
+
+    # the AC table: Annex K (id 0) for baseline, the complete table that
+    # codes EOB runs (id 1) for progressive
+    th, bits, vals = (0, _AC_BITS, _AC_VALS)
+    if bands is not None:
+        th, bits, vals = 1, _PROG_AC_BITS, _PROG_AC_VALS
+
+    def sos(comps, ta: int, ss: int, se: int, ah: int, al: int, data: bytes) -> bytes:
+        sel = [v for ci in comps for v in (ci + 1, ta)]  # DC table 0, AC table ta
+        return _seg(0xFFDA, bytes([len(comps), *sel, ss, se, (ah << 4) | al])) + data
+
+    every = range(len(planes))
+    if bands is None:
+        code = functools.partial(_enc_baseline_scan, zz)
+        scans = [sos(every, th, 0, 63, 0, 0, _restart_join(code, order, step))]
+    else:
+        scans = []
+        for ah, al in ((0, 1), (1, 0)):
+            code = functools.partial(_enc_dc_scan, zz, ah=ah, al=al)
+            scans.append(sos(every, 0, 0, 0, ah, al, _restart_join(code, order, step)))
+        for ah, al, enc in ((0, 1, _enc_ac_first), (1, 0, _enc_ac_refine)):
+            for ss, se in bands:
+                for ci in every:
+                    blocks = zz[ci][_inrange_idx(ci, factors, mcux, mcuy, h, w)]
+                    code = functools.partial(enc, ss=ss, se=se, al=al)
+                    scans.append(sos([ci], th, ss, se, ah, al, _restart_join(code, blocks, ri)))
+
+    density = (1, round(dpi), round(dpi)) if dpi else (0, 1, 1)
+    app0 = b"JFIF\x00\x01\x01" + struct.pack(">BHHBB", *density, 0, 0)
+    app14 = (
+        _seg(0xFFEE, b"Adobe" + struct.pack(">HHHB", 100, 0, 0, adobe_transform))
+        if adobe_transform is not None
+        else b""
+    )
+    dqt = b"".join(bytes([t, *(int(v) for v in q)]) for t in sorted(set(tq)))
+    sof = struct.pack(">BHHB", 8, h, w, len(planes)) + b"".join(
+        bytes([ci + 1, (fh << 4) | fv, t]) for ci, ((fh, fv), t) in enumerate(zip(factors, tq))
+    )
+    dht = (
+        b"\x00" + bytes(_DC_BITS[1:]) + bytes(_DC_VALS)
+        + bytes([0x10 | th]) + bytes(bits[1:]) + bytes(vals)
+    )
+    dri = _seg(0xFFDD, struct.pack(">H", ri)) if ri else b""
+    return (
+        b"\xff\xd8"
+        + _seg(0xFFE0, app0)
+        + app14
+        + _meta_segments(icc_name, exif_orientation)
+        + _seg(0xFFDB, dqt)
+        + _seg(0xFFC0 if bands is None else 0xFFC2, sof)
+        + _seg(0xFFC4, dht)
+        + dri
+        + b"".join(scans)
+        + b"\xff\xd9"
+    )
+
+
 def encode_gray_jpeg(
     img: np.ndarray,
     quant: np.ndarray | None = None,
@@ -306,7 +489,8 @@ def encode_gray_jpeg(
     exif_orientation: int | None = None,
     restart_interval: int | None = None,
 ) -> bytes:
-    """uint8 HxW array -> baseline JFIF bytes (1 component, flat quant).
+    """uint8 HxW array -> baseline JFIF bytes (1 component, flat quant
+    unless `quant` gives the 64 zigzag-order table entries).
 
     `dpi` lands in the JFIF APP0 density fields (units=1, dots/inch) —
     the JPEG analog of PNG's pHYs side-value; `icc_name` embeds a minimal
@@ -316,57 +500,10 @@ def encode_gray_jpeg(
     many blocks (T.81 B.2.1.2 — camera JPEGs use restarts routinely;
     each segment re-byte-aligns and resets the DC predictor).
     """
-    if img.dtype != np.uint8 or img.ndim != 2:
-        raise ValueError("encode_gray_jpeg expects a 2-D uint8 array")
-    h, w = img.shape
     q = _FLAT_QUANT if quant is None else np.asarray(quant, dtype=np.int64).ravel()
-    zz = _quantize_blocks(img, q)
-
-    if restart_interval:
-        parts: list[bytes] = []
-        for si, lo in enumerate(range(0, len(zz), restart_interval)):
-            bw = _BitWriter()
-            prev_dc = 0
-            for blk in zz[lo : lo + restart_interval]:
-                prev_dc = _encode_baseline_block(bw, blk, prev_dc)
-            parts.append(bw.flush())
-        entropy = b""
-        for si, p in enumerate(parts):
-            if si:
-                entropy += bytes([0xFF, 0xD0 + ((si - 1) % 8)])
-            entropy += p
-    else:
-        bw = _BitWriter()
-        prev_dc = 0
-        for blk in zz:
-            prev_dc = _encode_baseline_block(bw, blk, prev_dc)
-        entropy = bw.flush()
-
-    density = (1, round(dpi), round(dpi)) if dpi else (0, 1, 1)
-    app0 = b"JFIF\x00\x01\x01" + struct.pack(">BHHBB", *density, 0, 0)
-    dqt = b"\x00" + bytes(int(v) for v in q)
-    sof0 = struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0])
-    dht = (
-        b"\x00" + bytes(_DC_BITS[1:]) + bytes(_DC_VALS)
-        + b"\x10" + bytes(_AC_BITS[1:]) + bytes(_AC_VALS)
-    )
-    sos = b"\x01" + bytes([1, 0x00]) + b"\x00\x3f\x00"
-    dri = (
-        _seg(0xFFDD, struct.pack(">H", restart_interval))
-        if restart_interval
-        else b""
-    )
-    return (
-        b"\xff\xd8"
-        + _seg(0xFFE0, app0)
-        + _meta_segments(icc_name, exif_orientation)
-        + _seg(0xFFDB, dqt)
-        + _seg(0xFFC0, sof0)
-        + _seg(0xFFC4, dht)
-        + dri
-        + _seg(0xFFDA, sos)
-        + entropy
-        + b"\xff\xd9"
+    return _encode_frame(
+        [img], [(1, 1)], [0], q, dpi=dpi, icc_name=icc_name,
+        exif_orientation=exif_orientation, restart_interval=restart_interval,
     )
 
 
@@ -564,8 +701,10 @@ def encode_progressive_stub(h: int = 32, w: int = 64) -> bytes:
 # public spec (T.81 figures G.3-G.7); restart intervals reset the DC
 # predictors and EOB runs at every RSTn.
 #
-# The encoder exists to make REAL fixtures (datagen progressive tier): a
-# 6-scan script covering every decoder path — DC first (Al=1), DC refine,
+# The encoder side of this section is the AC first and refinement
+# coders that `_encode_frame` runs for the progressive encoders.  Those
+# exist to make REAL fixtures (datagen progressive tiers): the gray
+# 6-scan script covers every decoder path — DC first (Al=1), DC refine,
 # two AC-first band scans (Al=1), two AC-refine scans — with true EOB-run
 # accumulation across blocks.  AC scans use a custom complete Huffman
 # table (all 256 run/size symbols) because the Annex K table lacks the
@@ -577,36 +716,6 @@ def encode_progressive_stub(h: int = 32, w: int = 64) -> bytes:
 _PROG_AC_BITS = [0, 0, 0, 0, 0, 0, 0, 0, 0, 255, 1, 0, 0, 0, 0, 0, 0]
 _PROG_AC_VALS = list(range(256))
 _PROG_AC_ENC = _build_codes(_PROG_AC_BITS, _PROG_AC_VALS)
-
-
-def _sos_payload(ss: int, se: int, ah: int, al: int, td: int, ta: int) -> bytes:
-    return bytes([1, 1, (td << 4) | ta, ss, se, (ah << 4) | al])
-
-
-def _enc_dc_first(zz: np.ndarray, al: int) -> bytes:
-    """DC first scan: baseline DC diff coding on the point-transformed
-    (arithmetic-shifted, T.81 G.1.2.1) values."""
-    bw = _BitWriter()
-    prev = 0
-    for b in range(zz.shape[0]):
-        v = int(zz[b, 0]) >> al
-        diff = v - prev
-        prev = v
-        size, code = _magnitude(diff)
-        c, ln = _DC_ENC[size]
-        bw.write(c, ln)
-        if size:
-            bw.write(code, size)
-    return bw.flush()
-
-
-def _enc_dc_refine(zz: np.ndarray, al: int) -> bytes:
-    """DC refinement: one raw bit (bit `al` of the two's-complement DC)
-    per block, no entropy coding (T.81 G.1.2.1)."""
-    bw = _BitWriter()
-    for b in range(zz.shape[0]):
-        bw.write((int(zz[b, 0]) >> al) & 1, 1)
-    return bw.flush()
 
 
 class _EobState:
@@ -726,7 +835,6 @@ def _enc_ac_refine(zz: np.ndarray, ss: int, se: int, al: int) -> bytes:
 
 def encode_gray_jpeg_progressive(
     img: np.ndarray,
-    quant: np.ndarray | None = None,
     dpi: float | None = None,
     icc_name: str | None = None,
     exif_orientation: int | None = None,
@@ -745,60 +853,10 @@ def encode_gray_jpeg_progressive(
     every decoder path.  The scans carry the coefficients to full
     precision: the decoded image is bit-identical to decoding the same
     image's baseline encoding (asserted by tests/test_jpeg_codec.py).
-
-    `restart_interval` (round 6): every scan is chunked every Ri MCUs
-    (single-component, so Ri blocks) with RSTn markers between chunks —
-    per T.81 each chunk restarts byte-aligned with DC predictor and EOB
-    run reset, which the per-chunk encoder calls provide for free (each
-    produces a self-contained, flushed bit stream)."""
-    if img.dtype != np.uint8 or img.ndim != 2:
-        raise ValueError("encode_gray_jpeg_progressive expects a 2-D uint8 array")
-    h, w = img.shape
-    q = _FLAT_QUANT if quant is None else np.asarray(quant, dtype=np.int64).ravel()
-    zz = _quantize_blocks(img, q)
-
-    def _chunked(enc) -> bytes:
-        if not restart_interval:
-            return enc(zz)
-        parts = []
-        for si, lo in enumerate(range(0, len(zz), restart_interval)):
-            if si:
-                parts.append(bytes([0xFF, 0xD0 + ((si - 1) % 8)]))
-            parts.append(enc(zz[lo : lo + restart_interval]))
-        return b"".join(parts)
-
-    density = (1, round(dpi), round(dpi)) if dpi else (0, 1, 1)
-    app0 = b"JFIF\x00\x01\x01" + struct.pack(">BHHBB", *density, 0, 0)
-    dqt = b"\x00" + bytes(int(v) for v in q)
-    sof2 = struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0])
-    dht = (
-        b"\x00" + bytes(_DC_BITS[1:]) + bytes(_DC_VALS)
-        + b"\x11" + bytes(_PROG_AC_BITS[1:]) + bytes(_PROG_AC_VALS)
-    )
-    dri = (
-        _seg(0xFFDD, struct.pack(">H", restart_interval))
-        if restart_interval
-        else b""
-    )
-    scans = [
-        (_sos_payload(0, 0, 0, 1, 0, 0), _chunked(lambda z: _enc_dc_first(z, 1))),
-        (_sos_payload(0, 0, 1, 0, 0, 0), _chunked(lambda z: _enc_dc_refine(z, 0))),
-        (_sos_payload(1, 5, 0, 1, 0, 1), _chunked(lambda z: _enc_ac_first(z, 1, 5, 1))),
-        (_sos_payload(6, 63, 0, 1, 0, 1), _chunked(lambda z: _enc_ac_first(z, 6, 63, 1))),
-        (_sos_payload(1, 5, 1, 0, 0, 1), _chunked(lambda z: _enc_ac_refine(z, 1, 5, 0))),
-        (_sos_payload(6, 63, 1, 0, 0, 1), _chunked(lambda z: _enc_ac_refine(z, 6, 63, 0))),
-    ]
-    body = b"".join(_seg(0xFFDA, hdr) + data for hdr, data in scans)
-    return (
-        b"\xff\xd8"
-        + _seg(0xFFE0, app0)
-        + _meta_segments(icc_name, exif_orientation)
-        + _seg(0xFFDB, dqt)
-        + _seg(0xFFC2, sof2)
-        + _seg(0xFFC4, dht)
-        + dri
-        + body
-        + b"\xff\xd9"
+    `restart_interval` chunks every scan every that many blocks."""
+    return _encode_frame(
+        [img], [(1, 1)], [0], bands=((1, 5), (6, 63)), dpi=dpi, icc_name=icc_name,
+        exif_orientation=exif_orientation, restart_interval=restart_interval,
     )
 
 
@@ -1069,79 +1127,26 @@ _SUBSAMPLING = {
 }
 
 
-def _color_planes(
+def _ycbcr_planes(
     rgb: np.ndarray, subsampling: str
-) -> tuple[list[np.ndarray], list[tuple[int, int]], int, int]:
-    """RGB -> [Y, Cb, Cr] uint8 planes padded to their MCU grids; returns
-    (planes, sampling factors [(h_i, v_i)], mcux, mcuy)."""
+) -> tuple[list[np.ndarray], list[tuple[int, int]]]:
+    """RGB -> ([Y, Cb, Cr] uint8 planes box-downsampled to their sampling
+    factors, the factors [(h_i, v_i)])."""
     if rgb.dtype != np.uint8 or rgb.ndim != 3 or rgb.shape[2] != 3:
         raise ValueError("expected a HxWx3 uint8 array")
-    factors = _SUBSAMPLING[subsampling]
+    factors = list(_SUBSAMPLING[subsampling])
     hmax = max(f[0] for f in factors)
     vmax = max(f[1] for f in factors)
-    h, w = rgb.shape[:2]
-    mcux = (w + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-    planes = []
-    for plane, (fh, fv) in zip(rgb_to_ycbcr(rgb), factors):
-        sub = _box_downsample(plane, vmax // fv, hmax // fh)
-        th, tw = 8 * fv * mcuy, 8 * fh * mcux  # full MCU-grid plane size
-        sh, sw = sub.shape
-        planes.append(np.pad(sub, ((0, th - sh), (0, tw - sw)), mode="edge"))
-    return planes, list(factors), mcux, mcuy
-
-
-def _mcu_block_order(
-    factors: list[tuple[int, int]], mcux: int, mcuy: int
-) -> list[tuple[int, int]]:
-    """Interleaved scan order as (component index, block index into that
-    component's raster-order MCU-padded block array) — T.81 A.2.3."""
-    order: list[tuple[int, int]] = []
-    for my in range(mcuy):
-        for mx in range(mcux):
-            for ci, (fh, fv) in enumerate(factors):
-                bw = mcux * fh
-                for vy in range(fv):
-                    for vx in range(fh):
-                        order.append((ci, (my * fv + vy) * bw + (mx * fh + vx)))
-    return order
-
-
-def _color_frame_segments(
-    h: int,
-    w: int,
-    factors: list[tuple[int, int]],
-    qy: np.ndarray,
-    qc: np.ndarray,
-    sof_marker: int,
-    dht: bytes,
-    dpi: float | None,
-    icc_name: str | None,
-    exif_orientation: int | None,
-) -> bytes:
-    density = (1, round(dpi), round(dpi)) if dpi else (0, 1, 1)
-    app0 = b"JFIF\x00\x01\x01" + struct.pack(">BHHBB", *density, 0, 0)
-    dqt = (
-        b"\x00" + bytes(int(v) for v in qy) + b"\x01" + bytes(int(v) for v in qc)
-    )
-    sof = struct.pack(">BHHB", 8, h, w, 3) + b"".join(
-        bytes([cid, (fh << 4) | fv, 0 if cid == 1 else 1])
-        for cid, (fh, fv) in zip((1, 2, 3), factors)
-    )
-    return (
-        b"\xff\xd8"
-        + _seg(0xFFE0, app0)
-        + _meta_segments(icc_name, exif_orientation)
-        + _seg(0xFFDB, dqt)
-        + _seg(sof_marker, sof)
-        + _seg(0xFFC4, dht)
-    )
+    planes = [
+        _box_downsample(plane, vmax // fv, hmax // fh)
+        for plane, (fh, fv) in zip(rgb_to_ycbcr(rgb), factors)
+    ]
+    return planes, factors
 
 
 def encode_color_jpeg(
     rgb: np.ndarray,
     subsampling: str = "420",
-    quant: np.ndarray | None = None,
     dpi: float | None = None,
     icc_name: str | None = None,
     exif_orientation: int | None = None,
@@ -1149,78 +1154,23 @@ def encode_color_jpeg(
 ) -> bytes:
     """uint8 HxWx3 RGB -> baseline 3-component YCbCr JFIF bytes.
 
-    One interleaved scan; `subsampling` picks 4:4:4 (all 1x1) or 4:2:0
-    (Y 2x2, chroma 1x1); `restart_interval` is in MCUs (T.81 B.2.1.2 —
-    every component's DC predictor resets at each RSTn).  Flat quant for
-    BOTH tables by default: chroma subsampling is then the only real
+    One interleaved scan; `subsampling` picks a key of `_SUBSAMPLING`
+    (4:4:4, 4:2:2, 4:2:0, 4:1:1, 4:4:0); `restart_interval` is in MCUs
+    (T.81 B.2.1.2 — every component's DC predictor resets at each RSTn).
+    Flat quant for BOTH tables: chroma subsampling is then the only real
     loss, and BT.601 luminance is invariant under chroma error (the
     inverse transform's Y contribution cancels exactly), so gray-decode
     margins match the grayscale tiers."""
-    h, w = rgb.shape[:2]
-    qy = _FLAT_QUANT if quant is None else np.asarray(quant, dtype=np.int64).ravel()
-    qc = qy
-    planes, factors, mcux, mcuy = _color_planes(rgb, subsampling)
-    zz = [_quantize_blocks(p, qy) for p in planes]
-    order = _mcu_block_order(factors, mcux, mcuy)
-    blocks_per_mcu = sum(fh * fv for fh, fv in factors)
-
-    def _enc_run(run: list[tuple[int, int]]) -> bytes:
-        bw = _BitWriter()
-        prev = [0, 0, 0]
-        for ci, bi in run:
-            prev[ci] = _encode_baseline_block(bw, zz[ci][bi], prev[ci])
-        return bw.flush()
-
-    if restart_interval:
-        step = restart_interval * blocks_per_mcu
-        entropy = b""
-        for si, lo in enumerate(range(0, len(order), step)):
-            if si:
-                entropy += bytes([0xFF, 0xD0 + ((si - 1) % 8)])
-            entropy += _enc_run(order[lo : lo + step])
-    else:
-        entropy = _enc_run(order)
-
-    dht = (
-        b"\x00" + bytes(_DC_BITS[1:]) + bytes(_DC_VALS)
-        + b"\x10" + bytes(_AC_BITS[1:]) + bytes(_AC_VALS)
+    planes, factors = _ycbcr_planes(rgb, subsampling)
+    return _encode_frame(
+        planes, factors, [0, 1, 1], dpi=dpi, icc_name=icc_name,
+        exif_orientation=exif_orientation, restart_interval=restart_interval,
     )
-    sos = b"\x03" + bytes([1, 0x00, 2, 0x00, 3, 0x00]) + b"\x00\x3f\x00"
-    dri = (
-        _seg(0xFFDD, struct.pack(">H", restart_interval))
-        if restart_interval
-        else b""
-    )
-    return (
-        _color_frame_segments(
-            h, w, factors, qy, qc, 0xFFC0, dht, dpi, icc_name, exif_orientation
-        )
-        + dri
-        + _seg(0xFFDA, sos)
-        + entropy
-        + b"\xff\xd9"
-    )
-
-
-def _inrange_idx(
-    ci: int, factors: list[tuple[int, int]], mcux: int, mcuy: int, h: int, w: int
-) -> list[int]:
-    """Raster indices of component ci's IN-RANGE blocks (the ceil(dim/8)
-    grid a non-interleaved scan covers) inside its MCU-padded array."""
-    fh, fv = factors[ci]
-    hmax = max(f[0] for f in factors)
-    vmax = max(f[1] for f in factors)
-    cw = (w * fh + hmax - 1) // hmax
-    ch = (h * fv + vmax - 1) // vmax
-    nbw, nbh = (cw + 7) // 8, (ch + 7) // 8
-    bw = mcux * fh
-    return [by * bw + bx for by in range(nbh) for bx in range(nbw)]
 
 
 def encode_color_jpeg_progressive(
     rgb: np.ndarray,
     subsampling: str = "420",
-    quant: np.ndarray | None = None,
     dpi: float | None = None,
     icc_name: str | None = None,
     exif_orientation: int | None = None,
@@ -1237,97 +1187,10 @@ def encode_color_jpeg_progressive(
     component's own ceil(dim/8) block grid; coefficients reach full
     precision, so the decode is bit-identical to the baseline encoding
     of the same image (asserted in tests)."""
-    h, w = rgb.shape[:2]
-    qy = _FLAT_QUANT if quant is None else np.asarray(quant, dtype=np.int64).ravel()
-    planes, factors, mcux, mcuy = _color_planes(rgb, subsampling)
-    zz = [_quantize_blocks(p, qy) for p in planes]
-    order = _mcu_block_order(factors, mcux, mcuy)
-
-    blocks_per_mcu = sum(fh * fv for fh, fv in factors)
-
-    def _rst_join(encode_chunk, items, per_mcu: int) -> bytes:
-        """Restart-interval chunking (round 6): Ri MCUs per segment,
-        RSTn between segments, each chunk a self-contained flushed bit
-        stream (DC predictors / EOB runs reset by construction)."""
-        if not restart_interval:
-            return encode_chunk(items)
-        step = restart_interval * per_mcu
-        parts = []
-        for si, lo in enumerate(range(0, len(items), step)):
-            if si:
-                parts.append(bytes([0xFF, 0xD0 + ((si - 1) % 8)]))
-            parts.append(encode_chunk(items[lo : lo + step]))
-        return b"".join(parts)
-
-    def _dc_first_chunk(chunk, al: int) -> bytes:
-        bw = _BitWriter()
-        prev = [0, 0, 0]
-        for ci, bi in chunk:
-            v = int(zz[ci][bi, 0]) >> al
-            size, code = _magnitude(v - prev[ci])
-            prev[ci] = v
-            c, ln = _DC_ENC[size]
-            bw.write(c, ln)
-            if size:
-                bw.write(code, size)
-        return bw.flush()
-
-    def _dc_first(al: int) -> bytes:
-        return _rst_join(lambda ch: _dc_first_chunk(ch, al), order, blocks_per_mcu)
-
-    def _dc_refine_chunk(chunk, al: int) -> bytes:
-        bw = _BitWriter()
-        for ci, bi in chunk:
-            bw.write((int(zz[ci][bi, 0]) >> al) & 1, 1)
-        return bw.flush()
-
-    def _dc_refine(al: int) -> bytes:
-        return _rst_join(lambda ch: _dc_refine_chunk(ch, al), order, blocks_per_mcu)
-
-    def _sos_multi(ah: int, al: int) -> bytes:
-        return (
-            b"\x03"
-            + bytes([1, 0x00, 2, 0x00, 3, 0x00])
-            + bytes([0, 0, (ah << 4) | al])
-        )
-
-    def _sos_one(cid: int, ss: int, se: int, ah: int, al: int) -> bytes:
-        return bytes([1, cid, 0x01, ss, se, (ah << 4) | al])
-
-    scans: list[tuple[bytes, bytes]] = [
-        (_sos_multi(0, 1), _dc_first(1)),
-        (_sos_multi(1, 0), _dc_refine(0)),
-    ]
-    for ci in range(3):
-        sub = zz[ci][_inrange_idx(ci, factors, mcux, mcuy, h, w)]
-        scans.append((
-            _sos_one(ci + 1, 1, 63, 0, 1),
-            _rst_join(lambda ch: _enc_ac_first(ch, 1, 63, 1), sub, 1),
-        ))
-    for ci in range(3):
-        sub = zz[ci][_inrange_idx(ci, factors, mcux, mcuy, h, w)]
-        scans.append((
-            _sos_one(ci + 1, 1, 63, 1, 0),
-            _rst_join(lambda ch: _enc_ac_refine(ch, 1, 63, 0), sub, 1),
-        ))
-
-    dht = (
-        b"\x00" + bytes(_DC_BITS[1:]) + bytes(_DC_VALS)
-        + b"\x11" + bytes(_PROG_AC_BITS[1:]) + bytes(_PROG_AC_VALS)
-    )
-    dri = (
-        _seg(0xFFDD, struct.pack(">H", restart_interval))
-        if restart_interval
-        else b""
-    )
-    body = b"".join(_seg(0xFFDA, hdr) + data for hdr, data in scans)
-    return (
-        _color_frame_segments(
-            h, w, factors, qy, qy, 0xFFC2, dht, dpi, icc_name, exif_orientation
-        )
-        + dri
-        + body
-        + b"\xff\xd9"
+    planes, factors = _ycbcr_planes(rgb, subsampling)
+    return _encode_frame(
+        planes, factors, [0, 1, 1], bands=((1, 63),), dpi=dpi, icc_name=icc_name,
+        exif_orientation=exif_orientation, restart_interval=restart_interval,
     )
 
 
@@ -1623,7 +1486,8 @@ def encode_lossless_stub(h: int = 32, w: int = 64) -> bytes:
 # them via PIL (`image_processor/main.py:58-63`, mode "CMYK") and grays
 # the RGB conversion.  The T.81 machinery here is component-generic, so
 # this section is only: RGB<->CMYK converters, the APP14 probe and the
-# 4-component baseline encoders (4:4:4); `decode_jpeg` converts the
+# two 4-component baseline encoders, which pass four 1x1 planes and an
+# Adobe transform to `_encode_frame`; `decode_jpeg` converts the
 # decoded planes to RGB.  Scope:
 # baseline only, Adobe transforms 0 (plain CMYK) AND 2 (YCCK — the
 # inverted CMY channels ride the standard YCbCr transform with K
@@ -1684,59 +1548,13 @@ def encode_cmyk_jpeg(
     icc_name: str | None = None,
     exif_orientation: int | None = None,
 ) -> bytes:
-    """uint8 HxWx3 RGB -> 4-component CMYK baseline JFIF-less JPEG with
-    the Adobe APP14 marker (transform 0), samples stored INVERTED per
-    the Adobe convention, all components 1x1 (no subsampling)."""
+    """uint8 HxWx3 RGB -> 4-component CMYK baseline JPEG with the Adobe
+    APP14 marker (transform 0), samples stored INVERTED per the Adobe
+    convention, all components 1x1 (no subsampling)."""
     planes = [255 - p for p in rgb_to_cmyk(rgb)]  # Adobe inversion
-    return _encode_4comp(
-        planes, rgb.shape[0], rgb.shape[1], 0, dpi, icc_name, exif_orientation
-    )
-
-
-def _encode_4comp(
-    planes: list[np.ndarray],
-    h: int,
-    w: int,
-    transform: int,
-    dpi: float | None,
-    icc_name: str | None,
-    exif_orientation: int | None,
-) -> bytes:
-    """Shared 4-component baseline framing (SOF0, one interleaved scan,
-    Adobe APP14 with the given transform byte, all factors 1x1)."""
-    q = _FLAT_QUANT
-    zz = [_quantize_blocks(p, q) for p in planes]
-    factors = [(1, 1)] * 4
-    mcux, mcuy = (w + 7) // 8, (h + 7) // 8
-    order = _mcu_block_order(factors, mcux, mcuy)
-    bw_ = _BitWriter()
-    prev = [0, 0, 0, 0]
-    for ci, bi in order:
-        prev[ci] = _encode_baseline_block(bw_, zz[ci][bi], prev[ci])
-    entropy = bw_.flush()
-    dht = (
-        b"\x00" + bytes(_DC_BITS[1:]) + bytes(_DC_VALS)
-        + b"\x10" + bytes(_AC_BITS[1:]) + bytes(_AC_VALS)
-    )
-    dqt = b"\x00" + bytes(int(v) for v in q)
-    sof = struct.pack(">BHHB", 8, h, w, 4) + b"".join(
-        bytes([cid, 0x11, 0]) for cid in (1, 2, 3, 4)
-    )
-    app14 = b"Adobe" + struct.pack(">HHHB", 100, 0, 0, transform)
-    sos = b"\x04" + bytes(v for cid in (1, 2, 3, 4) for v in (cid, 0x00)) + b"\x00\x3f\x00"
-    density = (1, round(dpi), round(dpi)) if dpi else (0, 1, 1)
-    app0 = b"JFIF\x00\x01\x01" + struct.pack(">BHHBB", *density, 0, 0)
-    return (
-        b"\xff\xd8"
-        + _seg(0xFFE0, app0)
-        + _seg(0xFFEE, app14)
-        + _meta_segments(icc_name, exif_orientation)
-        + _seg(0xFFDB, dqt)
-        + _seg(0xFFC0, sof)
-        + _seg(0xFFC4, dht)
-        + _seg(0xFFDA, sos)
-        + entropy
-        + b"\xff\xd9"
+    return _encode_frame(
+        planes, [(1, 1)] * 4, [0] * 4, adobe_transform=0, dpi=dpi,
+        icc_name=icc_name, exif_orientation=exif_orientation,
     )
 
 
@@ -1756,5 +1574,7 @@ def encode_ycck_jpeg(
     stored = [
         np.clip(np.rint(p), 0, 255).astype(np.uint8) for p in (y, cb, cr)
     ] + [255 - planes4[3]]
-    return _encode_4comp(stored, rgb.shape[0], rgb.shape[1], 2,
-                         dpi, icc_name, exif_orientation)
+    return _encode_frame(
+        stored, [(1, 1)] * 4, [0] * 4, adobe_transform=2, dpi=dpi,
+        icc_name=icc_name, exif_orientation=exif_orientation,
+    )
