@@ -463,6 +463,19 @@ def _parse(data: bytes) -> tuple[dict[int, list[int]], str]:
     return _read_ifd(data, e, ifd_off), e
 
 
+def _first(tags: dict[int, list[int]], tag: int, default: int | None = None) -> int:
+    """The first value of `tag`, or `default` when the IFD lacks it.
+    ValueError naming the tag when it is absent and has no default, or
+    when its entry has count 0."""
+    if tag not in tags:
+        if default is None:
+            raise ValueError(f"TIFF missing baseline tag {tag}")
+        return default
+    if not tags[tag]:
+        raise ValueError(f"TIFF tag {tag} has count 0")
+    return tags[tag][0]
+
+
 def decode_gray_tiff(data: bytes) -> np.ndarray:
     """TIFF bytes -> gray8 ndarray (first IFD; see module scope).
 
@@ -475,12 +488,12 @@ def decode_gray_tiff(data: bytes) -> np.ndarray:
         tags, _ = _parse(data)
     except (struct.error, IndexError) as exc:
         raise ValueError(f"malformed TIFF: {exc}") from exc
-    bits_list = tags.get(_T_BITS, [1])
-    bits = bits_list[0]
-    samples = tags.get(_T_SAMPLES, [1])[0]
-    compression = tags.get(_T_COMPRESSION, [1])[0]
-    photometric = tags.get(_T_PHOTOMETRIC, [1])[0]
-    planar = tags.get(_T_PLANAR, [1])[0]
+    bits = _first(tags, _T_BITS, 1)
+    bits_list = tags.get(_T_BITS, [bits])
+    samples = _first(tags, _T_SAMPLES, 1)
+    compression = _first(tags, _T_COMPRESSION, 1)
+    photometric = _first(tags, _T_PHOTOMETRIC, 1)
+    planar = _first(tags, _T_PLANAR, 1)
     if samples == 3:
         # RGB (round 7, VERDICT r6 item 4): 8-bit chunky only — the
         # scanner/camera layout; planar (2) and deep color stay out
@@ -500,8 +513,8 @@ def decode_gray_tiff(data: bytes) -> np.ndarray:
     if compression not in (1, 5, 32773):
         raise ScopeError(_UNSUPPORTED, f"compression {compression}")
     tiled = _T_TILE_WIDTH in tags
+    w, h = _first(tags, _T_WIDTH), _first(tags, _T_HEIGHT)
     try:
-        w, h = tags[_T_WIDTH][0], tags[_T_HEIGHT][0]
         if tiled:
             offsets, counts = tags[_T_TILE_OFFSETS], tags[_T_TILE_COUNTS]
         else:
@@ -537,8 +550,8 @@ def decode_gray_tiff(data: bytes) -> np.ndarray:
     if tiled:
         # TIFF 6.0 §15: tiles are FULL tile_w x tile_l (edges padded by
         # the writer), laid out row-major; placement crops the pads
-        tw = tags[_T_TILE_WIDTH][0]
-        tl = tags.get(_T_TILE_LENGTH, [tw])[0]
+        tw = _first(tags, _T_TILE_WIDTH)
+        tl = _first(tags, _T_TILE_LENGTH, tw)
         if tw <= 0 or tl <= 0:
             raise ValueError("bad TIFF tile geometry")
         across = (w + tw - 1) // tw
@@ -556,7 +569,7 @@ def decode_gray_tiff(data: bytes) -> np.ndarray:
                 : min(tl, h - ty), : min(tw, w - tx)
             ]
     else:
-        rows_per_strip = tags.get(_T_ROWS_PER_STRIP, [h])[0]
+        rows_per_strip = _first(tags, _T_ROWS_PER_STRIP, h)
         raw = bytearray()
         for si, (so, sc) in enumerate(zip(offsets, counts)):
             n_rows = min(rows_per_strip, h - si * rows_per_strip)

@@ -322,3 +322,26 @@ def test_tiff_tier_includes_rgb_and_decodes_exactly():
             n_rgb += tags.get(_T_SAMPLES, [1])[0] == 3
         assert kdecode(decode_media(buf)) == row["truth_text"]
     assert n_rgb >= 2, f"tier produced too few RGB TIFFs ({n_rgb})"
+
+
+@pytest.mark.parametrize(
+    "tag",
+    [256, 257, 258, 277, 278],
+    ids=["ImageWidth", "ImageLength", "BitsPerSample", "SamplesPerPixel", "RowsPerStrip"],
+)
+def test_zero_count_tag_is_a_value_error(tag):
+    """A layout or size tag whose IFD entry has count 0 fails as a
+    ValueError naming the tag, so the payload reads
+    `decode_error:ValueError` like the other malformed-IFD faults."""
+    from ms_ocr_spark.extraction.pipeline import media_status
+
+    img = np.random.default_rng(4).integers(0, 256, (20, 30), dtype=np.uint8)
+    b = bytearray(encode_gray_tiff(img, rows_per_strip=8))
+    (off,) = struct.unpack_from("<I", b, 4)
+    (n,) = struct.unpack_from("<H", b, off)
+    (at,) = [p for p in range(off + 2, off + 2 + 12 * n, 12) if struct.unpack_from("<H", b, p)[0] == tag]
+    struct.pack_into("<I", b, at + 4, 0)
+    with pytest.raises(ValueError, match=f"tag {tag}") as e:
+        decode_gray_tiff(bytes(b))
+    assert not isinstance(e.value, ScopeError)
+    assert media_status(bytes(b), None) == (None, "decode_error:ValueError")
