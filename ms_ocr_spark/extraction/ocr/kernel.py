@@ -70,78 +70,19 @@ def rotate_nn(img: np.ndarray, deg: float, fill: int = BG) -> np.ndarray:
     return out
 
 
-def rotate_bilinear(img: np.ndarray, deg: float, fill: int = BG) -> np.ndarray:
-    """Bilinear rotation about the image center, canvas expanded.
-
-    Used for grayscale images (generation skew + deskew correction) —
-    antialiased edges survive the rotate/deskew round trip far better than
-    nearest-neighbor, which is what keeps template matching exact.
-    """
-    if abs(deg) < 1e-9:
-        return img.copy()
-    th = np.deg2rad(deg)
-    c, s = np.cos(th), np.sin(th)
+def _sample_bilinear(
+    img: np.ndarray, inv: np.ndarray, nh: int, nw: int, fill: int
+) -> np.ndarray:
+    """Bilinear resample of `img` onto an nh x nw canvas with the same
+    center: output px (x, y) reads source px `inv @ (x - ncx, y - ncy)`
+    plus the source center, where `inv` is the float32 2x2 inverse map;
+    reads outside the source blend with `fill`.  Shared by
+    `rotate_bilinear` and `warp_bilinear`."""
     h, w = img.shape
-    nh = int(np.ceil(abs(h * c) + abs(w * s)))
-    nw = int(np.ceil(abs(w * c) + abs(h * s)))
     cy, cx = (h - 1) / 2.0, (w - 1) / 2.0
     ncy, ncx = (nh - 1) / 2.0, (nw - 1) / 2.0
     # float32 throughout + broadcasted row/col terms (no materialized grid):
     # halves the memory traffic of the float64/mgrid formulation
-    ys = np.arange(nh, dtype=np.float32) - np.float32(ncy)
-    xs = np.arange(nw, dtype=np.float32) - np.float32(ncx)
-    sx = np.float32(c) * xs[None, :] + np.float32(s) * ys[:, None] + np.float32(cx)
-    sy = np.float32(-s) * xs[None, :] + np.float32(c) * ys[:, None] + np.float32(cy)
-    x0 = np.floor(sx).astype(np.int32)
-    y0 = np.floor(sy).astype(np.int32)
-    fx = sx - x0
-    fy = sy - y0
-    pad = np.full((h + 2, w + 2), np.float32(fill), dtype=np.float32)
-    pad[1 : h + 1, 1 : w + 1] = img
-    ok = (x0 >= -1) & (x0 <= w - 1) & (y0 >= -1) & (y0 <= h - 1)
-    x0c = np.clip(x0 + 1, 0, w)
-    y0c = np.clip(y0 + 1, 0, h)
-    # flat gathers on precomputed indices + reused (1-f) factors: ~2x
-    # fewer index computations than four 2-D fancy indexes; the blend
-    # keeps the exact multiply order of the original expression, so the
-    # result is bit-identical (round 8)
-    flat = pad.ravel()
-    idx = y0c * (w + 2) + x0c
-    gx = 1 - fx
-    gy = 1 - fy
-    v = (
-        flat[idx] * gx * gy
-        + flat[idx + 1] * fx * gy
-        + flat[idx + (w + 2)] * gx * fy
-        + flat[idx + (w + 3)] * fx * fy
-    )
-    out = np.full((nh, nw), np.float32(fill), dtype=np.float32)
-    out[ok] = v[ok]
-    return np.clip(np.rint(out), 0, 255).astype(np.uint8)
-
-
-def affine_matrix(deg: float, shear: float) -> np.ndarray:
-    """Forward transform R(deg) @ S(shear) about the image center, where
-    S is the x-shear [[1, shear], [0, 1]] acting on (x, y) columns."""
-    th = np.deg2rad(deg)
-    c, s = np.cos(th), np.sin(th)
-    rot = np.array([[c, -s], [s, c]])
-    sh = np.array([[1.0, shear], [0.0, 1.0]])
-    return rot @ sh
-
-
-def warp_bilinear(img: np.ndarray, mat: np.ndarray, fill: int = BG) -> np.ndarray:
-    """General 2x2 affine warp about the image center (bilinear, canvas
-    expanded to the transformed bounding box).  `mat` maps source -> dest
-    coordinates as column vectors (x, y)."""
-    h, w = img.shape
-    cy, cx = (h - 1) / 2.0, (w - 1) / 2.0
-    corners = np.array([[-cx, -cx, cx, cx], [-cy, cy, -cy, cy]])
-    tc = mat @ corners
-    nw = int(np.ceil(tc[0].max() - tc[0].min())) + 1
-    nh = int(np.ceil(tc[1].max() - tc[1].min())) + 1
-    ncy, ncx = (nh - 1) / 2.0, (nw - 1) / 2.0
-    inv = np.linalg.inv(mat).astype(np.float32)
     ys = np.arange(nh, dtype=np.float32) - np.float32(ncy)
     xs = np.arange(nw, dtype=np.float32) - np.float32(ncx)
     sx = inv[0, 0] * xs[None, :] + inv[0, 1] * ys[:, None] + np.float32(cx)
@@ -172,6 +113,48 @@ def warp_bilinear(img: np.ndarray, mat: np.ndarray, fill: int = BG) -> np.ndarra
     out = np.full((nh, nw), np.float32(fill), dtype=np.float32)
     out[ok] = v[ok]
     return np.clip(np.rint(out), 0, 255).astype(np.uint8)
+
+
+def rotate_bilinear(img: np.ndarray, deg: float, fill: int = BG) -> np.ndarray:
+    """Bilinear rotation about the image center, canvas expanded.
+
+    Used for grayscale images (generation skew + deskew correction) —
+    antialiased edges survive the rotate/deskew round trip far better than
+    nearest-neighbor, which is what keeps template matching exact.
+    """
+    if abs(deg) < 1e-9:
+        return img.copy()
+    th = np.deg2rad(deg)
+    c, s = np.cos(th), np.sin(th)
+    h, w = img.shape
+    nh = int(np.ceil(abs(h * c) + abs(w * s)))
+    nw = int(np.ceil(abs(w * c) + abs(h * s)))
+    # inverse map: output px -> source px
+    inv = np.array([[c, s], [-s, c]], dtype=np.float32)
+    return _sample_bilinear(img, inv, nh, nw, fill)
+
+
+def affine_matrix(deg: float, shear: float) -> np.ndarray:
+    """Forward transform R(deg) @ S(shear) about the image center, where
+    S is the x-shear [[1, shear], [0, 1]] acting on (x, y) columns."""
+    th = np.deg2rad(deg)
+    c, s = np.cos(th), np.sin(th)
+    rot = np.array([[c, -s], [s, c]])
+    sh = np.array([[1.0, shear], [0.0, 1.0]])
+    return rot @ sh
+
+
+def warp_bilinear(img: np.ndarray, mat: np.ndarray, fill: int = BG) -> np.ndarray:
+    """General 2x2 affine warp about the image center (bilinear, canvas
+    expanded to the transformed bounding box).  `mat` maps source -> dest
+    coordinates as column vectors (x, y)."""
+    h, w = img.shape
+    cy, cx = (h - 1) / 2.0, (w - 1) / 2.0
+    corners = np.array([[-cx, -cx, cx, cx], [-cy, cy, -cy, cy]])
+    tc = mat @ corners
+    nw = int(np.ceil(tc[0].max() - tc[0].min())) + 1
+    nh = int(np.ceil(tc[1].max() - tc[1].min())) + 1
+    return _sample_bilinear(img, np.linalg.inv(mat).astype(np.float32), nh, nw, fill)
 
 
 def median3(img: np.ndarray) -> np.ndarray:
