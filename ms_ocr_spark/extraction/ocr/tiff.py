@@ -615,12 +615,13 @@ def tiff_side_values(data: bytes) -> dict:
         tags, _ = _parse(data)
     except (ValueError, struct.error, IndexError):
         return out
-    if _T_XRES in tags:
-        unit = tags.get(_T_RES_UNIT, [2])[0]  # 2 = inch (default), 3 = cm
-        if unit == 2:
-            out["dpi"] = float(tags[_T_XRES][0])
-        elif unit == 3:
-            out["dpi"] = float(tags[_T_XRES][0]) * 2.54
+    xres = tags.get(_T_XRES)
+    unit = tags.get(_T_RES_UNIT, [2])  # 2 = inch (default), 3 = cm
+    if xres and unit:  # a count-0 entry leaves dpi null
+        if unit[0] == 2:
+            out["dpi"] = float(xres[0])
+        elif unit[0] == 3:
+            out["dpi"] = float(xres[0]) * 2.54
     if _T_ORIENTATION in tags and tags[_T_ORIENTATION]:
         out["orientation"] = int(tags[_T_ORIENTATION][0])
     if _T_ICC in tags:

@@ -1692,7 +1692,8 @@ _TIERS: dict[str, tuple[str, dict]] = {
         dict(n_docs=40, seed=52, jpeg_pct=0.15, prog_jpeg_pct=0.45),
     ),
     # ~55% color JPEG (baseline/progressive 4:4:4, 4:2:0, 4:2:2, RSTn,
-    # Adobe CMYK) converted to BT.601 luminance, rest gray PNG
+    # baseline 4:1:1, progressive 4:4:0, Adobe CMYK and YCCK) converted to
+    # BT.601 luminance, rest gray PNG
     "extract_spans_color": ("corpus_color_40", dict(n_docs=40, seed=53, color_jpeg_pct=0.55)),
     # the full upload allow-list: baseline JFIF + multi-strip TIFF + PNG
     "extract_spans_tiff": (
@@ -1795,10 +1796,12 @@ def _media_meta_oracle(tier: str) -> str:
 
 def _corpus_paths_quarantine() -> dict[str, str]:
     """Corrupted-media corpus: ~15% garbage payloads (admission reject),
-    ~10% header-only truncated SOF2 stubs, ~10% color-JPEG headers, ~10%
-    tiled-TIFF headers (pass admission, outside decode scope) — and ~20%
-    COMPLETE progressive JPEGs that DECODE (round 5), proving the class
-    shrank to genuinely-broken files only."""
+    ~10% header-only truncated SOF2 stubs, ~10% lossless (SOF3) JPEG
+    headers, ~10% JPEG-in-TIFF (Compression 7) headers (pass admission,
+    outside decode scope) — and baseline plus COMPLETE progressive JPEGs
+    that DECODE (round 5), proving the class shrank to genuinely-broken
+    files only.  The undecodable tiers take precedence, so each share is
+    at most its knob."""
     from ms_ocr_spark.sources.datagen import write_corpus
 
     return write_corpus(
@@ -1818,9 +1821,9 @@ def _corpus_paths_quarantine() -> dict[str, str]:
 def quarantine_media_reasons(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quarantine side output with reason telemetry: `invalid` (magic-byte
     reject) vs `truncated_jpeg` (marker walk ends before a scan) vs
-    `unsupported_jpeg_layout` (color/arithmetic/lossless frames) vs
-    `unsupported_tiff_layout` (tiled/exotic TIFF) — quarantined BY DESIGN
-    and countable per class.  Progressive JPEGs decode since round 5 and
+    `unsupported_jpeg_layout` (arithmetic, lossless, 12-bit frames) vs
+    `unsupported_tiff_layout` (JPEG-in-TIFF, planar or deep-color
+    layouts) — quarantined BY DESIGN and countable per class.  Progressive JPEGs decode since round 5 and
     no longer appear (the corpus contains decodable ones to prove it).
     Oracle = the generator's golden_quarantine parquet (straight-line
     derivation of the verdict per media span)."""

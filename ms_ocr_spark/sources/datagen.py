@@ -31,11 +31,28 @@ import pyarrow.parquet as pq
 from ms_ocr_spark.extraction.ocr.glyphs import ALPHABET, render_placed, render_text
 from ms_ocr_spark.extraction.ocr.jpeg import (
     decode_gray_jpeg,
+    encode_cmyk_jpeg,
+    encode_color_jpeg,
+    encode_color_jpeg_progressive,
     encode_gray_jpeg,
     encode_gray_jpeg_progressive,
+    encode_lossless_stub,
+    encode_progressive_stub,
+    encode_ycck_jpeg,
 )
-from ms_ocr_spark.extraction.ocr.tiff import encode_gray_tiff
-from ms_ocr_spark.extraction.ocr.png import encode_gray
+from ms_ocr_spark.extraction.ocr.png import (
+    encode_gray,
+    encode_gray_alpha,
+    encode_palette,
+    encode_rgb,
+    encode_rgba,
+    rgb_to_gray,
+)
+from ms_ocr_spark.extraction.ocr.tiff import (
+    encode_gray_tiff,
+    encode_jpeg_in_tiff_stub,
+    encode_rgb_tiff,
+)
 
 SPAN_FIELDS = [
     ("kind", pa.string()),
@@ -330,8 +347,6 @@ def tint_exact_luminance(
     pixels where channel clipping breaks the identity fall back to
     neutral gray (r=g=b=v).  Lossless in luminance, so RGB variants
     share the gray tier's goldens."""
-    from ms_ocr_spark.extraction.ocr.png import rgb_to_gray
-
     v = img.astype(np.float64)
     r = np.clip(v + dr, 0, 255)
     b = np.clip(v + db, 0, 255)
@@ -360,7 +375,7 @@ def _alpha_invert(out: np.ndarray, alpha: int) -> np.ndarray:
     )
 
 
-def rgb_payload_and_meta(seed: int, ref: str, img: np.ndarray) -> tuple[bytes, dict]:
+def _write_rgb_png(seed, i, off, ref, img, side):
     """Color-PNG payload + golden metadata measured on the BT.601
     luminance (what a correct decode-then-measure engine sees).  Round 6:
     ~1 in 3 rotates to the PALETTE layout (color type 3) — the palette is
@@ -375,64 +390,38 @@ def rgb_payload_and_meta(seed: int, ref: str, img: np.ndarray) -> tuple[bytes, d
     the intended surface bit-exactly; ink colors are lifted to the
     255-alpha floor, which keeps the composited luminance anchored to
     the gray value (colorize is luminance-preserving) and the decode
-    margins identical to the gray tiers."""
-    from ms_ocr_spark.extraction.ocr.png import (
-        encode_gray_alpha,
-        encode_palette,
-        encode_rgb,
-        encode_rgba,
-        rgb_to_gray,
-    )
-
+    margins identical to the gray tiers.  The color encoders write no
+    ancillary chunks, so the row carries no side values."""
     h = _h(seed, "rgbc", ref)
     ink = _RGB_INKS[h % len(_RGB_INKS)]
     bg = _RGB_BGS[(h >> 4) % len(_RGB_BGS)]
-
-    def _meta(lum: np.ndarray) -> dict:
-        return {
-            "media_ref": ref,
-            "width": int(lum.shape[1]),
-            "height": int(lum.shape[0]),
-            "ink_ratio": round(float((lum < 128).mean()), 6),
-            "mean_intensity": round(float(lum.mean()), 6),
-            "format": "png",
-            "dpi": None,  # the color encoders write no ancillary chunks
-            "icc_name": None,
-            "orientation": None,
-        }
-
     alpha = (180, 204, 230)[(h >> 16) % 3]
     floor = 255 - alpha
+    ink_eff = tuple(max(c, floor) for c in ink)
     layout = (h >> 12) % 4
     if layout == 0:  # RGBA (color type 6)
-        ink_eff = tuple(max(c, floor) for c in ink)
         rgb_out = colorize(img, ink_eff, bg)
         pre = np.dstack(
             [_alpha_invert(rgb_out, alpha), np.full(img.shape, alpha, np.uint8)]
         )
-        return encode_rgba(pre), _meta(rgb_to_gray(rgb_out))
-    if layout == 1:  # gray + alpha (color type 4)
-        gout = np.maximum(img, np.uint8(floor))
-        pre = _alpha_invert(gout, alpha)
-        return (
-            encode_gray_alpha(pre, np.full(img.shape, alpha, np.uint8)),
-            _meta(gout),
+        payload, lum = encode_rgba(pre), rgb_to_gray(rgb_out)
+    elif layout == 1:  # gray + alpha (color type 4)
+        lum = np.maximum(img, np.uint8(floor))
+        payload = encode_gray_alpha(
+            _alpha_invert(lum, alpha), np.full(img.shape, alpha, np.uint8)
         )
-    rgb = colorize(img, ink, bg)
-    if (h >> 8) % 3 == 0:  # palette (color type 3), round 6
-        if (h >> 20) % 2 == 0:  # + tRNS alpha table (round 7)
-            ink_eff = tuple(max(c, floor) for c in ink)
-            ramp_eff = colorize(
-                np.arange(256, dtype=np.uint8)[None, :], ink_eff, bg
-            )[0]
-            trns = np.full(256, alpha, np.uint8)
-            return (
-                encode_palette(img, _alpha_invert(ramp_eff, alpha), trns),
-                _meta(rgb_to_gray(ramp_eff[img])),
-            )
+    elif (h >> 8) % 3:  # truecolor (color type 2)
+        rgb = colorize(img, ink, bg)
+        payload, lum = encode_rgb(rgb), rgb_to_gray(rgb)
+    elif (h >> 20) % 2 == 0:  # palette (color type 3) + tRNS alpha table
+        ramp_eff = colorize(np.arange(256, dtype=np.uint8)[None, :], ink_eff, bg)[0]
+        trns = np.full(256, alpha, np.uint8)
+        payload = encode_palette(img, _alpha_invert(ramp_eff, alpha), trns)
+        lum = rgb_to_gray(ramp_eff[img])
+    else:  # palette (color type 3)
         ramp = colorize(np.arange(256, dtype=np.uint8)[None, :], ink, bg)[0]
-        return encode_palette(img, ramp), _meta(rgb_to_gray(rgb))
-    return encode_rgb(rgb), _meta(rgb_to_gray(rgb))
+        payload, lum = encode_palette(img, ramp), rgb_to_gray(colorize(img, ink, bg))
+    return payload, _meta_row(ref, "png", lum), None
 
 
 def media_side_values(seed: int, media_ref: str) -> dict:
@@ -449,30 +438,228 @@ def media_side_values(seed: int, media_ref: str) -> dict:
     return {"dpi": dpi, "icc": icc, "orientation": orientation}
 
 
-def _dpi_round_trip(dpi: float | None) -> float | None:
-    """pHYs stores integer pixels-per-meter, so the parsed dpi is the
-    integer round trip — the golden stores what a correct parser returns."""
-    if dpi is None:
-        return None
-    return round(round(dpi / 0.0254) * 0.0254, 4)
+def _icc_name(side: dict) -> str | None:
+    return side["icc"][0] if side["icc"] else None
 
 
-def image_meta_row(media_ref: str, img: np.ndarray, side: dict) -> dict:
-    """Golden metadata from the raw image + generation-time side values
-    (pre-encode; PNG gray8 is lossless so the engine's decode-then-measure
-    must reproduce this exactly — same expressions as
-    operators/multimodal.image_metadata)."""
+def _measure(lum: np.ndarray | None) -> dict:
+    """Size and ink of a gray image — the same expressions as
+    operators/multimodal.image_metadata; all None for no image."""
+    if lum is None:
+        return dict.fromkeys(("width", "height", "ink_ratio", "mean_intensity"))
     return {
-        "media_ref": media_ref,
-        "width": int(img.shape[1]),
-        "height": int(img.shape[0]),
-        "ink_ratio": round(float((img < 128).mean()), 6),
-        "mean_intensity": round(float(img.mean()), 6),
-        "format": "png",
-        "dpi": _dpi_round_trip(side["dpi"]),
-        "icc_name": side["icc"][0] if side["icc"] else None,
+        "width": int(lum.shape[1]),
+        "height": int(lum.shape[0]),
+        "ink_ratio": round(float((lum < 128).mean()), 6),
+        "mean_intensity": round(float(lum.mean()), 6),
+    }
+
+
+def _meta_row(
+    ref: str, fmt: str, lum: np.ndarray | None = None, side: dict | None = None
+) -> dict:
+    """One golden_media_meta row, straight from generation-time values.
+
+    `lum` is the gray image a correct decode-then-measure engine sees: the
+    raw render for lossless payloads, the decoded pixels for lossy ones,
+    None for a quarantined payload (no measurements).  `side` is None where
+    the payload carries no side values; otherwise dpi is what the container
+    stores: PNG pHYs holds integer pixels per meter, so a correct parser
+    returns the integer round trip, and TIFF/JPEG hold whole dpi."""
+    side = side or {"dpi": None, "icc": None, "orientation": None}
+    dpi = side["dpi"]
+    if dpi:
+        dpi = round(round(dpi / 0.0254) * 0.0254, 4) if fmt == "png" else float(round(dpi))
+    return {
+        "media_ref": ref,
+        **_measure(lum),
+        "format": fmt,
+        "dpi": dpi,
+        "icc_name": _icc_name(side),
         "orientation": side["orientation"],
     }
+
+
+# A payload writer takes (seed, doc index, offset, media_ref, rendered gray
+# image, side values) and returns (payload, golden_media_meta row,
+# quarantine reason or None).  A reason makes the golden span text NULL
+# (the engine quarantines, never crashes) and adds a golden_quarantine row.
+
+
+def _write_invalid(seed, i, off, ref, img, side):
+    payload = b"GARBAGE-" + hashlib.md5(f"inv:{ref}".encode()).digest() * 3
+    return payload, _meta_row(ref, "unknown"), "invalid"
+
+
+def _header_stub(encode, fmt: str, reason: str):
+    """Writer of a header-only payload of the image's size that passes
+    admission but lies outside the decode scope."""
+
+    def write(seed, i, off, ref, img, side):
+        return encode(*img.shape), _meta_row(ref, fmt), reason
+
+    return write
+
+
+def _write_gray_png(seed, i, off, ref, img, side):
+    # ~1 in 4 gray PNGs interlace (Adam7, round 6) — lossless, so the
+    # golden is unchanged
+    payload = encode_gray(
+        img,
+        dpi=side["dpi"],
+        icc=side["icc"],
+        exif_orientation=side["orientation"],
+        interlace=_h(seed, "adam7", i, off) % 4 == 0,
+    )
+    return payload, _meta_row(ref, "png", img, side), None
+
+
+def _jpeg_side(side: dict) -> dict:
+    return dict(
+        dpi=side["dpi"], icc_name=_icc_name(side), exif_orientation=side["orientation"]
+    )
+
+
+def _gray_jpeg(encode):
+    """Lossy gray tier: golden metadata measures the DECODED pixels (the
+    engine can only see those); flat-quant encoding keeps the round trip
+    within ±1 gray level so truth text still OCRs exactly.  The progressive
+    encoder carries the same coefficients to full precision over 6 scans,
+    so its decode is bit-identical to the baseline tier's.  Both frame
+    types rotate restart intervals (camera JPEGs use them routinely; the
+    interval does not change decoded pixels, so goldens are shared)."""
+
+    def write(seed, i, off, ref, img, side):
+        ri = (None, 4, 11)[_h(seed, "jpegri", i, off) % 3]
+        payload = encode(img, restart_interval=ri, **_jpeg_side(side))
+        return payload, _meta_row(ref, "jpeg", decode_gray_jpeg(payload), side), None
+
+    return write
+
+
+# lossless TIFF (reference accepts tif/tiff last in its allow-list,
+# env/local.env:25): (compression, bits or "rgb", tile) rotating through
+# the decode scope — uncompressed, LZW, PackBits, 16-bit, (round 6) TILED,
+# and (round 7) 8-bit chunky RGB.  RGB variants use the exact-luminance
+# tint, so every variant is lossless in luminance -> same golden.
+_TIFF_VARIANTS = (
+    (1, 8, None),
+    (5, 8, None),
+    (32773, 8, None),
+    (1, 16, None),
+    (5, 16, None),
+    (1, 8, (16, 16)),
+    (5, 8, (32, 16)),
+    (32773, 16, (16, 32)),
+    (1, "rgb", None),
+    (5, "rgb", None),
+    (32773, "rgb", (16, 16)),
+    (1, "rgb", (32, 16)),
+)
+
+
+def _write_tiff(seed, i, off, ref, img, side):
+    comp, bits, tile = _TIFF_VARIANTS[_h(seed, "tiffvar", i, off) % len(_TIFF_VARIANTS)]
+    kw = dict(
+        dpi=side["dpi"],
+        compression=comp,
+        orientation=side["orientation"],
+        icc_name=_icc_name(side),
+        tile=tile,
+    )
+    if bits == "rgb":
+        payload = encode_rgb_tiff(tint_exact_luminance(img), **kw)
+    else:
+        payload = encode_gray_tiff(img, bits=bits, **kw)
+    return payload, _meta_row(ref, "tiff", img, side), None
+
+
+# color JPEG (round 6+): (encoder, args, kwargs) rotating through the
+# decode scope.  Golden metadata measures the DECODED BT.601 luminance
+# (chroma subsampling is lossy; luminance error stays inside the
+# kernel's binarize margin).
+_COLOR_JPEG_VARIANTS = (
+    (encode_color_jpeg, ("444",), {}),
+    (encode_color_jpeg, ("420",), {}),
+    (encode_color_jpeg, ("420",), {"restart_interval": 5}),
+    (encode_color_jpeg_progressive, ("444",), {}),
+    (encode_color_jpeg_progressive, ("420",), {}),
+    (encode_color_jpeg, ("422",), {}),
+    (encode_color_jpeg_progressive, ("422",), {}),
+    (encode_cmyk_jpeg, (), {}),  # 4-component Adobe CMYK (print workflows)
+    (encode_ycck_jpeg, (), {}),  # 4-component Adobe YCCK (transform 2)
+    (encode_color_jpeg, ("411",), {}),  # the DV/camcorder layout
+    (encode_color_jpeg_progressive, ("440",), {}),  # vertical-only chroma
+)
+
+
+def _write_color_jpeg(seed, i, off, ref, img, side):
+    hc = _h(seed, "cjpegvar", i, off)
+    rgb = colorize(
+        img, _RGB_INKS[hc % len(_RGB_INKS)], _RGB_BGS[(hc >> 4) % len(_RGB_BGS)]
+    )
+    encode, args, kw = _COLOR_JPEG_VARIANTS[hc % len(_COLOR_JPEG_VARIANTS)]
+    payload = encode(rgb, *args, **kw, **_jpeg_side(side))
+    return payload, _meta_row(ref, "jpeg", decode_gray_jpeg(payload), side), None
+
+
+# Payload tiers, (percentage keyword, hash salt, writer).  A media span
+# takes the FIRST row whose draw `_h(seed, salt, doc, offset) % 1000` falls
+# under `pct * 1000`; no match is a gray PNG.  The undecodable tiers come
+# first, so they win over every decodable one.
+_PAYLOAD_TIERS = (
+    ("invalid_pct", "isinvalid", _write_invalid),
+    # a header-only SOF2 (no scan): a transfer-truncated progressive JPEG
+    # (the "isprog" salt predates the complete progressive tier)
+    (
+        "truncated_jpeg_pct",
+        "isprog",
+        _header_stub(encode_progressive_stub, "jpeg", "truncated_jpeg"),
+    ),
+    # lossless (SOF3) header: the frame class outside the decode scope
+    (
+        "unsupported_jpeg_pct",
+        "isujpeg",
+        _header_stub(encode_lossless_stub, "jpeg", "unsupported_jpeg_layout"),
+    ),
+    # JPEG-in-TIFF (Compression 7) header: the TIFF class outside the scope
+    (
+        "unsupported_tiff_pct",
+        "isutiff",
+        _header_stub(encode_jpeg_in_tiff_stub, "tiff", "unsupported_tiff_layout"),
+    ),
+    ("jpeg_pct", "isjpeg", _gray_jpeg(encode_gray_jpeg)),
+    ("prog_jpeg_pct", "isprogjpeg", _gray_jpeg(encode_gray_jpeg_progressive)),
+    ("tiff_pct", "istiff", _write_tiff),
+    # color tier: PNG layouts decoded via BT.601 luminance
+    ("rgb_pct", "isrgb", _write_rgb_png),
+    ("color_jpeg_pct", "iscjpeg", _write_color_jpeg),
+)
+
+# Render tiers, (percentage keyword, hash salt, (truth, render)), first
+# match as above; no match is uppercase horizontal text.  A document
+# routed `ja` or `ja_vert` renders kana instead, whatever its tier.
+_RENDER_TIERS = (
+    # a document routed `en` skips this row: 'en' forces horizontal decode
+    # (LANGUAGE_MODES), so a vertical render could never match its golden
+    ("vertical_pct", "isvert", (make_vertical_truth, render_vertical_image)),
+    ("shear_pct", "isshear", (make_media_truth, render_sheared_image)),
+    ("mixed_pct", "ismixed", (make_mixed_truth, render_media_image)),
+)
+_LANGUAGE_RENDER = {
+    "ja_vert": (make_vertical_square_truth, render_vertical_image),
+    "ja": (make_kana_truth, render_media_image),
+}
+_TIER_KEYS = tuple(key for key, _, _ in _PAYLOAD_TIERS + _RENDER_TIERS)
+
+
+def _first_match(tiers: tuple, pct: dict, seed: int, i: int, off: int):
+    """The value of the first tier row whose hash draw falls under its
+    percentage, or None."""
+    for key, salt, value in tiers:
+        if pct[key] > 0 and _h(seed, salt, i, off) % 1000 < pct[key] * 1000:
+            return value
+    return None
 
 
 def _spans_for_doc(seed: int, doc_i: int, span_mult: int = 1) -> list[dict]:
@@ -485,30 +672,12 @@ def _spans_for_doc(seed: int, doc_i: int, span_mult: int = 1) -> list[dict]:
     return spans
 
 
-def _gen_chunk(args: tuple) -> tuple[list, list, list, list, list]:
+def _gen_chunk(
+    lo: int, hi: int, n_docs: int, seed: int,
+    skew_doc_pct: float, skew_mult: int, routed_pct: float, pct: dict,
+) -> tuple[list, list, list, list, list]:
     """Generate one contiguous doc range (deterministic per doc index, so
     chunking never changes the corpus)."""
-    (
-        lo,
-        hi,
-        n_docs,
-        seed,
-        skew_doc_pct,
-        skew_mult,
-        vertical_pct,
-        shear_pct,
-        jpeg_pct,
-        prog_jpeg_pct,
-        tiff_pct,
-        rgb_pct,
-        mixed_pct,
-        routed_pct,
-        truncated_jpeg_pct,
-        unsupported_jpeg_pct,
-        invalid_pct,
-        unsupported_tiff_pct,
-        color_jpeg_pct,
-    ) = args
     doc_rows, media_rows, golden_rows, meta_rows, quarantine_rows = [], [], [], [], []
     n_skewed = int(n_docs * skew_doc_pct)
     for i in range(lo, hi):
@@ -527,6 +696,7 @@ def _gen_chunk(args: tuple) -> tuple[list, list, list, list, list]:
                 if hl % 1000 < routed_pct * 1000
                 else ("-", "en")[hl % 2]
             )
+        render_pct = dict(pct, vertical_pct=0.0) if language == "en" else pct
         in_spans, out_spans = [], []
         for s in _spans_for_doc(seed, i, mult):
             off = s["offset"]
@@ -538,370 +708,34 @@ def _gen_chunk(args: tuple) -> tuple[list, list, list, list, list]:
                 out_spans.append(
                     {"kind": "text", "text": main, "media_ref": None, "offset": off}
                 )
-            else:
-                ref = f"img-{doc_id}-{off}"
-                is_vert = (
-                    language != "en"  # 'en' routes the kernel to forced
-                    # horizontal decode (LANGUAGE_MODES), so a vertical
-                    # render could never match its golden — the tier is
-                    # suppressed for forced-horizontal docs
-                    and vertical_pct > 0
-                    and _h(seed, "isvert", i, off) % 1000 < vertical_pct * 1000
-                )
-                is_shear = (
-                    not is_vert
-                    and shear_pct > 0
-                    and _h(seed, "isshear", i, off) % 1000 < shear_pct * 1000
-                )
-                is_mixed = (
-                    not is_vert
-                    and not is_shear
-                    and mixed_pct > 0
-                    and _h(seed, "ismixed", i, off) % 1000 < mixed_pct * 1000
-                )
-                if language == "ja_vert":
-                    truth = make_vertical_square_truth(seed, i, off)
-                    img = render_vertical_image(seed, ref, truth)
-                elif language == "ja":
-                    truth = make_kana_truth(seed, i, off)
-                    img = render_media_image(seed, ref, truth)
-                elif is_vert:
-                    truth = make_vertical_truth(seed, i, off)
-                    img = render_vertical_image(seed, ref, truth)
-                elif is_shear:
-                    truth = make_media_truth(seed, i, off)
-                    img = render_sheared_image(seed, ref, truth)
-                elif is_mixed:
-                    truth = make_mixed_truth(seed, i, off)
-                    img = render_media_image(seed, ref, truth)
-                else:
-                    truth = make_media_truth(seed, i, off)
-                    img = render_media_image(seed, ref, truth)
-                side = media_side_values(seed, ref)
-                # undecodable tiers (round 4, quarantine telemetry): the
-                # golden span text is NULL (the engine quarantines, never
-                # crashes) and golden_quarantine records the reason
-                is_invalid = (
-                    invalid_pct > 0
-                    and _h(seed, "isinvalid", i, off) % 1000 < invalid_pct * 1000
-                )
-                is_trunc = (
-                    not is_invalid
-                    and truncated_jpeg_pct > 0
-                    and _h(seed, "isprog", i, off) % 1000
-                    < truncated_jpeg_pct * 1000
-                )
-                is_unsup_jpeg = (
-                    not is_invalid
-                    and not is_trunc
-                    and unsupported_jpeg_pct > 0
-                    and _h(seed, "isujpeg", i, off) % 1000
-                    < unsupported_jpeg_pct * 1000
-                )
-                is_unsup_tiff = (
-                    not is_invalid
-                    and not is_trunc
-                    and not is_unsup_jpeg
-                    and unsupported_tiff_pct > 0
-                    and _h(seed, "isutiff", i, off) % 1000
-                    < unsupported_tiff_pct * 1000
-                )
-                is_jpeg = (
-                    jpeg_pct > 0
-                    and _h(seed, "isjpeg", i, off) % 1000 < jpeg_pct * 1000
-                )
-                is_prog_jpeg = (
-                    not is_jpeg
-                    and prog_jpeg_pct > 0
-                    and _h(seed, "isprogjpeg", i, off) % 1000
-                    < prog_jpeg_pct * 1000
-                )
-                is_tiff = (
-                    not is_jpeg
-                    and not is_prog_jpeg
-                    and tiff_pct > 0
-                    and _h(seed, "istiff", i, off) % 1000 < tiff_pct * 1000
-                )
-                is_rgb = (
-                    not is_jpeg
-                    and not is_prog_jpeg
-                    and not is_tiff
-                    and rgb_pct > 0
-                    and _h(seed, "isrgb", i, off) % 1000 < rgb_pct * 1000
-                )
-                is_color_jpeg = (
-                    not is_jpeg
-                    and not is_prog_jpeg
-                    and not is_tiff
-                    and not is_rgb
-                    and color_jpeg_pct > 0
-                    and _h(seed, "iscjpeg", i, off) % 1000
-                    < color_jpeg_pct * 1000
-                )
-                if is_invalid or is_trunc or is_unsup_jpeg or is_unsup_tiff:
-                    from ms_ocr_spark.extraction.ocr.jpeg import (
-                        encode_lossless_stub,
-                        encode_progressive_stub,
-                    )
-                    from ms_ocr_spark.extraction.ocr.tiff import (
-                        encode_jpeg_in_tiff_stub,
-                    )
-
-                    if is_invalid:
-                        payload = (
-                            b"GARBAGE-"
-                            + hashlib.md5(f"inv:{ref}".encode()).digest() * 3
-                        )
-                        fmt, reason = "unknown", "invalid"
-                    elif is_unsup_tiff:
-                        # JPEG-in-TIFF (Compression 7) header: the class
-                        # that genuinely remains outside scope now that
-                        # tiled layouts decode (round 6)
-                        payload = encode_jpeg_in_tiff_stub(
-                            int(img.shape[0]), int(img.shape[1])
-                        )
-                        fmt, reason = "tiff", "unsupported_tiff_layout"
-                    elif is_unsup_jpeg:
-                        # lossless (SOF3) header: the frame class that
-                        # genuinely remains outside scope now that color
-                        # frames decode (round 6)
-                        payload = encode_lossless_stub(
-                            int(img.shape[0]), int(img.shape[1])
-                        )
-                        fmt, reason = "jpeg", "unsupported_jpeg_layout"
-                    else:
-                        # header-only SOF2 (no scan): a transfer-truncated
-                        # progressive JPEG — COMPLETE progressive streams
-                        # decode since round 5 (see prog_jpeg_pct tier)
-                        payload = encode_progressive_stub(
-                            int(img.shape[0]), int(img.shape[1])
-                        )
-                        fmt, reason = "jpeg", "truncated_jpeg"
-                    meta_rows.append(
-                        {
-                            "media_ref": ref,
-                            "width": None,
-                            "height": None,
-                            "ink_ratio": None,
-                            "mean_intensity": None,
-                            "format": fmt,
-                            "dpi": None,
-                            "icc_name": None,
-                            "orientation": None,
-                        }
-                    )
-                    quarantine_rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "offset": off,
-                            "media_ref": ref,
-                            "mime": fmt,
-                            "n_bytes": len(payload),
-                            "reason": reason,
-                        }
-                    )
-                elif is_tiff:
-                    # lossless TIFF (reference accepts tif/tiff last in
-                    # its allow-list, env/local.env:25); variants rotate
-                    # through the decode scope — uncompressed, LZW,
-                    # PackBits, 16-bit, (round 6) TILED, and (round 7)
-                    # 8-bit chunky RGB layouts.  RGB variants use the
-                    # exact-luminance tint, so ALL variants stay
-                    # lossless in luminance -> same golden.
-                    hv = _h(seed, "tiffvar", i, off)
-                    comp, tbits, ttile = (
-                        (1, 8, None),
-                        (5, 8, None),
-                        (32773, 8, None),
-                        (1, 16, None),
-                        (5, 16, None),
-                        (1, 8, (16, 16)),
-                        (5, 8, (32, 16)),
-                        (32773, 16, (16, 32)),
-                        (1, "rgb", None),
-                        (5, "rgb", None),
-                        (32773, "rgb", (16, 16)),
-                        (1, "rgb", (32, 16)),
-                    )[hv % 12]
-                    tkw = dict(
-                        dpi=side["dpi"],
-                        compression=comp,
-                        orientation=side["orientation"],
-                        icc_name=side["icc"][0] if side["icc"] else None,
-                        tile=ttile,
-                    )
-                    if tbits == "rgb":
-                        from ms_ocr_spark.extraction.ocr.tiff import (
-                            encode_rgb_tiff,
-                        )
-
-                        payload = encode_rgb_tiff(
-                            tint_exact_luminance(img), **tkw
-                        )
-                    else:
-                        payload = encode_gray_tiff(img, bits=tbits, **tkw)
-                    meta_rows.append(
-                        {
-                            "media_ref": ref,
-                            "width": int(img.shape[1]),
-                            "height": int(img.shape[0]),
-                            "ink_ratio": round(float((img < 128).mean()), 6),
-                            "mean_intensity": round(float(img.mean()), 6),
-                            "format": "tiff",
-                            "dpi": float(round(side["dpi"])) if side["dpi"] else None,
-                            "icc_name": side["icc"][0] if side["icc"] else None,
-                            "orientation": side["orientation"],
-                        }
-                    )
-                elif is_jpeg or is_prog_jpeg:
-                    # lossy tier: golden metadata measures the DECODED
-                    # pixels (the engine can only see those); flat-quant
-                    # encoding keeps the round trip within ±1 gray level
-                    # so truth text still OCRs exactly.  The progressive
-                    # variant carries the same coefficients to full
-                    # precision over 6 scans (spectral selection +
-                    # successive approximation), so its decode is
-                    # bit-identical to the baseline tier's.
-                    enc = (
-                        encode_gray_jpeg_progressive
-                        if is_prog_jpeg
-                        else encode_gray_jpeg
-                    )
-                    # BOTH frame types rotate restart intervals
-                    # (round 5 baseline, round 6 progressive — camera
-                    # JPEGs use restarts routinely; the interval does
-                    # not change decoded pixels, so goldens are shared)
-                    ekw = {
-                        "restart_interval": (None, 4, 11)[
-                            _h(seed, "jpegri", i, off) % 3
-                        ]
-                    }
-                    payload = enc(
-                        img,
-                        dpi=side["dpi"],
-                        icc_name=side["icc"][0] if side["icc"] else None,
-                        exif_orientation=side["orientation"],
-                        **ekw,
-                    )
-                    dec = decode_gray_jpeg(payload)
-                    meta_rows.append(
-                        {
-                            "media_ref": ref,
-                            "width": int(dec.shape[1]),
-                            "height": int(dec.shape[0]),
-                            "ink_ratio": round(float((dec < 128).mean()), 6),
-                            "mean_intensity": round(float(dec.mean()), 6),
-                            "format": "jpeg",
-                            "dpi": float(round(side["dpi"])) if side["dpi"] else None,
-                            "icc_name": side["icc"][0] if side["icc"] else None,
-                            "orientation": side["orientation"],
-                        }
-                    )
-                elif is_rgb:
-                    # color tier: truecolor PNG, decoded via BT.601
-                    # luminance (K3 direction RGB->gray; golden measures
-                    # the identical conversion)
-                    payload, rmeta = rgb_payload_and_meta(seed, ref, img)
-                    meta_rows.append(rmeta)
-                elif is_color_jpeg:
-                    # color YCbCr JPEG tier (round 6): colorized render
-                    # encoded 3-component, variants rotating through the
-                    # decode scope — baseline 4:4:4 / 4:2:0 / 4:2:0 with
-                    # restarts / progressive 4:4:4 / progressive 4:2:0.
-                    # Golden metadata measures the DECODED BT.601
-                    # luminance (chroma subsampling is lossy; luminance
-                    # error stays inside the kernel's binarize margin).
-                    from ms_ocr_spark.extraction.ocr.jpeg import (
-                        decode_gray_jpeg as _dec_jpg,
-                        encode_cmyk_jpeg,
-                        encode_color_jpeg,
-                        encode_color_jpeg_progressive,
-                        encode_ycck_jpeg,
-                    )
-
-                    hc = _h(seed, "cjpegvar", i, off)
-                    rgb = colorize(
-                        img,
-                        _RGB_INKS[hc % len(_RGB_INKS)],
-                        _RGB_BGS[(hc >> 4) % len(_RGB_BGS)],
-                    )
-                    ckw = dict(
-                        dpi=side["dpi"],
-                        icc_name=side["icc"][0] if side["icc"] else None,
-                        exif_orientation=side["orientation"],
-                    )
-                    variant = hc % 11
-                    if variant == 0:
-                        payload = encode_color_jpeg(rgb, "444", **ckw)
-                    elif variant == 1:
-                        payload = encode_color_jpeg(rgb, "420", **ckw)
-                    elif variant == 2:
-                        payload = encode_color_jpeg(
-                            rgb, "420", restart_interval=5, **ckw
-                        )
-                    elif variant == 3:
-                        payload = encode_color_jpeg_progressive(rgb, "444", **ckw)
-                    elif variant == 4:
-                        payload = encode_color_jpeg_progressive(rgb, "420", **ckw)
-                    elif variant == 5:
-                        payload = encode_color_jpeg(rgb, "422", **ckw)
-                    elif variant == 6:
-                        payload = encode_color_jpeg_progressive(rgb, "422", **ckw)
-                    elif variant == 7:
-                        # 4-component Adobe CMYK (print-workflow JPEGs)
-                        payload = encode_cmyk_jpeg(rgb, **ckw)
-                    elif variant == 8:
-                        # 4-component Adobe YCCK (transform 2)
-                        payload = encode_ycck_jpeg(rgb, **ckw)
-                    elif variant == 9:
-                        # 4:1:1 — the DV/camcorder layout (round 7,
-                        # sampling factor 4 now in decode scope)
-                        payload = encode_color_jpeg(rgb, "411", **ckw)
-                    else:
-                        # 4:4:0 — vertical-only chroma subsample
-                        payload = encode_color_jpeg_progressive(rgb, "440", **ckw)
-                    dec = _dec_jpg(payload)
-                    meta_rows.append(
-                        {
-                            "media_ref": ref,
-                            "width": int(dec.shape[1]),
-                            "height": int(dec.shape[0]),
-                            "ink_ratio": round(float((dec < 128).mean()), 6),
-                            "mean_intensity": round(float(dec.mean()), 6),
-                            "format": "jpeg",
-                            "dpi": float(round(side["dpi"])) if side["dpi"] else None,
-                            "icc_name": side["icc"][0] if side["icc"] else None,
-                            "orientation": side["orientation"],
-                        }
-                    )
-                else:
-                    # ~1 in 4 gray PNGs interlace (Adam7, round 6) —
-                    # lossless, so the golden is unchanged
-                    payload = encode_gray(
-                        img,
-                        dpi=side["dpi"],
-                        icc=side["icc"],
-                        exif_orientation=side["orientation"],
-                        interlace=_h(seed, "adam7", i, off) % 4 == 0,
-                    )
-                    meta_rows.append(image_meta_row(ref, img, side))
-                media_rows.append(
-                    {"media_ref": ref, "payload": payload, "truth_text": truth}
-                )
-                in_spans.append(
-                    {"kind": "media", "text": None, "media_ref": ref, "offset": off}
-                )
-                out_spans.append(
+                continue
+            ref = f"img-{doc_id}-{off}"
+            make_truth, render = (
+                _LANGUAGE_RENDER.get(language)
+                or _first_match(_RENDER_TIERS, render_pct, seed, i, off)
+                or (make_media_truth, render_media_image)
+            )
+            truth = make_truth(seed, i, off)
+            img = render(seed, ref, truth)
+            write = _first_match(_PAYLOAD_TIERS, pct, seed, i, off) or _write_gray_png
+            payload, meta, reason = write(seed, i, off, ref, img, media_side_values(seed, ref))
+            meta_rows.append(meta)
+            if reason:
+                quarantine_rows.append(
                     {
-                        "kind": "media",
-                        # undecodable payloads quarantine -> null text
-                        "text": None
-                        if (is_invalid or is_trunc or is_unsup_jpeg or is_unsup_tiff)
-                        else truth,
-                        "media_ref": ref,
+                        "doc_id": doc_id,
                         "offset": off,
+                        "media_ref": ref,
+                        "mime": meta["format"],
+                        "n_bytes": len(payload),
+                        "reason": reason,
                     }
                 )
+            media_rows.append({"media_ref": ref, "payload": payload, "truth_text": truth})
+            in_spans.append({"kind": "media", "text": None, "media_ref": ref, "offset": off})
+            out_spans.append(
+                {"kind": "media", "text": None if reason else truth, "media_ref": ref, "offset": off}
+            )
         drow = {"doc_id": doc_id, "spans": in_spans}
         if routed_pct > 0:
             drow["language"] = language
@@ -915,80 +749,56 @@ def gen_corpus(
     seed: int = 42,
     skew_doc_pct: float = 0.0,
     skew_mult: int = 50,
-    vertical_pct: float = 0.0,
-    shear_pct: float = 0.0,
-    jpeg_pct: float = 0.0,
-    prog_jpeg_pct: float = 0.0,
-    tiff_pct: float = 0.0,
-    rgb_pct: float = 0.0,
-    mixed_pct: float = 0.0,
     routed_pct: float = 0.0,
-    truncated_jpeg_pct: float = 0.0,
-    unsupported_jpeg_pct: float = 0.0,
-    invalid_pct: float = 0.0,
-    unsupported_tiff_pct: float = 0.0,
-    color_jpeg_pct: float = 0.0,
     processes: int | None = None,
+    **tier_pct: float,
 ) -> tuple[pa.Table, pa.Table, pa.Table, pa.Table, pa.Table]:
     """Build (documents, media_store, golden_spans, golden_media_meta,
     golden_quarantine) arrow tables.
 
+    `tier_pct` takes the percentage keywords of `_PAYLOAD_TIERS` and
+    `_RENDER_TIERS` (each defaults to 0; any other keyword is a TypeError).
+    First match decides: a media span's payload is the writer of the FIRST
+    `_PAYLOAD_TIERS` row whose draw `_h(seed, salt, doc, offset) % 1000`
+    falls under `pct * 1000` (gray PNG if none), and its render likewise
+    the first matching `_RENDER_TIERS` row.  An earlier row wins over a
+    later one (the undecodable tiers over every decodable one, `jpeg_pct`
+    over `tiff_pct`), so a tier's share of the spans is at most its
+    percentage.  `routed_pct` gives that fraction of docs a `ja`/`ja_vert`
+    language, whose media render kana whatever their render tier.
     skew_doc_pct > 0 gives that fraction of docs `skew_mult`x the span count
     (FIXTURES.md bench tier: exercises salted repartitioning / AQE skew).
     Media rendering dominates, so doc ranges fan out over a process pool;
     per-doc determinism makes the result identical at any process count.
     """
+    unknown = sorted(tier_pct.keys() - set(_TIER_KEYS))
+    if unknown:
+        raise TypeError(f"gen_corpus() got unexpected keyword arguments {unknown}")
+    pct = {key: tier_pct.get(key, 0.0) for key in _TIER_KEYS}
     if processes is None:
         processes = min(os.cpu_count() or 1, 16) if n_docs >= 500 else 1
-    chunks = []
     step = max(1, n_docs // (processes * 4) + 1)
-    for lo in range(0, n_docs, step):
-        chunks.append(
-            (
-                lo,
-                min(lo + step, n_docs),
-                n_docs,
-                seed,
-                skew_doc_pct,
-                skew_mult,
-                vertical_pct,
-                shear_pct,
-                jpeg_pct,
-                prog_jpeg_pct,
-                tiff_pct,
-                rgb_pct,
-                mixed_pct,
-                routed_pct,
-                truncated_jpeg_pct,
-                unsupported_jpeg_pct,
-                invalid_pct,
-                unsupported_tiff_pct,
-                color_jpeg_pct,
-            )
-        )
+    chunks = [
+        (lo, min(lo + step, n_docs), n_docs, seed, skew_doc_pct, skew_mult, routed_pct, pct)
+        for lo in range(0, n_docs, step)
+    ]
     if processes > 1:
         from multiprocessing import Pool
 
         with Pool(processes) as pool:
-            parts = pool.map(_gen_chunk, chunks)
+            parts = pool.starmap(_gen_chunk, chunks)
     else:
-        parts = [_gen_chunk(c) for c in chunks]
-    doc_rows = [r for p in parts for r in p[0]]
-    media_rows = [r for p in parts for r in p[1]]
-    golden_rows = [r for p in parts for r in p[2]]
-    meta_rows = [r for p in parts for r in p[3]]
-    quarantine_rows = [r for p in parts for r in p[4]]
+        parts = [_gen_chunk(*c) for c in chunks]
     docs_schema = (
         DOCS_SCHEMA.append(pa.field("language", pa.string()))
         if routed_pct > 0
         else DOCS_SCHEMA
     )
-    docs = pa.Table.from_pylist(doc_rows, schema=docs_schema)
-    media = pa.Table.from_pylist(media_rows, schema=MEDIA_SCHEMA)
-    golden = pa.Table.from_pylist(golden_rows, schema=DOCS_SCHEMA)
-    meta = pa.Table.from_pylist(meta_rows, schema=MEDIA_META_SCHEMA)
-    quarantine = pa.Table.from_pylist(quarantine_rows, schema=QUARANTINE_SCHEMA)
-    return docs, media, golden, meta, quarantine
+    schemas = (docs_schema, MEDIA_SCHEMA, DOCS_SCHEMA, MEDIA_META_SCHEMA, QUARANTINE_SCHEMA)
+    return tuple(
+        pa.Table.from_pylist([r for p in parts for r in p[k]], schema=schema)
+        for k, schema in enumerate(schemas)
+    )
 
 
 def write_corpus(out_dir: str, n_docs: int, seed: int = 42, **kw) -> dict[str, str]:
@@ -1412,10 +1222,7 @@ def write_video_corpus(
                 {
                     "media_ref": ref,
                     "frame_idx": None,
-                    "width": None,
-                    "height": None,
-                    "ink_ratio": None,
-                    "mean_intensity": None,
+                    **_measure(None),
                     "frame_sha": None,
                 }
             )
@@ -1430,10 +1237,7 @@ def write_video_corpus(
                 {
                     "media_ref": ref,
                     "frame_idx": idx,
-                    "width": int(dec.shape[1]),
-                    "height": int(dec.shape[0]),
-                    "ink_ratio": round(float((dec < 128).mean()), 6),
-                    "mean_intensity": round(float(dec.mean()), 6),
+                    **_measure(dec),
                     "frame_sha": _hl.md5(dec.tobytes()).hexdigest(),
                 }
             )

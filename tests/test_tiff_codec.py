@@ -324,6 +324,16 @@ def test_tiff_tier_includes_rgb_and_decodes_exactly():
     assert n_rgb >= 2, f"tier produced too few RGB TIFFs ({n_rgb})"
 
 
+def _zero_count(buf: bytes, tag: int) -> bytes:
+    """`buf` with the count of `tag`'s IFD entry set to 0."""
+    b = bytearray(buf)
+    (off,) = struct.unpack_from("<I", b, 4)
+    (n,) = struct.unpack_from("<H", b, off)
+    (at,) = [p for p in range(off + 2, off + 2 + 12 * n, 12) if struct.unpack_from("<H", b, p)[0] == tag]
+    struct.pack_into("<I", b, at + 4, 0)
+    return bytes(b)
+
+
 @pytest.mark.parametrize(
     "tag",
     [256, 257, 258, 277, 278],
@@ -336,12 +346,19 @@ def test_zero_count_tag_is_a_value_error(tag):
     from ms_ocr_spark.extraction.pipeline import media_status
 
     img = np.random.default_rng(4).integers(0, 256, (20, 30), dtype=np.uint8)
-    b = bytearray(encode_gray_tiff(img, rows_per_strip=8))
-    (off,) = struct.unpack_from("<I", b, 4)
-    (n,) = struct.unpack_from("<H", b, off)
-    (at,) = [p for p in range(off + 2, off + 2 + 12 * n, 12) if struct.unpack_from("<H", b, p)[0] == tag]
-    struct.pack_into("<I", b, at + 4, 0)
+    b = _zero_count(encode_gray_tiff(img, rows_per_strip=8), tag)
     with pytest.raises(ValueError, match=f"tag {tag}") as e:
-        decode_gray_tiff(bytes(b))
+        decode_gray_tiff(b)
     assert not isinstance(e.value, ScopeError)
-    assert media_status(bytes(b), None) == (None, "decode_error:ValueError")
+    assert media_status(b, None) == (None, "decode_error:ValueError")
+
+
+@pytest.mark.parametrize("tag", [282, 296], ids=["XResolution", "ResolutionUnit"])
+def test_zero_count_resolution_tag_leaves_dpi_null(tag):
+    """A count-0 XResolution or ResolutionUnit entry does not stop the
+    decode; the side values read dpi as null and keep the ICC profile
+    name and orientation."""
+    img = np.random.default_rng(4).integers(0, 256, (20, 30), dtype=np.uint8)
+    b = _zero_count(encode_gray_tiff(img, dpi=300, orientation=1, icc_name="synthetic-gray"), tag)
+    assert np.array_equal(decode_gray_tiff(b), img)
+    assert tiff_side_values(b) == {"dpi": None, "icc_name": "synthetic-gray", "orientation": 1}
