@@ -1823,8 +1823,9 @@ def quarantine_media_reasons(spark: SparkSession, sf_dir: str) -> DataFrame:
     reject) vs `truncated_jpeg` (marker walk ends before a scan) vs
     `unsupported_jpeg_layout` (arithmetic, lossless, 12-bit frames) vs
     `unsupported_tiff_layout` (JPEG-in-TIFF, planar or deep-color
-    layouts) — quarantined BY DESIGN and countable per class.  Progressive JPEGs decode since round 5 and
-    no longer appear (the corpus contains decodable ones to prove it).
+    layouts) — quarantined BY DESIGN and countable per class.
+    Progressive JPEGs decode since round 5 and no longer appear (the
+    corpus contains decodable ones to prove it).
     Oracle = the generator's golden_quarantine parquet (straight-line
     derivation of the verdict per media span)."""
     from ms_ocr_spark.extraction.pipeline import quarantine_invalid_media

@@ -802,7 +802,7 @@ def gen_corpus(
 
 
 def write_corpus(out_dir: str, n_docs: int, seed: int = 42, **kw) -> dict[str, str]:
-    """Write the three tables as parquet; returns {name: path}.
+    """Write the five tables as parquet; returns {name: path}.
 
     Idempotent on the FULL parameter set: a params.json sidecar records
     (n_docs, seed, kw); the cache is reused only when all files exist AND
