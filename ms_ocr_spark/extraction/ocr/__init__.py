@@ -8,34 +8,40 @@ class ScopeError(ValueError):
     before the codec imports below, which import it from this package."""
 
 
-from .jpeg import decode_gray_jpeg, encode_gray_jpeg
+from ms_ocr_spark.operators.multimodal import media_format
+
+from . import jpeg, png, tiff
+from .jpeg import encode_gray_jpeg
 from .kernel import decode_image
-from .png import decode_gray, encode_gray
-from .tiff import decode_gray_tiff, encode_gray_tiff
+from .png import encode_gray
+from .tiff import encode_gray_tiff
+
+# `multimodal.IMAGE_FORMATS` row name -> (decoder, side-value reader)
+CODECS = {
+    "png": (png.decode_gray, png.side_values),
+    "jpeg": (jpeg.decode_gray_jpeg, jpeg.jpeg_side_values),
+    "tiff": (tiff.decode_gray_tiff, tiff.tiff_side_values),
+}
 
 
 def decode_media(buf: bytes) -> np.ndarray:
-    """Magic-byte dispatch to the right codec (reference allow-list order
-    jpg/png/tif, `/root/reference/env/local.env:25`).  Raises ValueError
-    on formats the engine cannot decode — the pipeline catches that and
-    quarantines the row."""
-    if buf[:8] == b"\x89PNG\r\n\x1a\n":
-        return decode_gray(buf)
-    if buf[:3] == b"\xff\xd8\xff":
-        return decode_gray_jpeg(buf)
-    if buf[:4] in (b"II*\0", b"MM\0*"):
-        return decode_gray_tiff(buf)
-    raise ValueError("undecodable media format")
+    """The one decode entry of every image operator: the codec of the
+    `IMAGE_FORMATS` row that `media_format` sniffs from the magic bytes
+    (the same table the JVM-side `mime_col` is built from).  Raises
+    ValueError on formats the engine cannot decode — the pipeline catches
+    that and quarantines the row."""
+    codec = CODECS.get(media_format(buf))
+    if codec is None:
+        raise ValueError("undecodable media format")
+    return codec[0](buf)
 
 
 __all__ = [
     "ScopeError",
     "decode_image",
-    "decode_gray",
     "encode_gray",
-    "decode_gray_jpeg",
     "encode_gray_jpeg",
-    "decode_gray_tiff",
     "encode_gray_tiff",
     "decode_media",
+    "CODECS",
 ]

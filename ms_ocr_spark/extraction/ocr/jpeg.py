@@ -50,6 +50,7 @@ from collections.abc import Iterator
 import numpy as np
 
 from . import ScopeError
+from .tiff import tiff_side_values
 
 # ---------------------------------------------------------------- tables
 # zig-zag scan order: index i of the scan -> (row, col) in the 8x8 block
@@ -1011,9 +1012,10 @@ def _dec_ac_refine(
 def jpeg_side_values(data: bytes) -> dict:
     """Parse the decode side-values the reference keeps
     (`image_processor/main.py:58-63`): JFIF dpi, EXIF orientation (APP1,
-    tag 274) and ICC profile name (APP2 `ICC_PROFILE`, reassembled in
-    chunk order, name from the profile's 'desc' tag).  One marker walk,
-    header-only; anything malformed degrades to null fields."""
+    tag 274, read by `tiff_side_values`: the blob is a TIFF structure) and
+    ICC profile name (APP2 `ICC_PROFILE`, reassembled in chunk order, name
+    from the profile's 'desc' tag).  One marker walk, header-only;
+    anything malformed degrades to null fields."""
     from ms_ocr_spark.extraction.ocr.icc import icc_profile_name
 
     out: dict = {"dpi": None, "icc_name": None, "orientation": None}
@@ -1027,19 +1029,7 @@ def jpeg_side_values(data: bytes) -> dict:
                 if units == 1:
                     out["dpi"] = float(xd)
             elif marker == 0xE1 and payload[:6] == b"Exif\x00\x00":
-                t = payload[6:]
-                if t[:2] in (b"II", b"MM"):
-                    e = "<" if t[:2] == b"II" else ">"
-                    (ifd_off,) = struct.unpack_from(e + "I", t, 4)
-                    (cnt,) = struct.unpack_from(e + "H", t, ifd_off)
-                    for i in range(cnt):
-                        tag, typ, _c = struct.unpack_from(
-                            e + "HHI", t, ifd_off + 2 + i * 12
-                        )
-                        if tag == 274 and typ == 3:
-                            out["orientation"] = struct.unpack_from(
-                                e + "H", t, ifd_off + 2 + i * 12 + 8
-                            )[0]
+                out["orientation"] = tiff_side_values(payload[6:])["orientation"]
             elif marker == 0xE2 and payload[:12] == b"ICC_PROFILE\x00":
                 icc_chunks.append((payload[12], payload[14:]))
     except (ValueError, struct.error, IndexError):

@@ -15,6 +15,8 @@ import zlib
 
 import numpy as np
 
+from .tiff import tiff_side_values
+
 _SIGNATURE = b"\x89PNG\r\n\x1a\n"
 
 
@@ -107,10 +109,11 @@ def encode_gray(
 
 
 def side_values(data: bytes) -> dict:
-    """Parse the ancillary side-values (dpi, ICC, EXIF orientation) this
-    codec writes; unknown/absent chunks yield None fields.  Keeps parity
-    with the reference's decode contract (S5 keeps icc/exif)."""
-    out: dict = {"dpi": None, "icc_name": None, "icc_profile": None, "orientation": None}
+    """The decode side values of a PNG (the reference keeps icc/exif, S5):
+    pHYs dpi, the iCCP profile name and the eXIf orientation, which
+    `tiff_side_values` reads since an EXIF blob is a TIFF structure.  An
+    absent or malformed chunk leaves its field None; this never raises."""
+    out: dict = {"dpi": None, "icc_name": None, "orientation": None}
     if data[:8] != _SIGNATURE:
         return out
     pos = 8
@@ -124,17 +127,10 @@ def side_values(data: bytes) -> dict:
             if unit == 1:
                 out["dpi"] = round(ppm_x * 0.0254, 4)
         elif tag == b"iCCP":
-            nul = payload.index(b"\x00")
-            out["icc_name"] = payload[:nul].decode("latin-1")
-            out["icc_profile"] = zlib.decompress(payload[nul + 2 :])
-        elif tag == b"eXIf" and payload[:4] in (b"II*\x00", b"MM\x00*"):
-            if payload[:4] == b"II*\x00" and len(payload) >= 22:
-                n_tags = struct.unpack("<H", payload[8:10])[0]
-                for t in range(n_tags):
-                    off = 10 + 12 * t
-                    tag_id, ttype, _cnt = struct.unpack("<HHI", payload[off : off + 8])
-                    if tag_id == 0x0112 and ttype == 3:
-                        out["orientation"] = struct.unpack("<H", payload[off + 8 : off + 10])[0]
+            name, nul, _ = payload.partition(b"\x00")
+            out["icc_name"] = name.decode("latin-1") if nul else None
+        elif tag == b"eXIf":
+            out["orientation"] = tiff_side_values(payload)["orientation"]
         elif tag == b"IEND":
             break
     return out

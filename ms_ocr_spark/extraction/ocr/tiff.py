@@ -58,8 +58,8 @@ _T_TILE_LENGTH = 323
 _T_TILE_OFFSETS = 324
 _T_TILE_COUNTS = 325
 
-# BYTE ASCII SHORT LONG RATIONAL UNDEFINED
-_TYPE_SIZES = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 7: 1}
+# the field types the reader reads: BYTE SHORT LONG RATIONAL UNDEFINED
+_TYPE_SIZES = {1: 1, 3: 2, 4: 4, 5: 8, 7: 1}
 
 
 def _packbits(data: bytes) -> bytes:
@@ -427,6 +427,10 @@ def _unpackbits(data: bytes, expected: int) -> bytes:
 
 
 def _read_ifd(data: bytes, e: str, off: int) -> dict[int, list[int]]:
+    """tag -> values of the IFD at `off`, for the field types in
+    `_TYPE_SIZES`; other types are skipped.  A tag whose values run past
+    the end of `data` raises a ValueError naming it, before any value is
+    unpacked, so a forged count costs no memory."""
     (n,) = struct.unpack_from(e + "H", data, off)
     tags: dict[int, list[int]] = {}
     for i in range(n):
@@ -437,6 +441,8 @@ def _read_ifd(data: bytes, e: str, off: int) -> dict[int, list[int]]:
         voff = off + 2 + i * 12 + 8
         if size > 4:
             (voff,) = struct.unpack_from(e + "I", data, voff)
+        if voff + size > len(data):
+            raise ValueError(f"TIFF tag {tag}: {count} values run past the data")
         if typ == 3:
             vals = list(struct.unpack_from(e + "H" * count, data, voff))
         elif typ == 4:
@@ -444,10 +450,8 @@ def _read_ifd(data: bytes, e: str, off: int) -> dict[int, list[int]]:
         elif typ == 5:
             raw = struct.unpack_from(e + "II" * count, data, voff)
             vals = [raw[2 * k] // max(raw[2 * k + 1], 1) for k in range(count)]
-        elif typ in (1, 7):
+        else:  # BYTE, UNDEFINED
             vals = list(data[voff : voff + count])
-        else:
-            continue
         tags[tag] = vals
     return tags
 
@@ -607,7 +611,10 @@ def encode_jpeg_in_tiff_stub(h: int = 32, w: int = 64) -> bytes:
 def tiff_side_values(data: bytes) -> dict:
     """Decode side-values (S5 parity, round 5): XResolution dpi,
     Orientation (tag 274), ICC profile name (tag 34675 'desc').
-    Malformed structure degrades to null fields."""
+    Malformed structure degrades to null fields; this never raises.
+
+    An EXIF blob is a TIFF structure, so this is also the EXIF reader of
+    the PNG eXIf chunk and the JPEG APP1 `Exif` segment."""
     from ms_ocr_spark.extraction.ocr.icc import icc_profile_name
 
     out: dict = {"dpi": None, "icc_name": None, "orientation": None}
@@ -624,6 +631,7 @@ def tiff_side_values(data: bytes) -> dict:
             out["dpi"] = float(xres[0]) * 2.54
     if _T_ORIENTATION in tags and tags[_T_ORIENTATION]:
         out["orientation"] = int(tags[_T_ORIENTATION][0])
-    if _T_ICC in tags:
-        out["icc_name"] = icc_profile_name(bytes(tags[_T_ICC]))
+    icc = tags.get(_T_ICC)
+    if icc and max(icc) < 256:  # a non-byte entry is no profile
+        out["icc_name"] = icc_profile_name(bytes(icc))
     return out

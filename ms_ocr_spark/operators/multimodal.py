@@ -1,7 +1,11 @@
 """Multimodal column operators: opaque binary payloads + typed metadata.
 
 Everything here is REAL decode — no stubs remain (round 5):
-  * images: the engine's own PNG/JPEG(baseline+progressive)/TIFF codecs
+  * images: the engine's own PNG/JPEG(baseline+progressive)/TIFF codecs,
+    declared once in `IMAGE_FORMATS`: the magic-byte sniff on both sides
+    of the Arrow boundary (`media_format` in Python, `mime_col` on the
+    JVM) and the decode entry every image operator calls
+    (`extraction.ocr.decode_media`) read that one table
   * audio (round 4): RIFF/WAVE PCM-16 via the stdlib `wave` module
   * video (round 5): MJPEG-in-AVI — the engine's own RIFF walker + its
     own baseline-JPEG decoder (`extraction/ocr/avi.py`), zero external
@@ -56,21 +60,26 @@ def media_payloads(batch: pa.RecordBatch, payload_col: str):
     return zip(batch.column("media_ref").to_pylist(), batch.column(payload_col).to_pylist())
 
 
-def sniff_format(buf: bytes | None) -> str:
-    """Magic-byte MIME sniff (reference S2, `/root/reference/src/
-    HelperSrc.ts:184-406`) for the formats the reference allows."""
-    if not buf or len(buf) < 8:
-        return "unknown"
-    if buf[:8] == b"\x89PNG\r\n\x1a\n":
-        return "png"
-    if buf[:3] == b"\xff\xd8\xff":
-        return "jpeg"
-    if buf[:4] in (b"II*\x00", b"MM\x00*"):
-        return "tiff"
-    return "unknown"
+# The image formats the engine decodes (reference allow-list jpg/png/tif,
+# `env/local.env:25`), in sniff order: each row is a format's name and the
+# magic prefixes that mark it (reference S2, `HelperSrc.ts:184-406`).
+# `media_format` matches the whole prefixes, `mime_col` the hex of their
+# first four bytes, and `extraction.ocr.CODECS` maps each name to its
+# decoder and side-value reader.
+IMAGE_FORMATS = (
+    ("png", (b"\x89PNG\r\n\x1a\n",)),
+    ("jpeg", (b"\xff\xd8\xff",)),
+    ("tiff", (b"II*\x00", b"MM\x00*")),
+)
 
 
-_MAGIC = {"png": "89504E47", "jpeg": "FFD8FF", "tiff_le": "49492A00", "tiff_be": "4D4D002A"}
+def media_format(buf: bytes | None) -> str:
+    """The name of the `IMAGE_FORMATS` row whose magic prefix `buf` starts
+    with, or "unknown" (also for None)."""
+    return next(
+        (name for name, prefixes in IMAGE_FORMATS if buf and buf.startswith(prefixes)),
+        "unknown",
+    )
 
 
 MAX_MEDIA_BYTES = 30 * 1024 * 1024  # reference size cap, env/local.env:26
@@ -85,76 +94,55 @@ def magic_col(payload_col: str = "payload"):
 
 def mime_col(magic: str = "magic"):
     """JVM-side magic-byte MIME sniff Column (reference S2) over the column
-    `magic`, a projected `magic_col`: the sniff reads it in four branches,
-    and a projected column is evaluated once per row."""
+    `magic`, a projected `magic_col`: one `when` branch per `IMAGE_FORMATS`
+    row, so the sniff reads a projected column, evaluated once per row."""
+    from functools import reduce
+    from operator import or_
+
     from pyspark.sql import functions as F
 
     head = F.col(magic)
-    return (
-        F.when(head.startswith(_MAGIC["png"]), "png")
-        .when(head.startswith(_MAGIC["jpeg"]), "jpeg")
-        .when(head.startswith(_MAGIC["tiff_le"]) | head.startswith(_MAGIC["tiff_be"]), "tiff")
-        .otherwise("unknown")
-    )
+    sniff = F  # F.when opens the chain, Column.when extends it
+    for name, prefixes in IMAGE_FORMATS:
+        hit = reduce(or_, [head.startswith(p[:4].hex().upper()) for p in prefixes])
+        sniff = sniff.when(hit, name)
+    return sniff.otherwise("unknown")
 
 
 def image_metadata(media: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Decode payloads (real PNG decode) -> per-image metadata rows."""
+    """Decode payloads -> per-image metadata rows: the decoded image's
+    features, its `media_format` name, and the side values the reference
+    keeps at decode (S5): dpi, ICC profile name, EXIF orientation."""
 
     def _extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ms_ocr_spark.extraction.ocr.jpeg import (
-            decode_gray_jpeg,
-            jpeg_side_values,
-        )
-        from ms_ocr_spark.extraction.ocr.png import decode_gray, side_values
-        from ms_ocr_spark.extraction.ocr.tiff import (
-            decode_gray_tiff,
-            tiff_side_values,
-        )
+        from ms_ocr_spark.extraction.ocr import CODECS
 
         for batch in batches:
             rows = []
             for ref, buf in media_payloads(batch, payload_col):
-                fmt = sniff_format(buf)
+                fmt = media_format(buf)
                 try:
-                    # side-value parity across all three containers
-                    # (round 5, S5): dpi + ICC name + EXIF orientation
-                    # from pHYs/iCCP/eXIf (PNG), JFIF/APP2/APP1 (JPEG),
-                    # XResolution/34675/274 (TIFF)
-                    if fmt == "png":
-                        img = decode_gray(buf)
-                        sv = side_values(buf)
-                    elif fmt == "tiff":
-                        img = decode_gray_tiff(buf)
-                        sv = tiff_side_values(buf)
-                    elif fmt == "jpeg":
-                        img = decode_gray_jpeg(buf)
-                        sv = jpeg_side_values(buf)
-                    else:
-                        raise ValueError("unknown format")
-                    # rounded to 6dp with Python round(): bit-identical to
-                    # the datagen golden (same expressions on the same
-                    # round-tripped pixels — datagen measures the DECODED
-                    # image for lossy formats)
-                    rows.append(
-                        (
-                            ref,
-                            img.shape[1],
-                            img.shape[0],
-                            round(float((img < 128).mean()), 6),
-                            round(float(img.mean()), 6),
-                            fmt,
-                            sv["dpi"],
-                            sv["icc_name"],
-                            sv["orientation"],
-                        )
-                    )
+                    decode, side_values = CODECS[fmt]
+                    img = decode(buf)
                 except Exception:
-                    # decode-scope failures (e.g. progressive JPEG,
-                    # truncated files) yield a null metadata row with the
-                    # sniffed format preserved — never a task failure
+                    # an unknown format or a failed decode (out-of-scope
+                    # layout, truncated file) yields a null metadata row
+                    # with the sniffed format kept — never a task failure
                     # (same contract as the OCR UDF's quarantine path)
                     rows.append((ref, None, None, None, None, fmt, None, None, None))
+                    continue
+                # the side-value readers never raise: a malformed chunk
+                # nulls its own field and keeps the decoded ones
+                sv = side_values(buf)
+                # rounded to 6dp with Python round(): bit-identical to
+                # the datagen golden (same expressions on the same
+                # round-tripped pixels — datagen measures the DECODED
+                # image for lossy formats)
+                h, w = img.shape
+                ink, mean = round(float((img < 128).mean()), 6), round(float(img.mean()), 6)
+                rows.append(
+                    (ref, w, h, ink, mean, fmt, sv["dpi"], sv["icc_name"], sv["orientation"])
+                )
             yield rows_batch(rows, IMAGE_META_SCHEMA)
 
     return media.select("media_ref", payload_col).mapInArrow(

@@ -60,14 +60,14 @@ def ocr_boxes(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     """
 
     def _extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ms_ocr_spark.extraction.ocr import decode_gray
+        from ms_ocr_spark.extraction.ocr import decode_media
         from ms_ocr_spark.extraction.ocr.kernel import decode_words
 
         for batch in batches:
             rows = []
             for ref, buf in media_payloads(batch, payload_col):
                 for i, (x1, y1, x2, y2, text) in enumerate(
-                    decode_words(decode_gray(buf))
+                    decode_words(decode_media(buf))
                 ):
                     rows.append((ref, i, x1, y1, x2, y2, text))
             yield rows_batch(rows, BOX_SCHEMA)

@@ -9,8 +9,11 @@ from pyspark.sql import functions as F
 
 from ms_ocr_spark.operators.boxes import dedup_overlap_keep_first
 from ms_ocr_spark.operators.multimodal import (
+    IMAGE_FORMATS,
     image_metadata,
-    sniff_format,
+    magic_col,
+    media_format,
+    mime_col,
     video_frame_sample,
 )
 from ms_ocr_spark.operators.textstats import search_match
@@ -65,11 +68,42 @@ def test_sniff_format():
     from ms_ocr_spark.extraction.ocr.png import encode_gray
 
     png = encode_gray(render_text("HI"))
-    assert sniff_format(png) == "png"
-    assert sniff_format(b"\xff\xd8\xff\xe0abcd") == "jpeg"
-    assert sniff_format(b"II*\x00rest") == "tiff"
-    assert sniff_format(b"????????") == "unknown"
-    assert sniff_format(None) == "unknown"
+    assert media_format(png) == "png"
+    assert media_format(b"\xff\xd8\xff\xe0abcd") == "jpeg"
+    assert media_format(b"II*\x00rest") == "tiff"
+    assert media_format(b"????????") == "unknown"
+    assert media_format(None) == "unknown"
+
+
+def test_mime_col_agrees_with_media_format(spark):
+    """The JVM-side sniff, built from the same `IMAGE_FORMATS` table, names
+    every magic prefix of the table, and a junk payload, as the Python
+    sniff does."""
+    payloads = [p for _, prefixes in IMAGE_FORMATS for p in prefixes] + [b"junk payload"]
+    df = spark.createDataFrame(
+        [(i, bytearray(p)) for i, p in enumerate(payloads)], "i int, payload binary"
+    )
+    got = df.withColumn("magic", magic_col()).withColumn("mime", mime_col()).orderBy("i")
+    want = [media_format(p) for p in payloads]
+    assert want == ["png", "jpeg", "tiff", "tiff", "unknown"]
+    assert [r["mime"] for r in got.collect()] == want
+
+
+def test_image_metadata_keeps_decoded_fields_past_a_corrupt_iccp(spark):
+    """An iCCP chunk whose profile is not a zlib stream nulls nothing: the
+    PNG decodes, and its size, dpi, ICC name and orientation all come out."""
+    from ms_ocr_spark.extraction.ocr.png import _chunk, encode_gray
+
+    img = np.full((30, 40), 220, np.uint8)
+    img[10:20, 5:35] = 0
+    good = encode_gray(img, dpi=300.0, exif_orientation=6)
+    ihdr_end = 8 + 12 + 13
+    bad = good[:ihdr_end] + _chunk(b"iCCP", b"sRGB\x00\x00not zlib") + good[ihdr_end:]
+    media = spark.createDataFrame([("r", bytearray(bad))], "media_ref string, payload binary")
+    (row,) = image_metadata(media).collect()
+    assert (row["format"], row["width"], row["height"]) == ("png", 40, 30)
+    assert row["dpi"] == pytest.approx(300.0, abs=0.01)
+    assert (row["icc_name"], row["orientation"]) == ("sRGB", 6)
 
 
 def test_image_metadata_and_resize(spark, corpus_dir):

@@ -104,3 +104,25 @@ def test_table_multi_hit_cell_concat(spark):
     row = out.filter(F.col("col_idx") == 0).collect()[0]
     assert row["cell_text"] == "first second"
     assert row["n_texts"] == 2
+
+
+def test_ocr_boxes_decode_every_image_format(spark):
+    """ocr_boxes decodes through `decode_media`, so one rendered line gives
+    the same boxes whether it is stored as PNG, JPEG or TIFF."""
+    from ms_ocr_spark.extraction.ocr.jpeg import encode_gray_jpeg
+    from ms_ocr_spark.extraction.ocr.png import encode_gray
+    from ms_ocr_spark.extraction.ocr.tiff import encode_gray_tiff
+    from ms_ocr_spark.extraction.ocr.glyphs import render_text
+
+    img = render_text("NAME  QTY  PRICE")
+    encoders = {"png": encode_gray, "jpeg": encode_gray_jpeg, "tiff": encode_gray_tiff}
+    media = spark.createDataFrame(
+        [(fmt, bytearray(enc(img))) for fmt, enc in encoders.items()],
+        "media_ref string, payload binary",
+    )
+    rows = ocr_boxes(media).collect()
+    boxes = {
+        fmt: sorted(tuple(r)[1:] for r in rows if r["doc_id"] == fmt) for fmt in encoders
+    }
+    assert [b[-1] for b in boxes["png"]] == ["NAME", "QTY", "PRICE"]
+    assert boxes["png"] == boxes["jpeg"] == boxes["tiff"]
