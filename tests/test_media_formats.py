@@ -147,8 +147,8 @@ print("loaded:", *sorted(m for m in sys.modules if m.startswith("ms_ocr_spark.ex
 
 
 def test_planning_extraction_loads_no_codec(corpus_dir):
-    """The driver plans an extraction without importing `extraction.ocr`,
-    whose kernel builds its templates at import."""
+    """Planning an extraction imports no `extraction.ocr` module: its
+    kernel builds templates at import, a cost only the workers pay."""
     out = subprocess.run(
         [sys.executable, "-c", _PLAN_ONLY, corpus_dir],
         cwd=REPO,
