@@ -713,13 +713,12 @@ def pdf_text_spans(data: bytes) -> list[tuple]:
 
 def pdf_extract_spans_df(artifacts, id_col: str = "doc_id", payload_col: str = "artifact"):
     """DataFrame operator: (id, pdf bytes) -> one row per text span
-    (id, page, x, y, text).  Same mapInArrow shape as the other binary
-    media paths — PDF bytes stream through Arrow batches executor-side;
-    unparsable payloads yield a single all-null row (quarantine
-    contract), never a task failure."""
+    (id, page, x, y, text), the id as a string.  Run by `map_payloads`,
+    the loop of every binary media path: an unparsable or NULL payload
+    gives one row of its id with NULL fields, never a task failure."""
     from pyspark.sql import types as T
 
-    from ms_ocr_spark.operators.multimodal import rows_batch
+    from ms_ocr_spark.operators.multimodal import map_payloads
 
     schema = T.StructType(
         [
@@ -730,18 +729,4 @@ def pdf_extract_spans_df(artifacts, id_col: str = "doc_id", payload_col: str = "
             T.StructField("text", T.StringType()),
         ]
     )
-
-    def _gen(batches):
-        for batch in batches:
-            rows = []
-            for did, buf in zip(
-                batch.column(id_col).to_pylist(), batch.column(payload_col).to_pylist()
-            ):
-                try:
-                    for page, x, y, text in pdf_text_spans(buf):
-                        rows.append((str(did), page, x, y, text))
-                except Exception:
-                    rows.append((str(did), None, None, None, None))
-            yield rows_batch(rows, schema)
-
-    return artifacts.select(id_col, payload_col).mapInArrow(_gen, schema=schema)
+    return map_payloads(artifacts, schema, pdf_text_spans, id_col, payload_col)

@@ -11,8 +11,14 @@ Everything here is REAL decode — no stubs remain (round 5):
     own baseline-JPEG decoder (`extraction/ocr/avi.py`), zero external
     codecs
 
+Every media operator (these three, `tables.ocr_boxes` and
+`pdf.pdf_extract_spans_df`) is a per-payload reader run by `map_payloads`,
+the one executor loop.  Fault rule: a payload its reader cannot read
+(junk, cut or NULL) comes out as exactly one row of its id with NULL
+fields, never as a task failure or a partial set of rows.
+
 Pattern notes (100 TB): mapInArrow streams Arrow record batches through
-one Python worker per core, and each decoder's rows go straight back into
+one Python worker per core, and each reader's rows go straight back into
 one record batch (`rows_batch`) — payload bytes never round-trip the
 driver, and no pandas frame is built per batch; metadata-only queries
 never deserialize payloads (column pruning).
@@ -20,7 +26,10 @@ never deserialize payloads (column pruning).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
+import io
+import wave
+from collections.abc import Callable, Iterable, Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -55,9 +64,35 @@ def rows_batch(rows: list[tuple], schema: T.StructType) -> pa.RecordBatch:
     )
 
 
-def media_payloads(batch: pa.RecordBatch, payload_col: str):
-    """(media_ref, payload bytes or None) of each row of a media batch."""
-    return zip(batch.column("media_ref").to_pylist(), batch.column(payload_col).to_pylist())
+def map_payloads(
+    df: DataFrame,
+    schema: T.StructType,
+    rows_of: Callable[[bytes | None], Iterable[tuple]],
+    id_col: str = "media_ref",
+    payload_col: str = "payload",
+) -> DataFrame:
+    """The one executor loop of every media operator: one `mapInArrow`
+    over (id cast to `schema`'s first field, payload) that emits
+    `(id, *row)` for each row `rows_of(payload)` returns.  A payload whose
+    `rows_of` raises (junk, cut, NULL) gives exactly one `(id, NULL, ...)`
+    row and none of its other rows — a fault is a row to report, never a
+    task failure."""
+    from pyspark.sql import functions as F
+
+    fault = (None,) * (len(schema) - 1)
+
+    def _run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows = []
+            for ref, buf in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist()):
+                try:
+                    rows += [(ref, *row) for row in rows_of(buf)]
+                except Exception:
+                    rows.append((ref, *fault))
+            yield rows_batch(rows, schema)
+
+    ref = F.col(id_col).cast(schema.fields[0].dataType)
+    return df.select(ref, payload_col).mapInArrow(_run, schema=schema)
 
 
 # The image formats the engine decodes (reference allow-list jpg/png/tif,
@@ -114,40 +149,28 @@ def image_metadata(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     features, its `media_format` name, and the side values the reference
     keeps at decode (S5): dpi, ICC profile name, EXIF orientation."""
 
-    def _extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def _meta(buf: bytes | None) -> list[tuple]:
         from ms_ocr_spark.extraction.ocr import CODECS
 
-        for batch in batches:
-            rows = []
-            for ref, buf in media_payloads(batch, payload_col):
-                fmt = media_format(buf)
-                try:
-                    decode, side_values = CODECS[fmt]
-                    img = decode(buf)
-                except Exception:
-                    # an unknown format or a failed decode (out-of-scope
-                    # layout, truncated file) yields a null metadata row
-                    # with the sniffed format kept — never a task failure
-                    # (same contract as the OCR UDF's quarantine path)
-                    rows.append((ref, None, None, None, None, fmt, None, None, None))
-                    continue
-                # the side-value readers never raise: a malformed chunk
-                # nulls its own field and keeps the decoded ones
-                sv = side_values(buf)
-                # rounded to 6dp with Python round(): bit-identical to
-                # the datagen golden (same expressions on the same
-                # round-tripped pixels — datagen measures the DECODED
-                # image for lossy formats)
-                h, w = img.shape
-                ink, mean = round(float((img < 128).mean()), 6), round(float(img.mean()), 6)
-                rows.append(
-                    (ref, w, h, ink, mean, fmt, sv["dpi"], sv["icc_name"], sv["orientation"])
-                )
-            yield rows_batch(rows, IMAGE_META_SCHEMA)
+        fmt = media_format(buf)
+        try:
+            decode, side_values = CODECS[fmt]
+            img = decode(buf)
+        except Exception:
+            # an unknown format or a failed decode (out-of-scope layout,
+            # truncated file) keeps the sniffed format in its null row
+            return [(None, None, None, None, fmt, None, None, None)]
+        # the side-value readers never raise: a malformed chunk nulls its
+        # own field and keeps the decoded ones
+        sv = side_values(buf)
+        # rounded to 6dp with Python round(): bit-identical to the datagen
+        # golden (same expressions on the same round-tripped pixels —
+        # datagen measures the DECODED image for lossy formats)
+        h, w = img.shape
+        ink, mean = round(float((img < 128).mean()), 6), round(float(img.mean()), 6)
+        return [(w, h, ink, mean, fmt, sv["dpi"], sv["icc_name"], sv["orientation"])]
 
-    return media.select("media_ref", payload_col).mapInArrow(
-        _extract, schema=IMAGE_META_SCHEMA
-    )
+    return map_payloads(media, IMAGE_META_SCHEMA, _meta, payload_col=payload_col)
 
 
 FRAME_SCHEMA = T.StructType(
@@ -171,42 +194,26 @@ def video_frame_sample(
     sampled frame decoded by its own baseline-JPEG codec
     (`extraction/ocr/avi.py`) — zero external codecs.  One input row
     fans out to one row per sampled frame (index, size, ink/intensity
-    features, md5 of the decoded pixels); undecodable payloads yield a
-    single all-null row, mirroring the image/audio quarantine contract.
-    Same 100-TB shape as the other media paths: payloads stream through
-    Arrow batches inside mapInArrow, never the driver."""
+    features, md5 of the decoded pixels); an undecodable payload gives
+    `map_payloads`' single all-null fault row."""
 
-    def _sample(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import hashlib
-
+    def _frames(buf: bytes | None) -> list[tuple]:
         from ms_ocr_spark.extraction.ocr.avi import avi_frames
 
-        for batch in batches:
-            rows = []
-            for ref, buf in media_payloads(batch, payload_col):
-                try:
-                    frames = avi_frames(buf)
-                except Exception:
-                    rows.append((ref, None, None, None, None, None, None))
-                    continue
-                for idx in range(0, len(frames), every_n):
-                    f = frames[idx]
-                    rows.append(
-                        (
-                            ref,
-                            idx,
-                            int(f.shape[1]),
-                            int(f.shape[0]),
-                            round(float((f < 128).mean()), 6),
-                            round(float(f.mean()), 6),
-                            hashlib.md5(f.tobytes()).hexdigest(),
-                        )
-                    )
-            yield rows_batch(rows, FRAME_SCHEMA)
+        return [
+            (
+                idx,
+                int(f.shape[1]),
+                int(f.shape[0]),
+                round(float((f < 128).mean()), 6),
+                round(float(f.mean()), 6),
+                hashlib.md5(f.tobytes()).hexdigest(),
+            )
+            for idx, f in enumerate(avi_frames(buf))
+            if idx % every_n == 0
+        ]
 
-    return media.select("media_ref", payload_col).mapInArrow(
-        _sample, schema=FRAME_SCHEMA
-    )
+    return map_payloads(media, FRAME_SCHEMA, _frames, payload_col=payload_col)
 
 
 AUDIO_SCHEMA = T.StructType(
@@ -222,26 +229,22 @@ AUDIO_SCHEMA = T.StructType(
 )
 
 
-def wav_features(buf: bytes) -> tuple | None:
-    """Decode one RIFF/WAVE PCM-16 payload -> feature tuple, or None when
-    the bytes are not a decodable WAV (the caller emits a null row).
+def wav_features(buf: bytes) -> tuple:
+    """Decode one RIFF/WAVE PCM-16 payload -> feature tuple.  Raises on
+    bytes that are not a whole PCM-16 WAV (the operator's fault row).
 
     Stdlib-only (wave + numpy), deterministic float64 math:
       * duration_s = frames / rate, 6 dp
       * rms of all samples normalized to [-1, 1] (int16 / 32768), 6 dp
       * zero crossings of channel 0 (signbit transitions)
     """
-    import io
-    import wave
-
-    try:
-        with wave.open(io.BytesIO(buf)) as w:
-            if w.getsampwidth() != 2 or w.getcomptype() != "NONE":
-                return None
-            rate, nch, nframes = w.getframerate(), w.getnchannels(), w.getnframes()
-            raw = w.readframes(nframes)
-    except Exception:
-        return None
+    with wave.open(io.BytesIO(buf)) as w:
+        if w.getsampwidth() != 2 or w.getcomptype() != "NONE":
+            raise ValueError("not a PCM-16 WAV")
+        rate, nch, nframes = w.getframerate(), w.getnchannels(), w.getnframes()
+        raw = w.readframes(nframes)
+    if len(raw) < nframes * nch * 2:
+        raise ValueError("WAV data shorter than its header's frame count")
     x = np.frombuffer(raw, dtype="<i2").astype(np.float64)
     if len(x) == 0:
         return (rate, nch, 0, 0.0, 0.0, 0)
@@ -254,22 +257,8 @@ def wav_features(buf: bytes) -> tuple | None:
 def audio_features(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Audio feature extraction over binary WAV payloads (round 4 — the
     last stub closed): RIFF/WAVE PCM-16 parsed with the stdlib `wave`
-    module inside `mapInArrow` (no external codec needed); compressed or
-    non-WAV payloads yield all-null feature rows, mirroring the
-    image_metadata quarantine contract.  Same 100-TB shape as the image
-    path: payloads stream through Arrow batches, never the driver."""
-
-    def _extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            rows = []
-            for ref, buf in media_payloads(batch, payload_col):
-                feats = wav_features(buf) if buf is not None else None
-                if feats is None:
-                    rows.append((ref, None, None, None, None, None, None))
-                else:
-                    rows.append((ref, *feats))
-            yield rows_batch(rows, AUDIO_SCHEMA)
-
-    return media.select("media_ref", payload_col).mapInArrow(
-        _extract, schema=AUDIO_SCHEMA
-    )
+    module (no external codec needed); compressed, cut or non-WAV
+    payloads give `map_payloads`' all-null fault row.  Same 100-TB shape
+    as the image path: payloads stream through Arrow batches, never the
+    driver."""
+    return map_payloads(media, AUDIO_SCHEMA, lambda buf: [wav_features(buf)], payload_col=payload_col)

@@ -24,19 +24,17 @@ reconstruction semantics of `data_to_table/main.py`:
 Everything after the OCR UDF is pure DataFrame ops (codegen'd; per-doc
 grids are small, all joins are equi-joins on doc_id), so the composition
 scales to any number of documents — the only Python is the Arrow-batched
-OCR boxes UDF.
+OCR boxes reader.  An image that does not decode keeps its one NULL row in
+`ocr_boxes` and gives no grid, cell or HTML row.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .multimodal import media_payloads, rows_batch
+from .multimodal import map_payloads
 from .windows import gap_cluster
 
 BOX_SCHEMA = T.StructType(
@@ -56,25 +54,17 @@ def ocr_boxes(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Media payloads -> reading-order OCR word boxes (Arrow-batched).
 
     One input row fans out to many box rows (the UDTF shape of the
-    reference's detector output, `engine_paddle/main.py:232-285`).
+    reference's detector output, `engine_paddle/main.py:232-285`); a
+    payload that does not decode gives `map_payloads`' one NULL row.
     """
 
-    def _extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def _boxes(buf: bytes | None) -> list[tuple]:
         from ms_ocr_spark.extraction.ocr import decode_media
         from ms_ocr_spark.extraction.ocr.kernel import decode_words
 
-        for batch in batches:
-            rows = []
-            for ref, buf in media_payloads(batch, payload_col):
-                for i, (x1, y1, x2, y2, text) in enumerate(
-                    decode_words(decode_media(buf))
-                ):
-                    rows.append((ref, i, x1, y1, x2, y2, text))
-            yield rows_batch(rows, BOX_SCHEMA)
+        return [(i, *box) for i, box in enumerate(decode_words(decode_media(buf)))]
 
-    return media.select("media_ref", payload_col).mapInArrow(
-        _extract, schema=BOX_SCHEMA
-    )
+    return map_payloads(media, BOX_SCHEMA, _boxes, payload_col=payload_col)
 
 
 def grid_from_boxes(
@@ -85,8 +75,10 @@ def grid_from_boxes(
 ) -> DataFrame:
     """Cluster boxes into grid coordinates by TOP/LEFT edges (reference
     `_detectGrid` semantics — unlike operators.boxes.table_grid, which
-    clusters centers for the standalone A2/A3 queries)."""
-    with_pos = boxes.withColumn("_y1d", F.col("y1").cast("double")).withColumn(
+    clusters centers for the standalone A2/A3 queries).  A NULL `box_id`
+    is `ocr_boxes`' row for an image that did not decode: like a blank
+    image, it gives no table."""
+    with_pos = boxes.filter(F.col("box_id").isNotNull()).withColumn("_y1d", F.col("y1").cast("double")).withColumn(
         "_x1d", F.col("x1").cast("double")
     )
     rows = gap_cluster(with_pos, [doc_col], "_y1d", tol_y, "row_idx")

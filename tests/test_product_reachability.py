@@ -212,3 +212,19 @@ def test_product_modules_use_the_arrow_udf_idiom():
     assert not offenders, "pandas UDF idiom in product modules:\n  " + "\n  ".join(
         sorted(offenders)
     )
+
+
+# The media operators are per-payload readers run by one executor loop.
+MEDIA_MODULES = [f"{PKG}.operators.multimodal", f"{PKG}.operators.tables", f"{PKG}.extraction.pdf"]
+
+
+def test_media_operators_share_one_payload_loop():
+    modules, _ = _load()
+    calls = [
+        f"{name}.{top.name if isinstance(top, _DEFS) else '<module>'}"
+        for name in MEDIA_MODULES
+        for top in modules[name].tree.body
+        for node in ast.walk(top)
+        if isinstance(node, ast.Attribute) and node.attr == "mapInArrow"
+    ]
+    assert calls == [f"{PKG}.operators.multimodal.map_payloads"], calls
