@@ -98,9 +98,9 @@ def map_payloads(
 # The image formats the engine decodes (reference allow-list jpg/png/tif,
 # `env/local.env:25`), in sniff order: each row is a format's name and the
 # magic prefixes that mark it (reference S2, `HelperSrc.ts:184-406`).
-# `media_format` matches the whole prefixes, `mime_col` the hex of their
-# first four bytes, and `extraction.ocr.CODECS` maps each name to its
-# decoder and side-value reader.
+# Both sniffs, `media_format` and `mime_col`, match the whole prefixes, and
+# `extraction.ocr.CODECS` maps each name to its decoder and side-value
+# reader.
 IMAGE_FORMATS = (
     ("png", (b"\x89PNG\r\n\x1a\n",)),
     ("jpeg", (b"\xff\xd8\xff",)),
@@ -121,10 +121,12 @@ MAX_MEDIA_BYTES = 30 * 1024 * 1024  # reference size cap, env/local.env:26
 
 
 def magic_col(payload_col: str = "payload"):
-    """Hex of a payload's first four bytes: the input of `mime_col`."""
+    """Hex of a payload's first bytes, as many as the longest
+    `IMAGE_FORMATS` prefix: the input of `mime_col`."""
     from pyspark.sql import functions as F
 
-    return F.hex(F.substring(F.col(payload_col), 1, 4))
+    n = max(len(p) for _, prefixes in IMAGE_FORMATS for p in prefixes)
+    return F.hex(F.substring(F.col(payload_col), 1, n))
 
 
 def mime_col(magic: str = "magic"):
@@ -139,7 +141,7 @@ def mime_col(magic: str = "magic"):
     head = F.col(magic)
     sniff = F  # F.when opens the chain, Column.when extends it
     for name, prefixes in IMAGE_FORMATS:
-        hit = reduce(or_, [head.startswith(p[:4].hex().upper()) for p in prefixes])
+        hit = reduce(or_, [head.startswith(p.hex().upper()) for p in prefixes])
         sniff = sniff.when(hit, name)
     return sniff.otherwise("unknown")
 

@@ -77,15 +77,19 @@ def test_sniff_format():
 
 def test_mime_col_agrees_with_media_format(spark):
     """The JVM-side sniff, built from the same `IMAGE_FORMATS` table, names
-    every magic prefix of the table, and a junk payload, as the Python
-    sniff does."""
-    payloads = [p for _, prefixes in IMAGE_FORMATS for p in prefixes] + [b"junk payload"]
+    every magic prefix of the table, a junk payload, and a payload that
+    starts with only the first four bytes of the PNG signature, as the
+    Python sniff does."""
+    payloads = [p for _, prefixes in IMAGE_FORMATS for p in prefixes] + [
+        b"junk payload",
+        b"\x89PNG" + bytes(40),
+    ]
     df = spark.createDataFrame(
         [(i, bytearray(p)) for i, p in enumerate(payloads)], "i int, payload binary"
     )
     got = df.withColumn("magic", magic_col()).withColumn("mime", mime_col()).orderBy("i")
     want = [media_format(p) for p in payloads]
-    assert want == ["png", "jpeg", "tiff", "tiff", "unknown"]
+    assert want == ["png", "jpeg", "tiff", "tiff", "unknown", "unknown"]
     assert [r["mime"] for r in got.collect()] == want
 
 
