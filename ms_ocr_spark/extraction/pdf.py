@@ -38,6 +38,8 @@ from __future__ import annotations
 import re
 import zlib
 
+from .ocr.png import _defilter
+
 _OBJ_RE = re.compile(rb"(\d+) 0 obj\b(.*?)endobj", re.S)
 _OBJ_AT_RE = re.compile(rb"(\d+)\s+\d+\s+obj\b(.*?)endobj", re.S)
 _STREAM_RE = re.compile(rb"stream\r?\n(.*?)\r?\nendstream", re.S)
@@ -162,32 +164,6 @@ def _glyph_to_char(name: str) -> str | None:
     return _AGL.get(name)
 
 
-def _png_unpredict(data: bytes, columns: int) -> bytes:
-    """Undo PNG row filtering (/Predictor >= 10) on decoded xref-stream
-    bytes: each row is 1 filter byte + `columns` data bytes.  Real
-    writers emit filter 2 (Up) for xref streams; 0 (None) and 1 (Sub)
-    are handled for completeness."""
-    row_w = columns + 1
-    if len(data) % row_w:
-        raise ValueError("predictor row size mismatch")
-    out = bytearray()
-    prev = bytearray(columns)
-    for r in range(0, len(data), row_w):
-        ftype = data[r]
-        row = bytearray(data[r + 1 : r + row_w])
-        if ftype == 2:  # Up
-            for i in range(columns):
-                row[i] = (row[i] + prev[i]) & 0xFF
-        elif ftype == 1:  # Sub
-            for i in range(1, columns):
-                row[i] = (row[i] + row[i - 1]) & 0xFF
-        elif ftype != 0:
-            raise ValueError(f"unsupported PNG predictor filter {ftype}")
-        out += row
-        prev = row
-    return bytes(out)
-
-
 def _int_at(buf: bytes, pos: int, width: int) -> int:
     return int.from_bytes(buf[pos : pos + width], "big") if width else 0
 
@@ -234,8 +210,13 @@ def _parse_xref_at(data: bytes, pos: int, entries: dict[int, tuple]) -> int | No
         raw = zlib.decompress(raw)
     pm = _PRED_RE.search(body)
     if pm and int(pm.group(1)) >= 10:
+        # PNG row filtering (ISO 32000-1 7.4.4.4): each row is a filter
+        # byte and /Columns data bytes
         cm = _COLS_RE.search(body)
-        raw = _png_unpredict(raw, int(cm.group(1)) if cm else w1 + w2 + w3)
+        columns = int(cm.group(1)) if cm else w1 + w2 + w3
+        if len(raw) % (columns + 1):
+            raise ValueError("predictor row size mismatch")
+        raw = _defilter(raw, len(raw) // (columns + 1), columns).tobytes()
     im = _INDEX_RE.search(body)
     if im:
         nums = [int(t) for t in im.group(1).split()]

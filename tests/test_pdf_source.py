@@ -155,6 +155,58 @@ def test_pdf_xref_stream_entries():
     assert pdf[live_off : live_off + 7] == b"5 0 obj"
 
 
+def _png_filter_rows(rows: bytes, columns: int, filters: tuple[int, ...]) -> bytes:
+    """PNG-filter each `columns`-byte row of `rows` (1 byte per pixel),
+    cycling through the filter types `filters`."""
+
+    def paeth(a: int, b: int, c: int) -> int:
+        p = a + b - c
+        return min((abs(p - a), 0, a), (abs(p - b), 1, b), (abs(p - c), 2, c))[2]
+
+    out, prev = bytearray(), bytes(columns)
+    for n, r in enumerate(range(0, len(rows), columns)):
+        row, ftype = rows[r : r + columns], filters[n % len(filters)]
+        out.append(ftype)
+        for i in range(columns):
+            left, up, up_left = (row[i - 1], prev[i], prev[i - 1]) if i else (0, prev[i], 0)
+            pred = (0, left, up, (left + up) // 2, paeth(left, up, up_left))[ftype]
+            out.append((row[i] - pred) & 0xFF)
+        prev = row
+    return bytes(out)
+
+
+def test_pdf_xref_stream_average_and_paeth_predictors():
+    """An xref stream whose rows use the PNG Average (3) and Paeth (4)
+    filters resolves every entry, and the page's text comes out."""
+    from ms_ocr_spark.extraction.pdf import _pdf_xref_entries
+
+    content = b"BT 1 0 0 1 50 700 Tm (AVG PAETH) Tj ET"
+    bodies = [
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents 4 0 R >>",
+        b"<< /Length %d >>\nstream\n%s\nendstream" % (len(content), content),
+    ]
+    out = bytearray(b"%PDF-1.5\n")
+    offsets = []
+    for i, body in enumerate(bodies, 1):
+        offsets.append(len(out))
+        out += b"%d 0 obj\n" % i + body + b"\nendobj\n"
+    offsets.append(len(out))  # object 5: the xref stream itself
+    entries = [(0, 0, 255)] + [(1, off, 0) for off in offsets]
+    rows = b"".join(bytes([t]) + v.to_bytes(2, "big") + bytes([g]) for t, v, g in entries)
+    data = zlib.compress(_png_filter_rows(rows, 4, (3, 4)))
+    out += (
+        b"5 0 obj\n<< /Type /XRef /Size 6 /W [1 2 1] /Root 1 0 R /Filter /FlateDecode "
+        b"/DecodeParms << /Predictor 12 /Columns 4 >> /Length %d >>\nstream\n" % len(data)
+        + data
+        + b"\nendstream\nendobj\nstartxref\n%d\n%%%%EOF\n" % offsets[-1]
+    )
+    ent = _pdf_xref_entries(bytes(out))
+    assert {n: e[:2] for n, e in ent.items()} == {n: (1, off) for n, off in enumerate(offsets, 1)}
+    assert pdf_text_spans(bytes(out)) == [(0, 50.0, 700.0, "AVG PAETH")]
+
+
 def test_pdf_classic_xref_table_parses():
     """The sink's classic `xref` table (round-5 dialect) resolves through
     the same xref-first path — the scan fallback isn't what's parsing
