@@ -22,6 +22,8 @@ so it is safe (and cheap) inside an Arrow-batched Python UDF.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 
 from .glyphs import (
@@ -456,7 +458,6 @@ def _build_template_stack(
     )
 
 
-_TPL_STACK, _TPL_CHARS, _TPL_TALL, _TPL_ASPECT = _build_template_stack()
 _ASPECT_GATE = np.log(1.6)  # crop/template aspect must agree within 1.6x
 
 
@@ -477,10 +478,14 @@ class _Charset:
         self.log_aspect = np.log(aspect)
 
 
-_CHARSETS = {
-    "latin": _Charset(_TPL_STACK, _TPL_CHARS, _TPL_TALL, _TPL_ASPECT),
-    "kana": _Charset(*_build_template_stack(KANA_ALPHABET)),
-}
+_ALPHABETS = {"latin": ALPHABET, "kana": KANA_ALPHABET}
+
+
+@functools.cache
+def _charset(name: str) -> _Charset:
+    """The decode tables of charset `name` ("latin" | "kana"), built on
+    first use: importing the kernel builds no template stack."""
+    return _Charset(*_build_template_stack(_ALPHABETS[name]))
 
 
 # Memo for _decode_glyph: identical crops repeat heavily within a batch
@@ -513,7 +518,7 @@ def _decode_glyph(
     cached = _GLYPH_CACHE.get(key)
     if cached is not None:
         return cached
-    cs = _CHARSETS[charset]
+    cs = _charset(charset)
     cand = np.ones(len(cs.chars), dtype=bool)
     if cls is not None:
         cand = cs.tall if cls == "tall" else ~cs.tall

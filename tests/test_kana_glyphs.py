@@ -20,7 +20,7 @@ from ms_ocr_spark.extraction.ocr.glyphs import (
     render_text,
 )
 from ms_ocr_spark.extraction.ocr.kernel import (
-    _CHARSETS,
+    _charset,
     connected_components,
     decode_image,
     rotate_bilinear,
@@ -89,7 +89,7 @@ def test_kana_margin_within_gates():
     """Same decode-margin invariant as the Latin stack: cross-char
     distances inside the (class, aspect) gates exceed the unambiguous
     threshold, so greedy nearest-template decode is exact."""
-    cs = _CHARSETS["kana"]
+    cs = _charset("kana")
     flat = cs.stack.reshape(len(cs.stack), -1).astype(np.int32)
     loga = cs.log_aspect
     worst = 1 << 30

@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import subprocess
+import sys
+from pathlib import Path
+
 import numpy as np
 import pytest
 
@@ -54,33 +58,57 @@ def test_tall_glyphs_span_full_cell():
     # line banding + size classing assume tall-class glyphs ink both the
     # top and bottom cell rows; short glyphs only need to sit inside the
     # band a tall anchor establishes
-    from ms_ocr_spark.extraction.ocr.kernel import _TPL_CHARS, _TPL_TALL
+    from ms_ocr_spark.extraction.ocr.kernel import _charset
 
-    tall_chars = {c for c, t in zip(_TPL_CHARS, _TPL_TALL) if t}
+    cs = _charset("latin")
+    tall_chars = {c for c, t in zip(cs.chars, cs.tall) if t}
     for ch in tall_chars:
         bm = glyph_bitmap(ch)
         assert bm[0].any() and bm[-1].any(), ch
+
+
+_IMPORT_BUILDS = """
+import sys
+calls = []
+def count(frame, event, arg):
+    if event == "call" and frame.f_code.co_name == "_build_template_stack":
+        calls.append(frame)
+sys.setprofile(count)
+import ms_ocr_spark.extraction.ocr
+sys.setprofile(None)
+print(len(calls))
+"""
+
+
+def test_ocr_import_builds_no_template_stack():
+    """Importing the OCR package (what a Python worker does to read one PNG
+    or PDF) builds no charset's template stack; the first decode that
+    needs a charset builds it."""
+    out = subprocess.run(
+        [sys.executable, "-c", _IMPORT_BUILDS],
+        cwd=Path(__file__).resolve().parents[1],
+        capture_output=True,
+        text=True,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split() == ["0"]
 
 
 def test_glyph_margin_within_gates():
     """Cross-char template distances inside the (class, aspect) gates must
     exceed the decoder's unambiguous-accept threshold — the structural
     property that makes greedy nearest-template decode exact."""
-    from ms_ocr_spark.extraction.ocr.kernel import (
-        _TPL_ASPECT,
-        _TPL_CHARS,
-        _TPL_STACK,
-        _TPL_TALL,
-    )
+    from ms_ocr_spark.extraction.ocr.kernel import _charset
 
-    flat = _TPL_STACK.reshape(len(_TPL_STACK), -1).astype(np.int32)
-    loga = np.log(_TPL_ASPECT)
+    cs = _charset("latin")
+    flat = cs.stack.reshape(len(cs.stack), -1).astype(np.int32)
+    loga = np.log(cs.aspect)
     worst = 1 << 30
     for i in range(len(flat)):
         same_gate = (
-            (_TPL_TALL == _TPL_TALL[i])
+            (cs.tall == cs.tall[i])
             & (np.abs(loga - loga[i]) <= np.log(1.6))
-            & np.array([c != _TPL_CHARS[i] for c in _TPL_CHARS])
+            & np.array([c != cs.chars[i] for c in cs.chars])
         )
         if same_gate.any():
             d = np.abs(flat[same_gate] - flat[i]).sum(axis=1).min()
