@@ -1786,14 +1786,6 @@ def media_image_metadata_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return image_metadata(media)
 
 
-def _media_meta_oracle(tier: str) -> str:
-    return (
-        "SELECT media_ref, width, height, ink_ratio, mean_intensity, format, "
-        "dpi, icc_name, orientation "
-        f"FROM read_parquet('{_tier_paths(tier)['golden_media_meta']}')"
-    )
-
-
 def _corpus_paths_quarantine() -> dict[str, str]:
     """Corrupted-media corpus: ~15% garbage payloads (admission reject),
     ~10% header-only truncated SOF2 stubs, ~10% lossless (SOF3) JPEG
@@ -1836,14 +1828,6 @@ def quarantine_media_reasons(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quarantine_invalid_media(docs, media)
 
 
-def _quarantine_oracle() -> str:
-    paths = _corpus_paths_quarantine()
-    return (
-        "SELECT doc_id, \"offset\", media_ref, mime, n_bytes, reason "
-        f"FROM read_parquet('{paths['golden_quarantine']}')"
-    )
-
-
 def _audio_corpus_paths() -> dict[str, str]:
     from ms_ocr_spark.sources.datagen import write_audio_corpus
 
@@ -1860,15 +1844,6 @@ def media_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = spark.read.parquet(_audio_corpus_paths()["audio_media"])
     return audio_features(media)
-
-
-def _audio_features_oracle() -> str:
-    paths = _audio_corpus_paths()
-    return (
-        "SELECT media_ref, sample_rate, n_channels, n_frames, duration_s, "
-        "rms, zero_crossings "
-        f"FROM read_parquet('{paths['golden_audio_features']}')"
-    )
 
 
 def _pdf_corpus_paths() -> dict[str, str]:
@@ -1892,14 +1867,6 @@ def pdf_extract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pdf_extract_spans_df(media)
 
 
-def _pdf_spans_oracle() -> str:
-    paths = _pdf_corpus_paths()
-    return (
-        "SELECT doc_id, page, x, y, text "
-        f"FROM read_parquet('{paths['golden_pdf_spans']}')"
-    )
-
-
 def _video_corpus_paths() -> dict[str, str]:
     from ms_ocr_spark.sources.datagen import write_video_corpus
 
@@ -1919,15 +1886,6 @@ def media_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = spark.read.parquet(_video_corpus_paths()["video_media"])
     return video_frame_sample(media, every_n=3)
-
-
-def _video_frames_oracle() -> str:
-    paths = _video_corpus_paths()
-    return (
-        "SELECT media_ref, frame_idx, width, height, ink_ratio, "
-        "mean_intensity, frame_sha "
-        f"FROM read_parquet('{paths['golden_video_frames']}')"
-    )
 
 
 def _keepfirst_golden_oracle() -> str:
@@ -1984,7 +1942,6 @@ def _keepfirst_golden_oracle() -> str:
     return f"SELECT doc_id, box_id, x1, y1, x2, y2 FROM read_parquet('{out}')"
 
 
-
 def _table_corpus_paths() -> dict[str, str]:
     from ms_ocr_spark.sources.datagen import write_table_corpus
 
@@ -2020,19 +1977,6 @@ def table_html_from_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     return table_html(_table_grid_df(spark))
 
 
-def _table_cells_oracle() -> str:
-    paths = _table_corpus_paths()
-    return (
-        "SELECT doc_id, row_idx, col_idx, cell_text, row_span, col_span, n_texts "
-        f"FROM read_parquet('{paths['golden_table_cells']}')"
-    )
-
-
-def _table_html_oracle() -> str:
-    paths = _table_corpus_paths()
-    return f"SELECT doc_id, html FROM read_parquet('{paths['golden_table_html']}')"
-
-
 # Every datagen-written fixture builder; bench.py builds them all before
 # its timed query loop so no corpus is generated inside a query's timer.
 FIXTURE_BUILDERS: list[Callable[[], dict[str, str]]] = [
@@ -2044,19 +1988,61 @@ FIXTURE_BUILDERS: list[Callable[[], dict[str, str]]] = [
     _table_corpus_paths,
 ]
 
+
+def _golden_oracle(paths: Callable[[], dict[str, str]], golden: str, cols: str) -> str:
+    """`SELECT cols` over the golden parquet `paths()[golden]` that the
+    fixture's generator wrote beside its media."""
+    return f"SELECT {cols} FROM read_parquet('{paths()[golden]}')"
+
+
+_MEDIA_META_COLS = (
+    "media_ref, width, height, ink_ratio, mean_intensity, format, dpi, icc_name, orientation"
+)
+
 # Oracles whose SQL embeds a generated-fixture path: built lazily so the
 # fixture is guaranteed to exist by the time the driver runs the SQL.
 _LAZY_ORACLES: dict[str, Callable[[], str]] = {
     **{name: partial(_golden_spans_oracle, name) for name in _TIERS},
-    "media_image_metadata": partial(_media_meta_oracle, "extract_spans"),
-    "media_image_metadata_mixed": partial(_media_meta_oracle, "extract_spans_tiff"),
-    "media_audio_features": _audio_features_oracle,
-    "media_video_frames": _video_frames_oracle,
-    "pdf_extract_spans": _pdf_spans_oracle,
-    "quarantine_media_reasons": _quarantine_oracle,
+    "media_image_metadata": partial(
+        _golden_oracle, partial(_tier_paths, "extract_spans"), "golden_media_meta", _MEDIA_META_COLS
+    ),
+    "media_image_metadata_mixed": partial(
+        _golden_oracle,
+        partial(_tier_paths, "extract_spans_tiff"),
+        "golden_media_meta",
+        _MEDIA_META_COLS,
+    ),
+    "media_audio_features": partial(
+        _golden_oracle,
+        _audio_corpus_paths,
+        "golden_audio_features",
+        "media_ref, sample_rate, n_channels, n_frames, duration_s, rms, zero_crossings",
+    ),
+    "media_video_frames": partial(
+        _golden_oracle,
+        _video_corpus_paths,
+        "golden_video_frames",
+        "media_ref, frame_idx, width, height, ink_ratio, mean_intensity, frame_sha",
+    ),
+    "pdf_extract_spans": partial(
+        _golden_oracle, _pdf_corpus_paths, "golden_pdf_spans", "doc_id, page, x, y, text"
+    ),
+    "quarantine_media_reasons": partial(
+        _golden_oracle,
+        _corpus_paths_quarantine,
+        "golden_quarantine",
+        'doc_id, "offset", media_ref, mime, n_bytes, reason',
+    ),
     "dedup_boxes_keep_first": _keepfirst_golden_oracle,
-    "table_cells_from_media": _table_cells_oracle,
-    "table_html_from_media": _table_html_oracle,
+    "table_cells_from_media": partial(
+        _golden_oracle,
+        _table_corpus_paths,
+        "golden_table_cells",
+        "doc_id, row_idx, col_idx, cell_text, row_span, col_span, n_texts",
+    ),
+    "table_html_from_media": partial(
+        _golden_oracle, _table_corpus_paths, "golden_table_html", "doc_id, html"
+    ),
 }
 
 
@@ -2069,7 +2055,6 @@ def oracle_sql() -> dict[str, str]:
     for name, builder in _LAZY_ORACLES.items():
         out[name] = builder()
     return out
-
 
 
 @_register(
