@@ -263,4 +263,6 @@ def audio_features(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     payloads give `map_payloads`' all-null fault row.  Same 100-TB shape
     as the image path: payloads stream through Arrow batches, never the
     driver."""
-    return map_payloads(media, AUDIO_SCHEMA, lambda buf: [wav_features(buf)], payload_col=payload_col)
+    return map_payloads(
+        media, AUDIO_SCHEMA, lambda buf: [wav_features(buf)], payload_col=payload_col
+    )

@@ -78,8 +78,10 @@ def grid_from_boxes(
     clusters centers for the standalone A2/A3 queries).  A NULL `box_id`
     is `ocr_boxes`' row for an image that did not decode: like a blank
     image, it gives no table."""
-    with_pos = boxes.filter(F.col("box_id").isNotNull()).withColumn("_y1d", F.col("y1").cast("double")).withColumn(
-        "_x1d", F.col("x1").cast("double")
+    with_pos = (
+        boxes.filter(F.col("box_id").isNotNull())
+        .withColumn("_y1d", F.col("y1").cast("double"))
+        .withColumn("_x1d", F.col("x1").cast("double"))
     )
     rows = gap_cluster(with_pos, [doc_col], "_y1d", tol_y, "row_idx")
     both = gap_cluster(rows, [doc_col], "_x1d", tol_x, "col_idx")

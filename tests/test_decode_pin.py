@@ -48,7 +48,12 @@ STATUS_COUNTS = {
     ("tiff", "ok"): 30,
     ("tiff", "unsupported_tiff_layout"): 6,
 }
-_MAGIC = ((b"\x89PNG\r\n\x1a\n", "png"), (b"\xff\xd8\xff", "jpeg"), (b"II*\0", "tiff"), (b"MM\0*", "tiff"))
+_MAGIC = (
+    (b"\x89PNG\r\n\x1a\n", "png"),
+    (b"\xff\xd8\xff", "jpeg"),
+    (b"II*\0", "tiff"),
+    (b"MM\0*", "tiff"),
+)
 
 
 def _corpus_paths() -> list[dict[str, str]]:

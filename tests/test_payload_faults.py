@@ -47,7 +47,12 @@ def _wav() -> bytes:
 
 # operator name -> (operator, input id column, input payload column, good payload)
 CASES = {
-    "image_metadata": (image_metadata, "media_ref", "payload", lambda: encode_gray(render_text("HI 42"))),
+    "image_metadata": (
+        image_metadata,
+        "media_ref",
+        "payload",
+        lambda: encode_gray(render_text("HI 42")),
+    ),
     "video_frame_sample": (
         video_frame_sample,
         "media_ref",
@@ -115,7 +120,9 @@ def test_a_corrupt_table_image_gives_no_table(spark, tmp_path):
     paths = write_table_corpus(str(tmp_path / "tables"), n_tables=1, seed=9)
     media = spark.read.parquet(paths["tables_media"])
     (good,) = [r["payload"] for r in media.collect()]
-    bad = _frame(spark, [("junk", b"junk payload"), ("cut", good[: len(good) // 2]), ("null", None)])
+    bad = _frame(
+        spark, [("junk", b"junk payload"), ("cut", good[: len(good) // 2]), ("null", None)]
+    )
     boxes = ocr_boxes(media.unionByName(bad))
     assert sorted(r["doc_id"] for r in boxes.filter("box_id IS NULL").collect()) == [
         "cut",
@@ -129,6 +136,7 @@ def test_a_corrupt_table_image_gives_no_table(spark, tmp_path):
 
     keys = ["doc_id", "row_idx", "col_idx"]
     want_c = frame(spark.read.parquet(paths["golden_table_cells"]), keys)
-    pd.testing.assert_frame_equal(frame(table_cells(grid), keys)[want_c.columns], want_c, check_dtype=False)
+    got_c = frame(table_cells(grid), keys)[want_c.columns]
+    pd.testing.assert_frame_equal(got_c, want_c, check_dtype=False)
     want_h = frame(spark.read.parquet(paths["golden_table_html"]), ["doc_id"])
     pd.testing.assert_frame_equal(frame(table_html(grid), ["doc_id"])[want_h.columns], want_h)
